@@ -163,7 +163,7 @@ object ClassifierOps {
     new scala.collection.concurrent.TrieMap[(String, String), (Seq[Double], Long)]
   private[ops] def trainedWeights(s: SparkSession, dir: String)
       : (Seq[Double], Long) =
-    memo.getOrElseUpdate((dir, dataFingerprint(dir, "documents")), {
+    memo.getOrElseUpdate((dir, dataFingerprint(s, dir, "documents")), {
       val tr = featDf(s, dir).filter(col("split") === "train")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {

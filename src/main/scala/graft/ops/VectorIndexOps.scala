@@ -591,7 +591,7 @@ object VectorIndexOps {
     * lifecycle. */
   private def ensureVectorIndex(s: SparkSession, dir: String,
       tag: String): String = {
-    val fp = graft.Tables.dataFingerprint(dir, "embeddings")
+    val fp = graft.Tables.dataFingerprint(s, dir, "embeddings")
     val key = java.security.MessageDigest.getInstance("MD5")
       .digest(s"$tag:$dir:$fp:v1:$KmK:$PqM:$PqK".getBytes("UTF-8"))
       .take(6).map(x => f"$x%02x").mkString

@@ -17,16 +17,16 @@ object StreamingStages {
 
   /** events.parquet stream with the same ts normalization as
     * graft.Tables (file streams require an explicit schema — taken from
-    * a static read of the same files, so the stream schema always agrees
-    * with whatever timestamp encoding the files carry). Accepts a
-    * directory of parquet files OR one plain .parquet file — the file
-    * source's inferred basePath must be a directory, so for a file path
-    * the parent is pinned explicitly. */
+    * the cached static schema of the same files, Tables.parquetSchema,
+    * so the stream schema always agrees with whatever timestamp encoding
+    * the files carry). Accepts a directory of parquet files OR one plain
+    * .parquet file — the file source's inferred basePath must be a
+    * directory, so for a file path the parent is pinned explicitly. */
   def eventsStream(spark: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     val f = new java.io.File(dir)
     val staticPath = if (f.isFile) dir else dir + "/*.parquet"
-    val schema = spark.read.parquet(staticPath).schema
+    val schema = graft.Tables.parquetSchema(spark, staticPath)
     val r0 = spark.readStream.schema(schema)
     val r = maxFilesPerTrigger.fold(r0)(n =>
       r0.option("maxFilesPerTrigger", n))
@@ -516,7 +516,7 @@ object StreamingStages {
       val id = enrichSinkId.incrementAndGet()
       if (id > 1) s.catalog.dropTempView(s"q128_mem_${id - 1}")
       val name = s"q128_mem_$id"
-      val dim = broadcast(s.read.parquet(s"$dir/nation.parquet")
+      val dim = broadcast(graft.Tables.table(s, dir, "nation")
         .select(col("n_nationkey").cast("long").as("nk"),
           col("n_name").as("nation_name")))
       val enriched = enrichWithStatic(
@@ -562,7 +562,7 @@ object StreamingStages {
       val id = rollupSinkId.incrementAndGet()
       if (id > 1) s.catalog.dropTempView(s"q158_mem_${id - 1}")
       val name = s"q158_mem_$id"
-      val dim = broadcast(s.read.parquet(s"$dir/nation.parquet")
+      val dim = broadcast(graft.Tables.table(s, dir, "nation")
         .select(col("n_nationkey").cast("long").as("nk"),
           col("n_name").as("nation_name")))
       val ev = eventsStream(s, s"$dir/events.parquet")
@@ -649,7 +649,7 @@ object StreamingStages {
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     val f = new java.io.File(path)
     val staticPath = if (f.isFile) path else path + "/*.parquet"
-    val schema = spark.read.parquet(staticPath).schema
+    val schema = graft.Tables.parquetSchema(spark, staticPath)
     val r0 = spark.readStream.schema(schema)
     val r = maxFilesPerTrigger
       .fold(r0)(n => r0.option("maxFilesPerTrigger", n))

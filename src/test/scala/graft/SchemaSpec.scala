@@ -146,4 +146,102 @@ class SchemaSpec extends AnyFunSuite {
       .head.getDouble(0)
     assert(r == 23.0)
   }
+
+  /** A fresh scratch dir for one schema-cache spec, removed afterwards. */
+  private def withTableDir(f: String => Unit): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory("schema_cache").toString
+    try f(dir) finally graft.io.IndexLifecycle.rmDir(dir)
+  }
+
+  /** Spark jobs started while `body` runs (listener bus drained on both
+    * sides, so no earlier job leaks in and no later event is missed). */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.graftx.listener.drain(sc)
+    sc.addSparkListener(l)
+    try { body; org.apache.spark.graftx.listener.drain(sc) }
+    finally sc.removeSparkListener(l)
+    jobs.get
+  }
+
+  test("Tables.table: a second read of a table launches no Spark job") {
+    withTableDir { dir =>
+      spark.range(0L, 20L).selectExpr("id AS a", "CAST(id AS STRING) AS b")
+        .write.parquet(s"$dir/t.parquet")
+      val first = jobsDuring { Tables.table(spark, dir, "t").schema; () }
+      assert(first > 0, "the listener saw no schema-inference job")
+      val second = jobsDuring {
+        assert(Tables.table(spark, dir, "t").columns.toSeq == Seq("a", "b"))
+        ()
+      }
+      assert(second == 0, s"cached read launched $second job(s)")
+      assert(Tables.table(spark, dir, "t").count() == 20L)
+    }
+  }
+
+  test("Tables.table: overwriting a table with a new column invalidates " +
+    "its cached schema") {
+    withTableDir { dir =>
+      val path = s"$dir/t.parquet"
+      spark.range(0L, 5L).selectExpr("id AS a").write.parquet(path)
+      assert(Tables.table(spark, dir, "t").columns.toSeq == Seq("a"))
+      spark.range(0L, 5L).selectExpr("id AS a", "id * 2 AS b")
+        .write.mode("overwrite").parquet(path)
+      val df = Tables.table(spark, dir, "t")
+      assert(df.columns.toSeq == Seq("a", "b"))
+      assert(df.agg(sum(col("b"))).head.getLong(0) == 20L)
+    }
+  }
+
+  test("Tables.table: the parquet type-mapping confs are part of the " +
+    "schema-cache key") {
+    import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
+    val key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    withTableDir { dir =>
+      // A TIMESTAMP(isAdjustedToUTC=false) column written outside Spark,
+      // like the corpus files. Spark-written files carry Spark's own
+      // schema in the footer, which inference prefers over this conf.
+      import org.apache.parquet.example.data.simple.SimpleGroupFactory
+      val pq = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+        "message t { required int64 ts (TIMESTAMP(MICROS,false)); }")
+      val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+        .builder(new org.apache.hadoop.fs.Path(s"$dir/t.parquet"))
+        .withType(pq).withConf(spark.sparkContext.hadoopConfiguration)
+        .build()
+      try w.write(new SimpleGroupFactory(pq).newGroup()
+        .append("ts", 1704164645000000L))
+      finally w.close()
+      val off = spark.newSession()
+      off.conf.set(key, "false")
+      val on = spark.newSession()
+      on.conf.set(key, "true")
+      def tsType(s: SparkSession) =
+        Tables.table(s, dir, "t").schema("ts").dataType
+      assert(tsType(off) == TimestampType)
+      assert(tsType(on) == TimestampNTZType)
+      // one entry per path: the switch back re-infers, never serves the
+      // other session's schema
+      assert(tsType(off) == TimestampType)
+    }
+  }
+
+  test("dataFingerprint lists file:// URIs like plain paths") {
+    withTableDir { dir =>
+      spark.range(0L, 5L).selectExpr("id AS a").write.parquet(s"$dir/t.parquet")
+      val plain = Tables.dataFingerprint(spark, dir, "t")
+      assert(Tables.dataFingerprint(spark, s"file://$dir", "t") == plain)
+      assert(plain != Tables.dataFingerprint(spark, dir, "absent"))
+      // the URI form sees a rewrite, not a constant "absent" listing
+      spark.range(0L, 7L).selectExpr("id AS a")
+        .write.mode("overwrite").parquet(s"$dir/t.parquet")
+      assert(Tables.dataFingerprint(spark, s"file://$dir", "t") != plain)
+    }
+  }
 }
