@@ -4,9 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 /** Library entry point for users (the mains use the same pieces
   * directly): one call yields a session with the engine's required
-  * configs (nanos-parquet read, AQE, UTC) and its native SQL functions
-  * registered — after this, `spark.sql("SELECT dot_product(a, b) ...")`
-  * and every `graft.ops.*` operator work out of the box.
+  * configs (nanos-parquet read, AQE, UTC, codegen cache bound; see
+  * [[Tables.configure]]) and its native SQL functions registered —
+  * after this, `spark.sql("SELECT dot_product(a, b) ...")` and every
+  * `graft.ops.*` operator work out of the box.
   */
 object Graft {
 

@@ -76,17 +76,28 @@ object IndexLifecycle {
         stagingSuffix = "__retrain")
   }
 
-  /** Staged-swap rewrite of one bucketed table: `rows` (repartitioned
-    * on `key`) land under `<tableName><stagingSuffix>` at `newPath`,
-    * then the public name is re-pointed there in one metadata
-    * statement and the staging registration dropped
-    * ([[Sinks.repointTable]]). Every crash point leaves the public
-    * name registered and readable: before the re-point it serves the
-    * old file set (staging is droppable leftovers the next run's DROP
-    * IF EXISTS clears); after, the new one. The old path is left for
-    * the caller to retire once the swap is durable (the K7 archive
-    * discipline: never destroy the input in the step that writes the
-    * output). */
+  /** Staged-swap rewrite of one bucketed table: `rows` land bucketed
+    * on `key` under `<tableName><stagingSuffix>` at `newPath`, then
+    * the public name is re-pointed there in one metadata statement
+    * and the staging registration dropped ([[Sinks.repointTable]]).
+    *
+    * File layout: every bucket file holds only its bucket's rows, but
+    * a bucket may span several files. `rows` is repartitioned on
+    * `key`, yet when it already hash-partitions on `key` into
+    * `buckets` partitions — a vacuum's masked read of the bucketed
+    * table itself — EnsureRequirements drops that repartition as
+    * redundant, and DisableUnnecessaryBucketedScan then reads the
+    * input as a plain file scan. Each write task then holds rows of
+    * several buckets and writes one file per bucket it holds (q262's
+    * vacuum writes 20, 19 and 8 files for 8 buckets). Bucketed reads
+    * stay correct; only the file count grows.
+    *
+    * Every crash point leaves the public name registered and
+    * readable: before the re-point it serves the old file set (staging
+    * is droppable leftovers the next run's DROP IF EXISTS clears);
+    * after, the new one. The old path is left for the caller to retire
+    * once the swap is durable (the K7 archive discipline: never
+    * destroy the input in the step that writes the output). */
   def stagedSwap(s: SparkSession, tableName: String, rows: DataFrame,
       key: String, buckets: Int, newPath: String,
       stagingSuffix: String = "__vacuum"): Unit = {
@@ -169,15 +180,6 @@ object IndexLifecycle {
     }
   }
 
-  /** Drop every RETIRED generation of `prefix` — registered under
-    * `<generationPrefix>_<suffix>` for each family suffix — that is
-    * neither live nor pinned: catalog entries dropped, their
-    * registered data directories removed. The explicit
-    * storage-reclamation half of the pin contract ([[pinGeneration]]
-    * retains; THIS retires), run as scheduled maintenance like vacuum
-    * and compaction. Generations are discovered from the catalog (not
-    * a caller-tracked list), so crashed-retrain leftovers age out the
-    * same way. Returns the dropped generation numbers. */
   /** The generation numbers physically RETAINED for `prefix` (their
     * `marker`-suffixed table is registered), discovered from the
     * catalog — the ground truth [[gcGenerations]] retires from and an
@@ -193,6 +195,15 @@ object IndexLifecycle {
       }.distinct.sorted
   }
 
+  /** Drop every RETIRED generation of `prefix` — registered under
+    * `<generationPrefix>_<suffix>` for each family suffix — that is
+    * neither live nor pinned: catalog entries dropped, their
+    * registered data directories removed. The explicit
+    * storage-reclamation half of the pin contract ([[pinGeneration]]
+    * retains; THIS retires), run as scheduled maintenance like vacuum
+    * and compaction. Generations are discovered from the catalog (not
+    * a caller-tracked list), so crashed-retrain leftovers age out the
+    * same way. Returns the dropped generation numbers. */
   def gcGenerations(s: SparkSession, prefix: String,
       suffixes: Seq[String]): Seq[Long] = {
     val live = liveGeneration(s, prefix)

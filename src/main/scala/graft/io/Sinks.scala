@@ -289,8 +289,9 @@ object Sinks {
     * driver scheduling latency per micro-batch instead of N — guide
     * §1/§2.6 applied to the probe tail the corpus-index stream paid
     * five times per batch. EVERYTHING ELSE is unchanged and per-table:
-    * appends stay atomic per table (distinct names, run concurrently
-    * like before), a table found carrying the tag runs
+    * appends stay atomic per table (names must be distinct, else an
+    * IllegalArgumentException before any write; run concurrently like
+    * before), a table found carrying the tag runs
     * [[finishIdempotentAppend]]'s tier-2 count compare alone, and the
     * torn-batch recovery argument (any committed-subset of tables
     * replays to exactly-once contents) is untouched because the probe
@@ -299,7 +300,12 @@ object Sinks {
   def appendBucketedTablesIdempotent(
       spark: org.apache.spark.sql.SparkSession, batchId: Long,
       parts: Seq[(DataFrame, String, String, Int, String)]): Unit = {
-    val existing = parts.map(_._2).filter(spark.catalog.tableExists)
+    // the per-table appends run concurrently: two parts naming one table
+    // would race two writers on it, so reject them before any write
+    val names = parts.map(_._2)
+    require(names.distinct.size == names.size,
+      s"duplicate table names: ${names.diff(names.distinct).distinct.mkString(", ")}")
+    val existing = names.filter(spark.catalog.tableExists)
     // the q219 cloned-session lesson, batched: refresh before probing
     existing.foreach(spark.catalog.refreshTable)
     val taggedTables: Set[String] =
@@ -378,6 +384,12 @@ object Sinks {
     spark.sql(s"DROP TABLE IF EXISTS $stagingTable")
   }
 
+  /** Stable partial-sum type: wide enough that folds of folds never
+    * re-widen (Spark caps decimal precision at 38), so appends,
+    * [[readRollup]] output, and [[compactRollup]] rewrites all carry
+    * the SAME schema across generations. */
+  private val rollDec = org.apache.spark.sql.types.DecimalType(38, 2)
+
   /** Partial-aggregate rows for one batch of an incrementally
     * maintained rollup: per key, the row count and the EXACT decimal
     * sum of each measure (money-like ≤2-dp doubles — the
@@ -388,12 +400,6 @@ object Sinks {
     * This is the [[graft.ops.DedupOps]] band-count maintenance trick
     * exposed as a first-class primitive: a 100 TB corpus's running
     * stats cost one batch scan per ingest, never a corpus rescan. */
-  /** Stable partial-sum type: wide enough that folds of folds never
-    * re-widen (Spark caps decimal precision at 38), so appends,
-    * [[readRollup]] output, and [[compactRollup]] rewrites all carry
-    * the SAME schema across generations. */
-  private val rollDec = org.apache.spark.sql.types.DecimalType(38, 2)
-
   def rollupPartials(df: DataFrame, keys: Seq[String],
       measures: Seq[String]): DataFrame =
     df.groupBy(keys.map(org.apache.spark.sql.functions.col): _*)

@@ -147,6 +147,31 @@ class SchemaSpec extends AnyFunSuite {
     assert(r == 23.0)
   }
 
+  test("codegen cache: a plan compiled once stays compiled after 200 " +
+    "other plans, and Graft.session() carries the configured bound") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // JVM-wide counter: specs run one at a time in the forked test JVM,
+    // and it is read only around this spec's own actions
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def noop(df: org.apache.spark.sql.Dataset[_]): Unit =
+      df.write.mode("overwrite").format("noop").save()
+    val a = () => noop(spark.range(0, 1000, 1, 2)
+      .selectExpr("id % 7 AS k", "id * 3 AS v")
+      .groupBy("k").agg(sum("v").as("s")))
+    a()
+    // 200 whole-stage classes that differ only in an inlined literal:
+    // more than Spark's default bound of 100, so at that bound they
+    // evict every class of `a`
+    (1 to 200).foreach(k =>
+      noop(spark.range(0, 64, 1, 1).filter(s"id % $k = 1")))
+    val before = compiles
+    a()
+    assert(compiles == before, "the second run of a recompiled " +
+      s"${compiles - before} classes")
+    assert(Graft.session().conf.get("spark.sql.codegen.cache.maxEntries") ==
+      Tables.CodegenCacheEntries.toString)
+  }
+
   /** A fresh scratch dir for one schema-cache spec, removed afterwards. */
   private def withTableDir(f: String => Unit): Unit = {
     val dir = java.nio.file.Files.createTempDirectory("schema_cache").toString

@@ -780,6 +780,38 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
+  test("fused multi-table append rejects duplicate table names before " +
+    "creating or appending to any table") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("fuseddup").toString
+    val sfx = base.replaceAll("[^A-Za-z0-9]", "").takeRight(8)
+    val (tA, tB) = (s"ut_da$sfx", s"ut_db$sfx")
+    def rows(lo: Int, hi: Int) =
+      (lo to hi).map(i => (i.toLong, s"v$i")).toDF("k", "v")
+    try {
+      graft.io.Sinks.appendBucketedTable(
+        rows(1, 10).withColumn("ingest_batch", lit(1L)), tA, "k", 2,
+        s"$base/a")
+      // tB first: a check made per part, after earlier parts' writes,
+      // would already have created it
+      val e = intercept[IllegalArgumentException](
+        graft.io.Sinks.appendBucketedTablesIdempotent(spark, 7L, Seq(
+          (rows(11, 20), tB, "k", 2, s"$base/b"),
+          (rows(11, 20), tA, "k", 2, s"$base/a"),
+          (rows(21, 30), tA, "k", 2, s"$base/a"))))
+      assert(e.getMessage.contains(tA))
+      assert(!spark.catalog.tableExists(tB))
+      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$base/b")))
+      assert(spark.table(tA).count() == 10L)
+      assert(spark.table(tA).filter(col("ingest_batch") === 7L).isEmpty)
+    } finally {
+      Seq(tA, tB).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      spark.catalog.clearCache()
+      graft.io.IndexLifecycle.rmDir(base)
+    }
+  }
+
   test("sharded-parquet sink: torn uncommitted output is invisible to the " +
     "readback and a restart replays the batch exactly once") {
     import org.apache.spark.sql.functions._
