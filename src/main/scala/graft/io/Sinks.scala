@@ -336,29 +336,24 @@ object Sinks {
     * unchanged by the spec (same rows, single file set, bucket spec
     * intact).
     *
-    * Swap order matters: the rewrite lands under a TEMPORARY table
-    * name first, and `tableName` is re-pointed only after that write
-    * commits. A plain Overwrite-saveAsTable would drop the catalog
-    * entry BEFORE writing, so a mid-compaction failure would leave no
-    * registered table at all; here every failure point leaves the old
-    * registration fully readable — see [[repointTable]] for why the
-    * re-point itself has no unregistered instant. */
+    * Swap order matters ([[IndexLifecycle.stagedSwap]] with a
+    * `__compacting` staging suffix): the rewrite lands under a
+    * TEMPORARY table name first, and `tableName` is re-pointed only
+    * after that write commits. A plain Overwrite-saveAsTable would
+    * drop the catalog entry BEFORE writing, so a mid-compaction
+    * failure would leave no registered table at all; here every
+    * failure point leaves the old registration fully readable — see
+    * [[repointTable]] for why the re-point itself has no unregistered
+    * instant. */
   def compactBucketedTable(spark: org.apache.spark.sql.SparkSession,
       tableName: String, key: String, buckets: Int,
-      oldPath: String, newPath: String): Unit = {
-    val staging = tableName + "__compacting"
-    spark.sql(s"DROP TABLE IF EXISTS $staging") // leftover crashed run
-    // repartition(buckets, key) and bucketBy share the same
+      oldPath: String, newPath: String): Unit =
+    // the path read is a plain (unbucketed) scan, so stagedSwap's
+    // repartition(buckets, key) stays in the plan; it shares bucketBy's
     // murmur3-pmod placement, so each write task holds exactly ONE
-    // bucket and emits exactly one file — without it every task
-    // re-fragments into a file per bucket it touches and the
-    // "compaction" multiplies files instead
-    bucketedTable(
-      spark.read.parquet(oldPath)
-        .repartition(buckets, org.apache.spark.sql.functions.col(key)),
-      staging, key, buckets, newPath)
-    repointTable(spark, tableName, staging, newPath)
-  }
+    // bucket and emits exactly one file
+    IndexLifecycle.stagedSwap(spark, tableName, spark.read.parquet(oldPath),
+      key, buckets, newPath, stagingSuffix = "__compacting")
 
   /** Atomically re-point the PUBLIC `tableName` at the compacted file
     * set staged at `newPath` under `stagingTable`. The visibility-
@@ -451,20 +446,15 @@ object Sinks {
     * partials == summing the partials — associativity again). */
   def compactRollup(spark: org.apache.spark.sql.SparkSession,
       tableName: String, keys: Seq[String], measures: Seq[String],
-      buckets: Int, newPath: String): Unit = {
-    val staging = tableName + "__compacting"
-    spark.sql(s"DROP TABLE IF EXISTS $staging")
-    bucketedTable(
+      buckets: Int, newPath: String): Unit =
+    IndexLifecycle.stagedSwap(spark, tableName,
       readRollup(spark, tableName, keys, measures)
         // folding erases per-batch ingest tags (-1 = "maintenance
         // write") — see appendBucketedTableIdempotent's contract: only
         // compact while the feeding stream is stopped at a committed
         // offset, or a replayed batch would no longer see its tag
-        .withColumn("ingest_batch", lit(-1L))
-        .repartition(buckets, org.apache.spark.sql.functions.col(keys.head)),
-      staging, keys.head, buckets, newPath)
-    repointTable(spark, tableName, staging, newPath)
-  }
+        .withColumn("ingest_batch", lit(-1L)),
+      keys.head, buckets, newPath, stagingSuffix = "__compacting")
 
   /** [[archiveShards]] outcome. `Refused` means nothing was touched;
     * `Archived` means the zip is durably written — a non-empty

@@ -919,8 +919,7 @@ object CurationOps {
       val isNew = col("doc_id") % 10 === 0
       val prefix = "fix_q278"
       val path = s"${graft.Tables.scratchDir}/fix_q278"
-      s.sql(s"DROP TABLE IF EXISTS ${prefix}_wsh")
-      graft.io.IndexLifecycle.rmDir(path)
+      graft.io.IndexLifecycle.resetPrefix(s, prefix, path)
       writeFunnelIndex(docs.filter(!isNew), prefix, path)
       incrementalFunnel(s, docs.filter(isNew), prefix)
     },

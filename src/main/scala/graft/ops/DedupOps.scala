@@ -2,6 +2,9 @@ package graft.ops
 
 import graft.{OpSpec, Tables}
 import graft.Tables._
+import graft.io.IndexLifecycle
+import graft.io.IndexLifecycle.{CorpusIndexTables, GramIndexTables,
+  NameIndexTables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -793,15 +796,21 @@ object DedupOps {
     * cap needs corpus bucket populations, and aggregating them per
     * ingest would be corpus-sized compute on every batch. */
   def buildCorpusIndex(docs: DataFrame): CorpusIndex = {
-    val hashes = docs.select(col("doc_id"),
-      md5(col("text").cast("binary")).as("h"))
     val shingles = hashedShingles(docs)
-    val bands = bandRows(shingles)
-    val sizes = shingles.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-    val bandCounts = bands.groupBy(col("band_idx"), col("band_val"))
-      .agg(count(lit(1)).as("ccnt"))
-    CorpusIndex(hashes, shingles, bands, sizes, bandCounts)
+    corpusIndexOf(docs, shingles, bandRows(shingles))
   }
+
+  /** The [[CorpusIndex]] of `docs` over its shingle and band rows
+    * (cached by a caller that reuses them) — the one derivation build,
+    * append and ingest share. */
+  private def corpusIndexOf(docs: DataFrame, shingles: DataFrame,
+      bands: DataFrame): CorpusIndex =
+    CorpusIndex(
+      docs.select(col("doc_id"), md5(col("text").cast("binary")).as("h")),
+      shingles, bands,
+      shingles.groupBy(col("doc_id")).agg(count(lit(1)).as("sz")),
+      bands.groupBy(col("band_idx"), col("band_val"))
+        .agg(count(lit(1)).as("ccnt")))
 
   /** Persist a [[CorpusIndex]] as bucketed+sorted tables
     * ([[graft.io.Sinks.bucketedTable]]) named `<prefix>_hashes` /
@@ -811,10 +820,9 @@ object DedupOps {
   def writeCorpusIndex(idx: CorpusIndex, prefix: String, path: String,
       buckets: Int = 32): Unit = {
     // every physical table carries the ingest_batch maintenance tag
-    // (-1 = batch build); idempotent streaming appends key on it and
-    // readCorpusIndex drops it on open
-    def tagged(df: DataFrame) = df.withColumn("ingest_batch", lit(-1L))
-    // one corpus-text pass for all five writes: shingles/bands cached
+    // (-1 = batch build; declared in CorpusIndexTables); idempotent
+    // streaming appends key on it and readCorpusIndex drops it on open.
+    // One corpus-text pass for all five writes: shingles/bands cached
     // and MATERIALIZED first (four of the five tables re-derive from
     // them — unpersisted, each write re-ran the scan+shingle+minhash
     // lineage), then the independent table writes overlap (guide §2.6;
@@ -824,20 +832,24 @@ object DedupOps {
     val bd = idx.bands.persist()
     try {
       bd.count() // computes shingles then bands — both caches warm
-      graft.io.Sinks.concurrently(Seq(
-        () => graft.io.Sinks.bucketedTable(tagged(idx.hashes),
-          s"${prefix}_hashes", "h", buckets, s"$path/hashes"),
-        () => graft.io.Sinks.bucketedTable(tagged(idx.shingles),
-          s"${prefix}_shingles", "doc_id", buckets, s"$path/shingles"),
-        () => graft.io.Sinks.bucketedTable(tagged(idx.bands),
-          s"${prefix}_bands", "band_val", buckets, s"$path/bands"),
-        () => graft.io.Sinks.bucketedTable(tagged(idx.sizes),
-          s"${prefix}_sizes", "doc_id", buckets, s"$path/sizes"),
-        () => graft.io.Sinks.bucketedTable(tagged(idx.bandCounts),
-          s"${prefix}_bandcounts", "band_val", buckets,
-          s"$path/bandcounts")))
+      IndexLifecycle.writeTables(CorpusIndexTables, prefix, path,
+        buckets)(corpusRows(idx): _*)
     } finally { bd.unpersist(); sh.unpersist() }
   }
+
+  /** A [[CorpusIndex]]'s frames by declared table suffix. */
+  private def corpusRows(i: CorpusIndex): Seq[(String, DataFrame)] =
+    Seq("hashes" -> i.hashes, "shingles" -> i.shingles,
+      "bands" -> i.bands, "sizes" -> i.sizes, "bandcounts" -> i.bandCounts)
+
+  /** The open-time fold of the band-count partials. */
+  private def foldBandCounts(partials: DataFrame): DataFrame =
+    partials.groupBy(col("band_idx"), col("band_val"))
+      .agg(sum(col("ccnt")).as("ccnt"))
+
+  private def openCorpusIndex(m: Map[String, DataFrame]): CorpusIndex =
+    CorpusIndex(m("hashes"), m("shingles"), m("bands"), m("sizes"),
+      foldBandCounts(m("bandcounts")))
 
   /** Re-open a persisted [[CorpusIndex]] by table-name prefix.
     * `bandCounts` is normalized through a keyed sum because
@@ -845,14 +857,8 @@ object DedupOps {
     * (pure inserts — never a corpus-sized rewrite); for a never-
     * appended index the sum is the identity. */
   def readCorpusIndex(s: SparkSession, prefix: String): CorpusIndex =
-    CorpusIndex(
-      s.table(s"${prefix}_hashes").drop("ingest_batch"),
-      s.table(s"${prefix}_shingles").drop("ingest_batch"),
-      s.table(s"${prefix}_bands").drop("ingest_batch"),
-      s.table(s"${prefix}_sizes").drop("ingest_batch"),
-      s.table(s"${prefix}_bandcounts")
-        .groupBy(col("band_idx"), col("band_val"))
-        .agg(sum(col("ccnt")).as("ccnt")))
+    openCorpusIndex(IndexLifecycle.readTables(s, CorpusIndexTables, prefix,
+      prefix, live = false))
 
   /** Fold an ACCEPTED ingest batch into a persisted [[CorpusIndex]]
     * without rebuilding it — the maintenance half of the q55 story
@@ -884,18 +890,7 @@ object DedupOps {
       batchId: Option[Long] = None): Unit = {
     val shingles = hashedShingles(newDocs).persist()
     val bands = bandRows(shingles).persist()
-    val fresh = CorpusIndex(
-      newDocs.select(col("doc_id"), md5(col("text").cast("binary")).as("h")),
-      shingles, bands,
-      shingles.groupBy(col("doc_id")).agg(count(lit(1)).as("sz")),
-      bands.groupBy(col("band_idx"), col("band_val"))
-        .agg(count(lit(1)).as("ccnt")))
-    val five = Seq(
-      (fresh.hashes, "hashes", "h"),
-      (fresh.shingles, "shingles", "doc_id"),
-      (fresh.bands, "bands", "band_val"),
-      (fresh.sizes, "sizes", "doc_id"),
-      (fresh.bandCounts, "bandcounts", "band_val"))
+    val fresh = corpusIndexOf(newDocs, shingles, bands)
     try {
       // materialize the shared caches once (bands computes shingles
       // too), then overlap the five independent per-table appends
@@ -904,24 +899,11 @@ object DedupOps {
       // already argues recovery from ANY committed-subset — ordering
       // among the five was never load-bearing.
       bands.count()
-      batchId match {
-        case Some(id) =>
-          // ONE fused tier-1 tag probe for all five tables per
-          // micro-batch instead of five LIMIT-1 jobs (guide §1 —
-          // per-job driver latency dominated the streaming ingest)
-          graft.io.Sinks.appendBucketedTablesIdempotent(
-            newDocs.sparkSession, id,
-            five.map { case (df, suffix, key) =>
-              (df, s"${prefix}_$suffix", key, buckets, s"$path/$suffix")
-            })
-        case None =>
-          graft.io.Sinks.concurrently(five.map {
-            case (df, suffix, key) => () =>
-              graft.io.Sinks.appendBucketedTable(
-                df.withColumn("ingest_batch", lit(-1L)),
-                s"${prefix}_$suffix", key, buckets, s"$path/$suffix")
-          })
-      }
+      // with a batch id: ONE fused tier-1 tag probe for all five
+      // tables per micro-batch instead of five LIMIT-1 jobs (guide §1 —
+      // per-job driver latency dominated the streaming ingest)
+      IndexLifecycle.appendTables(newDocs.sparkSession, CorpusIndexTables,
+        prefix, path, buckets, batchId)(corpusRows(fresh): _*)
     } finally { bands.unpersist(); shingles.unpersist() }
   }
 
@@ -977,7 +959,7 @@ object DedupOps {
     * candidates, the non-conservative direction. */
   def purgeFromCorpusIndex(s: SparkSession, dead: DataFrame,
       prefix: String, path: String, buckets: Int = 32): Unit = {
-    val tomb = s"${prefix}_tombstones"
+    val tomb = IndexLifecycle.tombstoneTable(prefix)
     val dAll = dead.select(col("doc_id")).distinct()
     val d = (if (s.catalog.tableExists(tomb))
         dAll.join(s.table(tomb), Seq("doc_id"), "left_anti")
@@ -988,15 +970,13 @@ object DedupOps {
       // materializing the (takedown-batch-sized) cache first keeps the
       // negatives below derived from exactly this call's ids
       d.count()
-      graft.io.Sinks.appendBucketedTable(d, tomb, "doc_id", 1,
-        s"$path/tombstones")
+      IndexLifecycle.appendTombstones(CorpusIndexTables, d, prefix, path)
       val neg = s.table(s"${prefix}_bands")
         .join(broadcast(d), Seq("doc_id"), "left_semi")
         .groupBy(col("band_idx"), col("band_val"))
         .agg((-count(lit(1))).as("ccnt"))
-        .withColumn("ingest_batch", lit(-1L))
-      graft.io.Sinks.appendBucketedTable(neg, s"${prefix}_bandcounts",
-        "band_val", buckets, s"$path/bandcounts")
+      IndexLifecycle.appendTables(s, CorpusIndexTables, prefix, path,
+        buckets)("bandcounts" -> neg)
     } finally d.unpersist()
   }
 
@@ -1005,45 +985,24 @@ object DedupOps {
     * [[readCorpusIndex]]'s open-time sum (zeroed buckets are dropped
     * to match what a scratch build would contain). */
   def readCorpusIndexLive(s: SparkSession, prefix: String): CorpusIndex = {
-    val idx = readCorpusIndex(s, prefix)
-    def mask(df: DataFrame) = graft.io.IndexLifecycle.maskTombstones(
-      s, df, s"${prefix}_tombstones", "doc_id")
-    CorpusIndex(mask(idx.hashes), mask(idx.shingles), mask(idx.bands),
-      mask(idx.sizes), idx.bandCounts.filter(col("ccnt") > 0))
+    val idx = openCorpusIndex(IndexLifecycle.readTables(s,
+      CorpusIndexTables, prefix, prefix, live = true))
+    idx.copy(bandCounts = idx.bandCounts.filter(col("ccnt") > 0))
   }
 
-  /** Fold tombstones into the physical tables: each table is staged
-    * at `newPath` and re-pointed only after its write commits, through
-    * [[graft.io.Sinks.repointTable]]'s SINGLE-STATEMENT location swap
-    * — a mid-vacuum crash leaves every not-yet-swapped table intact
-    * (and readable: no table name is ever unregistered, even
-    * mid-swap) and the tombstone mask still in force; a crash BETWEEN
-    * per-table swaps leaves a mixed index whose already-swapped
-    * tables are exactly their masked contents, so the still-standing
-    * mask re-applied over them is an idempotent no-op. Then the
-    * tombstone set is dropped. The spec proves vacuum ==
-    * build-from-survivors table-for-table. */
+  /** Fold tombstones into the physical tables
+    * ([[IndexLifecycle.vacuum]]: each table staged at `newPath/<suffix>`
+    * and re-pointed in ONE statement once its write commits, the five
+    * swaps overlapped, then the tombstones dropped). `bandcounts` is
+    * rewritten from its folded live sum, so the negative partials are
+    * reclaimed too. The spec proves vacuum == build-from-survivors
+    * table-for-table. */
   def vacuumCorpusIndex(s: SparkSession, prefix: String,
-      newPath: String, buckets: Int = 32): Unit = {
-    val live = readCorpusIndexLive(s, prefix)
-    // the live view drops the physical ingest_batch tag; rewrite
-    // with the maintenance tag so later tagged appends still match
-    def swap(df: DataFrame, suffix: String, key: String): Unit =
-      graft.io.IndexLifecycle.stagedSwap(s, s"${prefix}_$suffix",
-        df.withColumn("ingest_batch", lit(-1L)), key, buckets,
-        s"$newPath/$suffix")
-    // the five swaps are independent (distinct tables, each its own
-    // atomic re-point; a crash leaves any not-yet-swapped table masked
-    // by the still-registered tombstones — the contract never ordered
-    // them); overlap the rewrites (guide §2.6)
-    graft.io.Sinks.concurrently(Seq(
-      () => swap(live.hashes, "hashes", "h"),
-      () => swap(live.shingles, "shingles", "doc_id"),
-      () => swap(live.bands, "bands", "band_val"),
-      () => swap(live.sizes, "sizes", "doc_id"),
-      () => swap(live.bandCounts, "bandcounts", "band_val")))
-    s.sql(s"DROP TABLE IF EXISTS ${prefix}_tombstones")
-  }
+      newPath: String, buckets: Int = 32): Unit =
+    IndexLifecycle.vacuum(s, CorpusIndexTables, prefix, prefix, buckets,
+      sfx => s"$newPath/$sfx", Map("bandcounts" ->
+        foldBandCounts(s.table(s"${prefix}_bandcounts"))
+          .filter(col("ccnt") > 0)))
 
   /** Incremental ingest dedup of a NEW batch against an existing corpus
     * index: every join is BIPARTITE (new×corpus), so the corpus is
@@ -1062,12 +1021,7 @@ object DedupOps {
     // batch's dominant cost and is referenced by both the cap and the
     // candidate join — unpersisted it would re-run per reference
     val bands = bandRows(shingles).persist()
-    val fresh = CorpusIndex(
-      newDocs.select(col("doc_id"), md5(col("text").cast("binary")).as("h")),
-      shingles, bands,
-      shingles.groupBy(col("doc_id")).agg(count(lit(1)).as("sz")),
-      bands.groupBy(col("band_idx"), col("band_val"))
-        .agg(count(lit(1)).as("ccnt")))
+    val fresh = corpusIndexOf(newDocs, shingles, bands)
     incrementalDedupFrom(newDocs.select(col("doc_id")), fresh, corpus)
   }
 
@@ -1869,12 +1823,16 @@ object DedupOps {
     val gramDf = grams.groupBy(col("g")).agg(count(lit(1)).as("df"))
       .persist()
     val ranked = rankGrams(grams, gramDf).persist()
-    val docGrams = grams.groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(col("g"))).as("arr"),
-        count(lit(1)).as("sz"))
-    GramIndex(ranked, containPrefix(ranked), docGrams, gramDf,
+    GramIndex(ranked, containPrefix(ranked), docGramsOf(grams), gramDf,
       cached = Seq(grams, gramDf, ranked))
   }
+
+  /** (doc_id, arr, sz): each doc's sorted gram array — the verify
+    * payload. */
+  private def docGramsOf(grams: DataFrame): DataFrame =
+    grams.groupBy(col("doc_id"))
+      .agg(sort_array(collect_list(col("g"))).as("arr"),
+        count(lit(1)).as("sz"))
 
   /** Persist a [[GramIndex]] as bucketed tables, each on its
     * ingest-side probe key (`g` for the two candidate-join tables,
@@ -1886,20 +1844,19 @@ object DedupOps {
       // ranked); write it alone so the caches materialize exactly
       // once, then overlap the three remaining independent writes
       // (guide §2.6 — they read only warm cached frames)
-      graft.io.Sinks.bucketedTable(idx.ranked, s"${prefix}_ranked", "g",
-        buckets, s"$path/ranked")
-      graft.io.Sinks.concurrently(Seq(
-        () => graft.io.Sinks.bucketedTable(idx.prefixes,
-          s"${prefix}_prefixes", "g", buckets, s"$path/prefixes"),
-        () => graft.io.Sinks.bucketedTable(idx.docGrams,
-          s"${prefix}_docgrams", "doc_id", buckets, s"$path/docgrams"),
-        () => graft.io.Sinks.bucketedTable(idx.gramDf,
-          s"${prefix}_gramdf", "g", buckets, s"$path/gramdf")))
+      IndexLifecycle.writeTables(GramIndexTables, prefix, path, buckets)(
+        "ranked" -> idx.ranked)
+      IndexLifecycle.writeTables(GramIndexTables, prefix, path, buckets)(
+        "prefixes" -> idx.prefixes, "docgrams" -> idx.docGrams,
+        "gramdf" -> idx.gramDf)
     } finally idx.cached.foreach(_.unpersist())
 
+  private def gramIndexOf(m: Map[String, DataFrame]): GramIndex =
+    GramIndex(m("ranked"), m("prefixes"), m("docgrams"), m("gramdf"))
+
   def readGramIndex(s: SparkSession, prefix: String): GramIndex =
-    GramIndex(s.table(s"${prefix}_ranked"), s.table(s"${prefix}_prefixes"),
-      s.table(s"${prefix}_docgrams"), s.table(s"${prefix}_gramdf"))
+    gramIndexOf(IndexLifecycle.readTables(s, GramIndexTables, prefix,
+      prefix, live = false))
 
   /** Tombstone a takedown batch of doc_ids out of a persisted
     * [[GramIndex]] — the right-to-be-forgotten path the containment
@@ -1917,21 +1874,16 @@ object DedupOps {
     * semi-membership test, so retries are harmless. */
   def purgeGramIndex(s: SparkSession, dead: DataFrame, prefix: String,
       path: String): Unit =
-    graft.io.Sinks.appendBucketedTable(
-      dead.select(col("doc_id")).distinct(), s"${prefix}_tombstones",
-      "doc_id", 1, s"$path/tombstones")
+    IndexLifecycle.appendTombstones(GramIndexTables,
+      dead.select(col("doc_id")).distinct(), prefix, path)
 
   /** Open a persisted [[GramIndex]] with tombstones applied: every
     * per-doc table anti-joined against the (small, broadcast) takedown
     * set — a purged doc stops matching IMMEDIATELY, as a candidate, a
     * prefix probe, or a verify array. */
-  def readGramIndexLive(s: SparkSession, prefix: String): GramIndex = {
-    val idx = readGramIndex(s, prefix)
-    def mask(df: DataFrame) = graft.io.IndexLifecycle.maskTombstones(
-      s, df, s"${prefix}_tombstones", "doc_id")
-    GramIndex(mask(idx.ranked), mask(idx.prefixes), mask(idx.docGrams),
-      idx.gramDf)
-  }
+  def readGramIndexLive(s: SparkSession, prefix: String): GramIndex =
+    gramIndexOf(IndexLifecycle.readTables(s, GramIndexTables, prefix,
+      prefix, live = true))
 
   /** Fold an accepted batch into a persisted [[GramIndex]] without
     * rebuilding. The batch's grams are ranked by the index's FROZEN
@@ -1955,18 +1907,13 @@ object DedupOps {
     val grams = hashedGramRows(newDocs).persist()
     val ranked = rankGrams(grams, s.table(s"${prefix}_gramdf")).persist()
     try {
-      val docGrams = grams.groupBy(col("doc_id"))
-        .agg(sort_array(collect_list(col("g"))).as("arr"),
-          count(lit(1)).as("sz"))
       // first append materializes both caches; the remaining two
       // independent appends overlap (guide §2.6)
-      graft.io.Sinks.appendBucketedTable(ranked, s"${prefix}_ranked",
-        "g", buckets, s"$path/ranked")
-      graft.io.Sinks.concurrently(Seq(
-        () => graft.io.Sinks.appendBucketedTable(containPrefix(ranked),
-          s"${prefix}_prefixes", "g", buckets, s"$path/prefixes"),
-        () => graft.io.Sinks.appendBucketedTable(docGrams,
-          s"${prefix}_docgrams", "doc_id", buckets, s"$path/docgrams")))
+      IndexLifecycle.appendTables(s, GramIndexTables, prefix, path,
+        buckets)("ranked" -> ranked)
+      IndexLifecycle.appendTables(s, GramIndexTables, prefix, path,
+        buckets)("prefixes" -> containPrefix(ranked),
+        "docgrams" -> docGramsOf(grams))
     } finally { ranked.unpersist(); grams.unpersist() }
   }
 
@@ -1984,9 +1931,7 @@ object DedupOps {
       : DataFrame = {
     val grams = hashedGramRows(newDocs).persist()
     val ranked = rankGrams(grams, corpus.gramDf).persist()
-    val docGrams = grams.groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(col("g"))).as("arr"),
-        count(lit(1)).as("sz"))
+    val docGrams = docGramsOf(grams)
     def candidates(a: DataFrame, b: DataFrame, strict: Boolean) = {
       val sizeRule =
         if (strict) col("a.sz") < col("b.sz")
@@ -2073,10 +2018,13 @@ object DedupOps {
     val df = grams.groupBy(col("bg")).agg(count(lit(1)).as("df"))
       .persist()
     NameIndex(grams, namePrefixes(grams, df), nameCharRows(names),
-      names.select(col("p_name"), length(col("p_name")).as("ln"))
-        .filter(col("ln") <= EditCap),
-      df, cached = Seq(grams, df))
+      nameTinyRows(names), df, cached = Seq(grams, df))
   }
+
+  /** (p_name, ln) of the names short enough for the length-keyed tier. */
+  private def nameTinyRows(names: DataFrame): DataFrame =
+    names.select(col("p_name"), length(col("p_name")).as("ln"))
+      .filter(col("ln") <= EditCap)
 
   def writeNameIndex(idx: NameIndex, prefix: String, path: String,
       buckets: Int = 32): Unit =
@@ -2085,46 +2033,30 @@ object DedupOps {
       // computes grams then df), then overlap the five independent
       // table writes (guide §2.6)
       idx.bigramDf.count()
-      graft.io.Sinks.concurrently(Seq(
-        () => graft.io.Sinks.bucketedTable(idx.grams, s"${prefix}_grams",
-          "bg", buckets, s"$path/grams"),
-        () => graft.io.Sinks.bucketedTable(idx.prefixes,
-          s"${prefix}_prefixes", "bg", buckets, s"$path/prefixes"),
-        () => graft.io.Sinks.bucketedTable(idx.chars, s"${prefix}_chars",
-          "ch", buckets, s"$path/chars"),
-        () => graft.io.Sinks.bucketedTable(idx.tiny, s"${prefix}_tiny",
-          "ln", buckets, s"$path/tiny"),
-        () => graft.io.Sinks.bucketedTable(idx.bigramDf,
-          s"${prefix}_bigramdf", "bg", buckets, s"$path/bigramdf")))
+      IndexLifecycle.writeTables(NameIndexTables, prefix, path, buckets)(
+        "grams" -> idx.grams, "prefixes" -> idx.prefixes,
+        "chars" -> idx.chars, "tiny" -> idx.tiny,
+        "bigramdf" -> idx.bigramDf)
     } finally idx.cached.foreach(_.unpersist())
 
+  private def nameIndexOf(m: Map[String, DataFrame]): NameIndex =
+    NameIndex(m("grams"), m("prefixes"), m("chars"), m("tiny"),
+      m("bigramdf"))
+
   def readNameIndex(s: SparkSession, prefix: String): NameIndex =
-    NameIndex(s.table(s"${prefix}_grams"), s.table(s"${prefix}_prefixes"),
-      s.table(s"${prefix}_chars"), s.table(s"${prefix}_tiny"),
-      s.table(s"${prefix}_bigramdf"))
+    nameIndexOf(IndexLifecycle.readTables(s, NameIndexTables, prefix,
+      prefix, live = false))
 
   /** Fold [[purgeGramIndex]] tombstones into the physical tables —
     * [[vacuumCorpusIndex]]'s staged-swap discipline for the
-    * containment index. Each per-doc table is rewritten from its
-    * masked live view at `newPath` and re-pointed in ONE statement; a
-    * mid-vacuum crash leaves every not-yet-swapped table intact with
-    * the tombstone mask still in force. `gramdf` is untouched (the
-    * frozen order holds no per-doc rows), and the tombstones are
-    * dropped last. */
+    * containment index: the three per-doc tables are rewritten from
+    * their masked live views at `newPath/<suffix>`, overlapped.
+    * `gramdf` is untouched (the frozen order holds no per-doc rows),
+    * and the tombstones are dropped last. */
   def vacuumGramIndex(s: SparkSession, prefix: String,
-      newPath: String, buckets: Int = 32): Unit = {
-    val live = readGramIndexLive(s, prefix)
-    def swap(df: DataFrame, suffix: String, key: String): Unit =
-      graft.io.IndexLifecycle.stagedSwap(s, s"${prefix}_$suffix", df,
-        key, buckets, s"$newPath/$suffix")
-    // independent per-table swaps — overlap them (guide §2.6; crash
-    // contract unchanged, see vacuumCorpusIndex)
-    graft.io.Sinks.concurrently(Seq(
-      () => swap(live.ranked, "ranked", "g"),
-      () => swap(live.prefixes, "prefixes", "g"),
-      () => swap(live.docGrams, "docgrams", "doc_id")))
-    s.sql(s"DROP TABLE IF EXISTS ${prefix}_tombstones")
-  }
+      newPath: String, buckets: Int = 32): Unit =
+    IndexLifecycle.vacuum(s, GramIndexTables, prefix, prefix, buckets,
+      sfx => s"$newPath/$sfx")
 
   /** Tombstone a takedown batch of names out of a persisted
     * [[NameIndex]] — [[purgeGramIndex]]'s discipline for the fuzzy
@@ -2134,19 +2066,14 @@ object DedupOps {
     * frequency at all. Insert-only, cost ∝ takedown batch. */
   def purgeNameIndex(s: SparkSession, dead: DataFrame, prefix: String,
       path: String): Unit =
-    graft.io.Sinks.appendBucketedTable(
-      dead.select(col("p_name")).distinct(), s"${prefix}_tombstones",
-      "p_name", 1, s"$path/tombstones")
+    IndexLifecycle.appendTombstones(NameIndexTables,
+      dead.select(col("p_name")).distinct(), prefix, path)
 
   /** Open a persisted [[NameIndex]] with tombstones applied (broadcast
     * anti-join on every per-name table). */
-  def readNameIndexLive(s: SparkSession, prefix: String): NameIndex = {
-    val idx = readNameIndex(s, prefix)
-    def mask(df: DataFrame) = graft.io.IndexLifecycle.maskTombstones(
-      s, df, s"${prefix}_tombstones", "p_name")
-    NameIndex(mask(idx.grams), mask(idx.prefixes), mask(idx.chars),
-      mask(idx.tiny), idx.bigramDf)
-  }
+  def readNameIndexLive(s: SparkSession, prefix: String): NameIndex =
+    nameIndexOf(IndexLifecycle.readTables(s, NameIndexTables, prefix,
+      prefix, live = true))
 
   /** Fold an accepted name batch into a persisted [[NameIndex]]
     * without rebuilding. Same maintenance discipline as
@@ -2165,18 +2092,12 @@ object DedupOps {
     try {
       // first append materializes the gram cache; the remaining three
       // independent appends overlap (guide §2.6)
-      graft.io.Sinks.appendBucketedTable(grams, s"${prefix}_grams",
-        "bg", buckets, s"$path/grams")
-      graft.io.Sinks.concurrently(Seq(
-        () => graft.io.Sinks.appendBucketedTable(
+      IndexLifecycle.appendTables(s, NameIndexTables, prefix, path,
+        buckets)("grams" -> grams)
+      IndexLifecycle.appendTables(s, NameIndexTables, prefix, path,
+        buckets)("prefixes" ->
           namePrefixes(grams, s.table(s"${prefix}_bigramdf")),
-          s"${prefix}_prefixes", "bg", buckets, s"$path/prefixes"),
-        () => graft.io.Sinks.appendBucketedTable(nameCharRows(newNames),
-          s"${prefix}_chars", "ch", buckets, s"$path/chars"),
-        () => graft.io.Sinks.appendBucketedTable(
-          newNames.select(col("p_name"), length(col("p_name")).as("ln"))
-            .filter(col("ln") <= EditCap),
-          s"${prefix}_tiny", "ln", buckets, s"$path/tiny")))
+        "chars" -> nameCharRows(newNames), "tiny" -> nameTinyRows(newNames))
     } finally grams.unpersist()
   }
 
@@ -2209,8 +2130,7 @@ object DedupOps {
     val grams = nameGramRows(newNames).persist()
     val prefixes = namePrefixes(grams, corpus.bigramDf)
     val chars = nameCharRows(newNames)
-    val tiny = newNames.select(col("p_name"), length(col("p_name")).as("ln"))
-      .filter(col("ln") <= EditCap)
+    val tiny = nameTinyRows(newNames)
       .withColumn("lnk",
         explode(expr(s"sequence(greatest(ln - $EditCap, 0), ln + $EditCap)")))
     val corpusTinyKeyed = corpus.tiny // bucketed on ln — the probe key
@@ -2232,20 +2152,9 @@ object DedupOps {
     * four per-name tables from their masked live views (staged swaps),
     * keep `bigramdf` frozen, drop the tombstones. */
   def vacuumNameIndex(s: SparkSession, prefix: String,
-      newPath: String, buckets: Int = 32): Unit = {
-    val live = readNameIndexLive(s, prefix)
-    def swap(df: DataFrame, suffix: String, key: String): Unit =
-      graft.io.IndexLifecycle.stagedSwap(s, s"${prefix}_$suffix", df,
-        key, buckets, s"$newPath/$suffix")
-    // independent per-table swaps — overlap them (guide §2.6; crash
-    // contract unchanged, see vacuumCorpusIndex)
-    graft.io.Sinks.concurrently(Seq(
-      () => swap(live.grams, "grams", "bg"),
-      () => swap(live.prefixes, "prefixes", "bg"),
-      () => swap(live.chars, "chars", "ch"),
-      () => swap(live.tiny, "tiny", "ln")))
-    s.sql(s"DROP TABLE IF EXISTS ${prefix}_tombstones")
-  }
+      newPath: String, buckets: Int = 32): Unit =
+    IndexLifecycle.vacuum(s, NameIndexTables, prefix, prefix, buckets,
+      sfx => s"$newPath/$sfx")
 
   /** q257: CONTAINMENT-INDEX PURGE under the bit-exact gate — the
     * right-to-be-forgotten proof for the persisted [[GramIndex]]
@@ -2270,9 +2179,7 @@ object DedupOps {
       val isDead = col("doc_id") % 10 =!= 0 && col("doc_id") % 4 === 1
       val prefix = "gix_q257"
       val path = s"${graft.Tables.scratchDir}/gix_q257"
-      Seq("ranked", "prefixes", "docgrams", "gramdf", "tombstones")
-        .foreach(t => s.sql(s"DROP TABLE IF EXISTS ${prefix}_$t"))
-      graft.io.IndexLifecycle.rmDir(path)
+      IndexLifecycle.resetPrefix(s, prefix, path)
       writeGramIndex(buildGramIndex(docs.filter(!isNew)), prefix, path,
         buckets = 8)
       purgeGramIndex(s, docs.filter(isDead).select(col("doc_id")),
@@ -2330,9 +2237,7 @@ object DedupOps {
         .withColumn("b", bucket).persist()
       val prefix = "nix_q258"
       val path = s"${graft.Tables.scratchDir}/nix_q258"
-      Seq("grams", "prefixes", "chars", "tiny", "bigramdf", "tombstones")
-        .foreach(t => s.sql(s"DROP TABLE IF EXISTS ${prefix}_$t"))
-      graft.io.IndexLifecycle.rmDir(path)
+      IndexLifecycle.resetPrefix(s, prefix, path)
       writeNameIndex(
         buildNameIndex(names.filter(col("b") =!= 0).drop("b")),
         prefix, path, buckets = 8)
@@ -2404,7 +2309,7 @@ object DedupOps {
       val isDead = col("doc_id") % 10 =!= 0 && col("doc_id") % 4 === 1
       val prefix = "gix_q262"
       val path = s"${graft.Tables.scratchDir}/gix_q262"
-      graft.io.IndexLifecycle.resetPrefix(s, prefix, path)
+      IndexLifecycle.resetPrefix(s, prefix, path)
       writeGramIndex(buildGramIndex(docs.filter(!isNew)), prefix,
         s"$path/idx", buckets = 8)
       purgeGramIndex(s, docs.filter(isDead).select(col("doc_id")),
@@ -2426,7 +2331,7 @@ object DedupOps {
         .withColumn("b", bucket).persist()
       val prefix = "nix_q263"
       val path = s"${graft.Tables.scratchDir}/nix_q263"
-      graft.io.IndexLifecycle.resetPrefix(s, prefix, path)
+      IndexLifecycle.resetPrefix(s, prefix, path)
       writeNameIndex(
         buildNameIndex(names.filter(col("b") =!= 0).drop("b")),
         prefix, s"$path/idx", buckets = 8)

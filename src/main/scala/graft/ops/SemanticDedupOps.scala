@@ -2,6 +2,8 @@ package graft.ops
 
 import graft.{OpSpec, Tables}
 import graft.Tables._
+import graft.io.IndexLifecycle
+import graft.io.IndexLifecycle.SemanticIndexTables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -337,15 +339,15 @@ object SemanticDedupOps {
       buckets: Int = 8): DataFrame = {
     val cents = coarseKmOfK(base, k).select(col("cid"), col("cv"),
       col("cnrm"))
-    graft.io.Sinks.bucketedTable(cents, s"${prefix}_semcents", "cid", 1,
-      s"$path/semcents")
+    IndexLifecycle.writeTables(SemanticIndexTables, prefix, path,
+      buckets)("semcents" -> cents)
     // assign against the RE-READ stored centroids — the same frozen
     // bytes every later ingest codes against
     val frozen = s.table(s"${prefix}_semcents")
-    graft.io.Sinks.bucketedTable(
-      semAssign(base, frozen).withColumn("ingest_batch", lit(-1L))
-        .repartition(buckets, col("cid")),
-      s"${prefix}_members", "cid", buckets, s"$path/members")
+    IndexLifecycle.writeTables(SemanticIndexTables, prefix, path,
+      buckets)("members" ->
+        semAssign(base, frozen).withColumn("ingest_batch", lit(-1L))
+          .repartition(buckets, col("cid")))
     s.table(s"${prefix}_members")
   }
 
@@ -373,7 +375,7 @@ object SemanticDedupOps {
     // generation, ingests code against ITS frozen centroids and append
     // to ITS members table (appendBucketedTable resolves the table's
     // registered location; `path` only seeds a first-build table)
-    val phys = graft.io.IndexLifecycle.livePrefix(s, prefix)
+    val phys = IndexLifecycle.livePrefix(s, prefix)
     val frozen = s.table(s"${phys}_semcents")
     // one assignment pass covers both halves: pr=1 is the stored
     // (primary) assignment, pr<=nprobe the probe fan-out — members
@@ -381,21 +383,11 @@ object SemanticDedupOps {
     // byte-identical across nprobe settings
     val asgAll = semAssignTop(batch, frozen, nprobe).localCheckpoint()
     val asgB = asgAll.filter(col("pr") === 1).drop("pr")
-    val parted = asgB.repartition(buckets, col("cid"))
     // streaming callers pass their micro-batch id: the member append
     // then commits the id atomically with the rows and an at-least-
     // once replay is skipped (a replay's verdicts recompute fine from
     // the already-stored members — assignment is deterministic)
-    batchId match {
-      case Some(id) =>
-        graft.io.Sinks.appendBucketedTableIdempotent(s, parted, id,
-          s"${phys}_members", "cid", buckets, s"$path/members"); ()
-      case None =>
-        graft.io.Sinks.appendBucketedTable(
-          parted.withColumn("ingest_batch", lit(-1L)),
-          s"${phys}_members", "cid", buckets, s"$path/members")
-    }
-    s.catalog.refreshTable(s"${phys}_members")
+    appendMembers(s, asgB, phys, path, buckets, batchId)
     // members now include the batch itself, so within-batch smaller-id
     // pairs are covered by the same single equi-join; the tombstone
     // mask keeps purged vectors out of the witness set
@@ -421,19 +413,18 @@ object SemanticDedupOps {
   def ingestSemanticIndexAppend(s: SparkSession, batch: DataFrame,
       prefix: String, path: String, buckets: Int = 8,
       batchId: Option[Long] = None): Unit = {
-    val phys = graft.io.IndexLifecycle.livePrefix(s, prefix)
-    val frozen = s.table(s"${phys}_semcents")
-    val asgB = semAssign(batch, frozen)
-    val parted = asgB.repartition(buckets, col("cid"))
-    batchId match {
-      case Some(id) =>
-        graft.io.Sinks.appendBucketedTableIdempotent(s, parted, id,
-          s"${phys}_members", "cid", buckets, s"$path/members"); ()
-      case None =>
-        graft.io.Sinks.appendBucketedTable(
-          parted.withColumn("ingest_batch", lit(-1L)),
-          s"${phys}_members", "cid", buckets, s"$path/members")
-    }
+    val phys = IndexLifecycle.livePrefix(s, prefix)
+    appendMembers(s, semAssign(batch, s.table(s"${phys}_semcents")), phys,
+      path, buckets, batchId)
+  }
+
+  /** Append cell-assigned rows to generation `phys`'s members table
+    * (`path` only seeds a first-build table; appends follow the
+    * registered location) and refresh its file listing. */
+  private def appendMembers(s: SparkSession, asg: DataFrame, phys: String,
+      path: String, buckets: Int, batchId: Option[Long]): Unit = {
+    IndexLifecycle.appendTables(s, SemanticIndexTables, phys, path,
+      buckets, batchId)("members" -> asg.repartition(buckets, col("cid")))
     s.catalog.refreshTable(s"${phys}_members")
   }
 
@@ -447,7 +438,7 @@ object SemanticDedupOps {
   private def liveSemanticMembers(s: SparkSession,
       prefix: String): DataFrame =
     liveSemanticMembersAt(s, prefix,
-      graft.io.IndexLifecycle.livePrefix(s, prefix))
+      IndexLifecycle.livePrefix(s, prefix))
 
   /** [[liveSemanticMembers]] with the generation prefix ALREADY
     * resolved — callers that resolved the pointer for their own table
@@ -455,9 +446,8 @@ object SemanticDedupOps {
     * pointer-read job (guide §1, coalesce the pointer reads). */
   private def liveSemanticMembersAt(s: SparkSession, prefix: String,
       phys: String): DataFrame =
-    graft.io.IndexLifecycle.maskTombstones(s,
-      s.table(s"${phys}_members").drop("ingest_batch"),
-      s"${prefix}_tombstones", "vec_id")
+    IndexLifecycle.readTable(s, SemanticIndexTables, "members", prefix,
+      phys, live = true)
 
   /** Tombstone a batch of vec_ids out of the persisted semantic
     * index — the delete half q242 was missing (the vector index got
@@ -469,22 +459,26 @@ object SemanticDedupOps {
     * they keep masking across generations until folded. */
   def purgeSemanticIndex(s: SparkSession, delIds: DataFrame,
       prefix: String, path: String): Unit =
-    graft.io.Sinks.appendBucketedTable(
-      delIds.select(col("vec_id")).distinct(), s"${prefix}_tombstones",
-      "vec_id", 1, s"$path/tombstones")
+    IndexLifecycle.appendTombstones(SemanticIndexTables,
+      delIds.select(col("vec_id")).distinct(), prefix, path)
 
   /** Serve the persisted semantic index's CURRENT verdicts: the
     * smaller-id-wins prune over the live generation's stored members
     * (tombstone-masked) — pointer-resolved, zero training in the plan
     * (the q212 trajectory answered entirely from stored tables). */
   def semanticIndexVerdicts(s: SparkSession, prefix: String,
-      nprobe: Int = 1): DataFrame = {
-    val phys = graft.io.IndexLifecycle.livePrefix(s, prefix)
+      nprobe: Int = 1): DataFrame =
+    verdictsAt(s, prefix, IndexLifecycle.livePrefix(s, prefix), nprobe)
+
+  /** The smaller-id-wins verdicts of generation `phys`'s
+    * tombstone-masked members. */
+  private def verdictsAt(s: SparkSession, prefix: String, phys: String,
+      nprobe: Int): DataFrame = {
     val m = liveSemanticMembersAt(s, prefix, phys)
     if (nprobe <= 1) semPruneVerdicts(m, m)
     else {
       // multi-probe SERVE: re-probe the live members' stored floats
-      // against the live generation's frozen centroids — tombstoned
+      // against the generation's frozen centroids — tombstoned
       // vectors are already masked out of `m`, so they stop being
       // probes AND witnesses; members stay single-assigned on disk
       val frozen = s.table(s"${phys}_semcents")
@@ -499,21 +493,17 @@ object SemanticDedupOps {
     * WITHOUT a retrain — the cheap maintenance path when drift doesn't
     * yet justify [[retrainSemanticIndex]]'s training passes (q260's
     * 'hold' decision): the live generation's masked members are
-    * rewritten at `newPath` and swapped in with one SET LOCATION
-    * ([[graft.io.Sinks.repointTable]] — a crash leaves the old file
-    * set serving with the mask still in force), centroids stay frozen,
-    * tombstones retire. Serving results are unchanged by construction
+    * rewritten at `newPath/members` and swapped in with one SET
+    * LOCATION ([[IndexLifecycle.vacuum]] — a crash leaves the
+    * old file set serving with the mask still in force), centroids
+    * stay frozen, tombstones retire. Serving results are unchanged by construction
     * (the mask was already applied at read time); what vacuum buys is
     * the masked rows' scan + anti-join cost back. */
   def vacuumSemanticIndex(s: SparkSession, prefix: String,
-      newPath: String, buckets: Int = 8): Unit = {
-    val phys = graft.io.IndexLifecycle.livePrefix(s, prefix)
-    graft.io.IndexLifecycle.stagedSwap(s, s"${phys}_members",
-      liveSemanticMembers(s, prefix)
-        .withColumn("ingest_batch", lit(-1L)),
-      "cid", buckets, s"$newPath/members")
-    s.sql(s"DROP TABLE IF EXISTS ${prefix}_tombstones")
-  }
+      newPath: String, buckets: Int = 8): Unit =
+    IndexLifecycle.vacuum(s, SemanticIndexTables, prefix,
+      IndexLifecycle.livePrefix(s, prefix), buckets,
+      sfx => s"$newPath/$sfx")
 
   /** Re-train the semantic index on its CURRENT stored corpus and flip
     * the generation pointer — the [[retrainVectorIndex]] maintenance
@@ -522,7 +512,8 @@ object SemanticDedupOps {
     * balance exactly as it does for the vector index, and the same
     * answer applies — periodically re-train OFFLINE into
     * `<prefix>_r<gen>_*` tables nothing references, then publish with
-    * ONE pointer flip ([[flipGenerationPtr]]). A crash anywhere before
+    * ONE pointer flip ([[IndexLifecycle.publishGeneration]]). A crash
+    * anywhere before
     * the flip leaves the old generation serving, bit-identical; a
     * crash after merely leaks droppable staging. Runs with ingest
     * quiesced (the snapshot-then-flip contract shared with vacuum /
@@ -541,10 +532,8 @@ object SemanticDedupOps {
   private[graft] def stageRetrainSemanticIndex(s: SparkSession,
       prefix: String, newPath: String, k: Int = KmK,
       buckets: Int = 8): Long = {
-    val gen = graft.io.IndexLifecycle.nextGeneration(s, prefix)
-    val phys = s"${prefix}_r$gen"
-    Seq("semcents", "members") // crashed-run leftovers
-      .foreach(t => s.sql(s"DROP TABLE IF EXISTS ${phys}_$t"))
+    val (gen, phys) = IndexLifecycle.stageGeneration(s,
+      SemanticIndexTables, prefix)
     // the stored member floats ARE the corpus snapshot — no source
     // rescan; parquet round-trips them bit-exactly, so training here
     // equals training on the original vectors. SURVIVORS only: the
@@ -552,21 +541,10 @@ object SemanticDedupOps {
     // tombstones dropped at publish (the vector-retrain contract).
     val corpus = liveSemanticMembers(s, prefix)
       .select(col("vec_id"), col("embedding"), col("nrm"))
-    val cents = coarseKmOfK(corpus, k).select(col("cid"), col("cv"),
-      col("cnrm"))
-    graft.io.Sinks.bucketedTable(cents, s"${phys}_semcents", "cid", 1,
-      s"$newPath/g$gen/semcents")
-    val frozen = s.table(s"${phys}_semcents")
-    graft.io.Sinks.bucketedTable(
-      semAssign(corpus, frozen).withColumn("ingest_batch", lit(-1L))
-        .repartition(buckets, col("cid")),
-      s"${phys}_members", "cid", buckets, s"$newPath/g$gen/members")
+    buildSemanticIndexTables(s, corpus, phys, s"$newPath/g$gen", k,
+      buckets)
     gen
   }
-
-  /** The table-family suffixes one semantic-index generation owns —
-    * the unit [[gcSemanticIndexGenerations]] retires. */
-  private val GenerationSuffixes = Seq("semcents", "members")
 
   /** The publication half of [[retrainSemanticIndex]]: one pointer
     * flip, then drop the superseded generation's tables — UNLESS that
@@ -575,19 +553,15 @@ object SemanticDedupOps {
     * bit-identically across the flip, reclaimed only by an explicit
     * [[gcSemanticIndexGenerations]] after an unpin. */
   private[graft] def publishRetrainSemanticIndex(s: SparkSession,
-      prefix: String, gen: Long, newPath: String): Unit = {
-    graft.io.IndexLifecycle.flipGenerationPtr(s, prefix, gen,
-      s"$newPath/g$gen")
-    graft.io.IndexLifecycle.retireSupersededUnlessPinned(s, prefix,
-      gen, GenerationSuffixes)
+      prefix: String, gen: Long, newPath: String): Unit =
     // the staged generation snapshotted the survivors, so the mask is
     // folded in — the tombstones retire with the old generation. NOTE
     // a retained (pinned) generation keeps masking through the
     // PREFIX-level tombstone registry until then, so a purge issued
     // before the retrain stays forgotten in the snapshot too — the
     // right-to-be-forgotten contract outranks reproducibility.
-    s.sql(s"DROP TABLE IF EXISTS ${prefix}_tombstones")
-  }
+    IndexLifecycle.publishGeneration(s, SemanticIndexTables, prefix, gen,
+      newPath)
 
   /** Serve a SPECIFIC retained generation's verdicts — the semantic
     * twin of [[graft.ops.VectorIndexOps.readVectorIndexAt]]: a
@@ -598,33 +572,18 @@ object SemanticDedupOps {
     * pinned before the retrain that superseded it. */
   def semanticIndexVerdictsAt(s: SparkSession, prefix: String,
       gen: Long, nprobe: Int = 1): DataFrame = {
-    val phys = graft.io.IndexLifecycle.generationPrefix(prefix, gen)
+    val phys = IndexLifecycle.generationPrefix(prefix, gen)
     require(s.catalog.tableExists(s"${phys}_members"),
       s"generation $gen of semantic index '$prefix' is not retained — " +
         "pin it before the retrain that supersedes it")
-    val m = graft.io.IndexLifecycle.maskTombstones(s,
-      s.table(s"${phys}_members").drop("ingest_batch"),
-      s"${prefix}_tombstones", "vec_id")
-    if (nprobe <= 1) semPruneVerdicts(m, m)
-    else {
-      val frozen = s.table(s"${phys}_semcents")
-      val probeAll = semAssignTop(
-        m.select(col("vec_id"), col("embedding"), col("nrm")),
-        frozen, nprobe).drop("pr")
-      semPruneVerdictsProbed(m, probeAll, m)
-    }
+    verdictsAt(s, prefix, phys, nprobe)
   }
 
   /** Retire every retired (non-live, unpinned) semantic-index
     * generation — tables and registered data dirs. */
   def gcSemanticIndexGenerations(s: SparkSession,
       prefix: String): Seq[Long] =
-    graft.io.IndexLifecycle.gcGenerations(s, prefix, GenerationSuffixes)
-
-  /** Idempotent pre-build reset for a semantic-index prefix. */
-  def resetSemanticIndex(s: SparkSession, prefix: String,
-      path: String): Unit =
-    graft.io.IndexLifecycle.resetPrefix(s, prefix, path)
+    IndexLifecycle.gcGenerations(s, SemanticIndexTables, prefix)
 
   /** q242: INCREMENTAL SemDeDup under the bit-exact gate. The corpus
     * arrives as three vec_id-ordered generations (base = first half by
@@ -649,7 +608,7 @@ object SemanticDedupOps {
       val b2 = e.filter(col("vec_id") * 4 >= total * 3)
       val prefix = "sem_q242"
       val path = s"${graft.Tables.scratchDir}/sem_q242"
-      resetSemanticIndex(s, prefix, path)
+      IndexLifecycle.resetPrefix(s, prefix, path)
       val v0 = buildSemanticIndex(s, base, prefix, path)
       val v1 = ingestSemanticIndex(s, b1, prefix, path)
       val v2 = ingestSemanticIndex(s, b2, prefix, path)
@@ -732,7 +691,7 @@ object SemanticDedupOps {
       val b2 = e.filter(col("vec_id") * 4 >= total * 3)
       val prefix = "sem_q287"
       val path = s"${graft.Tables.scratchDir}/sem_q287"
-      resetSemanticIndex(s, prefix, path)
+      IndexLifecycle.resetPrefix(s, prefix, path)
       val v0 = buildSemanticIndex(s, base, prefix, path, nprobe = 2)
       val v1 = ingestSemanticIndex(s, b1, prefix, path, nprobe = 2)
       val v2 = ingestSemanticIndex(s, b2, prefix, path, nprobe = 2)
@@ -970,7 +929,7 @@ object SemanticDedupOps {
       val total = e.count()
       val prefix = "sem_q255"
       val path = s"${graft.Tables.scratchDir}/sem_q255"
-      resetSemanticIndex(s, prefix, path)
+      IndexLifecycle.resetPrefix(s, prefix, path)
       // tables-only build + append-only ingests: this trajectory never
       // reads the per-step verdicts (the serve below re-derives them
       // from the stored tables), so don't compute them (guide §1.2)
@@ -1004,7 +963,7 @@ object SemanticDedupOps {
       val total = e.count()
       val prefix = "sem_q261"
       val path = s"${graft.Tables.scratchDir}/sem_q261"
-      resetSemanticIndex(s, prefix, path)
+      IndexLifecycle.resetPrefix(s, prefix, path)
       // tables-only build + append-only ingest (verdicts re-derived at
       // serve time; the per-step ones were discarded — guide §1.2)
       buildSemanticIndexTables(s, e.filter(col("vec_id") * 2 < total),
@@ -1085,7 +1044,7 @@ object SemanticDedupOps {
       val total = e.count()
       val prefix = "sem_q289"
       val path = s"${graft.Tables.scratchDir}/sem_q289"
-      resetSemanticIndex(s, prefix, path)
+      IndexLifecycle.resetPrefix(s, prefix, path)
       // tables-only build + append-only ingest (verdicts re-derived at
       // serve time; the per-step ones were discarded — guide §1.2)
       buildSemanticIndexTables(s, e.filter(col("vec_id") * 2 < total),
@@ -1164,7 +1123,7 @@ object SemanticDedupOps {
       val total = e.count()
       val prefix = "sem_q264"
       val path = s"${graft.Tables.scratchDir}/sem_q264"
-      resetSemanticIndex(s, prefix, path)
+      IndexLifecycle.resetPrefix(s, prefix, path)
       // tables-only build + append-only ingest (verdicts re-derived at
       // serve time; the per-step ones were discarded — guide §1.2)
       buildSemanticIndexTables(s, e.filter(col("vec_id") * 2 < total),
@@ -1719,7 +1678,7 @@ object SemanticDedupOps {
       val total = e.count()
       val prefix = "sem_q298"
       val path = s"${graft.Tables.scratchDir}/sem_q298"
-      resetSemanticIndex(s, prefix, path)
+      IndexLifecycle.resetPrefix(s, prefix, path)
       // tables-only build + append-only ingests: both serves below
       // re-derive verdicts from the stored generations; the per-step
       // verdicts were discarded (guide §1.2)
@@ -1729,7 +1688,7 @@ object SemanticDedupOps {
         col("vec_id") * 4 < total * 3), prefix, s"$path/idx")
       ingestSemanticIndexAppend(s, e.filter(col("vec_id") * 4 >= total * 3),
         prefix, s"$path/idx")
-      graft.io.IndexLifecycle.pinGeneration(s, prefix, 0L, s"$path/idx")
+      IndexLifecycle.pinGeneration(s, prefix, 0L, s"$path/idx")
       retrainSemanticIndex(s, prefix, s"$path/retrain")
       val pinned = semanticIndexVerdictsAt(s, prefix, 0L)
         .withColumn("generation", lit(0L))

@@ -2110,8 +2110,7 @@ object TextOps {
       val isDead = col("doc_id") % 10 =!= 0 && col("doc_id") % 4 === 1
       val prefix = "nvx_q285"
       val path = s"${graft.Tables.scratchDir}/nvx_q285"
-      s.sql(s"DROP TABLE IF EXISTS ${prefix}_gramdf")
-      graft.io.IndexLifecycle.rmDir(path)
+      graft.io.IndexLifecycle.resetPrefix(s, prefix, path)
       writeNoveltyIndex(docs.filter(!isNew), prefix, path)
       purgeNoveltyIndex(s, docs.filter(isDead), prefix, takedownId = 0L)
       ingestNovelty(s, docs.filter(isNew), prefix)
@@ -2158,9 +2157,7 @@ object TextOps {
       val isDead = col("doc_id") % 10 =!= 0 && col("doc_id") % 4 === 1
       val prefix = "nvx_q286"
       val path = s"${graft.Tables.scratchDir}/nvx_q286"
-      Seq("gramdf", "gramdf__vacuum")
-        .foreach(t => s.sql(s"DROP TABLE IF EXISTS ${prefix}_$t"))
-      graft.io.IndexLifecycle.rmDir(path)
+      graft.io.IndexLifecycle.resetPrefix(s, prefix, path)
       writeNoveltyIndex(docs.filter(!isNew), prefix, s"$path/idx")
       purgeNoveltyIndex(s, docs.filter(isDead), prefix, takedownId = 0L)
       vacuumNoveltyIndex(s, prefix, s"$path/vac")
@@ -2184,8 +2181,7 @@ object TextOps {
       val isNew = col("doc_id") % 10 === 0
       val prefix = "nvx_q283"
       val path = s"${graft.Tables.scratchDir}/nvx_q283"
-      s.sql(s"DROP TABLE IF EXISTS ${prefix}_gramdf")
-      graft.io.IndexLifecycle.rmDir(path)
+      graft.io.IndexLifecycle.resetPrefix(s, prefix, path)
       writeNoveltyIndex(docs.filter(!isNew), prefix, path)
       ingestNovelty(s, docs.filter(isNew), prefix)
     },

@@ -2,6 +2,8 @@ package graft.ops
 
 import graft.{OpSpec, Tables}
 import graft.Tables._
+import graft.io.IndexLifecycle
+import graft.io.IndexLifecycle.VectorIndexTables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -138,53 +140,37 @@ object VectorIndexOps {
     // the coarse and PQ trainings are disjoint computations writing
     // distinct tables — overlap them (guide §2.6); the codes write
     // below depends on BOTH stored artifacts and stays sequential
-    graft.io.Sinks.concurrently(Seq(
-      () => graft.io.Sinks.bucketedTable(coarse, s"${prefix}_coarse",
-        "cid", 1, s"$path/coarse"),
-      () => graft.io.Sinks.bucketedTable(books, s"${prefix}_codebooks",
-        "sub", 1, s"$path/codebooks")))
-    val frozen = readVectorIndexHead(s, prefix)
-    graft.io.Sinks.bucketedTable(
-      codeVectors(corpus, frozen._1, frozen._2)
-        .withColumn("ingest_batch", lit(-1L)), s"${prefix}_codes",
-      "cell", buckets, s"$path/codes")
+    IndexLifecycle.writeTables(VectorIndexTables, prefix, path, buckets)(
+      "coarse" -> coarse, "codebooks" -> books)
+    IndexLifecycle.writeTables(VectorIndexTables, prefix, path, buckets)(
+      "codes" -> codeVectors(corpus, s.table(s"${prefix}_coarse"),
+        s.table(s"${prefix}_codebooks")))
   }
 
-  private def readVectorIndexHead(s: SparkSession, prefix: String)
-      : (DataFrame, DataFrame) =
-    (s.table(s"${prefix}_coarse"), s.table(s"${prefix}_codebooks"))
-
-  /** Resolve a logical index prefix to its LIVE physical table prefix.
-    * An index that has never been retrained has no pointer table and
-    * resolves to itself (generation 0 — the plain `<prefix>_coarse` /
-    * `_codebooks` / `_codes` names [[buildVectorIndex]] writes).
-    * [[retrainVectorIndex]] writes each new generation under
-    * `<prefix>_rN_*` names and flips the single-row `<prefix>_ptr`
-    * table — ONE atomic publication for all three tables, which three
-    * per-table location swaps could never give (a crash between them
-    * would leave new centroids over old codes: a silently WRONG index,
-    * not a stale one). The pointer read is a 1-row collect at plan-
-    * construction time — driver-bounded by construction. */
-  private def livePrefix(s: SparkSession, prefix: String): String =
-    graft.io.IndexLifecycle.livePrefix(s, prefix)
-
-  /** Registered location of a catalog table — appends target it so a
-    * re-pointed (vacuumed/compacted/retrained) table keeps accepting
-    * batches without the caller tracking path moves. */
-  private def tableLocation(s: SparkSession, name: String): String =
-    graft.io.Sinks.tableLocation(s, name)
-
-  /** Re-open a persisted [[VectorIndex]] by logical prefix (pointer-
-    * resolved — see [[livePrefix]]). The physical `ingest_batch`
-    * maintenance tag (idempotent streaming appends key on it) is
-    * dropped on open — index consumers see the logical
+  /** Open generation `phys` of logical index `prefix`; `live` masks
+    * the codes with the prefix's tombstones. The physical
+    * `ingest_batch` maintenance tag (idempotent streaming appends key
+    * on it) is dropped — index consumers see the logical
     * (vec_id, cell, sub, code) schema only. */
-  def readVectorIndex(s: SparkSession, prefix: String): VectorIndex = {
-    val phys = livePrefix(s, prefix)
-    val (coarse, books) = readVectorIndexHead(s, phys)
-    VectorIndex(coarse, books,
-      s.table(s"${phys}_codes").drop("ingest_batch"))
+  private def vectorIndexAt(s: SparkSession, prefix: String,
+      phys: String, live: Boolean): VectorIndex = {
+    val m = IndexLifecycle.readTables(s, VectorIndexTables, prefix, phys,
+      live)
+    VectorIndex(m("coarse"), m("codebooks"), m("codes"))
   }
+
+  /** Re-open a persisted [[VectorIndex]] by logical prefix, resolved
+    * through the generation pointer ([[IndexLifecycle.livePrefix]]).
+    * An index that has never been retrained resolves
+    * to itself (generation 0 — the plain `<prefix>_coarse` /
+    * `_codebooks` / `_codes` names [[buildVectorIndex]] writes);
+    * [[retrainVectorIndex]] publishes each new generation with ONE
+    * single-row pointer flip, which three per-table location swaps
+    * could never give (a crash between them would leave new centroids
+    * over old codes: a silently WRONG index, not a stale one). */
+  def readVectorIndex(s: SparkSession, prefix: String): VectorIndex =
+    vectorIndexAt(s, prefix, IndexLifecycle.livePrefix(s, prefix),
+      live = false)
 
   /** Fold a new vector batch into a persisted index: assign + code
     * against the FROZEN stored codebooks (zero training anywhere in
@@ -197,93 +183,61 @@ object VectorIndexOps {
   def appendToVectorIndex(s: SparkSession, newVecs: DataFrame,
       prefix: String, path: String, buckets: Int = 8,
       batchId: Option[Long] = None): Unit = {
-    // ONE pointer resolve per append (readVectorIndex + a second
-    // livePrefix for the codes table paid two 1-row pointer reads per
-    // batch once a retrain generation exists — guide §1, coalesce the
-    // generation-pointer reads)
-    val phys = livePrefix(s, prefix)
-    val (coarse, books) = readVectorIndexHead(s, phys)
-    val coded = codeVectors(newVecs, coarse, books)
-    // resolve the live codes table and ITS registered location: after
-    // a vacuum/retrain moved the table, appends must follow it (a
-    // caller-tracked path would hit mismatchedTableLocation); `path`
-    // only seeds a first append against a not-yet-existing table
-    val codesTable = s"${phys}_codes"
-    val loc = if (s.catalog.tableExists(codesTable))
-      tableLocation(s, codesTable) else s"$path/codes"
-    batchId match {
-      case Some(id) =>
-        graft.io.Sinks.appendBucketedTableIdempotent(s, coded, id,
-          codesTable, "cell", buckets, loc); ()
-      case None =>
-        graft.io.Sinks.appendBucketedTable(
-          coded.withColumn("ingest_batch", lit(-1L)),
-          codesTable, "cell", buckets, loc)
-    }
+    // ONE pointer resolve per append (guide §1, coalesce the
+    // generation-pointer reads); the append follows the live codes
+    // table's registered location, so a vacuum/retrain move needs no
+    // caller-tracked path — `path` only seeds a first append
+    val phys = IndexLifecycle.livePrefix(s, prefix)
+    val coded = codeVectors(newVecs, s.table(s"${phys}_coarse"),
+      s.table(s"${phys}_codebooks"))
+    IndexLifecycle.appendTables(s, VectorIndexTables, phys, path, buckets,
+      batchId)("codes" -> coded)
   }
 
   /** Tombstone a batch of vec_ids out of a persisted index — the
     * delete half of the serving lifecycle (takedowns, opt-outs,
     * quality recalls). Deletes are LOGICAL: the batch of ids lands in
-    * `<prefix>_tombstones` (insert-only, cost = |batch|) and
+    * the prefix's tombstone table (insert-only, cost = |batch|) and
     * [[readVectorIndexLive]] masks them at read time; the 100 TB
     * codes table is not rewritten until [[vacuumVectorIndex]] folds
     * the mask in. This is the same append-now/compact-later
     * discipline as [[appendToVectorIndex]], applied to removal. */
   def deleteFromVectorIndex(s: SparkSession, delIds: DataFrame,
       prefix: String, path: String): Unit =
-    graft.io.Sinks.appendBucketedTable(
-      delIds.select(col("vec_id")), s"${prefix}_tombstones", "vec_id",
-      1, s"$path/tombstones")
+    IndexLifecycle.appendTombstones(VectorIndexTables, delIds, prefix,
+      path)
 
   /** Open an index with tombstones applied: the codes table anti-joined
     * against the (small, broadcast) tombstone set. Searches over the
     * live view see deletions immediately — before any vacuum — at the
     * cost of one broadcast anti-join on the probe path. */
-  def readVectorIndexLive(s: SparkSession, prefix: String): VectorIndex = {
-    val idx = readVectorIndex(s, prefix)
-    idx.copy(codes = graft.io.IndexLifecycle.maskTombstones(s,
-      idx.codes, s"${prefix}_tombstones", "vec_id"))
-  }
+  def readVectorIndexLive(s: SparkSession, prefix: String): VectorIndex =
+    vectorIndexAt(s, prefix, IndexLifecycle.livePrefix(s, prefix),
+      live = true)
 
-  /** Physically drop tombstoned rows: rewrite the codes table without
-    * them (bucketed on `cell`, one file per bucket) and clear the
-    * tombstone set. Follows [[graft.io.Sinks.compactBucketedTable]]'s
-    * swap discipline — the rewrite lands under a staging name at
-    * `newCodesPath` and the public name is re-pointed only after the
-    * write commits, so a mid-vacuum crash leaves the old registration
-    * (with its tombstone mask) fully intact. After a vacuum,
+  /** Physically drop tombstoned rows: rewrite the live generation's
+    * codes table without them at `newCodesPath` and clear the
+    * tombstone set ([[IndexLifecycle.vacuum]]). The rewrite
+    * lands under a staging name and the public name is re-pointed
+    * only after the write commits, so a mid-vacuum crash leaves the
+    * old registration (with its tombstone mask) fully intact. The
+    * rewrite is bucketed on `cell`, but not compacted to one file per
+    * bucket: the masked read of the bucketed table already
+    * hash-partitions on `cell`, so the staged swap's repartition is
+    * planned away and each write task writes one file per bucket it
+    * holds ([[IndexLifecycle.stagedSwap]]). A small codes table is
+    * read by one task (the lifecycle spec's 200-vector vacuum writes 4
+    * files for its 4 non-empty buckets); larger ones write up to
+    * tasks × buckets files (q262's gram vacuum: 20, 19 and 8 files for
+    * 8 buckets) — [[compactVectorIndex]] restores one per bucket.
+    * After a vacuum,
     * [[readVectorIndex]] and [[readVectorIndexLive]] agree, and the
     * spec proves the rewrite equals a from-scratch rebuild on the
     * surviving corpus. */
   def vacuumVectorIndex(s: SparkSession, prefix: String,
-      newCodesPath: String, buckets: Int = 8): Unit = {
-    val phys = livePrefix(s, prefix)
-    graft.io.IndexLifecycle.stagedSwap(s, s"${phys}_codes",
-      readVectorIndexLive(s, prefix).codes
-        // the live view drops the physical ingest_batch tag; rewrite
-        // with the maintenance tag so later tagged appends still match
-        // the table schema (vacuum only runs with ingest quiesced —
-        // appendBucketedTableIdempotent's contract)
-        .withColumn("ingest_batch", lit(-1L)),
-      "cell", buckets, newCodesPath)
-    // a crash between the re-point and this drop leaves the tombstones
-    // registered against an already-vacuumed codes table — harmless:
-    // the live view's anti-join then masks ids that no longer exist
-    // (an idempotent no-op) until the next maintenance run drops them
-    s.sql(s"DROP TABLE IF EXISTS ${prefix}_tombstones")
-  }
-
-  /** Idempotent pre-build reset for a persisted index prefix: drop
-    * every catalog table the lifecycle can leave behind (including a
-    * crashed vacuum's staging name) and clear the on-disk directory.
-    * The gated lifecycle queries run under a FIXED prefix + path and
-    * call this first, so repeated invocations (Bench's min-of-2, the
-    * correctness driver, specs) never accrete catalog tables or index
-    * files. */
-  def resetVectorIndex(s: SparkSession, prefix: String,
-      path: String): Unit =
-    graft.io.IndexLifecycle.resetPrefix(s, prefix, path)
+      newCodesPath: String, buckets: Int = 8): Unit =
+    IndexLifecycle.vacuum(s, VectorIndexTables, prefix,
+      IndexLifecycle.livePrefix(s, prefix), buckets, _ => newCodesPath)
 
   /** Compact the codes table's append-accreted file sets back to one
     * file per bucket — the periodic maintenance pass after N daily
@@ -298,7 +252,7 @@ object VectorIndexOps {
       oldCodesPath: String, newCodesPath: String,
       buckets: Int = 8): Unit =
     graft.io.Sinks.compactBucketedTable(s,
-      s"${livePrefix(s, prefix)}_codes", "cell",
+      s"${IndexLifecycle.livePrefix(s, prefix)}_codes", "cell",
       buckets, oldCodesPath, newCodesPath)
 
   /** RE-TRAIN a persisted [[VectorIndex]] from the CURRENT corpus —
@@ -320,7 +274,8 @@ object VectorIndexOps {
     * [[buildVectorIndex]], so retrain == scratch build is an
     * arithmetic identity, oracle-gated by q241), everything written
     * under next-generation `<prefix>_rN_*` names at `newPath` — and
-    * published by ONE single-row pointer flip ([[livePrefix]]). A
+    * published by ONE single-row pointer flip
+    * ([[IndexLifecycle.livePrefix]]). A
     * crash anywhere before the flip leaves the OLD generation serving
     * untouched (spec-proven); after it, the superseded generation's
     * registrations and the folded tombstones are dropped (external
@@ -347,54 +302,27 @@ object VectorIndexOps {
   private[graft] def stageRetrainVectorIndex(s: SparkSession,
       corpus: DataFrame, prefix: String, newPath: String,
       buckets: Int = 8): Long = {
-    val gen = graft.io.IndexLifecycle.nextGeneration(s, prefix)
-    val phys = s"${prefix}_r$gen"
-    Seq("coarse", "codebooks", "codes") // crashed-run leftovers
-      .foreach(t => s.sql(s"DROP TABLE IF EXISTS ${phys}_$t"))
-    val survivors = graft.io.IndexLifecycle.maskTombstones(s, corpus,
-      s"${prefix}_tombstones", "vec_id")
-    val (coarse, books) = trainVectorCodebooks(survivors)
-    // overlap the two independent training writes (guide §2.6 — the
-    // buildVectorIndex pattern; staging tables nothing references yet)
-    graft.io.Sinks.concurrently(Seq(
-      () => graft.io.Sinks.bucketedTable(coarse, s"${phys}_coarse",
-        "cid", 1, s"$newPath/g$gen/coarse"),
-      () => graft.io.Sinks.bucketedTable(books, s"${phys}_codebooks",
-        "sub", 1, s"$newPath/g$gen/codebooks")))
-    val frozen = readVectorIndexHead(s, phys)
-    graft.io.Sinks.bucketedTable(
-      codeVectors(survivors, frozen._1, frozen._2)
-        .withColumn("ingest_batch", lit(-1L)),
-      s"${phys}_codes", "cell", buckets, s"$newPath/g$gen/codes")
+    val (gen, phys) = IndexLifecycle.stageGeneration(s,
+      VectorIndexTables, prefix)
+    val survivors = IndexLifecycle.maskTombstones(s, VectorIndexTables,
+      prefix, corpus)
+    buildVectorIndex(s, survivors, survivors, phys, s"$newPath/g$gen",
+      buckets)
     gen
   }
 
-  /** Flip the `<prefix>_ptr` generation pointer to `gen` — the shared
-    * publication primitive of every generational index
-    * ([[retrainVectorIndex]], [[retrainSemanticIndex]]), now ONE copy
-    * in [[graft.io.IndexLifecycle.flipGenerationPtr]]. */
-  private def flipGenerationPtr(s: SparkSession, prefix: String,
-      gen: Long, newPath: String): Unit =
-    graft.io.IndexLifecycle.flipGenerationPtr(s, prefix, gen, newPath)
-
-  /** The table-family suffixes one vector-index generation owns —
-    * the unit [[gcVectorIndexGenerations]] retires. */
-  private val GenerationSuffixes = Seq("coarse", "codebooks", "codes")
-
-  /** The publication half of [[retrainVectorIndex]]: flip the pointer
-    * to `gen` in one statement, then clean up the superseded
-    * generation and the folded tombstones — UNLESS the superseded
-    * generation is pinned ([[pinVectorIndexGeneration]]): a pinned
-    * snapshot keeps serving bit-identically across the flip, and its
-    * storage is reclaimed only by an explicit
-    * [[gcVectorIndexGenerations]] after an unpin. */
+  /** The publication half of [[retrainVectorIndex]]
+    * ([[IndexLifecycle.publishGeneration]]): flip the pointer
+    * to `gen` in one statement, then drop the superseded generation
+    * and the folded tombstones — UNLESS the superseded generation is
+    * pinned ([[pinVectorIndexGeneration]]): a pinned snapshot keeps
+    * serving bit-identically across the flip, and its storage is
+    * reclaimed only by an explicit [[gcVectorIndexGenerations]] after
+    * an unpin. */
   private[graft] def publishRetrainVectorIndex(s: SparkSession,
-      prefix: String, gen: Long, newPath: String): Unit = {
-    flipGenerationPtr(s, prefix, gen, newPath)
-    graft.io.IndexLifecycle.retireSupersededUnlessPinned(s, prefix,
-      gen, GenerationSuffixes)
-    s.sql(s"DROP TABLE IF EXISTS ${prefix}_tombstones")
-  }
+      prefix: String, gen: Long, newPath: String): Unit =
+    IndexLifecycle.publishGeneration(s, VectorIndexTables, prefix, gen,
+      newPath)
 
   /** Open a SPECIFIC generation of a persisted index — the
     * time-travel read a reproducible consumer uses: a training run
@@ -404,13 +332,11 @@ object VectorIndexOps {
     * pinned before the retrain that superseded it. */
   def readVectorIndexAt(s: SparkSession, prefix: String,
       gen: Long): VectorIndex = {
-    val phys = graft.io.IndexLifecycle.generationPrefix(prefix, gen)
+    val phys = IndexLifecycle.generationPrefix(prefix, gen)
     require(s.catalog.tableExists(s"${phys}_codes"),
       s"generation $gen of index '$prefix' is not retained — " +
         "pin it before the retrain that supersedes it")
-    val (coarse, books) = readVectorIndexHead(s, phys)
-    VectorIndex(coarse, books,
-      s.table(s"${phys}_codes").drop("ingest_batch"))
+    vectorIndexAt(s, prefix, phys, live = false)
   }
 
   /** Pin / unpin / GC — the snapshot-retention lifecycle, delegated to
@@ -419,15 +345,15 @@ object VectorIndexOps {
     * directories). */
   def pinVectorIndexGeneration(s: SparkSession, prefix: String,
       gen: Long, path: String): Unit =
-    graft.io.IndexLifecycle.pinGeneration(s, prefix, gen, path)
+    IndexLifecycle.pinGeneration(s, prefix, gen, path)
 
   def unpinVectorIndexGeneration(s: SparkSession, prefix: String,
       gen: Long, path: String): Unit =
-    graft.io.IndexLifecycle.unpinGeneration(s, prefix, gen, path)
+    IndexLifecycle.unpinGeneration(s, prefix, gen, path)
 
   def gcVectorIndexGenerations(s: SparkSession,
       prefix: String): Seq[Long] =
-    graft.io.IndexLifecycle.gcGenerations(s, prefix, GenerationSuffixes)
+    IndexLifecycle.gcGenerations(s, VectorIndexTables, prefix)
 
   /** The retention INVENTORY — one row per physically-retained
     * generation: its number, whether the pointer serves it, whether a
@@ -441,11 +367,11 @@ object VectorIndexOps {
     * retained generation — the generation domain is a handful of rows
     * at any corpus scale. */
   def vectorIndexInventory(s: SparkSession, prefix: String): DataFrame = {
-    val live = graft.io.IndexLifecycle.liveGeneration(s, prefix)
-    val pinned = graft.io.IndexLifecycle.pinnedGenerations(s, prefix)
-    graft.io.IndexLifecycle.retainedGenerations(s, prefix, "codes")
+    val live = IndexLifecycle.liveGeneration(s, prefix)
+    val pinned = IndexLifecycle.pinnedGenerations(s, prefix)
+    IndexLifecycle.retainedGenerations(s, prefix, "codes")
       .map { g =>
-        val gp = graft.io.IndexLifecycle.generationPrefix(prefix, g)
+        val gp = IndexLifecycle.generationPrefix(prefix, g)
         s.table(s"${gp}_codes").filter(col("sub") === 0)
           .agg(count(lit(1)).as("n_vecs"))
           .select(lit(g).as("gen"), lit(g == live).as("is_live"),
@@ -504,7 +430,7 @@ object VectorIndexOps {
       // leak one set of catalog tables and index files per invocation
       val path = s"${graft.Tables.scratchDir}/vidx_q205"
       val prefix = "vidx_q205"
-      resetVectorIndex(s, prefix, path)
+      IndexLifecycle.resetPrefix(s, prefix, path)
       buildVectorIndex(s, e, e, prefix, path)
       searchVectorIndex(
         table(s, dir, "embeddings").filter(col("vec_id") < 20)
@@ -530,7 +456,7 @@ object VectorIndexOps {
         .select(col("vec_id"), col("embedding"))
       val path = s"${graft.Tables.scratchDir}/vvac_q210"
       val prefix = "vvac_q210"
-      resetVectorIndex(s, prefix, path)
+      IndexLifecycle.resetPrefix(s, prefix, path)
       buildVectorIndex(s, e, e, prefix, path)
       deleteFromVectorIndex(s,
         e.filter(col("vec_id") % 7 === 3).select(col("vec_id")),
@@ -559,7 +485,7 @@ object VectorIndexOps {
         .select(col("vec_id"), col("embedding"))
       val base = s"${graft.Tables.scratchDir}/vcp_q221"
       val prefix = "vcp_q221"
-      resetVectorIndex(s, prefix, base)
+      IndexLifecycle.resetPrefix(s, prefix, base)
       buildVectorIndex(s, e, e.filter(col("vec_id") % 4 === 0), prefix,
         s"$base/idx")
       (1 to 3).foreach(i => appendToVectorIndex(s,
@@ -602,7 +528,7 @@ object VectorIndexOps {
     if (!built) {
       val e = table(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"))
-      resetVectorIndex(s, prefix, path)
+      IndexLifecycle.resetPrefix(s, prefix, path)
       buildVectorIndex(s, e, e, prefix, path)
     }
     prefix
@@ -799,7 +725,7 @@ object VectorIndexOps {
         .select(col("vec_id"), col("embedding"))
       val path = s"${graft.Tables.scratchDir}/vlm_q232"
       val prefix = "vlm_q232"
-      resetVectorIndex(s, prefix, path)
+      IndexLifecycle.resetPrefix(s, prefix, path)
       buildVectorIndex(s, e, e, prefix, path)
       deleteFromVectorIndex(s,
         e.filter(col("vec_id") % 5 === 2).select(col("vec_id")),
@@ -871,7 +797,7 @@ object VectorIndexOps {
         .select(col("vec_id"), col("embedding"))
       val base = s"${graft.Tables.scratchDir}/vrt_q241"
       val prefix = "vrt_q241"
-      resetVectorIndex(s, prefix, base)
+      IndexLifecycle.resetPrefix(s, prefix, base)
       val g0 = e.filter(col("vec_id") % 4 === 0)
       buildVectorIndex(s, g0, g0, prefix, s"$base/idx")
       (1 to 3).foreach(i => appendToVectorIndex(s,
@@ -908,7 +834,7 @@ object VectorIndexOps {
         .select(col("vec_id"), col("embedding"))
       val base = s"${graft.Tables.scratchDir}/vpg_q296"
       val prefix = "vpg_q296"
-      resetVectorIndex(s, prefix, base)
+      IndexLifecycle.resetPrefix(s, prefix, base)
       val g0 = e.filter(col("vec_id") % 4 === 0)
       buildVectorIndex(s, g0, g0, prefix, s"$base/idx")
       (1 to 3).foreach(i => appendToVectorIndex(s,
@@ -954,7 +880,7 @@ object VectorIndexOps {
         .select(col("vec_id"), col("embedding"))
       val base = s"${graft.Tables.scratchDir}/vgc_q297"
       val prefix = "vgc_q297"
-      resetVectorIndex(s, prefix, base)
+      IndexLifecycle.resetPrefix(s, prefix, base)
       val g0 = e.filter(col("vec_id") % 4 === 0)
       buildVectorIndex(s, g0, g0, prefix, s"$base/idx")
       (1 to 3).foreach(i => appendToVectorIndex(s,
@@ -992,7 +918,7 @@ object VectorIndexOps {
         .select(col("vec_id"), col("embedding"))
       val base = s"${graft.Tables.scratchDir}/vin_q299"
       val prefix = "vin_q299"
-      resetVectorIndex(s, prefix, base)
+      IndexLifecycle.resetPrefix(s, prefix, base)
       val g0 = e.filter(col("vec_id") % 16 === 0)
       buildVectorIndex(s, g0, g0, prefix, s"$base/idx")
       appendToVectorIndex(s,

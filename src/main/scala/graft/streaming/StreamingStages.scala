@@ -962,7 +962,7 @@ object StreamingStages {
         .select(col("vec_id"), col("embedding"))
       val base = s"${graft.Tables.scratchDir}/vsi_q219"
       val prefix = "vsi_q219"
-      graft.ops.VectorIndexOps.resetVectorIndex(s, prefix, base)
+      graft.io.IndexLifecycle.resetPrefix(s, prefix, base)
       val (streamDir, idxPath, ckpt) =
         (s"$base/stream", s"$base/idx", s"$base/ckpt")
       // train on the full corpus, start with ZERO codes — ingest is
@@ -1144,10 +1144,7 @@ object StreamingStages {
     (s, dir) => {
       val prefix = "sci_q230"
       val base = s"${graft.Tables.scratchDir}/sci_q230"
-      Seq("hashes", "shingles", "bands", "sizes", "bandcounts",
-        "tombstones").foreach(t =>
-        s.sql(s"DROP TABLE IF EXISTS ${prefix}_$t"))
-      graft.io.IndexLifecycle.rmDir(base)
+      graft.io.IndexLifecycle.resetPrefix(s, prefix, base)
       val docs = graft.Tables.table(s, dir, "documents")
       docs.filter(col("doc_id") % 10 =!= 0)
         .repartition(4, col("doc_id"))
@@ -1217,7 +1214,7 @@ object StreamingStages {
   private def semdedupStreamTrajectory(s: SparkSession, dir: String,
       prefix: String, nprobe: Int): DataFrame = {
     val base = s"${graft.Tables.scratchDir}/$prefix"
-    graft.ops.SemanticDedupOps.resetSemanticIndex(s, prefix, base)
+    graft.io.IndexLifecycle.resetPrefix(s, prefix, base)
     val e = graft.Tables.table(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"),
         expr("""CASE WHEN aggregate(embedding, 0e0,
@@ -1404,9 +1401,7 @@ object StreamingStages {
       import graft.ops.TextOps
       val prefix = "nvx_q284"
       val base = s"${graft.Tables.scratchDir}/nvx_q284"
-      Seq("gramdf", "verdicts")
-        .foreach(t => s.sql(s"DROP TABLE IF EXISTS ${prefix}_$t"))
-      graft.io.IndexLifecycle.rmDir(base)
+      graft.io.IndexLifecycle.resetPrefix(s, prefix, base)
       val docs = graft.Tables.table(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       TextOps.writeNoveltyIndex(docs.filter(col("doc_id") % 10 =!= 0),

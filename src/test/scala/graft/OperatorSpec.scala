@@ -5090,6 +5090,133 @@ class OperatorSpec extends AnyFunSuite {
     }
   }
 
+  test("IndexLifecycle declarations: per tombstoned family, a purge " +
+    "masks the live view, vacuum leaves exactly the declared tables " +
+    "holding the live rows, and resetPrefix leaves nothing behind") {
+    import spark.implicits._
+    import graft.io.IndexLifecycle
+    import graft.io.IndexLifecycle._
+    import graft.ops.{DedupOps, EmbeddingOps, SemanticDedupOps,
+      VectorIndexOps}
+    import org.apache.spark.sql.DataFrame
+    val texts = Seq(
+      1L -> "alpha beta gamma delta epsilon zeta eta theta iota kappa",
+      2L -> "one two three four five six seven eight nine ten",
+      3L -> "alpha beta gamma delta epsilon zeta eta theta iota lambda")
+      .toDF("doc_id", "text")
+    val names = Seq("alpha", "alphabet", "ninety", "gamma").toDF("p_name")
+    val e = EmbeddingOps.normedDf(spark, sf).filter(col("vec_id") < 200)
+      .select(col("vec_id"), col("embedding"), col("nrm"))
+    val vecs = e.select(col("vec_id"), col("embedding"))
+    val root = java.nio.file.Files.createTempDirectory("lcd").toString
+    val tag = root.replaceAll("[^A-Za-z0-9]", "").takeRight(8)
+    // by column name: a masked read puts the id column first (the
+    // anti-join's USING key), a plain read keeps the catalog order
+    def rows(dfs: Seq[DataFrame]) = dfs.map(d =>
+      d.select(d.columns.sorted.map(col): _*).collect().toSet)
+    /** One family's lifecycle through its public API: `build(px, path)`,
+      * `purge(px, path)` of the id `dead`, `vacuum(px, newPath)`, and
+      * its tables as opened by `read(px, live)`. */
+    final case class Family(name: String, tables: IndexTables, dead: Any,
+        build: (String, String) => Unit, purge: (String, String) => Unit,
+        vacuum: (String, String) => Unit,
+        read: (String, Boolean) => Seq[DataFrame])
+    def frames(p: Product) =
+      p.productIterator.collect { case d: DataFrame => d }.toSeq
+    val families = Seq(
+      Family("corpus", CorpusIndexTables, 1L,
+        (px, p) => DedupOps.writeCorpusIndex(
+          DedupOps.buildCorpusIndex(texts), px, p, buckets = 2),
+        (px, p) => DedupOps.purgeFromCorpusIndex(spark,
+          Seq(1L).toDF("doc_id"), px, p, buckets = 2),
+        (px, p) => DedupOps.vacuumCorpusIndex(spark, px, p, buckets = 2),
+        (px, live) => frames(
+          if (live) DedupOps.readCorpusIndexLive(spark, px)
+          else DedupOps.readCorpusIndex(spark, px))),
+      Family("gram", GramIndexTables, 1L,
+        (px, p) => DedupOps.writeGramIndex(DedupOps.buildGramIndex(texts),
+          px, p, buckets = 2),
+        (px, p) => DedupOps.purgeGramIndex(spark, Seq(1L).toDF("doc_id"),
+          px, p),
+        (px, p) => DedupOps.vacuumGramIndex(spark, px, p, buckets = 2),
+        (px, live) => frames(
+          if (live) DedupOps.readGramIndexLive(spark, px)
+          else DedupOps.readGramIndex(spark, px))),
+      Family("name", NameIndexTables, "alphabet",
+        (px, p) => DedupOps.writeNameIndex(DedupOps.buildNameIndex(names),
+          px, p, buckets = 2),
+        (px, p) => DedupOps.purgeNameIndex(spark,
+          Seq("alphabet").toDF("p_name"), px, p),
+        (px, p) => DedupOps.vacuumNameIndex(spark, px, p, buckets = 2),
+        (px, live) => frames(
+          if (live) DedupOps.readNameIndexLive(spark, px)
+          else DedupOps.readNameIndex(spark, px))),
+      Family("vector", VectorIndexTables, 5L,
+        (px, p) => VectorIndexOps.buildVectorIndex(spark, vecs, vecs, px, p),
+        (px, p) => VectorIndexOps.deleteFromVectorIndex(spark,
+          Seq(5L).toDF("vec_id"), px, p),
+        (px, p) => VectorIndexOps.vacuumVectorIndex(spark, px, p),
+        (px, live) => frames(
+          if (live) VectorIndexOps.readVectorIndexLive(spark, px)
+          else VectorIndexOps.readVectorIndex(spark, px))),
+      Family("semantic", SemanticIndexTables, 5L,
+        (px, p) => { SemanticDedupOps.buildSemanticIndexTables(spark, e,
+          px, p); () },
+        (px, p) => SemanticDedupOps.purgeSemanticIndex(spark,
+          Seq(5L).toDF("vec_id"), px, p),
+        (px, p) => SemanticDedupOps.vacuumSemanticIndex(spark, px, p),
+        (px, live) => IndexLifecycle.readTables(spark, SemanticIndexTables,
+          px, px, live).toSeq.sortBy(_._1).map(_._2)))
+    def prefixTables(px: String) =
+      spark.sessionState.catalog.listTables("default").map(_.table)
+        .filter(_.startsWith(s"${px}_")).toSet
+    try families.foreach { f =>
+      val px = s"lc${f.name}$tag"
+      val path = s"$root/${f.name}"
+      def masked(live: Boolean) = f.tables.tables.filter(_.masked)
+        .map(t => IndexLifecycle.readTable(spark, f.tables, t.suffix, px,
+          px, live).filter(col(f.tables.idCol) === lit(f.dead)).count())
+      f.build(px, s"$path/idx")
+      assert(masked(live = false).sum > 0,
+        s"${f.name}: the purged id is not in the built index")
+      f.purge(px, s"$path/idx")
+      // logical delete: the live view drops the id, the tables keep it
+      assert(masked(live = true).forall(_ == 0L),
+        s"${f.name}: the live view still serves the purged id")
+      assert(masked(live = false).sum > 0,
+        s"${f.name}: the purge rewrote a table")
+      val liveBefore = rows(f.read(px, true))
+      f.vacuum(px, s"$path/vac")
+      assert(prefixTables(px) == f.tables.suffixes.map(t => s"${px}_$t")
+        .toSet, s"${f.name}: after vacuum the catalog holds " +
+        s"${prefixTables(px)}, not the declared tables")
+      assert(masked(live = false).forall(_ == 0L),
+        s"${f.name}: vacuum left the purged id in a physical table")
+      assert(rows(f.read(px, false)) == liveBefore,
+        s"${f.name}: the vacuumed tables differ from the live view")
+      if (f.name == "vector") {
+        // the masked read of the bucketed codes table already
+        // hash-partitions on the bucket key, so the staged swap's
+        // repartition is planned away: files are per (task, bucket)
+        val files = new java.io.File(s"$path/vac").listFiles()
+          .map(_.getName).filter(_.endsWith(".parquet"))
+        val bucketIds = files.map(_.split("_").last.take(5)).toSet
+        info(s"vector vacuum: ${files.length} files for " +
+          s"${bucketIds.size} buckets")
+        assert(files.length >= bucketIds.size && bucketIds.size <= 8)
+      }
+      IndexLifecycle.resetPrefix(spark, px, path)
+      assert(prefixTables(px).isEmpty, s"${f.name}: reset left tables")
+      assert(!new java.io.File(path).exists(),
+        s"${f.name}: reset left the index directory")
+    } finally {
+      families.foreach(f =>
+        prefixTables(s"lc${f.name}$tag")
+          .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t")))
+      spark.catalog.clearCache()
+    }
+  }
+
   test("bench plan gate: the shuffle tally records exchange rows and " +
     "the gate trips on an intentional regression") {
     val tally = new graft.ShuffleTally
