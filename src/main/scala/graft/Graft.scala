@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Library entry point for users (the mains use the same pieces
-  * directly): one call yields a session with the engine's required
+/** Library entry point for users (the mains build theirs through
+  * [[mainSession]]): one call yields a session with the engine's required
   * configs (nanos-parquet read, AQE, UTC, codegen cache bound; see
   * [[Tables.configure]]) and its native SQL functions registered —
   * after this, `spark.sql("SELECT dot_product(a, b) ...")` and every
@@ -26,6 +26,20 @@ object Graft {
       b.config("spark.sql.shuffle.partitions", n.toString))
     val s = b.getOrCreate()
     GraftExtensions.install(s)
+    s
+  }
+
+  /** The session of the engine's mains (Bench, Verify, PlanDump,
+    * Prof): `local[N]` with N shuffle partitions, N from
+    * `SPARK_GRAFT_CPUS` (else `defaultCpus`), the UI off and WARN
+    * logging. */
+  private[graft] def mainSession(defaultCpus: String): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus)
+    val s = builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
     s
   }
 

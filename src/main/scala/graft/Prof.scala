@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
   SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: run one registered query (warmed at sf0.001, then timed at
   * SPARK_GRAFT_SF_DIR through the noop sink, Bench's methodology) and
@@ -14,13 +13,7 @@ object Prof {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Tables.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.mainSession(defaultCpus = "32")
     val jobs = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, String)]
     val stages = scala.collection.mutable
       .ArrayBuffer.empty[(Int, Long, Int, Long, String)]

@@ -127,8 +127,8 @@ object IndexLifecycle {
   /** Append (suffix, rows) pairs to declared tables of `phys`; `path`
     * only seeds a table that does not exist yet (appends follow the
     * registered location). With a `batchId` each append is idempotent
-    * per micro-batch ([[Sinks.appendBucketedTableIdempotent]]; several
-    * tables share one fused probe); without one, the appends overlap
+    * per micro-batch ([[Sinks.appendBucketedTablesIdempotent]], one
+    * fused probe for all of them); without one, the appends overlap
     * and tagged tables get the -1 tag. */
   def appendTables(s: SparkSession, f: IndexTables, phys: String,
       path: String, buckets: Int, batchId: Option[Long] = None)(
@@ -137,14 +137,11 @@ object IndexLifecycle {
       val t = f(sfx)
       (df, s"${phys}_$sfx", t.key, bucketsOf(t, buckets), s"$path/$sfx")
     }
-    (batchId, rows) match {
-      case (Some(id), Seq((sfx, df))) =>
-        val (d, name, key, nb, p) = part(sfx, df)
-        Sinks.appendBucketedTableIdempotent(s, d, id, name, key, nb, p); ()
-      case (Some(id), _) =>
+    batchId match {
+      case Some(id) =>
         Sinks.appendBucketedTablesIdempotent(s, id,
-          rows.map { case (sfx, df) => part(sfx, df) })
-      case (None, _) =>
+          rows.map { case (sfx, df) => part(sfx, df) }); ()
+      case None =>
         Sinks.concurrently(rows.map { case (sfx, df) =>
           val (d, name, key, nb, p) = part(sfx, df)
           () => Sinks.appendBucketedTable(tagged(f(sfx), d), name, key,
@@ -310,12 +307,16 @@ object IndexLifecycle {
   /** Apply a logical-delete mask: anti-join `df` against the (small,
     * broadcast) tombstone id set when the table exists. A tombstoned
     * id disappears from every read path immediately — before any
-    * vacuum — at the cost of one broadcast anti-join. */
+    * vacuum — at the cost of one broadcast anti-join. The columns keep
+    * `df`'s order (a USING key would move the id column first), so a
+    * live read, and the vacuum that stages it, match the plain read. */
   def maskTombstones(s: SparkSession, df: DataFrame,
       tombstoneTable: String, idCol: String): DataFrame =
     if (!s.catalog.tableExists(tombstoneTable)) df
-    else df.join(broadcast(s.table(tombstoneTable).select(col(idCol))),
-      Seq(idCol), "left_anti")
+    else {
+      val dead = s.table(tombstoneTable).select(col(idCol))
+      df.join(broadcast(dead), df(idCol) === dead(idCol), "left_anti")
+    }
 
   /** The physical table prefix of generation `gen`: gen 0 is the
     * build-time family under `prefix` itself; gen N ≥ 1 is the

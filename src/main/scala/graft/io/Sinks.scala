@@ -210,7 +210,7 @@ object Sinks {
     * appends; mid job commit → replay heals; after → replay skips.
     *
     * Cost: the FIRST-attempt path (no stored tag — every batch but a
-    * replay) pays only the per-file tag probe, whose scan is pruned to
+    * replay) pays only the one-job tag probe, whose scan is pruned to
     * the tag's row groups by parquet min/max stats (old -1/lower-id
     * files are skipped on their footers; the collected histogram is
     * bounded by the batch's file count ≤ buckets) — the batch plan is
@@ -223,26 +223,15 @@ object Sinks {
     * streaming checkpoint per table (resetting the checkpoint restarts
     * ids at 0 and would false-skip), and maintenance that folds or
     * rewrites tags away (rollup compaction writes -1) must only run
-    * while the feeding stream is stopped at a committed offset. */
+    * while the feeding stream is stopped at a committed offset.
+    * Returns whether the batch was appended (false: already complete).
+    * The one-table case of [[appendBucketedTablesIdempotent]]. */
   def appendBucketedTableIdempotent(
       spark: org.apache.spark.sql.SparkSession, df: DataFrame,
       batchId: Long, tableName: String, key: String, buckets: Int,
-      path: String): Boolean = {
-    val clean = !spark.catalog.tableExists(tableName) || {
-      // re-list before probing: the crashed attempt's append may have
-      // committed through a DIFFERENT session clone, whose write only
-      // invalidated its own relation cache — a stale file listing here
-      // would miss the committed tag and double-append
-      spark.catalog.refreshTable(tableName)
-      // tier-1 probe: one early-exiting LIMIT-1 stage — the whole cost
-      // of the common first-attempt path (the per-file job below only
-      // runs when a replay actually found the tag)
-      spark.table(tableName)
-        .filter(col("ingest_batch") === batchId).isEmpty
-    }
-    finishIdempotentAppend(spark, df, batchId, tableName, key, buckets,
-      path, clean)
-  }
+      path: String): Boolean =
+    appendBucketedTablesIdempotent(spark, batchId,
+      Seq((df, tableName, key, buckets, path))).head
 
   /** The shared tail of the idempotent append, after the tier-1 probe
     * decided `clean`: a clean table appends the tagged batch; a table
@@ -283,9 +272,9 @@ object Sinks {
   }
 
   /** Idempotent append of ONE micro-batch to SEVERAL tables with ONE
-    * tier-1 probe job: the per-table LIMIT-1 tag probes are fused into
-    * a single union-of-LIMIT-1s action (each branch still early-exits
-    * on its first tagged row), so an N-table ingest pays one job of
+    * tier-1 probe job: the per-table tag probes are fused into one
+    * scan of every table (each task still early-exits on its first
+    * tagged row), so an N-table ingest pays one job of
     * driver scheduling latency per micro-batch instead of N — guide
     * §1/§2.6 applied to the probe tail the corpus-index stream paid
     * five times per batch. EVERYTHING ELSE is unchanged and per-table:
@@ -296,31 +285,42 @@ object Sinks {
     * torn-batch recovery argument (any committed-subset of tables
     * replays to exactly-once contents) is untouched because the probe
     * is read-only. Same single-writer/quiesced-maintenance contract as
-    * [[appendBucketedTableIdempotent]]. */
+    * [[appendBucketedTableIdempotent]]. Returns, per part, whether its
+    * batch was appended (false: the table already held it complete). */
   def appendBucketedTablesIdempotent(
       spark: org.apache.spark.sql.SparkSession, batchId: Long,
-      parts: Seq[(DataFrame, String, String, Int, String)]): Unit = {
+      parts: Seq[(DataFrame, String, String, Int, String)]): Seq[Boolean] = {
     // the per-table appends run concurrently: two parts naming one table
     // would race two writers on it, so reject them before any write
     val names = parts.map(_._2)
     require(names.distinct.size == names.size,
       s"duplicate table names: ${names.diff(names.distinct).distinct.mkString(", ")}")
     val existing = names.filter(spark.catalog.tableExists)
-    // the q219 cloned-session lesson, batched: refresh before probing
+    // re-list before probing: the crashed attempt's append may have
+    // committed through a DIFFERENT session clone, whose write only
+    // invalidated its own relation cache — a stale file listing here
+    // would miss the committed tag and double-append
     existing.foreach(spark.catalog.refreshTable)
+    // tier-1 probe — the whole cost of the common first-attempt path
+    // (the per-file job only runs when a replay found the tag): ONE
+    // job with no exchange over every table's scan, each task stopping
+    // at its first tagged row. (A union of LIMIT 1s costs an exchange
+    // per table, each its own job under AQE, and a collect of a root
+    // LIMIT scans partitions in rounds, a job each.)
     val taggedTables: Set[String] =
       if (existing.isEmpty) Set.empty
       else existing.map { t =>
         spark.table(t).filter(col("ingest_batch") === batchId)
-          .select(lit(t).as("t")).limit(1)
-      }.reduce(_ unionAll _).collect().map(_.getString(0)).toSet
-    concurrently(parts.map { case (df, t, key, buckets, path) =>
-      () => {
-        finishIdempotentAppend(spark, df, batchId, t, key, buckets,
-          path, clean = !taggedTables.contains(t))
-        ()
-      }
+          .select(lit(t).as("t"))
+      }.reduce(_ unionAll _).rdd.mapPartitions(_.take(1))
+        .map(_.getString(0)).collect().toSet
+    val applied = new Array[Boolean](parts.size)
+    concurrently(parts.zipWithIndex.map {
+      case ((df, t, key, buckets, path), i) => () =>
+        applied(i) = finishIdempotentAppend(spark, df, batchId, t, key,
+          buckets, path, clean = !taggedTables.contains(t))
     })
+    applied.toSeq
   }
 
   /** Compact an append-accumulated [[bucketedTable]] back to one file

@@ -5,7 +5,7 @@ import graft.Tables._
 import graft.io.IndexLifecycle
 import graft.io.IndexLifecycle.{CorpusIndexTables, GramIndexTables,
   NameIndexTables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -170,12 +170,17 @@ object DedupOps {
         expr(s"CAST(${hexToLong("hx", 1, 8)} AS BIGINT)").as("h1"),
         expr(s"CAST(${hexToLong("hx", 9, 8)} AS BIGINT)").as("h2"))
 
+  /** (doc_id, s0 … s{K-1}): each doc's K signature minima over its
+    * hashed shingles — the one aggregate behind bands and estimates. */
+  private def minhashSigs(hashed: DataFrame): DataFrame =
+    hashed.groupBy(col("doc_id")).agg(
+      min(expr(sigExpr(0))).as("s0"),
+      (1 until K).map(i => min(expr(sigExpr(i))).as(s"s$i")): _*)
+
   /** (doc_id, band_idx, band_val) LSH band rows: K per-doc signature
     * minima folded into B = K/R band values. */
   private[ops] def bandRows(hashed: DataFrame): DataFrame = {
-    val sigs = hashed.groupBy(col("doc_id")).agg(
-      min(expr(sigExpr(0))).as("s0"),
-      (1 until K).map(i => min(expr(sigExpr(i))).as(s"s$i")): _*)
+    val sigs = minhashSigs(hashed)
     val bandPairs = (0 until B).map(j =>
       s"$j, concat_ws('|', ${(0 until R).map(r => s"CAST(s${j * R + r} AS STRING)").mkString(", ")})")
     sigs.select(col("doc_id"),
@@ -224,31 +229,124 @@ object DedupOps {
         expr(s"stack($B, ${bandPairs.mkString(", ")}) AS (band_idx, band_val)"): _*)
   }
 
-  /** Batch oracle for first-writer-wins band dedup (the q27
-    * restriction q206 streams): a doc is a near-dup iff it shares a
-    * band with ANY smaller doc_id. */
-  private[graft] lazy val bandDupBatchOracle: String = {
+  /** Distinct (doc_a < doc_b) LSH candidate pairs: docs sharing a band
+    * value whose bucket holds at most [[BucketCap]] docs. */
+  private def cappedCandidates(bands: DataFrame): DataFrame = {
+    val okBuckets = bands.groupBy(col("band_idx"), col("band_val"))
+      .agg(count(lit(1)).as("bcnt"))
+      .filter(col("bcnt") <= BucketCap)
+      .select(col("band_idx"), col("band_val"))
+    val capped = bands.join(okBuckets, Seq("band_idx", "band_val"))
+    capped.as("a")
+      .join(capped.as("b"),
+        col("a.band_idx") === col("b.band_idx") &&
+          col("a.band_val") === col("b.band_val") &&
+          col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+      .distinct()
+  }
+
+  /** (doc_id, sz): each doc's shingle-set size, the union term of the
+    * exact Jaccard. */
+  private def shingleSizes(hashed: DataFrame): DataFrame =
+    hashed.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
+
+  /** (doc_a, doc_b, n_inter): the hashed shingles each candidate pair
+    * shares — a second equi-join + groupBy (whole-stage codegen), not
+    * collect_list'd sets and an interpreted O(|a|·|b|) intersection. */
+  private def sharedShingles(cand: DataFrame,
+      hashed: DataFrame): DataFrame =
+    cand
+      .join(hashed.select(col("doc_id").as("doc_a"), col("h1"), col("h2")),
+        "doc_a")
+      .join(hashed.select(col("doc_id").as("doc_b"), col("h1"), col("h2")),
+        Seq("doc_b", "h1", "h2"))
+      .groupBy(col("doc_a"), col("doc_b"))
+      .agg(count(lit(1)).as("n_inter"))
+
+  /** The q172/q201 audit rows: every capped candidate pair with `est`
+    * computed over both docs' signatures (aliased `a` and `b`), its
+    * exact shared-shingle count `n_inter` (0 when none) and both
+    * shingle-set sizes `sza`/`szb`. */
+  private def auditedCandidates(hashed: DataFrame,
+      est: Column*): DataFrame = {
+    val sigs = minhashSigs(hashed)
+    val cand = cappedCandidates(bandRows(hashed))
+    val sizes = shingleSizes(hashed)
+    cand
+      .join(sigs.as("a"), col("doc_a") === col("a.doc_id"))
+      .join(sigs.as("b"), col("doc_b") === col("b.doc_id"))
+      .select(col("doc_a") +: col("doc_b") +: est: _*)
+      .join(sharedShingles(cand, hashed), Seq("doc_a", "doc_b"), "left")
+      .withColumn("n_inter", coalesce(col("n_inter"), lit(0L)))
+      .join(sizes.select(col("doc_id").as("doc_a"), col("sz").as("sza")),
+        "doc_a")
+      .join(sizes.select(col("doc_id").as("doc_b"), col("sz").as("szb")),
+        "doc_b")
+  }
+
+  // DuckDB twins of the stages above, each a CTE chain that extends the
+  // previous one; a query appends its own CTEs and final SELECT.
+
+  /** `WITH shrows, h12`: each distinct shingle's md5 halves — the twin
+    * of [[hashedShingles]]. */
+  private val h12Duck = s"""WITH shrows AS ($shingleRowsDuck),
+      h12 AS (
+        SELECT doc_id,
+          CAST(${hexToLong("hx", 1, 8)} AS BIGINT) AS h1,
+          CAST(${hexToLong("hx", 9, 8)} AS BIGINT) AS h2
+        FROM (SELECT doc_id, md5(shingle) AS hx FROM shrows))"""
+
+  /** [[h12Duck]] + `sigs`, the twin of [[minhashSigs]]. */
+  private val sigsDuck = {
     val sigSelect = (0 until K).map(i =>
       s"min(${sigExpr(i)}) AS s$i").mkString(", ")
+    s"""$h12Duck,
+      sigs AS (SELECT doc_id, $sigSelect FROM h12 GROUP BY doc_id)"""
+  }
+
+  /** [[sigsDuck]] + `bands`, the twin of [[bandRows]]. */
+  private val bandsDuck = {
     val bandUnion = (0 until B).map { j =>
       val cat = (0 until R).map(r => s"CAST(s${j * R + r} AS VARCHAR)")
         .mkString(", ")
       s"SELECT doc_id, $j AS band_idx, concat_ws('|', $cat) AS band_val FROM sigs"
     }.mkString("\n      UNION ALL\n      ")
-    s"""
-      WITH shrows AS ($shingleRowsDuck),
-      h12 AS (
-        SELECT doc_id,
-          CAST(${hexToLong("hx", 1, 8)} AS BIGINT) AS h1,
-          CAST(${hexToLong("hx", 9, 8)} AS BIGINT) AS h2
-        FROM (SELECT doc_id, md5(shingle) AS hx FROM shrows)),
-      sigs AS (SELECT doc_id, $sigSelect FROM h12 GROUP BY doc_id),
-      bands AS ($bandUnion)
+    s"""$sigsDuck,
+      bands AS ($bandUnion)"""
+  }
+
+  /** [[bandsDuck]] + `ok`, `capped`, `cand`: the twin of
+    * [[cappedCandidates]]. */
+  private val candDuck = s"""$bandsDuck,
+      ok AS (SELECT band_idx, band_val FROM bands
+             GROUP BY 1, 2 HAVING COUNT(*) <= $BucketCap),
+      capped AS (SELECT bands.* FROM bands JOIN ok USING (band_idx, band_val)),
+      cand AS (
+        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+        FROM capped a JOIN capped b
+          ON a.band_idx = b.band_idx AND a.band_val = b.band_val
+         AND a.doc_id < b.doc_id)"""
+
+  /** `sizes`, `inter` over `h12` and `cand`: the twins of
+    * [[shingleSizes]] and [[sharedShingles]]. */
+  private val interDuck = """sizes AS (SELECT doc_id, COUNT(*) AS sz FROM h12 GROUP BY doc_id),
+      inter AS (
+        SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter
+        FROM cand c
+        JOIN h12 x ON x.doc_id = c.doc_a
+        JOIN h12 y ON y.doc_id = c.doc_b AND y.h1 = x.h1 AND y.h2 = x.h2
+        GROUP BY c.doc_a, c.doc_b)"""
+
+  /** Batch oracle for first-writer-wins band dedup (the q27
+    * restriction q206 streams): a doc is a near-dup iff it shares a
+    * band with ANY smaller doc_id. */
+  private[graft] lazy val bandDupBatchOracle: String = s"""
+      $bandsDuck
       SELECT DISTINCT b.doc_id
       FROM bands a JOIN bands b
         ON a.band_idx = b.band_idx AND a.band_val = b.band_val
        AND a.doc_id < b.doc_id"""
-  }
 
   /** MinHash near-dup detection with banded LSH (shingle → one md5 →
     * K double-hashed minima → B bands → capped equi-join candidates →
@@ -273,28 +371,9 @@ object DedupOps {
       // (a cross-string collision would need a 64-bit md5-prefix match
       // INSIDE one candidate pair).
       val hashed = hashedShingles(table(s, dir, "documents")).persist()
-      val bands = bandRows(hashed).persist()
-      val okBuckets = bands.groupBy(col("band_idx"), col("band_val"))
-        .agg(count(lit(1)).as("bcnt"))
-        .filter(col("bcnt") <= BucketCap)
-        .select(col("band_idx"), col("band_val"))
-      val capped = bands.join(okBuckets, Seq("band_idx", "band_val"))
-      val cand = capped.as("a")
-        .join(capped.as("b"),
-          col("a.band_idx") === col("b.band_idx") &&
-            col("a.band_val") === col("b.band_val") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-        .distinct()
-      val sizes = hashed.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-      val inter = cand
-        .join(hashed.select(col("doc_id").as("doc_a"), col("h1"), col("h2")),
-          "doc_a")
-        .join(hashed.select(col("doc_id").as("doc_b"), col("h1"), col("h2")),
-          Seq("doc_b", "h1", "h2"))
-        .groupBy(col("doc_a"), col("doc_b"))
-        .agg(count(lit(1)).as("n_inter"))
-      inter
+      val cand = cappedCandidates(bandRows(hashed).persist())
+      val sizes = shingleSizes(hashed)
+      sharedShingles(cand, hashed)
         .join(sizes.select(col("doc_id").as("doc_a"), col("sz").as("sza")), "doc_a")
         .join(sizes.select(col("doc_id").as("doc_b"), col("sz").as("szb")), "doc_b")
         // J >= 1/4  ⟺  4·inter >= union (pure integers — the q50/q55
@@ -305,44 +384,15 @@ object DedupOps {
           (col("sza") + col("szb") - col("n_inter")))
         .select(col("doc_a"), col("doc_b"), col("n_inter"), col("jaccard"))
     },
-    Some {
-      val sigSelect = (0 until K).map(i =>
-        s"min(${sigExpr(i)}) AS s$i").mkString(", ")
-      val bandUnion = (0 until B).map { j =>
-        val cat = (0 until R).map(r => s"CAST(s${j * R + r} AS VARCHAR)").mkString(", ")
-        s"SELECT doc_id, $j AS band_idx, concat_ws('|', $cat) AS band_val FROM sigs"
-      }.mkString("\n      UNION ALL\n      ")
-      s"""
-      WITH shrows AS ($shingleRowsDuck),
-      h12 AS (
-        SELECT doc_id,
-          CAST(${hexToLong("hx", 1, 8)} AS BIGINT) AS h1,
-          CAST(${hexToLong("hx", 9, 8)} AS BIGINT) AS h2
-        FROM (SELECT doc_id, md5(shingle) AS hx FROM shrows)),
-      sigs AS (SELECT doc_id, $sigSelect FROM h12 GROUP BY doc_id),
-      bands AS ($bandUnion),
-      ok AS (SELECT band_idx, band_val FROM bands
-             GROUP BY 1, 2 HAVING COUNT(*) <= $BucketCap),
-      capped AS (SELECT bands.* FROM bands JOIN ok USING (band_idx, band_val)),
-      cand AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM capped a JOIN capped b
-          ON a.band_idx = b.band_idx AND a.band_val = b.band_val
-         AND a.doc_id < b.doc_id),
-      sizes AS (SELECT doc_id, COUNT(*) AS sz FROM h12 GROUP BY doc_id),
-      inter AS (
-        SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter
-        FROM cand c
-        JOIN h12 x ON x.doc_id = c.doc_a
-        JOIN h12 y ON y.doc_id = c.doc_b AND y.h1 = x.h1 AND y.h2 = x.h2
-        GROUP BY c.doc_a, c.doc_b)
+    Some(s"""
+      $candDuck,
+      $interDuck
       SELECT doc_a, doc_b, n_inter,
         CAST(n_inter AS DOUBLE) / (sa.sz + sb.sz - n_inter) AS jaccard
       FROM inter
       JOIN sizes sa ON sa.doc_id = doc_a
       JOIN sizes sb ON sb.doc_id = doc_b
-      WHERE 4 * n_inter >= sa.sz + sb.sz - n_inter"""
-    })
+      WHERE 4 * n_inter >= sa.sz + sb.sz - n_inter"""))
 
   // ---- SimHash ------------------------------------------------------
 
@@ -530,6 +580,20 @@ object DedupOps {
 
   // ---- Exact n-gram Jaccard join (prefix + positional filtering) -----
 
+  /** `grows0`, `grows`, `sizes`: each doc's distinct word 2-grams,
+    * hashed to 60-bit longs, and their count — the DuckDB gram rows of
+    * the Jaccard (q50) and containment (q107, q257) oracles. */
+  private val gramRowsDuck = s"""grows0 AS (
+        SELECT DISTINCT doc_id, words[i] || ' ' || words[i + 1] AS gram
+        FROM (SELECT doc_id, $wordsDuck AS words FROM documents),
+             LATERAL (SELECT unnest(generate_series(1, len(words) - 1)) AS i)
+        WHERE len(words) >= 2),
+      grows AS (
+        SELECT DISTINCT doc_id,
+          CAST(${hexToLong("hx", 1, 15)} AS BIGINT) AS g
+        FROM (SELECT doc_id, md5(gram) AS hx FROM grows0)),
+      sizes AS (SELECT doc_id, COUNT(*) AS sz FROM grows GROUP BY doc_id)"""
+
   /** EXACT n-gram Jaccard near-dup join at threshold t = 3/4 — the
     * no-false-negative complement to the probabilistic LSH family
     * (q27/q29/q48): every pair with Jaccard >= t is returned, none
@@ -577,16 +641,7 @@ object DedupOps {
     * intersection counts; `sizes` also in scope) — shared with q220's
     * SemDeDup cross-cluster miss audit, which reuses the lossless
     * truth verbatim. */
-  private[ops] val q50OracleCtes: String = s"""grows0 AS (
-        SELECT DISTINCT doc_id, words[i] || ' ' || words[i + 1] AS gram
-        FROM (SELECT doc_id, $wordsDuck AS words FROM documents),
-             LATERAL (SELECT unnest(generate_series(1, len(words) - 1)) AS i)
-        WHERE len(words) >= 2),
-      grows AS (
-        SELECT DISTINCT doc_id,
-          CAST(${hexToLong("hx", 1, 15)} AS BIGINT) AS g
-        FROM (SELECT doc_id, md5(gram) AS hx FROM grows0)),
-      sizes AS (SELECT doc_id, COUNT(*) AS sz FROM grows GROUP BY doc_id),
+  private[ops] val q50OracleCtes: String = s"""$gramRowsDuck,
       freq AS (SELECT g, COUNT(*) AS df FROM grows GROUP BY g),
       prefix AS (
         SELECT doc_id, g, sz, rn FROM (
@@ -807,8 +862,7 @@ object DedupOps {
       bands: DataFrame): CorpusIndex =
     CorpusIndex(
       docs.select(col("doc_id"), md5(col("text").cast("binary")).as("h")),
-      shingles, bands,
-      shingles.groupBy(col("doc_id")).agg(count(lit(1)).as("sz")),
+      shingles, bands, shingleSizes(shingles),
       bands.groupBy(col("band_idx"), col("band_val"))
         .agg(count(lit(1)).as("ccnt")))
 
@@ -1085,22 +1139,8 @@ object DedupOps {
     * purged docs must count nowhere: not as exact-tier hashes, not as
     * band candidates, and not toward the bucket-cap populations. */
   private def incrementalDedupOracleSql(newPred: String => String,
-      corpusPred: String => String): String = {
-    val sigSelect = (0 until K).map(i =>
-      s"min(${sigExpr(i)}) AS s$i").mkString(", ")
-    val bandUnion = (0 until B).map { j =>
-      val cat = (0 until R).map(r => s"CAST(s${j * R + r} AS VARCHAR)").mkString(", ")
-      s"SELECT doc_id, $j AS band_idx, concat_ws('|', $cat) AS band_val FROM sigs"
-    }.mkString("\n      UNION ALL\n      ")
-    s"""
-      WITH shrows AS ($shingleRowsDuck),
-      h12 AS (
-        SELECT doc_id,
-          CAST(${hexToLong("hx", 1, 8)} AS BIGINT) AS h1,
-          CAST(${hexToLong("hx", 9, 8)} AS BIGINT) AS h2
-        FROM (SELECT doc_id, md5(shingle) AS hx FROM shrows)),
-      sigs AS (SELECT doc_id, $sigSelect FROM h12 GROUP BY doc_id),
-      bands AS ($bandUnion),
+      corpusPred: String => String): String = s"""
+      $bandsDuck,
       ok AS (SELECT band_idx, band_val FROM bands
              WHERE (${newPred("doc_id")}) OR (${corpusPred("doc_id")})
              GROUP BY 1, 2 HAVING COUNT(*) <= $BucketCap),
@@ -1134,6 +1174,19 @@ object DedupOps {
       FROM (SELECT doc_id FROM documents WHERE ${newPred("doc_id")}) d
       LEFT JOIN exact_dup e ON e.doc_id = d.doc_id
       LEFT JOIN near_dup nd ON nd.doc_id = d.doc_id"""
+
+  /** q55/q211's two sides of one document set, from one hashed-shingle
+    * pass and its band rows: `side(p)` is the [[CorpusIndex]] of the
+    * docs matching `p`. */
+  private def corpusSides(docs: DataFrame, hashed: DataFrame,
+      bands: DataFrame): Column => CorpusIndex = {
+    val sizes = shingleSizes(hashed)
+    val hashes = docs.select(col("doc_id"),
+      md5(col("text").cast("binary")).as("h"))
+    p => CorpusIndex(
+      hashes.filter(p), hashed.filter(p), bands.filter(p), sizes.filter(p),
+      bands.filter(p).groupBy(col("band_idx"), col("band_val"))
+        .agg(count(lit(1)).as("ccnt")))
   }
 
   val q55IncrementalDedup = OpSpec(
@@ -1147,14 +1200,7 @@ object DedupOps {
       // signature aggregate is referenced by both sides' band tables
       // and counts
       val hashed = hashedShingles(docs).persist()
-      val bands = bandRows(hashed).persist()
-      val sizes = hashed.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-      val hashes = docs.select(col("doc_id"),
-        md5(col("text").cast("binary")).as("h"))
-      def side(p: org.apache.spark.sql.Column) = CorpusIndex(
-        hashes.filter(p), hashed.filter(p), bands.filter(p), sizes.filter(p),
-        bands.filter(p).groupBy(col("band_idx"), col("band_val"))
-          .agg(count(lit(1)).as("ccnt")))
+      val side = corpusSides(docs, hashed, bandRows(hashed).persist())
       incrementalDedupFrom(docs.filter(isNew).select(col("doc_id")),
         side(isNew), side(!isNew))
     },
@@ -1178,14 +1224,7 @@ object DedupOps {
       val docs = table(s, dir, "documents")
       val isNew = col("doc_id") % 10 === 0
       val hashed = hashedShingles(docs).persist()
-      val bands = bandRows(hashed).persist()
-      val sizes = hashed.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-      val hashes = docs.select(col("doc_id"),
-        md5(col("text").cast("binary")).as("h"))
-      def side(p: org.apache.spark.sql.Column) = CorpusIndex(
-        hashes.filter(p), hashed.filter(p), bands.filter(p), sizes.filter(p),
-        bands.filter(p).groupBy(col("band_idx"), col("band_val"))
-          .agg(count(lit(1)).as("ccnt")))
+      val side = corpusSides(docs, hashed, bandRows(hashed).persist())
       val dead = docs.filter(col("doc_id") % 4 === 1).select(col("doc_id"))
       incrementalDedupFrom(docs.filter(isNew).select(col("doc_id")),
         side(isNew), purgeCorpusView(side(!isNew), dead))
@@ -1243,12 +1282,7 @@ object DedupOps {
           col("max_overlap"))
     },
     Some(s"""
-      WITH shrows AS ($shingleRowsDuck),
-      h12 AS (
-        SELECT doc_id,
-          CAST(${hexToLong("hx", 1, 8)} AS BIGINT) AS h1,
-          CAST(${hexToLong("hx", 9, 8)} AS BIGINT) AS h2
-        FROM (SELECT doc_id, md5(shingle) AS hx FROM shrows)),
+      $h12Duck,
       okg AS (SELECT h1, h2 FROM h12 GROUP BY h1, h2
               HAVING COUNT(*) <= $GramDfCap),
       ok AS (SELECT h12.* FROM h12 SEMI JOIN okg USING (h1, h2)),
@@ -1729,16 +1763,7 @@ object DedupOps {
           col("containment"))
     },
     Some(s"""
-      WITH grows0 AS (
-        SELECT DISTINCT doc_id, words[i] || ' ' || words[i + 1] AS gram
-        FROM (SELECT doc_id, $wordsDuck AS words FROM documents),
-             LATERAL (SELECT unnest(generate_series(1, len(words) - 1)) AS i)
-        WHERE len(words) >= 2),
-      grows AS (
-        SELECT DISTINCT doc_id,
-          CAST(${hexToLong("hx", 1, 15)} AS BIGINT) AS g
-        FROM (SELECT doc_id, md5(gram) AS hx FROM grows0)),
-      sizes AS (SELECT doc_id, COUNT(*) AS sz FROM grows GROUP BY doc_id),
+      WITH $gramRowsDuck,
       freq AS (SELECT g, COUNT(*) AS df FROM grows GROUP BY g),
       allg AS (
         SELECT w.doc_id, w.g, s.sz,
@@ -2188,16 +2213,7 @@ object DedupOps {
         readGramIndexLive(s, prefix))
     },
     Some(s"""
-      WITH grows0 AS (
-        SELECT DISTINCT doc_id, words[i] || ' ' || words[i + 1] AS gram
-        FROM (SELECT doc_id, $wordsDuck AS words FROM documents),
-             LATERAL (SELECT unnest(generate_series(1, len(words) - 1)) AS i)
-        WHERE len(words) >= 2),
-      grows AS (
-        SELECT DISTINCT doc_id,
-          CAST(${hexToLong("hx", 1, 15)} AS BIGINT) AS g
-        FROM (SELECT doc_id, md5(gram) AS hx FROM grows0)),
-      sizes AS (SELECT doc_id, COUNT(*) AS sz FROM grows GROUP BY doc_id),
+      WITH $gramRowsDuck,
       inter2 AS (
         SELECT n.doc_id AS doc_n, c.doc_id AS doc_c, COUNT(*) AS n_inter
         FROM grows n JOIN grows c ON n.g = c.g
@@ -2697,44 +2713,10 @@ object DedupOps {
     "q172_minhash_error",
     (s, dir) => {
       val hashed = hashedShingles(table(s, dir, "documents")).persist()
-      val sigs = hashed.groupBy(col("doc_id")).agg(
-        min(expr(sigExpr(0))).as("s0"),
-        (1 until K).map(i => min(expr(sigExpr(i))).as(s"s$i")): _*)
-      val bands = bandRows(hashed)
-      val okBuckets = bands.groupBy(col("band_idx"), col("band_val"))
-        .agg(count(lit(1)).as("bcnt"))
-        .filter(col("bcnt") <= BucketCap)
-        .select(col("band_idx"), col("band_val"))
-      val capped = bands.join(okBuckets, Seq("band_idx", "band_val"))
-      val cand = capped.as("a")
-        .join(capped.as("b"),
-          col("a.band_idx") === col("b.band_idx") &&
-            col("a.band_val") === col("b.band_val") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-        .distinct()
       val matchSum = (0 until K).map(i =>
         s"(CASE WHEN a.s$i = b.s$i THEN 1 ELSE 0 END)").mkString(" + ")
-      val est = cand
-        .join(sigs.as("a"), col("doc_a") === col("a.doc_id"))
-        .join(sigs.as("b"), col("doc_b") === col("b.doc_id"))
-        .select(col("doc_a"), col("doc_b"),
+      auditedCandidates(hashed,
           expr(s"CAST($matchSum AS BIGINT)").as("n_match"))
-      val sizes = hashed.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-      val inter = cand
-        .join(hashed.select(col("doc_id").as("doc_a"), col("h1"), col("h2")),
-          "doc_a")
-        .join(hashed.select(col("doc_id").as("doc_b"), col("h1"), col("h2")),
-          Seq("doc_b", "h1", "h2"))
-        .groupBy(col("doc_a"), col("doc_b"))
-        .agg(count(lit(1)).as("n_inter"))
-      est
-        .join(inter, Seq("doc_a", "doc_b"), "left")
-        .withColumn("n_inter", coalesce(col("n_inter"), lit(0L)))
-        .join(sizes.select(col("doc_id").as("doc_a"), col("sz").as("sza")),
-          "doc_a")
-        .join(sizes.select(col("doc_id").as("doc_b"), col("sz").as("szb")),
-          "doc_b")
         .withColumn("j_est", col("n_match").cast("double") / lit(K))
         .withColumn("j_exact", col("n_inter").cast("double") /
           (col("sza") + col("szb") - col("n_inter")))
@@ -2743,44 +2725,16 @@ object DedupOps {
           abs(col("j_est") - col("j_exact")).as("abs_err"))
     },
     Some {
-      val sigSelect = (0 until K).map(i =>
-        s"min(${sigExpr(i)}) AS s$i").mkString(", ")
-      val bandUnion = (0 until B).map { j =>
-        val cat = (0 until R).map(r => s"CAST(s${j * R + r} AS VARCHAR)")
-          .mkString(", ")
-        s"SELECT doc_id, $j AS band_idx, concat_ws('|', $cat) AS band_val FROM sigs"
-      }.mkString("\n      UNION ALL\n      ")
       val matchSum = (0 until K).map(i =>
         s"(CASE WHEN sa.s$i = sb.s$i THEN 1 ELSE 0 END)").mkString(" + ")
       s"""
-      WITH shrows AS ($shingleRowsDuck),
-      h12 AS (
-        SELECT doc_id,
-          CAST(${hexToLong("hx", 1, 8)} AS BIGINT) AS h1,
-          CAST(${hexToLong("hx", 9, 8)} AS BIGINT) AS h2
-        FROM (SELECT doc_id, md5(shingle) AS hx FROM shrows)),
-      sigs AS (SELECT doc_id, $sigSelect FROM h12 GROUP BY doc_id),
-      bands AS ($bandUnion),
-      ok AS (SELECT band_idx, band_val FROM bands
-             GROUP BY 1, 2 HAVING COUNT(*) <= $BucketCap),
-      capped AS (SELECT bands.* FROM bands JOIN ok USING (band_idx, band_val)),
-      cand AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM capped a JOIN capped b
-          ON a.band_idx = b.band_idx AND a.band_val = b.band_val
-         AND a.doc_id < b.doc_id),
+      $candDuck,
       est AS (
         SELECT c.doc_a, c.doc_b, CAST($matchSum AS BIGINT) AS n_match
         FROM cand c
         JOIN sigs sa ON sa.doc_id = c.doc_a
         JOIN sigs sb ON sb.doc_id = c.doc_b),
-      sizes AS (SELECT doc_id, COUNT(*) AS sz FROM h12 GROUP BY doc_id),
-      inter AS (
-        SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter
-        FROM cand c
-        JOIN h12 x ON x.doc_id = c.doc_a
-        JOIN h12 y ON y.doc_id = c.doc_b AND y.h1 = x.h1 AND y.h2 = x.h2
-        GROUP BY c.doc_a, c.doc_b)
+      $interDuck
       SELECT e.doc_a, e.doc_b, e.n_match,
         CAST(e.n_match AS DOUBLE) / $K AS j_est,
         CAST(COALESCE(i.n_inter, 0) AS BIGINT) AS n_inter,
@@ -2942,10 +2896,7 @@ object DedupOps {
   val q209BandSweep = OpSpec(
     "q209_band_sweep",
     (s, dir) => {
-      val hashed = hashedShingles(table(s, dir, "documents"))
-      val sigs = hashed.groupBy(col("doc_id")).agg(
-        min(expr(sigExpr(0))).as("s0"),
-        (1 until K).map(i => min(expr(sigExpr(i))).as(s"s$i")): _*)
+      val sigs = minhashSigs(hashedShingles(table(s, dir, "documents")))
       val bandArms = SweepBs.flatMap { b =>
         val r = K / b
         (0 until b).map { j =>
@@ -2994,8 +2945,6 @@ object DedupOps {
             col("n_truth").cast("double")).as("recall"))
     },
     Some {
-      val sigSelect = (0 until K).map(i =>
-        s"min(${sigExpr(i)}) AS s$i").mkString(", ")
       val bandUnion = SweepBs.flatMap { b =>
         val r = K / b
         (0 until b).map { j =>
@@ -3006,13 +2955,7 @@ object DedupOps {
         }
       }.mkString("\n      UNION ALL\n      ")
       s"""
-      WITH shrows AS ($shingleRowsDuck),
-      h12 AS (
-        SELECT doc_id,
-          CAST(${hexToLong("hx", 1, 8)} AS BIGINT) AS h1,
-          CAST(${hexToLong("hx", 9, 8)} AS BIGINT) AS h2
-        FROM (SELECT doc_id, md5(shingle) AS hx FROM shrows)),
-      sigs AS (SELECT doc_id, $sigSelect FROM h12 GROUP BY doc_id),
+      $sigsDuck,
       bands AS ($bandUnion),
       cand AS (
         SELECT DISTINCT x.b, x.doc_id AS doc_a, y.doc_id AS doc_b
@@ -3056,48 +2999,14 @@ object DedupOps {
     "q201_bbit_minhash",
     (s, dir) => {
       val hashed = hashedShingles(table(s, dir, "documents")).persist()
-      val sigs = hashed.groupBy(col("doc_id")).agg(
-        min(expr(sigExpr(0))).as("s0"),
-        (1 until K).map(i => min(expr(sigExpr(i))).as(s"s$i")): _*)
-      val bands = bandRows(hashed)
-      val okBuckets = bands.groupBy(col("band_idx"), col("band_val"))
-        .agg(count(lit(1)).as("bcnt"))
-        .filter(col("bcnt") <= BucketCap)
-        .select(col("band_idx"), col("band_val"))
-      val capped = bands.join(okBuckets, Seq("band_idx", "band_val"))
-      val cand = capped.as("a")
-        .join(capped.as("b"),
-          col("a.band_idx") === col("b.band_idx") &&
-            col("a.band_val") === col("b.band_val") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-        .distinct()
       val fullSum = (0 until K).map(i =>
         s"(CASE WHEN a.s$i = b.s$i THEN 1 ELSE 0 END)").mkString(" + ")
       val bbitSum = (0 until K).map(i =>
         s"(CASE WHEN a.s$i % 16 = b.s$i % 16 THEN 1 ELSE 0 END)")
         .mkString(" + ")
-      val est = cand
-        .join(sigs.as("a"), col("doc_a") === col("a.doc_id"))
-        .join(sigs.as("b"), col("doc_b") === col("b.doc_id"))
-        .select(col("doc_a"), col("doc_b"),
+      auditedCandidates(hashed,
           expr(s"CAST($fullSum AS BIGINT)").as("m_full"),
           expr(s"CAST($bbitSum AS BIGINT)").as("m_bbit"))
-      val sizes = hashed.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-      val inter = cand
-        .join(hashed.select(col("doc_id").as("doc_a"), col("h1"), col("h2")),
-          "doc_a")
-        .join(hashed.select(col("doc_id").as("doc_b"), col("h1"), col("h2")),
-          Seq("doc_b", "h1", "h2"))
-        .groupBy(col("doc_a"), col("doc_b"))
-        .agg(count(lit(1)).as("n_inter"))
-      est
-        .join(inter, Seq("doc_a", "doc_b"), "left")
-        .withColumn("n_inter", coalesce(col("n_inter"), lit(0L)))
-        .join(sizes.select(col("doc_id").as("doc_a"), col("sz").as("sza")),
-          "doc_a")
-        .join(sizes.select(col("doc_id").as("doc_b"), col("sz").as("szb")),
-          "doc_b")
         .select(col("doc_a"), col("doc_b"), col("m_full"), col("m_bbit"),
           (col("m_full").cast("double") / lit(K)).as("j_full"),
           expr(s"""CAST(16 * m_bbit - $K AS DOUBLE)
@@ -3106,35 +3015,13 @@ object DedupOps {
             (col("sza") + col("szb") - col("n_inter"))).as("j_exact"))
     },
     Some {
-      val sigSelect = (0 until K).map(i =>
-        s"min(${sigExpr(i)}) AS s$i").mkString(", ")
-      val bandUnion = (0 until B).map { j =>
-        val cat = (0 until R).map(r => s"CAST(s${j * R + r} AS VARCHAR)")
-          .mkString(", ")
-        s"SELECT doc_id, $j AS band_idx, concat_ws('|', $cat) AS band_val FROM sigs"
-      }.mkString("\n      UNION ALL\n      ")
       val fullSum = (0 until K).map(i =>
         s"(CASE WHEN sa.s$i = sb.s$i THEN 1 ELSE 0 END)").mkString(" + ")
       val bbitSum = (0 until K).map(i =>
         s"(CASE WHEN sa.s$i % 16 = sb.s$i % 16 THEN 1 ELSE 0 END)")
         .mkString(" + ")
       s"""
-      WITH shrows AS ($shingleRowsDuck),
-      h12 AS (
-        SELECT doc_id,
-          CAST(${hexToLong("hx", 1, 8)} AS BIGINT) AS h1,
-          CAST(${hexToLong("hx", 9, 8)} AS BIGINT) AS h2
-        FROM (SELECT doc_id, md5(shingle) AS hx FROM shrows)),
-      sigs AS (SELECT doc_id, $sigSelect FROM h12 GROUP BY doc_id),
-      bands AS ($bandUnion),
-      ok AS (SELECT band_idx, band_val FROM bands
-             GROUP BY 1, 2 HAVING COUNT(*) <= $BucketCap),
-      capped AS (SELECT bands.* FROM bands JOIN ok USING (band_idx, band_val)),
-      cand AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM capped a JOIN capped b
-          ON a.band_idx = b.band_idx AND a.band_val = b.band_val
-         AND a.doc_id < b.doc_id),
+      $candDuck,
       est AS (
         SELECT c.doc_a, c.doc_b,
           CAST($fullSum AS BIGINT) AS m_full,
@@ -3142,13 +3029,7 @@ object DedupOps {
         FROM cand c
         JOIN sigs sa ON sa.doc_id = c.doc_a
         JOIN sigs sb ON sb.doc_id = c.doc_b),
-      sizes AS (SELECT doc_id, COUNT(*) AS sz FROM h12 GROUP BY doc_id),
-      inter AS (
-        SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter
-        FROM cand c
-        JOIN h12 x ON x.doc_id = c.doc_a
-        JOIN h12 y ON y.doc_id = c.doc_b AND y.h1 = x.h1 AND y.h2 = x.h2
-        GROUP BY c.doc_a, c.doc_b)
+      $interDuck
       SELECT e.doc_a, e.doc_b, e.m_full, e.m_bbit,
         CAST(e.m_full AS DOUBLE) / $K AS j_full,
         CAST(16 * e.m_bbit - $K AS DOUBLE) / CAST(15 * $K AS DOUBLE)

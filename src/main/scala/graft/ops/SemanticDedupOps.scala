@@ -31,6 +31,61 @@ object SemanticDedupOps {
     * vacuous" regime. */
   private val SemDedupTau = "4e-1"
 
+  /** The frozen-centroid oracle prefix of q242, q261, q287 and q289:
+    * `e` (the normed corpus), `t`, the base half `b`, the md5-ranked
+    * `seeds` and two Lloyd rounds over `b` (`c0` … `c2`) — k-means
+    * trained once on the base half, as the persisted index trains it.
+    * Opens a WITH. */
+  private val baseCentroidsDuck = s"""WITH e AS ($normedDuck),
+      t AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM embeddings),
+      b AS (SELECT e.vec_id, e.embedding, e.nrm
+            FROM e, t WHERE 2 * e.vec_id < t.n),
+      seeds AS (
+        SELECT vec_id, embedding,
+          CAST(ROW_NUMBER() OVER (ORDER BY rk, vec_id) - 1 AS BIGINT)
+            AS cid
+        FROM (SELECT em.vec_id, em.embedding,
+                md5('ivf:' || em.vec_id) AS rk
+              FROM embeddings em, t WHERE 2 * em.vec_id < t.n)
+        QUALIFY cid < $KmK),
+      c0 AS (
+        SELECT cid, cv, ${dnrmDuck("cv")} AS cnrm
+        FROM (SELECT cid,
+                list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv
+              FROM seeds)),
+      s1 AS (${kmIterDuck("c0", "b")}),
+      c1 AS (
+        SELECT cid, cv, ${dnrmDuck("cv")} AS cnrm
+        FROM (SELECT cid, list_transform(sumv, x -> x / n) AS cv
+              FROM s1)),
+      s2 AS (${kmIterDuck("c1", "b")}),
+      c2 AS (
+        SELECT cid, cv, ${dnrmDuck("cv")} AS cnrm
+        FROM (SELECT cid, list_transform(sumv, x -> x / n) AS cv
+              FROM s2))"""
+
+  /** `asg`: every vector of `e` with its one best cell among the
+    * centroids `c2` (single probe). */
+  private val asgDuck = """asg AS (
+        SELECT cid, vec_id, embedding, nrm FROM (
+          SELECT e.vec_id, e.embedding, e.nrm, c.cid,
+            ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
+              list_reduce(list_transform(generate_series(1, len(e.embedding)),
+                i -> CAST(e.embedding[i] AS DOUBLE) * c.cv[i]),
+                (x, y) -> x + y) / (e.nrm * c.cnrm) DESC, c.cid ASC) AS rn
+          FROM e, c2 c)
+        WHERE rn = 1)"""
+
+  /** `rnk`: every vector of `e` with the centroids `c2` ranked by
+    * cosine (multi-probe reads its top rows). */
+  private val rnkDuck = """rnk AS (
+        SELECT e.vec_id, e.embedding, e.nrm, c.cid,
+          ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
+            list_reduce(list_transform(generate_series(1, len(e.embedding)),
+              i -> CAST(e.embedding[i] AS DOUBLE) * c.cv[i]),
+              (x, y) -> x + y) / (e.nrm * c.cnrm) DESC, c.cid ASC) AS rn
+        FROM e, c2 c)"""
+
   /** Semantic dedup (SemDeDup): k-means-cluster the corpus with the
     * gated q98 trainer, assign every vector to its trained centroid,
     * then prune any vector that has a same-cluster neighbor with
@@ -107,15 +162,7 @@ object SemanticDedupOps {
         SELECT cid, cv, ${dnrmDuck("cv")} AS cnrm
         FROM (SELECT cid, list_transform(sumv, x -> x / n) AS cv
               FROM s2)),
-      asg AS (
-        SELECT cid, vec_id, embedding, nrm FROM (
-          SELECT e.vec_id, e.embedding, e.nrm, c.cid,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-              list_reduce(list_transform(generate_series(1, len(e.embedding)),
-                i -> CAST(e.embedding[i] AS DOUBLE) * c.cv[i]),
-                (x, y) -> x + y) / (e.nrm * c.cnrm) DESC, c.cid ASC) AS rn
-          FROM e, c2 c)
-        WHERE rn = 1),
+      $asgDuck,
       pruned AS (
         SELECT DISTINCT b.cid, b.vec_id
         FROM asg a JOIN asg b
@@ -585,6 +632,28 @@ object SemanticDedupOps {
       prefix: String): Seq[Long] =
     IndexLifecycle.gcGenerations(s, SemanticIndexTables, prefix)
 
+  /** The q242/q287 trajectory at probe fan-out `nprobe`: the base half
+    * builds the index under `prefix`, the two later quarters ingest
+    * against its frozen centroids in vec_id order, and the three
+    * verdict sets are unioned. */
+  private def incrementalSemdedup(s: SparkSession, dir: String,
+      prefix: String, nprobe: Int): DataFrame = {
+    val e = normedDf(s, dir)
+      .select(col("vec_id"), col("embedding"), col("nrm"))
+    // bounded 1-row scalar: the id-range split threshold
+    val total = e.count()
+    val base = e.filter(col("vec_id") * 2 < total)
+    val b1 = e.filter(col("vec_id") * 2 >= total &&
+      col("vec_id") * 4 < total * 3)
+    val b2 = e.filter(col("vec_id") * 4 >= total * 3)
+    val path = s"${graft.Tables.scratchDir}/$prefix"
+    IndexLifecycle.resetPrefix(s, prefix, path)
+    val v0 = buildSemanticIndex(s, base, prefix, path, nprobe = nprobe)
+    val v1 = ingestSemanticIndex(s, b1, prefix, path, nprobe = nprobe)
+    val v2 = ingestSemanticIndex(s, b2, prefix, path, nprobe = nprobe)
+    v0.unionByName(v1).unionByName(v2)
+  }
+
   /** q242: INCREMENTAL SemDeDup under the bit-exact gate. The corpus
     * arrives as three vec_id-ordered generations (base = first half by
     * a count-scalar range split, then two quarter batches — the
@@ -597,60 +666,10 @@ object SemanticDedupOps {
     * (spec-audited) and never rescan prior members as probes. */
   val q242IncrementalSemdedup = OpSpec(
     "q242_incremental_semdedup",
-    (s, dir) => {
-      val e = normedDf(s, dir)
-        .select(col("vec_id"), col("embedding"), col("nrm"))
-      // bounded 1-row scalar: the id-range split threshold
-      val total = e.count()
-      val base = e.filter(col("vec_id") * 2 < total)
-      val b1 = e.filter(col("vec_id") * 2 >= total &&
-        col("vec_id") * 4 < total * 3)
-      val b2 = e.filter(col("vec_id") * 4 >= total * 3)
-      val prefix = "sem_q242"
-      val path = s"${graft.Tables.scratchDir}/sem_q242"
-      IndexLifecycle.resetPrefix(s, prefix, path)
-      val v0 = buildSemanticIndex(s, base, prefix, path)
-      val v1 = ingestSemanticIndex(s, b1, prefix, path)
-      val v2 = ingestSemanticIndex(s, b2, prefix, path)
-      v0.unionByName(v1).unionByName(v2)
-    },
+    (s, dir) => incrementalSemdedup(s, dir, "sem_q242", 1),
     Some(s"""
-      WITH e AS ($normedDuck),
-      t AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM embeddings),
-      b AS (SELECT e.vec_id, e.embedding, e.nrm
-            FROM e, t WHERE 2 * e.vec_id < t.n),
-      seeds AS (
-        SELECT vec_id, embedding,
-          CAST(ROW_NUMBER() OVER (ORDER BY rk, vec_id) - 1 AS BIGINT)
-            AS cid
-        FROM (SELECT em.vec_id, em.embedding,
-                md5('ivf:' || em.vec_id) AS rk
-              FROM embeddings em, t WHERE 2 * em.vec_id < t.n)
-        QUALIFY cid < $KmK),
-      c0 AS (
-        SELECT cid, cv, ${dnrmDuck("cv")} AS cnrm
-        FROM (SELECT cid,
-                list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv
-              FROM seeds)),
-      s1 AS (${kmIterDuck("c0", "b")}),
-      c1 AS (
-        SELECT cid, cv, ${dnrmDuck("cv")} AS cnrm
-        FROM (SELECT cid, list_transform(sumv, x -> x / n) AS cv
-              FROM s1)),
-      s2 AS (${kmIterDuck("c1", "b")}),
-      c2 AS (
-        SELECT cid, cv, ${dnrmDuck("cv")} AS cnrm
-        FROM (SELECT cid, list_transform(sumv, x -> x / n) AS cv
-              FROM s2)),
-      asg AS (
-        SELECT cid, vec_id, embedding, nrm FROM (
-          SELECT e.vec_id, e.embedding, e.nrm, c.cid,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-              list_reduce(list_transform(generate_series(1, len(e.embedding)),
-                i -> CAST(e.embedding[i] AS DOUBLE) * c.cv[i]),
-                (x, y) -> x + y) / (e.nrm * c.cnrm) DESC, c.cid ASC) AS rn
-          FROM e, c2 c)
-        WHERE rn = 1),
+      $baseCentroidsDuck,
+      $asgDuck,
       pruned AS (
         SELECT DISTINCT p.cid, p.vec_id
         FROM asg a JOIN asg p
@@ -680,58 +699,10 @@ object SemanticDedupOps {
     * q242's and the single-probe gates stay untouched. */
   val q287MultiprobeSemdedup = OpSpec(
     "q287_multiprobe_semdedup",
-    (s, dir) => {
-      val e = normedDf(s, dir)
-        .select(col("vec_id"), col("embedding"), col("nrm"))
-      // bounded 1-row scalar: the id-range split threshold
-      val total = e.count()
-      val base = e.filter(col("vec_id") * 2 < total)
-      val b1 = e.filter(col("vec_id") * 2 >= total &&
-        col("vec_id") * 4 < total * 3)
-      val b2 = e.filter(col("vec_id") * 4 >= total * 3)
-      val prefix = "sem_q287"
-      val path = s"${graft.Tables.scratchDir}/sem_q287"
-      IndexLifecycle.resetPrefix(s, prefix, path)
-      val v0 = buildSemanticIndex(s, base, prefix, path, nprobe = 2)
-      val v1 = ingestSemanticIndex(s, b1, prefix, path, nprobe = 2)
-      val v2 = ingestSemanticIndex(s, b2, prefix, path, nprobe = 2)
-      v0.unionByName(v1).unionByName(v2)
-    },
+    (s, dir) => incrementalSemdedup(s, dir, "sem_q287", 2),
     Some(s"""
-      WITH e AS ($normedDuck),
-      t AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM embeddings),
-      b AS (SELECT e.vec_id, e.embedding, e.nrm
-            FROM e, t WHERE 2 * e.vec_id < t.n),
-      seeds AS (
-        SELECT vec_id, embedding,
-          CAST(ROW_NUMBER() OVER (ORDER BY rk, vec_id) - 1 AS BIGINT)
-            AS cid
-        FROM (SELECT em.vec_id, em.embedding,
-                md5('ivf:' || em.vec_id) AS rk
-              FROM embeddings em, t WHERE 2 * em.vec_id < t.n)
-        QUALIFY cid < $KmK),
-      c0 AS (
-        SELECT cid, cv, ${dnrmDuck("cv")} AS cnrm
-        FROM (SELECT cid,
-                list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv
-              FROM seeds)),
-      s1 AS (${kmIterDuck("c0", "b")}),
-      c1 AS (
-        SELECT cid, cv, ${dnrmDuck("cv")} AS cnrm
-        FROM (SELECT cid, list_transform(sumv, x -> x / n) AS cv
-              FROM s1)),
-      s2 AS (${kmIterDuck("c1", "b")}),
-      c2 AS (
-        SELECT cid, cv, ${dnrmDuck("cv")} AS cnrm
-        FROM (SELECT cid, list_transform(sumv, x -> x / n) AS cv
-              FROM s2)),
-      rnk AS (
-        SELECT e.vec_id, e.embedding, e.nrm, c.cid,
-          ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-            list_reduce(list_transform(generate_series(1, len(e.embedding)),
-              i -> CAST(e.embedding[i] AS DOUBLE) * c.cv[i]),
-              (x, y) -> x + y) / (e.nrm * c.cnrm) DESC, c.cid ASC) AS rn
-        FROM e, c2 c),
+      $baseCentroidsDuck,
+      $rnkDuck,
       asg AS (SELECT cid, vec_id, embedding, nrm FROM rnk WHERE rn = 1),
       asg2 AS (SELECT cid, vec_id FROM rnk WHERE rn <= 2),
       pruned AS (
@@ -955,63 +926,37 @@ object SemanticDedupOps {
     * gate proves the subtle half: a doc that was pruned only because
     * of a now-purged near-twin comes back KEEP. Forgotten means
     * forgotten, including as evidence against others. */
+  /** The q261/q264/q289 index state under `prefix`: a tables-only
+    * build on the base half and an append-only ingest of the rest
+    * (verdicts re-derived at serve time; the per-step ones were
+    * discarded — guide §1.2), then a fifth of the corpus tombstoned.
+    * Returns the index's scratch path. */
+  private def purgedSemanticIndex(s: SparkSession, dir: String,
+      prefix: String): String = {
+    val e = normedDf(s, dir)
+      .select(col("vec_id"), col("embedding"), col("nrm"))
+    val total = e.count()
+    val path = s"${graft.Tables.scratchDir}/$prefix"
+    IndexLifecycle.resetPrefix(s, prefix, path)
+    buildSemanticIndexTables(s, e.filter(col("vec_id") * 2 < total),
+      prefix, s"$path/idx")
+    ingestSemanticIndexAppend(s, e.filter(col("vec_id") * 2 >= total),
+      prefix, s"$path/idx")
+    purgeSemanticIndex(s,
+      e.filter(col("vec_id") % 5 === 2).select(col("vec_id")),
+      prefix, s"$path/idx")
+    path
+  }
+
   val q261SemanticPurge = OpSpec(
     "q261_semantic_purge",
     (s, dir) => {
-      val e = normedDf(s, dir)
-        .select(col("vec_id"), col("embedding"), col("nrm"))
-      val total = e.count()
-      val prefix = "sem_q261"
-      val path = s"${graft.Tables.scratchDir}/sem_q261"
-      IndexLifecycle.resetPrefix(s, prefix, path)
-      // tables-only build + append-only ingest (verdicts re-derived at
-      // serve time; the per-step ones were discarded — guide §1.2)
-      buildSemanticIndexTables(s, e.filter(col("vec_id") * 2 < total),
-        prefix, s"$path/idx")
-      ingestSemanticIndexAppend(s, e.filter(col("vec_id") * 2 >= total),
-        prefix, s"$path/idx")
-      purgeSemanticIndex(s,
-        e.filter(col("vec_id") % 5 === 2).select(col("vec_id")),
-        prefix, s"$path/idx")
-      semanticIndexVerdicts(s, prefix)
+      purgedSemanticIndex(s, dir, "sem_q261")
+      semanticIndexVerdicts(s, "sem_q261")
     },
     Some(s"""
-      WITH e AS ($normedDuck),
-      t AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM embeddings),
-      b AS (SELECT e.vec_id, e.embedding, e.nrm
-            FROM e, t WHERE 2 * e.vec_id < t.n),
-      seeds AS (
-        SELECT vec_id, embedding,
-          CAST(ROW_NUMBER() OVER (ORDER BY rk, vec_id) - 1 AS BIGINT)
-            AS cid
-        FROM (SELECT em.vec_id, em.embedding,
-                md5('ivf:' || em.vec_id) AS rk
-              FROM embeddings em, t WHERE 2 * em.vec_id < t.n)
-        QUALIFY cid < $KmK),
-      c0 AS (
-        SELECT cid, cv, ${dnrmDuck("cv")} AS cnrm
-        FROM (SELECT cid,
-                list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv
-              FROM seeds)),
-      s1 AS (${kmIterDuck("c0", "b")}),
-      c1 AS (
-        SELECT cid, cv, ${dnrmDuck("cv")} AS cnrm
-        FROM (SELECT cid, list_transform(sumv, x -> x / n) AS cv
-              FROM s1)),
-      s2 AS (${kmIterDuck("c1", "b")}),
-      c2 AS (
-        SELECT cid, cv, ${dnrmDuck("cv")} AS cnrm
-        FROM (SELECT cid, list_transform(sumv, x -> x / n) AS cv
-              FROM s2)),
-      asg AS (
-        SELECT cid, vec_id, embedding, nrm FROM (
-          SELECT e.vec_id, e.embedding, e.nrm, c.cid,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-              list_reduce(list_transform(generate_series(1, len(e.embedding)),
-                i -> CAST(e.embedding[i] AS DOUBLE) * c.cv[i]),
-                (x, y) -> x + y) / (e.nrm * c.cnrm) DESC, c.cid ASC) AS rn
-          FROM e, c2 c)
-        WHERE rn = 1),
+      $baseCentroidsDuck,
+      $asgDuck,
       lasg AS (SELECT * FROM asg WHERE vec_id % 5 <> 2),
       pruned AS (
         SELECT DISTINCT p.cid, p.vec_id
@@ -1039,58 +984,12 @@ object SemanticDedupOps {
   val q289MultiprobeServe = OpSpec(
     "q289_multiprobe_serve",
     (s, dir) => {
-      val e = normedDf(s, dir)
-        .select(col("vec_id"), col("embedding"), col("nrm"))
-      val total = e.count()
-      val prefix = "sem_q289"
-      val path = s"${graft.Tables.scratchDir}/sem_q289"
-      IndexLifecycle.resetPrefix(s, prefix, path)
-      // tables-only build + append-only ingest (verdicts re-derived at
-      // serve time; the per-step ones were discarded — guide §1.2)
-      buildSemanticIndexTables(s, e.filter(col("vec_id") * 2 < total),
-        prefix, s"$path/idx")
-      ingestSemanticIndexAppend(s, e.filter(col("vec_id") * 2 >= total),
-        prefix, s"$path/idx")
-      purgeSemanticIndex(s,
-        e.filter(col("vec_id") % 5 === 2).select(col("vec_id")),
-        prefix, s"$path/idx")
-      semanticIndexVerdicts(s, prefix, nprobe = 2)
+      purgedSemanticIndex(s, dir, "sem_q289")
+      semanticIndexVerdicts(s, "sem_q289", nprobe = 2)
     },
     Some(s"""
-      WITH e AS ($normedDuck),
-      t AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM embeddings),
-      b AS (SELECT e.vec_id, e.embedding, e.nrm
-            FROM e, t WHERE 2 * e.vec_id < t.n),
-      seeds AS (
-        SELECT vec_id, embedding,
-          CAST(ROW_NUMBER() OVER (ORDER BY rk, vec_id) - 1 AS BIGINT)
-            AS cid
-        FROM (SELECT em.vec_id, em.embedding,
-                md5('ivf:' || em.vec_id) AS rk
-              FROM embeddings em, t WHERE 2 * em.vec_id < t.n)
-        QUALIFY cid < $KmK),
-      c0 AS (
-        SELECT cid, cv, ${dnrmDuck("cv")} AS cnrm
-        FROM (SELECT cid,
-                list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv
-              FROM seeds)),
-      s1 AS (${kmIterDuck("c0", "b")}),
-      c1 AS (
-        SELECT cid, cv, ${dnrmDuck("cv")} AS cnrm
-        FROM (SELECT cid, list_transform(sumv, x -> x / n) AS cv
-              FROM s1)),
-      s2 AS (${kmIterDuck("c1", "b")}),
-      c2 AS (
-        SELECT cid, cv, ${dnrmDuck("cv")} AS cnrm
-        FROM (SELECT cid, list_transform(sumv, x -> x / n) AS cv
-              FROM s2)),
-      rnk AS (
-        SELECT e.vec_id, e.embedding, e.nrm, c.cid,
-          ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-            list_reduce(list_transform(generate_series(1, len(e.embedding)),
-              i -> CAST(e.embedding[i] AS DOUBLE) * c.cv[i]),
-              (x, y) -> x + y) / (e.nrm * c.cnrm) DESC, c.cid ASC) AS rn
-        FROM e, c2 c),
+      $baseCentroidsDuck,
+      $rnkDuck,
       lasg AS (
         SELECT cid, vec_id, embedding, nrm FROM rnk
         WHERE rn = 1 AND vec_id % 5 <> 2),
@@ -1118,23 +1017,9 @@ object SemanticDedupOps {
   val q264SemanticVacuum = OpSpec(
     "q264_semantic_vacuum",
     (s, dir) => {
-      val e = normedDf(s, dir)
-        .select(col("vec_id"), col("embedding"), col("nrm"))
-      val total = e.count()
-      val prefix = "sem_q264"
-      val path = s"${graft.Tables.scratchDir}/sem_q264"
-      IndexLifecycle.resetPrefix(s, prefix, path)
-      // tables-only build + append-only ingest (verdicts re-derived at
-      // serve time; the per-step ones were discarded — guide §1.2)
-      buildSemanticIndexTables(s, e.filter(col("vec_id") * 2 < total),
-        prefix, s"$path/idx")
-      ingestSemanticIndexAppend(s, e.filter(col("vec_id") * 2 >= total),
-        prefix, s"$path/idx")
-      purgeSemanticIndex(s,
-        e.filter(col("vec_id") % 5 === 2).select(col("vec_id")),
-        prefix, s"$path/idx")
-      vacuumSemanticIndex(s, prefix, s"$path/vac")
-      semanticIndexVerdicts(s, prefix)
+      val path = purgedSemanticIndex(s, dir, "sem_q264")
+      vacuumSemanticIndex(s, "sem_q264", s"$path/vac")
+      semanticIndexVerdicts(s, "sem_q264")
     },
     q261SemanticPurge.oracle)
 

@@ -908,7 +908,56 @@ object StreamingStages {
         7213e-4 / (1e0 + 1079e-3 / 64e0) * 64e0 * 64e0 / z.z AS est
       FROM r JOIN z ON z.win_start = r.win_start"""))
 
-  /** The oracle-checked streaming ops (SparkEntry registry hook). */
+  /** The one foreachBatch driver of the persisted-state ingest sinks:
+    * every non-empty micro-batch runs `step` (given its id, which the
+    * idempotent appends commit with their rows), then the serving
+    * session's relation cache is refreshed for each of `tables` that
+    * exists — micro-batch writes run in a CLONED session, which
+    * invalidates only its own cache, so the serving session would keep
+    * the stale pre-append file listing (the q219 lesson). Blocks until
+    * all currently available input is processed; the caller stops (or
+    * keeps) the query. */
+  private def ingestEachBatch(s: SparkSession, rows: DataFrame,
+      checkpointDir: String, tables: Seq[String])(
+      step: (DataFrame, Long) => Unit): StreamingQuery = {
+    val q = rows.writeStream
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        if (!batch.isEmpty) {
+          step(batch, batchId)
+          tables.filter(t => s.catalog.tableExists(t))
+            .foreach(t => s.catalog.refreshTable(t))
+        }
+      }
+      .option("checkpointLocation", checkpointDir)
+      .start()
+    q.processAllAvailable()
+    q
+  }
+
+  /** A parquet file stream over `dir`, one file per micro-batch, with
+    * the schema of the files staged there. */
+  private def oneFilePerTrigger(s: SparkSession, dir: String): DataFrame =
+    s.readStream
+      .schema(s.read.parquet(dir).schema)
+      .option("maxFilesPerTrigger", 1)
+      .parquet(dir)
+
+  /** Stage `df` as ONE parquet file `name` in `streamDir` with
+    * modification time `mtime`: a file stream delivers files in mtime
+    * order, so staged generations arrive in the order their mtimes
+    * give. */
+  private def stageStreamFile(df: DataFrame, streamDir: java.nio.file.Path,
+      name: String, mtime: Long): Unit = {
+    val tmp = java.nio.file.Files.createTempDirectory("streamstage")
+    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    val ls = java.nio.file.Files.list(tmp)
+    val part = try ls.toArray.map(_.toString)
+      .filter(_.endsWith(".parquet")).head finally ls.close()
+    val dst = streamDir.resolve(name)
+    java.nio.file.Files.copy(java.nio.file.Paths.get(part), dst)
+    dst.toFile.setLastModified(mtime); ()
+  }
+
   /** foreachBatch ingest into a persisted
     * [[graft.ops.VectorIndexOps.VectorIndex]]: each arriving micro-batch
     * of (vec_id, embedding) rows is coded against the FROZEN stored
@@ -927,25 +976,12 @@ object StreamingStages {
     * input is processed; the caller stops (or keeps) the query. */
   def streamIntoVectorIndex(s: SparkSession, vecs: DataFrame,
       prefix: String, path: String,
-      checkpointDir: String): StreamingQuery = {
-    val q = vecs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.ops.VectorIndexOps.appendToVectorIndex(s, batch, prefix,
-            path, batchId = Some(batchId))
-          // the append's write runs through the micro-batch's CLONED
-          // session, which invalidates only its own relation cache —
-          // the serving session would keep the stale (pre-append) file
-          // listing for the codes table without this metadata-only
-          // refresh
-          s.catalog.refreshTable(s"${prefix}_codes")
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
-    q.processAllAvailable()
-    q
-  }
+      checkpointDir: String): StreamingQuery =
+    ingestEachBatch(s, vecs, checkpointDir, Seq(s"${prefix}_codes")) {
+      (batch, batchId) =>
+        graft.ops.VectorIndexOps.appendToVectorIndex(s, batch, prefix,
+          path, batchId = Some(batchId))
+    }
 
   /** q219: the stream-built index under the bit-exact gate. Codebooks
     * are trained once (batch, frozen); the corpus arrives as a FILE
@@ -969,11 +1005,8 @@ object StreamingStages {
       // the stream's job
       graft.ops.VectorIndexOps.buildVectorIndex(s, e, e.limit(0), prefix, idxPath)
       e.repartition(4, col("vec_id")).write.parquet(streamDir)
-      val stream = s.readStream
-        .schema(s.read.parquet(streamDir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(streamDir)
-      streamIntoVectorIndex(s, stream, prefix, idxPath, ckpt).stop()
+      streamIntoVectorIndex(s, oneFilePerTrigger(s, streamDir), prefix,
+        idxPath, ckpt).stop()
       graft.ops.VectorIndexOps.searchVectorIndex(
         graft.Tables.table(s, dir, "embeddings")
           .filter(col("vec_id") < 20)
@@ -996,22 +1029,12 @@ object StreamingStages {
   def streamIntoRollup(s: SparkSession, rows: DataFrame,
       keys: Seq[String], measures: Seq[String], tableName: String,
       buckets: Int, path: String,
-      checkpointDir: String): StreamingQuery = {
-    val q = rows.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.io.Sinks.appendRollup(batch, keys, measures, tableName,
-            buckets, path, batchId = Some(batchId))
-          // micro-batch writes run in a cloned session — refresh the
-          // serving session's relation cache (the q219 lesson)
-          s.catalog.refreshTable(tableName)
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
-    q.processAllAvailable()
-    q
-  }
+      checkpointDir: String): StreamingQuery =
+    ingestEachBatch(s, rows, checkpointDir, Seq(tableName)) {
+      (batch, batchId) =>
+        graft.io.Sinks.appendRollup(batch, keys, measures, tableName,
+          buckets, path, batchId = Some(batchId))
+    }
 
   /** q228: the stream-maintained rollup under the bit-exact gate. The
     * events table arrives as a four-file stream; each micro-batch
@@ -1029,12 +1052,9 @@ object StreamingStages {
       graft.Tables.table(s, dir, "events")
         .repartition(4, col("event_id"))
         .write.parquet(s"$base/stream")
-      val stream = s.readStream
-        .schema(s.read.parquet(s"$base/stream").schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(s"$base/stream")
-      streamIntoRollup(s, stream, Seq("event_type"), Seq("value"),
-        tableName, 4, s"$base/tbl", s"$base/ckpt").stop()
+      streamIntoRollup(s, oneFilePerTrigger(s, s"$base/stream"),
+        Seq("event_type"), Seq("value"), tableName, 4, s"$base/tbl",
+        s"$base/ckpt").stop()
       graft.io.Sinks.readRollup(s, tableName, Seq("event_type"),
           Seq("value"))
         .select(col("event_type"), col("n"),
@@ -1071,12 +1091,9 @@ object StreamingStages {
         .select(col("doc_id"), col("lang"), col("n_chars"))
         .repartition(4, col("doc_id"))
         .write.parquet(s"$base/stream")
-      val stream = s.readStream
-        .schema(s.read.parquet(s"$base/stream").schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(s"$base/stream")
-      streamIntoRollup(s, stream, Seq("lang"), Seq("n_chars"),
-        tableName, 4, s"$base/tbl", s"$base/ckpt").stop()
+      streamIntoRollup(s, oneFilePerTrigger(s, s"$base/stream"),
+        Seq("lang"), Seq("n_chars"), tableName, 4, s"$base/tbl",
+        s"$base/ckpt").stop()
       val c = graft.io.Sinks.readRollup(s, tableName, Seq("lang"),
           Seq("n_chars"))
         .select(col("lang"), col("n").as("n_docs"))
@@ -1112,26 +1129,13 @@ object StreamingStages {
     * contract). */
   def streamIntoCorpusIndex(s: SparkSession, docs: DataFrame,
       prefix: String, path: String, buckets: Int,
-      checkpointDir: String): StreamingQuery = {
-    val tables = Seq("hashes", "shingles", "bands", "sizes",
-      "bandcounts")
-    val q = docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.ops.DedupOps.appendToCorpusIndex(batch, prefix, path,
-            buckets, batchId = Some(batchId))
-          // cloned-session writes only invalidate their own relation
-          // cache (the q219 lesson) — refresh the serving session's
-          tables.foreach(t =>
-            if (s.catalog.tableExists(s"${prefix}_$t"))
-              s.catalog.refreshTable(s"${prefix}_$t"))
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
-    q.processAllAvailable()
-    q
-  }
+      checkpointDir: String): StreamingQuery =
+    ingestEachBatch(s, docs, checkpointDir,
+      graft.io.IndexLifecycle.CorpusIndexTables.suffixes
+        .map(t => s"${prefix}_$t")) { (batch, batchId) =>
+      graft.ops.DedupOps.appendToCorpusIndex(batch, prefix, path,
+        buckets, batchId = Some(batchId))
+    }
 
   /** q230: ingest dedup served from a STREAM-BUILT corpus index. The
     * corpus side (doc_id % 10 <> 0) arrives as a four-file stream and
@@ -1149,12 +1153,8 @@ object StreamingStages {
       docs.filter(col("doc_id") % 10 =!= 0)
         .repartition(4, col("doc_id"))
         .write.parquet(s"$base/stream")
-      val stream = s.readStream
-        .schema(s.read.parquet(s"$base/stream").schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(s"$base/stream")
-      streamIntoCorpusIndex(s, stream, prefix, s"$base/idx", 8,
-        s"$base/ckpt").stop()
+      streamIntoCorpusIndex(s, oneFilePerTrigger(s, s"$base/stream"),
+        prefix, s"$base/idx", 8, s"$base/ckpt").stop()
       graft.ops.DedupOps.incrementalDedup(
         docs.filter(col("doc_id") % 10 === 0),
         graft.ops.DedupOps.readCorpusIndex(s, prefix))
@@ -1175,28 +1175,16 @@ object StreamingStages {
     * shard convention, README.md:66-89). */
   def streamIntoSemanticIndex(s: SparkSession, docs: DataFrame,
       prefix: String, path: String, buckets: Int,
-      checkpointDir: String, nprobe: Int = 1): StreamingQuery = {
-    val q = docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val verdicts = graft.ops.SemanticDedupOps.ingestSemanticIndex(
-            s, batch, prefix, path, buckets, batchId = Some(batchId),
-            nprobe = nprobe)
-          graft.io.Sinks.appendBucketedTableIdempotent(s, verdicts,
-            batchId, s"${prefix}_verdicts", "vec_id", buckets,
-            s"$path/verdicts")
-          // cloned-session writes only invalidate their own relation
-          // cache (the q219 lesson)
-          Seq("members", "verdicts").foreach(t =>
-            if (s.catalog.tableExists(s"${prefix}_$t"))
-              s.catalog.refreshTable(s"${prefix}_$t"))
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
-    q.processAllAvailable()
-    q
-  }
+      checkpointDir: String, nprobe: Int = 1): StreamingQuery =
+    ingestEachBatch(s, docs, checkpointDir,
+      Seq(s"${prefix}_members", s"${prefix}_verdicts")) { (batch, batchId) =>
+      val verdicts = graft.ops.SemanticDedupOps.ingestSemanticIndex(
+        s, batch, prefix, path, buckets, batchId = Some(batchId),
+        nprobe = nprobe)
+      graft.io.Sinks.appendBucketedTableIdempotent(s, verdicts,
+        batchId, s"${prefix}_verdicts", "vec_id", buckets,
+        s"$path/verdicts")
+    }
 
   /** q247: incremental SemDeDup fed by a STREAM — q242's trajectory
     * with the two post-base generations arriving as a file stream in
@@ -1229,27 +1217,12 @@ object StreamingStages {
     // id order — the arrival-order contract the ingest needs
     val streamDir = java.nio.file.Paths.get(s"$base/stream")
     java.nio.file.Files.createDirectories(streamDir)
-    def stage(df: org.apache.spark.sql.DataFrame, name: String,
-        mtime: Long): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("semstage")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val ls = java.nio.file.Files.list(tmp)
-      val part = try ls.toArray.map(_.toString)
-        .filter(_.endsWith(".parquet")).head finally ls.close()
-      val dst = streamDir.resolve(name)
-      java.nio.file.Files.copy(java.nio.file.Paths.get(part), dst)
-      dst.toFile.setLastModified(mtime); ()
-    }
-    stage(e.filter(col("vec_id") * 2 >= total &&
-      col("vec_id") * 4 < total * 3), "00_g1.parquet", 100000L)
-    stage(e.filter(col("vec_id") * 4 >= total * 3), "01_g2.parquet",
-      200000L)
-    val stream = s.readStream
-      .schema(s.read.parquet(s"$base/stream").schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$base/stream")
-    streamIntoSemanticIndex(s, stream, prefix, s"$base/idx",
-      8, s"$base/ckpt", nprobe = nprobe).stop()
+    stageStreamFile(e.filter(col("vec_id") * 2 >= total &&
+      col("vec_id") * 4 < total * 3), streamDir, "00_g1.parquet", 100000L)
+    stageStreamFile(e.filter(col("vec_id") * 4 >= total * 3), streamDir,
+      "01_g2.parquet", 200000L)
+    streamIntoSemanticIndex(s, oneFilePerTrigger(s, s"$base/stream"),
+      prefix, s"$base/idx", 8, s"$base/ckpt", nprobe = nprobe).stop()
     v0.unionByName(s.table(s"${prefix}_verdicts")
       .select(col("cid"), col("vec_id"), col("verdict")))
   }
@@ -1294,17 +1267,8 @@ object StreamingStages {
       val streamDir = java.nio.file.Paths.get(s"$base/stream")
       java.nio.file.Files.createDirectories(streamDir)
       def stage(p: org.apache.spark.sql.Column, name: String,
-          mtime: Long): Unit = {
-        val tmp = java.nio.file.Files.createTempDirectory("shardstage")
-        ev.filter(p).coalesce(1).write.mode("overwrite")
-          .parquet(tmp.toString)
-        val ls = java.nio.file.Files.list(tmp)
-        val part = try ls.toArray.map(_.toString)
-          .filter(_.endsWith(".parquet")).head finally ls.close()
-        val dst = streamDir.resolve(name)
-        java.nio.file.Files.copy(java.nio.file.Paths.get(part), dst)
-        dst.toFile.setLastModified(mtime); ()
-      }
+          mtime: Long): Unit =
+        stageStreamFile(ev.filter(p), streamDir, name, mtime)
       def run(): Unit = runToShardedParquet(
         s.readStream.schema(ev.schema).option("maxFilesPerTrigger", 1)
           .parquet(s"$base/stream"),
@@ -1362,25 +1326,15 @@ object StreamingStages {
     * not the crashed attempt's append survived. */
   def streamIntoNoveltyIndex(s: SparkSession, docs: DataFrame,
       prefix: String, buckets: Int,
-      checkpointDir: String): StreamingQuery = {
-    val q = docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val report = graft.ops.TextOps.ingestNovelty(
-            s, batch, prefix, buckets, batchId = Some(batchId))
-          graft.io.Sinks.appendBucketedTableIdempotent(s, report,
-            batchId, s"${prefix}_verdicts", "doc_id", buckets,
-            s"${graft.Tables.scratchDir}/${prefix}_verdicts")
-          Seq("gramdf", "verdicts").foreach(t =>
-            if (s.catalog.tableExists(s"${prefix}_$t"))
-              s.catalog.refreshTable(s"${prefix}_$t"))
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
-    q.processAllAvailable()
-    q
-  }
+      checkpointDir: String): StreamingQuery =
+    ingestEachBatch(s, docs, checkpointDir,
+      Seq(s"${prefix}_gramdf", s"${prefix}_verdicts")) { (batch, batchId) =>
+      val report = graft.ops.TextOps.ingestNovelty(
+        s, batch, prefix, buckets, batchId = Some(batchId))
+      graft.io.Sinks.appendBucketedTableIdempotent(s, report,
+        batchId, s"${prefix}_verdicts", "doc_id", buckets,
+        s"${graft.Tables.scratchDir}/${prefix}_verdicts")
+    }
 
   /** q284: incremental novelty fed by a STREAM — q283's trajectory
     * with the batch docs arriving as TWO mtime-ordered generations
@@ -1408,26 +1362,12 @@ object StreamingStages {
         prefix, s"$base/idx")
       val streamDir = java.nio.file.Paths.get(s"$base/stream")
       java.nio.file.Files.createDirectories(streamDir)
-      def stage(df: org.apache.spark.sql.DataFrame, name: String,
-          mtime: Long): Unit = {
-        val tmp = java.nio.file.Files.createTempDirectory("nvstage")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val ls = java.nio.file.Files.list(tmp)
-        val part = try ls.toArray.map(_.toString)
-          .filter(_.endsWith(".parquet")).head finally ls.close()
-        val dst = streamDir.resolve(name)
-        java.nio.file.Files.copy(java.nio.file.Paths.get(part), dst)
-        dst.toFile.setLastModified(mtime); ()
-      }
-      stage(docs.filter(col("doc_id") % 20 === 0), "00_g1.parquet",
-        100000L)
-      stage(docs.filter(col("doc_id") % 20 === 10), "01_g2.parquet",
-        200000L)
-      val stream = s.readStream
-        .schema(s.read.parquet(s"$base/stream").schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(s"$base/stream")
-      streamIntoNoveltyIndex(s, stream, prefix, 8, s"$base/ckpt").stop()
+      stageStreamFile(docs.filter(col("doc_id") % 20 === 0), streamDir,
+        "00_g1.parquet", 100000L)
+      stageStreamFile(docs.filter(col("doc_id") % 20 === 10), streamDir,
+        "01_g2.parquet", 200000L)
+      streamIntoNoveltyIndex(s, oneFilePerTrigger(s, s"$base/stream"),
+        prefix, 8, s"$base/ckpt").stop()
       s.table(s"${prefix}_verdicts")
         .select(col("doc_id"), col("n_grams"), col("n_novel"),
           col("novelty"), col("verdict"))
@@ -1470,6 +1410,7 @@ object StreamingStages {
       FROM gl b LEFT JOIN novel n ON n.doc_id = b.doc_id
       WHERE b.gen >= 1"""))
 
+  /** The oracle-checked streaming ops (SparkEntry registry hook). */
   val oracleOps: Seq[graft.OpSpec] =
     Seq(q56StreamingTumbling, q65StreamingDedup,
       q113StreamingFunnel, q114StreamingRangeJoin,

@@ -5217,6 +5217,95 @@ class OperatorSpec extends AnyFunSuite {
     }
   }
 
+  test("IndexLifecycle mask keeps column order: every declared masked " +
+    "table reads live with its plain read's columns, and a vacuum " +
+    "writes its files in the catalog's column order") {
+    import spark.implicits._
+    import graft.io.{IndexLifecycle, Sinks}
+    import graft.io.IndexLifecycle._
+    import graft.ops.{DedupOps, EmbeddingOps, SemanticDedupOps,
+      VectorIndexOps}
+    val texts = Seq(
+      1L -> "alpha beta gamma delta epsilon zeta eta theta iota kappa",
+      2L -> "one two three four five six seven eight nine ten",
+      3L -> "alpha beta gamma delta epsilon zeta eta theta iota lambda")
+      .toDF("doc_id", "text")
+    val names = Seq("alpha", "alphabet", "ninety", "gamma").toDF("p_name")
+    val e = EmbeddingOps.normedDf(spark, sf).filter(col("vec_id") < 200)
+      .select(col("vec_id"), col("embedding"), col("nrm"))
+    val vecs = e.select(col("vec_id"), col("embedding"))
+    val root = java.nio.file.Files.createTempDirectory("lco").toString
+    val tag = root.replaceAll("[^A-Za-z0-9]", "").takeRight(8)
+    type Step = (String, String) => Unit
+    // (family, declaration, build, purge one id, vacuum)
+    val families: Seq[(String, IndexTables, Step, Step, Step)] = Seq(
+      ("corpus", CorpusIndexTables,
+        (px, p) => DedupOps.writeCorpusIndex(
+          DedupOps.buildCorpusIndex(texts), px, p, buckets = 2),
+        (px, p) => DedupOps.purgeFromCorpusIndex(spark,
+          Seq(1L).toDF("doc_id"), px, p, buckets = 2),
+        (px, p) => DedupOps.vacuumCorpusIndex(spark, px, p, buckets = 2)),
+      ("gram", GramIndexTables,
+        (px, p) => DedupOps.writeGramIndex(DedupOps.buildGramIndex(texts),
+          px, p, buckets = 2),
+        (px, p) => DedupOps.purgeGramIndex(spark, Seq(1L).toDF("doc_id"),
+          px, p),
+        (px, p) => DedupOps.vacuumGramIndex(spark, px, p, buckets = 2)),
+      ("name", NameIndexTables,
+        (px, p) => DedupOps.writeNameIndex(DedupOps.buildNameIndex(names),
+          px, p, buckets = 2),
+        (px, p) => DedupOps.purgeNameIndex(spark,
+          Seq("alphabet").toDF("p_name"), px, p),
+        (px, p) => DedupOps.vacuumNameIndex(spark, px, p, buckets = 2)),
+      ("vector", VectorIndexTables,
+        (px, p) => VectorIndexOps.buildVectorIndex(spark, vecs, vecs, px, p),
+        (px, p) => VectorIndexOps.deleteFromVectorIndex(spark,
+          Seq(5L).toDF("vec_id"), px, p),
+        (px, p) => VectorIndexOps.vacuumVectorIndex(spark, px, p)),
+      ("semantic", SemanticIndexTables,
+        (px, p) => { SemanticDedupOps.buildSemanticIndexTables(spark, e,
+          px, p); () },
+        (px, p) => SemanticDedupOps.purgeSemanticIndex(spark,
+          Seq(5L).toDF("vec_id"), px, p),
+        (px, p) => SemanticDedupOps.vacuumSemanticIndex(spark, px, p)))
+    def prefixTables(px: String) =
+      spark.sessionState.catalog.listTables("default").map(_.table)
+        .filter(_.startsWith(s"${px}_"))
+    try families.foreach { case (name, decl, build, purge, vacuum) =>
+      val px = s"lo$name$tag"
+      val path = s"$root/$name"
+      val masked = decl.tables.filter(_.masked).map(_.suffix)
+      build(px, s"$path/idx")
+      purge(px, s"$path/idx")
+      masked.foreach { t =>
+        def cols(live: Boolean) = IndexLifecycle.readTable(spark, decl, t,
+          px, px, live).columns.toSeq
+        assert(cols(live = true) == cols(live = false),
+          s"$name/$t: the live read reorders the plain read's columns")
+      }
+      val catalog = masked.map(t => t -> spark.table(s"${px}_$t").columns
+        .toSeq).toMap
+      vacuum(px, s"$path/vac")
+      masked.foreach { t =>
+        val tbl = s"${px}_$t"
+        assert(spark.table(tbl).columns.toSeq == catalog(t),
+          s"$name/$t: the vacuum changed the catalog's column order")
+        // an empty table is written as no file at all
+        if (!spark.table(tbl).isEmpty) {
+          val files = spark.read.parquet(Sinks.tableLocation(spark, tbl))
+            .columns.toSeq
+          assert(files == catalog(t), s"$name/$t: the vacuum wrote " +
+            s"files in order $files, the catalog reads ${catalog(t)}")
+        }
+      }
+      IndexLifecycle.resetPrefix(spark, px, path)
+    } finally {
+      families.foreach(f => prefixTables(s"lo${f._1}$tag")
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t")))
+      spark.catalog.clearCache()
+    }
+  }
+
   test("bench plan gate: the shuffle tally records exchange rows and " +
     "the gate trips on an intentional regression") {
     val tally = new graft.ShuffleTally

@@ -812,6 +812,64 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
+  test("single-table idempotent append: a first attempt launches exactly " +
+    "one job more than a plain append of the same frame") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    import graft.io.Sinks
+    val base = java.nio.file.Files.createTempDirectory("oneprobe").toString
+    val sfx = base.replaceAll("[^A-Za-z0-9]", "").takeRight(8)
+    val (tPlain, tIdem) = (s"ut_pp$sfx", s"ut_pi$sfx")
+    def rows(lo: Int, hi: Int) =
+      (lo to hi).map(i => (i.toLong, s"v$i")).toDF("k", "v")
+    val sc = spark.sparkContext
+    /** Jobs started while `body` runs, the listener bus drained before
+      * and after. */
+    def jobsDuring(body: => Unit): Int = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          jobs.incrementAndGet(); ()
+        }
+      }
+      org.apache.spark.graftx.listener.drain(sc)
+      sc.addSparkListener(l)
+      try { body; org.apache.spark.graftx.listener.drain(sc) }
+      finally sc.removeSparkListener(l)
+      jobs.get
+    }
+    try {
+      // both tables hold two earlier batches over 4 buckets, so the tag
+      // probe scans more than one partition
+      Seq(tPlain -> s"$base/p", tIdem -> s"$base/i").foreach {
+        case (t, p) =>
+          Sinks.appendBucketedTable(
+            rows(1, 40).withColumn("ingest_batch", lit(-1L)), t, "k", 4, p)
+          Sinks.appendBucketedTable(
+            rows(41, 80).withColumn("ingest_batch", lit(0L)), t, "k", 4, p)
+      }
+      assert(spark.table(tIdem).rdd.getNumPartitions > 1)
+      val batch = rows(81, 100)
+      val plain = jobsDuring(Sinks.appendBucketedTable(
+        batch.withColumn("ingest_batch", lit(1L)), tPlain, "k", 4,
+        s"$base/p"))
+      var applied = false
+      val idem = jobsDuring {
+        applied = Sinks.appendBucketedTableIdempotent(spark, batch, 1L,
+          tIdem, "k", 4, s"$base/i")
+      }
+      assert(applied, "a first attempt was skipped")
+      assert(idem == plain + 1, s"idempotent append launched $idem " +
+        s"job(s), the plain append $plain")
+      assert(spark.table(tIdem).count() == 100L)
+    } finally {
+      Seq(tPlain, tIdem).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      spark.catalog.clearCache()
+      graft.io.IndexLifecycle.rmDir(base)
+    }
+  }
+
   test("sharded-parquet sink: torn uncommitted output is invisible to the " +
     "readback and a restart replays the batch exactly once") {
     import org.apache.spark.sql.functions._
