@@ -179,16 +179,19 @@ object Bench {
     // of the captured record for three rounds running (parsed:null in
     // BENCH_r09..r11). Emit a compact totals-only line LAST so the tail
     // always contains one complete parseable JSON record; the per-query
-    // map survives in the full line and in BENCH_local_latest.json.
+    // map survives in the full line and in target/BENCH_local_latest.json.
     val compact =
       s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"n_errors":${errors.size},"drift_probe_sec":$probe,"io_probe_sec":$ioProbeSec,"sf":"$sfDir"}"""
     println(compact)
     // the driver captures stdout's tail, which has been observed
-    // truncated — also persist the full record in-repo so every round's
-    // per-query timings survive regardless
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("BENCH_local_latest.json"), line + "\n")
-    catch { case _: Exception => () }
+    // truncated — also persist the full record so the per-query timings
+    // survive regardless; under target/ (build output, gitignored), so a
+    // run from a checkout never modifies a tracked file
+    try {
+      val out = java.nio.file.Paths.get("target", "BENCH_local_latest.json")
+      java.nio.file.Files.createDirectories(out.getParent)
+      java.nio.file.Files.writeString(out, line + "\n")
+    } catch { case _: Exception => () }
     spark.stop()
   }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 
 /** Physical-plan metrics for the bench record: cumulative shuffle rows
   * and bytes WRITTEN across all tasks, snapshotted around each timed
-  * query so BENCH_local_latest.json carries a per-query
+  * query so target/BENCH_local_latest.json carries a per-query
   * `shuffle_rows`/`shuffle_bytes` map. Shuffle rows are deterministic
   * for a deterministic query at a fixed scale factor — unlike seconds,
   * which drift with the host — so a plan regression (a new exchange, a

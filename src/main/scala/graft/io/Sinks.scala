@@ -113,8 +113,11 @@ object Sinks {
     * duplicate the lineage compute while the first block write wins).
     * Crash contracts are unchanged: each action stays atomic per
     * table, and the replay/mask discipline of every caller already
-    * tolerates an arbitrary committed-subset at failure. The first
-    * failure rethrows (wrapped) after all actions settle. */
+    * tolerates an arbitrary committed-subset at failure. Once every
+    * action has settled, the first failure in action order is rethrown
+    * as that action's own exception (unwrapped from the pool's
+    * ExecutionException). Zero or one action runs inline on the
+    * caller's thread. */
   def concurrently(actions: Seq[() => Unit]): Unit =
     if (actions.sizeIs <= 1) actions.foreach(_())
     else {

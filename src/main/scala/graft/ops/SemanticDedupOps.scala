@@ -8,8 +8,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import EmbeddingOps.{KmK, coarseKmOfK, dnrmDuck, dotDuck, kmIterDuck,
-  normedDf, normedDuck}
+import EmbeddingOps.{KmK, c0Duck, coarseKmOfK, dotDuck, kmIterDuck,
+  kmTrainDuck, meansDuck, normedDf, normedDuck, seedsDuck}
 
 /** SemDeDup (Abbas et al. 2023) as a first-class persisted index family
   * — the semantic tier of the engine's dedup stack (exact keys:
@@ -48,32 +48,22 @@ object SemanticDedupOps {
                 md5('ivf:' || em.vec_id) AS rk
               FROM embeddings em, t WHERE 2 * em.vec_id < t.n)
         QUALIFY cid < $KmK),
-      c0 AS (
-        SELECT cid, cv, ${dnrmDuck("cv")} AS cnrm
-        FROM (SELECT cid,
-                list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv
-              FROM seeds)),
+      ${c0Duck("c0", "seeds")},
       s1 AS (${kmIterDuck("c0", "b")}),
-      c1 AS (
-        SELECT cid, cv, ${dnrmDuck("cv")} AS cnrm
-        FROM (SELECT cid, list_transform(sumv, x -> x / n) AS cv
-              FROM s1)),
+      ${meansDuck("c1", "s1")},
       s2 AS (${kmIterDuck("c1", "b")}),
-      c2 AS (
-        SELECT cid, cv, ${dnrmDuck("cv")} AS cnrm
-        FROM (SELECT cid, list_transform(sumv, x -> x / n) AS cv
-              FROM s2))"""
+      ${meansDuck("c2", "s2")}"""
 
-  /** `asg`: every vector of `e` with its one best cell among the
-    * centroids `c2` (single probe). */
-  private val asgDuck = """asg AS (
+  /** CTE `name`: every vector of `e` with its one best cell among the
+    * centroids `cents` (single probe). */
+  private def asgDuck(name: String, cents: String): String = s"""$name AS (
         SELECT cid, vec_id, embedding, nrm FROM (
           SELECT e.vec_id, e.embedding, e.nrm, c.cid,
             ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
               list_reduce(list_transform(generate_series(1, len(e.embedding)),
                 i -> CAST(e.embedding[i] AS DOUBLE) * c.cv[i]),
                 (x, y) -> x + y) / (e.nrm * c.cnrm) DESC, c.cid ASC) AS rn
-          FROM e, c2 c)
+          FROM e, $cents c)
         WHERE rn = 1)"""
 
   /** `rnk`: every vector of `e` with the centroids `c2` ranked by
@@ -139,30 +129,9 @@ object SemanticDedupOps {
       normedDf(s, dir).select(col("vec_id"), col("embedding"),
         col("nrm")), KmK),
     Some(s"""
-      WITH e AS ($normedDuck),
-      seeds AS (
-        SELECT vec_id, embedding,
-          CAST(ROW_NUMBER() OVER (ORDER BY rk, vec_id) - 1 AS BIGINT)
-            AS cid
-        FROM (SELECT vec_id, embedding, md5('ivf:' || vec_id) AS rk
-              FROM embeddings)
-        QUALIFY cid < $KmK),
-      c0 AS (
-        SELECT cid, cv, ${dnrmDuck("cv")} AS cnrm
-        FROM (SELECT cid,
-                list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv
-              FROM seeds)),
-      s1 AS (${kmIterDuck("c0")}),
-      c1 AS (
-        SELECT cid, n, cv, ${dnrmDuck("cv")} AS cnrm
-        FROM (SELECT cid, n, list_transform(sumv, x -> x / n) AS cv
-              FROM s1)),
-      s2 AS (${kmIterDuck("c1")}),
-      c2 AS (
-        SELECT cid, cv, ${dnrmDuck("cv")} AS cnrm
-        FROM (SELECT cid, list_transform(sumv, x -> x / n) AS cv
-              FROM s2)),
-      $asgDuck,
+      $kmTrainDuck,
+      ${meansDuck("c2", "s2")},
+      ${asgDuck("asg", "c2")},
       pruned AS (
         SELECT DISTINCT b.cid, b.vec_id
         FROM asg a JOIN asg b
@@ -669,7 +638,7 @@ object SemanticDedupOps {
     (s, dir) => incrementalSemdedup(s, dir, "sem_q242", 1),
     Some(s"""
       $baseCentroidsDuck,
-      $asgDuck,
+      ${asgDuck("asg", "c2")},
       pruned AS (
         SELECT DISTINCT p.cid, p.vec_id
         FROM asg a JOIN asg p
@@ -723,28 +692,12 @@ object SemanticDedupOps {
     * query. */
   private def coarseArmSql(sfx: String, trainPred: String): String = s"""
       b$sfx AS (SELECT vec_id, embedding, nrm FROM e WHERE $trainPred),
-      seeds$sfx AS (
-        SELECT vec_id, embedding,
-          CAST(ROW_NUMBER() OVER (ORDER BY rk, vec_id) - 1 AS BIGINT)
-            AS cid
-        FROM (SELECT vec_id, embedding, md5('ivf:' || vec_id) AS rk
-              FROM embeddings WHERE $trainPred)
-        QUALIFY cid < $KmK),
-      c0$sfx AS (
-        SELECT cid, cv, ${dnrmDuck("cv")} AS cnrm
-        FROM (SELECT cid,
-                list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv
-              FROM seeds$sfx)),
+      ${seedsDuck(s"seeds$sfx", s"embeddings WHERE $trainPred", KmK)},
+      ${c0Duck(s"c0$sfx", s"seeds$sfx")},
       s1$sfx AS (${kmIterDuck(s"c0$sfx", s"b$sfx")}),
-      c1$sfx AS (
-        SELECT cid, cv, ${dnrmDuck("cv")} AS cnrm
-        FROM (SELECT cid, list_transform(sumv, x -> x / n) AS cv
-              FROM s1$sfx)),
+      ${meansDuck(s"c1$sfx", s"s1$sfx")},
       s2$sfx AS (${kmIterDuck(s"c1$sfx", s"b$sfx")}),
-      c2$sfx AS (
-        SELECT cid, cv, ${dnrmDuck("cv")} AS cnrm
-        FROM (SELECT cid, list_transform(sumv, x -> x / n) AS cv
-              FROM s2$sfx)),
+      ${meansDuck(s"c2$sfx", s"s2$sfx")},
       asg$sfx AS (
         SELECT cid FROM (
           SELECT e.vec_id, c.cid,
@@ -956,7 +909,7 @@ object SemanticDedupOps {
     },
     Some(s"""
       $baseCentroidsDuck,
-      $asgDuck,
+      ${asgDuck("asg", "c2")},
       lasg AS (SELECT * FROM asg WHERE vec_id % 5 <> 2),
       pruned AS (
         SELECT DISTINCT p.cid, p.vec_id
@@ -1179,37 +1132,13 @@ object SemanticDedupOps {
     * full train→assign→prune trajectory with `_k`-suffixed names,
     * ending in verd_k (vec_id, cid, verdict). */
   private[graft] def semDedupArmSql(k: Int): String = s"""
-      seeds_$k AS (
-        SELECT vec_id, embedding,
-          CAST(ROW_NUMBER() OVER (ORDER BY rk, vec_id) - 1 AS BIGINT)
-            AS cid
-        FROM (SELECT vec_id, embedding, md5('ivf:' || vec_id) AS rk
-              FROM embeddings)
-        QUALIFY cid < $k),
-      c0_$k AS (
-        SELECT cid, cv, ${dnrmDuck("cv")} AS cnrm
-        FROM (SELECT cid,
-                list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv
-              FROM seeds_$k)),
+      ${seedsDuck(s"seeds_$k", "embeddings", k)},
+      ${c0Duck(s"c0_$k", s"seeds_$k")},
       s1_$k AS (${kmIterDuck(s"c0_$k")}),
-      c1_$k AS (
-        SELECT cid, cv, ${dnrmDuck("cv")} AS cnrm
-        FROM (SELECT cid, list_transform(sumv, x -> x / n) AS cv
-              FROM s1_$k)),
+      ${meansDuck(s"c1_$k", s"s1_$k")},
       s2_$k AS (${kmIterDuck(s"c1_$k")}),
-      c2_$k AS (
-        SELECT cid, cv, ${dnrmDuck("cv")} AS cnrm
-        FROM (SELECT cid, list_transform(sumv, x -> x / n) AS cv
-              FROM s2_$k)),
-      asg_$k AS (
-        SELECT cid, vec_id, embedding, nrm FROM (
-          SELECT e.vec_id, e.embedding, e.nrm, c.cid,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-              list_reduce(list_transform(generate_series(1, len(e.embedding)),
-                i -> CAST(e.embedding[i] AS DOUBLE) * c.cv[i]),
-                (x, y) -> x + y) / (e.nrm * c.cnrm) DESC, c.cid ASC) AS rn
-          FROM e, c2_$k c)
-        WHERE rn = 1),
+      ${meansDuck(s"c2_$k", s"s2_$k")},
+      ${asgDuck(s"asg_$k", s"c2_$k")},
       pruned_$k AS (
         SELECT DISTINCT b.cid, b.vec_id
         FROM asg_$k a JOIN asg_$k b
@@ -1354,33 +1283,8 @@ object SemanticDedupOps {
       .groupBy(col("cid0"), col("cid1"))
       .agg(count(lit(1)).as("nij"))
       .persist()
-    val tot = cont.agg(sum(col("nij")).as("n"),
-      expr("CAST(SUM(nij * (nij - 1)) AS BIGINT)").as("a2"),
-      countDistinct(col("cid0")).as("c_gen0"),
-      countDistinct(col("cid1")).as("c_gen1"))
-    val by0 = cont.groupBy(col("cid0"))
-      .agg(sum(col("nij")).as("ai"), max(col("nij")).as("mx"))
-      .agg(expr("CAST(SUM(ai * (ai - 1)) AS BIGINT)").as("b1_2"),
-        sum(col("mx")).as("pure"))
-    val by1 = cont.groupBy(col("cid1")).agg(sum(col("nij")).as("bj"))
-      .agg(expr("CAST(SUM(bj * (bj - 1)) AS BIGINT)").as("b2_2"))
-    tot.crossJoin(by0).crossJoin(by1)
-      .withColumn("t2", expr("n * (n - 1)"))
-      .withColumn("ari_num", expr("""
-        CAST(a2 AS DECIMAL(18,0)) * CAST(t2 AS DECIMAL(18,0))
-        - CAST(b1_2 AS DECIMAL(18,0)) * CAST(b2_2 AS DECIMAL(18,0))"""))
-      .withColumn("ari_den", expr("""
-        CAST(t2 AS DECIMAL(18,0))
-          * CAST(b1_2 + b2_2 AS DECIMAL(18,0))
-        - CAST(b1_2 AS DECIMAL(18,0)) * CAST(b2_2 AS DECIMAL(18,0))
-        - CAST(b1_2 AS DECIMAL(18,0)) * CAST(b2_2 AS DECIMAL(18,0))"""))
-      .select(col("n"), col("c_gen0"), col("c_gen1"),
-        (col("pure").cast("double") / col("n").cast("double"))
-          .as("retention"),
-        expr("""CAST(t2 + 2 * a2 - b1_2 - b2_2 AS DOUBLE)
-                / CAST(t2 AS DOUBLE)""").as("rand_index"),
-        expr("""CAST(CAST(ari_num AS STRING) AS DOUBLE) * 2
-                / CAST(CAST(ari_den AS STRING) AS DOUBLE)""").as("ari"))
+    EmbeddingOps.pairAgreement(cont, "cid0", "cid1", "c_gen0", "c_gen1",
+      "retention")
   }
 
   /** q280's measurement applied to a LIVE persisted semantic index —
@@ -1449,100 +1353,31 @@ object SemanticDedupOps {
         SELECT vec_id, embedding, nrm FROM ($normedDuck)),
       eh AS (
         SELECT * FROM e WHERE vec_id * 2 < (SELECT COUNT(*) FROM e)),
-      seeds0 AS (
-        SELECT vec_id, embedding,
-          CAST(ROW_NUMBER() OVER (ORDER BY rk, vec_id) - 1 AS BIGINT)
-            AS cid
-        FROM (SELECT vec_id, embedding, md5('ivf:' || vec_id) AS rk
-              FROM eh)
-        QUALIFY cid < $KmK),
-      g00 AS (
-        SELECT cid, cv, ${dnrmDuck("cv")} AS cnrm
-        FROM (SELECT cid,
-                list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv
-              FROM seeds0)),
+      ${seedsDuck("seeds0", "eh", KmK)},
+      ${c0Duck("g00", "seeds0")},
       t01 AS (${kmIterDuck("g00", "eh")}),
-      g01 AS (
-        SELECT cid, n, cv, ${dnrmDuck("cv")} AS cnrm
-        FROM (SELECT cid, n, list_transform(sumv, x -> x / n) AS cv
-              FROM t01)),
+      ${meansDuck("g01", "t01", "cid, n")},
       t02 AS (${kmIterDuck("g01", "eh")}),
-      g02 AS (
-        SELECT cid, cv, ${dnrmDuck("cv")} AS cnrm
-        FROM (SELECT cid, list_transform(sumv, x -> x / n) AS cv
-              FROM t02)),
-      seeds1 AS (
-        SELECT vec_id, embedding,
-          CAST(ROW_NUMBER() OVER (ORDER BY rk, vec_id) - 1 AS BIGINT)
-            AS cid
-        FROM (SELECT vec_id, embedding, md5('ivf:' || vec_id) AS rk
-              FROM e)
-        QUALIFY cid < $KmK),
-      g10 AS (
-        SELECT cid, cv, ${dnrmDuck("cv")} AS cnrm
-        FROM (SELECT cid,
-                list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv
-              FROM seeds1)),
+      ${meansDuck("g02", "t02")},
+      ${seedsDuck("seeds1", "e", KmK)},
+      ${c0Duck("g10", "seeds1")},
       t11 AS (${kmIterDuck("g10", "e")}),
-      g11 AS (
-        SELECT cid, n, cv, ${dnrmDuck("cv")} AS cnrm
-        FROM (SELECT cid, n, list_transform(sumv, x -> x / n) AS cv
-              FROM t11)),
+      ${meansDuck("g11", "t11", "cid, n")},
       t12 AS (${kmIterDuck("g11", "e")}),
-      g12 AS (
-        SELECT cid, cv, ${dnrmDuck("cv")} AS cnrm
-        FROM (SELECT cid, list_transform(sumv, x -> x / n) AS cv
-              FROM t12)),
-      a0 AS (
-        SELECT vec_id, cid AS cid0 FROM (
+      ${meansDuck("g12", "t12")},
+      ${(0 to 1).map(g => s"""a$g AS (
+        SELECT vec_id, cid AS cid$g FROM (
           SELECT e.vec_id, c.cid,
             ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
               ${dotDuck("e.embedding", "c.cv")} / (e.nrm * c.cnrm) DESC,
               c.cid ASC) AS rn
-          FROM e, g02 c)
-        WHERE rn = 1),
-      a1 AS (
-        SELECT vec_id, cid AS cid1 FROM (
-          SELECT e.vec_id, c.cid,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-              ${dotDuck("e.embedding", "c.cv")} / (e.nrm * c.cnrm) DESC,
-              c.cid ASC) AS rn
-          FROM e, g12 c)
-        WHERE rn = 1),
+          FROM e, g${g}2 c)
+        WHERE rn = 1)""").mkString(",\n      ")},
       cont AS (
         SELECT cid0, cid1, CAST(COUNT(*) AS BIGINT) AS nij
         FROM a0 JOIN a1 USING (vec_id) GROUP BY 1, 2),
-      tot AS (
-        SELECT CAST(SUM(nij) AS BIGINT) AS n,
-          CAST(SUM(nij * (nij - 1)) AS BIGINT) AS a2,
-          CAST(COUNT(DISTINCT cid0) AS BIGINT) AS c_gen0,
-          CAST(COUNT(DISTINCT cid1) AS BIGINT) AS c_gen1
-        FROM cont),
-      by0 AS (
-        SELECT CAST(SUM(ai * (ai - 1)) AS BIGINT) AS b1_2,
-          CAST(SUM(mx) AS BIGINT) AS pure
-        FROM (SELECT cid0, SUM(nij) AS ai, MAX(nij) AS mx
-              FROM cont GROUP BY 1)),
-      by1 AS (
-        SELECT CAST(SUM(bj * (bj - 1)) AS BIGINT) AS b2_2
-        FROM (SELECT cid1, SUM(nij) AS bj FROM cont GROUP BY 1)),
-      f AS (
-        SELECT n, a2, c_gen0, c_gen1, b1_2, pure, b2_2,
-          n * (n - 1) AS t2
-        FROM tot, by0, by1)
-      SELECT n, c_gen0, c_gen1,
-        CAST(pure AS DOUBLE) / CAST(n AS DOUBLE) AS retention,
-        CAST(t2 + 2 * a2 - b1_2 - b2_2 AS DOUBLE) / CAST(t2 AS DOUBLE)
-          AS rand_index,
-        CAST(CAST(CAST(a2 AS DECIMAL(18,0)) * CAST(t2 AS DECIMAL(18,0))
-             - CAST(b1_2 AS DECIMAL(18,0)) * CAST(b2_2 AS DECIMAL(18,0))
-             AS VARCHAR) AS DOUBLE) * 2
-          / CAST(CAST(CAST(t2 AS DECIMAL(18,0))
-                   * CAST(b1_2 + b2_2 AS DECIMAL(18,0))
-                 - CAST(b1_2 AS DECIMAL(18,0)) * CAST(b2_2 AS DECIMAL(18,0))
-                 - CAST(b1_2 AS DECIMAL(18,0)) * CAST(b2_2 AS DECIMAL(18,0))
-                 AS VARCHAR) AS DOUBLE) AS ari
-      FROM f"""))
+      ${EmbeddingOps.pairAgreementDuck("cid0", "cid1", "c_gen0", "c_gen1",
+        "by0", "by1", "retention")}"""))
   /** q298: PINNED-GENERATION SEMANTIC SERVING under the bit-exact
     * gate — q296's reproducibility contract on the SECOND generational
     * family, with the two halves' oracles derived from two genuinely

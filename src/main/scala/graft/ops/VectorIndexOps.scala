@@ -8,9 +8,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import EmbeddingOps.{IvfPqNprobe, KmK, PqK, PqM, coarseKmOf,
-  coarseKmOfK, codeAgainst, dotDuck, ivfPqScoredCtes, localCosTop,
-  normedDuck, normedOf, pqCodebookOf, pqSliceOf}
+import EmbeddingOps.{IvfPqNprobe, KmK, PqK, PqM, adcTopK, coarseKmOf,
+  dotDuck, ivfPqScoredCtes, localCosTop, normedOf, pqCodebookOf,
+  pqSliceOf}
 
 /** The persisted IVF-PQ VECTOR INDEX family: train-once/serve-forever
   * ANN over the embeddings corpus — build persists coarse centroids,
@@ -398,18 +398,30 @@ object VectorIndexOps {
         .select(col("query_id"), col("sub"), col("cid").as("code"),
           expr("dot_fd(qv, cv)").as("term"))
     }.reduce(_ unionByName _)
-    val wr = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-    probe.join(idx.codes, "cell")
-      .join(broadcast(lut), Seq("query_id", "sub", "code"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(expr("""aggregate(
-          transform(sort_array(collect_list(struct(sub, term))),
-            s -> s.term),
-          0D, (acc, x) -> acc + x)""").as("score"))
-      .withColumn("rank", row_number().over(wr).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id"), col("score"))
+    adcTopK(probe.join(idx.codes, "cell")
+      .join(broadcast(lut), Seq("query_id", "sub", "code")), k)
+  }
+
+  /** The (vec_id, embedding) corpus. */
+  private def vectors(s: SparkSession, dir: String): DataFrame =
+    table(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
+
+  /** The gated serving queries' probe set: the vec_id < 20 vectors. */
+  private def probeSet(s: SparkSession, dir: String): DataFrame =
+    table(s, dir, "embeddings").filter(col("vec_id") < 20)
+      .select(col("vec_id"), col("embedding"))
+
+  /** The drifted index q241, q296 and q297 start from, under a fresh
+    * `prefix` at `base`: generation 0 trained on the corpus quarter
+    * vec_id % 4 = 0, then the other three quarters appended against
+    * its frozen codebooks. */
+  private def buildDriftedIndex(s: SparkSession, e: DataFrame,
+      prefix: String, base: String): Unit = {
+    IndexLifecycle.resetPrefix(s, prefix, base)
+    val g0 = e.filter(col("vec_id") % 4 === 0)
+    buildVectorIndex(s, g0, g0, prefix, s"$base/idx")
+    (1 to 3).foreach(i => appendToVectorIndex(s,
+      e.filter(col("vec_id") % 4 === i), prefix, s"$base/idx"))
   }
 
   /** q205: the persisted-index serving path under the bit-exact gate.
@@ -424,17 +436,14 @@ object VectorIndexOps {
   val q205VectorIndex = OpSpec(
     "q205_vector_index",
     (s, dir) => {
-      val e = table(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"))
+      val e = vectors(s, dir)
       // FIXED prefix + path, reset first: a fresh name per run would
       // leak one set of catalog tables and index files per invocation
       val path = s"${graft.Tables.scratchDir}/vidx_q205"
       val prefix = "vidx_q205"
       IndexLifecycle.resetPrefix(s, prefix, path)
       buildVectorIndex(s, e, e, prefix, path)
-      searchVectorIndex(
-        table(s, dir, "embeddings").filter(col("vec_id") < 20)
-          .select(col("vec_id"), col("embedding")),
+      searchVectorIndex(probeSet(s, dir),
         readVectorIndex(s, prefix), IvfPqNprobe)
     },
     EmbeddingOps.q150IvfPqSearch.oracle)
@@ -452,8 +461,7 @@ object VectorIndexOps {
   val q210VectorVacuum = OpSpec(
     "q210_vector_vacuum",
     (s, dir) => {
-      val e = table(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"))
+      val e = vectors(s, dir)
       val path = s"${graft.Tables.scratchDir}/vvac_q210"
       val prefix = "vvac_q210"
       IndexLifecycle.resetPrefix(s, prefix, path)
@@ -462,9 +470,7 @@ object VectorIndexOps {
         e.filter(col("vec_id") % 7 === 3).select(col("vec_id")),
         prefix, path)
       vacuumVectorIndex(s, prefix, s"$path/codes_vacuumed")
-      searchVectorIndex(
-        table(s, dir, "embeddings").filter(col("vec_id") < 20)
-          .select(col("vec_id"), col("embedding")),
+      searchVectorIndex(probeSet(s, dir),
         readVectorIndex(s, prefix), IvfPqNprobe)
     },
     Some(EmbeddingOps.ivfPqOracleSql("c.vec_id % 7 <> 3")))
@@ -481,8 +487,7 @@ object VectorIndexOps {
   val q221CompactedServe = OpSpec(
     "q221_compacted_serve",
     (s, dir) => {
-      val e = table(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"))
+      val e = vectors(s, dir)
       val base = s"${graft.Tables.scratchDir}/vcp_q221"
       val prefix = "vcp_q221"
       IndexLifecycle.resetPrefix(s, prefix, base)
@@ -492,9 +497,7 @@ object VectorIndexOps {
         e.filter(col("vec_id") % 4 === i), prefix, s"$base/idx"))
       compactVectorIndex(s, prefix, s"$base/idx/codes",
         s"$base/codes_compact")
-      searchVectorIndex(
-        table(s, dir, "embeddings").filter(col("vec_id") < 20)
-          .select(col("vec_id"), col("embedding")),
+      searchVectorIndex(probeSet(s, dir),
         readVectorIndex(s, prefix), IvfPqNprobe)
     },
     EmbeddingOps.q150IvfPqSearch.oracle)
@@ -526,8 +529,7 @@ object VectorIndexOps {
     val built = s.catalog.tableExists(s"${prefix}_codes") &&
       new java.io.File(s"$path/codes").isDirectory
     if (!built) {
-      val e = table(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"))
+      val e = vectors(s, dir)
       IndexLifecycle.resetPrefix(s, prefix, path)
       buildVectorIndex(s, e, e, prefix, path)
     }
@@ -569,6 +571,24 @@ object VectorIndexOps {
         col("cosine"), col("adc_rank"))
   }
 
+  /** Oracle twin of the widest [[rerankVectorIndex]] call: the
+    * IVF-PQ trajectory, its top-[[RerankSs]].max ADC shortlist `adc`
+    * and that shortlist's exact cosines `rr`. Opens a WITH. */
+  private def rerankDuck: String = s"""WITH ${ivfPqScoredCtes("TRUE")},
+      adc AS (
+        SELECT query_id, vec_id,
+          ROW_NUMBER() OVER (PARTITION BY query_id
+            ORDER BY score DESC, vec_id ASC) AS adc_rank
+        FROM scored
+        QUALIFY adc_rank <= ${RerankSs.max}),
+      rr AS (
+        SELECT a.query_id, a.vec_id, a.adc_rank,
+          ${dotDuck("q.embedding", "v.embedding")} / (q.nrm * v.nrm)
+            AS cosine
+        FROM adc a
+        JOIN e v ON v.vec_id = a.vec_id
+        JOIN e q ON q.vec_id = a.query_id)"""
+
   /** q218: the staged-serving RECALL AUDIT under the bit-exact gate —
     * the number that tells an operator what a shortlist size buys.
     * One wide ADC search (shortlist = max) over the persisted index;
@@ -586,8 +606,7 @@ object VectorIndexOps {
     "q218_staged_serve_recall",
     (s, dir) => {
       val prefix = ensureVectorIndex(s, dir, "vidx218")
-      val e = table(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"))
+      val e = vectors(s, dir)
       val queries = e.filter(col("vec_id") < 20)
       val rr = rerankVectorIndex(queries, e, readVectorIndex(s, prefix),
         IvfPqNprobe, RerankSs.max.toInt, k = RerankSs.max.toInt)
@@ -623,20 +642,7 @@ object VectorIndexOps {
           (col("hits").cast("double") / 1e1).as("recall_at_10"))
     },
     Some(s"""
-      WITH ${ivfPqScoredCtes("TRUE")},
-      adc AS (
-        SELECT query_id, vec_id,
-          ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY score DESC, vec_id ASC) AS adc_rank
-        FROM scored
-        QUALIFY adc_rank <= ${RerankSs.max}),
-      rr AS (
-        SELECT a.query_id, a.vec_id, a.adc_rank,
-          ${dotDuck("q.embedding", "v.embedding")} / (q.nrm * v.nrm)
-            AS cosine
-        FROM adc a
-        JOIN e v ON v.vec_id = a.vec_id
-        JOIN e q ON q.vec_id = a.query_id),
+      $rerankDuck,
       truth AS (
         SELECT query_id, vec_id FROM (
           SELECT q.vec_id AS query_id, v.vec_id,
@@ -721,8 +727,7 @@ object VectorIndexOps {
   val q232LiveMaskedServe = OpSpec(
     "q232_live_masked_serve",
     (s, dir) => {
-      val e = table(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"))
+      val e = vectors(s, dir)
       val path = s"${graft.Tables.scratchDir}/vlm_q232"
       val prefix = "vlm_q232"
       IndexLifecycle.resetPrefix(s, prefix, path)
@@ -730,9 +735,7 @@ object VectorIndexOps {
       deleteFromVectorIndex(s,
         e.filter(col("vec_id") % 5 === 2).select(col("vec_id")),
         prefix, path)
-      searchVectorIndex(
-        table(s, dir, "embeddings").filter(col("vec_id") < 20)
-          .select(col("vec_id"), col("embedding")),
+      searchVectorIndex(probeSet(s, dir),
         readVectorIndexLive(s, prefix), IvfPqNprobe)
     },
     Some(EmbeddingOps.ivfPqOracleSql("c.vec_id % 5 <> 2")))
@@ -748,27 +751,13 @@ object VectorIndexOps {
     "q240_reranked_serve",
     (s, dir) => {
       val prefix = ensureVectorIndex(s, dir, "vidx218")
-      val e = table(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"))
+      val e = vectors(s, dir)
       rerankVectorIndex(e.filter(col("vec_id") < 20), e,
         readVectorIndex(s, prefix), IvfPqNprobe,
         RerankSs.max.toInt, k = 10)
     },
     Some(s"""
-      WITH ${ivfPqScoredCtes("TRUE")},
-      adc AS (
-        SELECT query_id, vec_id,
-          ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY score DESC, vec_id ASC) AS adc_rank
-        FROM scored
-        QUALIFY adc_rank <= ${RerankSs.max}),
-      rr AS (
-        SELECT a.query_id, a.vec_id, a.adc_rank,
-          ${dotDuck("q.embedding", "v.embedding")} / (q.nrm * v.nrm)
-            AS cosine
-        FROM adc a
-        JOIN e v ON v.vec_id = a.vec_id
-        JOIN e q ON q.vec_id = a.query_id)
+      $rerankDuck
       SELECT query_id,
         CAST(ROW_NUMBER() OVER (PARTITION BY query_id
           ORDER BY cosine DESC, vec_id ASC) AS BIGINT) AS rank,
@@ -793,19 +782,12 @@ object VectorIndexOps {
   val q241RetrainedServe = OpSpec(
     "q241_retrained_serve",
     (s, dir) => {
-      val e = table(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"))
+      val e = vectors(s, dir)
       val base = s"${graft.Tables.scratchDir}/vrt_q241"
       val prefix = "vrt_q241"
-      IndexLifecycle.resetPrefix(s, prefix, base)
-      val g0 = e.filter(col("vec_id") % 4 === 0)
-      buildVectorIndex(s, g0, g0, prefix, s"$base/idx")
-      (1 to 3).foreach(i => appendToVectorIndex(s,
-        e.filter(col("vec_id") % 4 === i), prefix, s"$base/idx"))
+      buildDriftedIndex(s, e, prefix, base)
       retrainVectorIndex(s, e, prefix, s"$base/retrain")
-      searchVectorIndex(
-        table(s, dir, "embeddings").filter(col("vec_id") < 20)
-          .select(col("vec_id"), col("embedding")),
+      searchVectorIndex(probeSet(s, dir),
         readVectorIndex(s, prefix), IvfPqNprobe)
     },
     EmbeddingOps.q150IvfPqSearch.oracle)
@@ -830,20 +812,13 @@ object VectorIndexOps {
   val q296PinnedGenerationServe = OpSpec(
     "q296_pinned_generation_serve",
     (s, dir) => {
-      val e = table(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"))
+      val e = vectors(s, dir)
       val base = s"${graft.Tables.scratchDir}/vpg_q296"
       val prefix = "vpg_q296"
-      IndexLifecycle.resetPrefix(s, prefix, base)
-      val g0 = e.filter(col("vec_id") % 4 === 0)
-      buildVectorIndex(s, g0, g0, prefix, s"$base/idx")
-      (1 to 3).foreach(i => appendToVectorIndex(s,
-        e.filter(col("vec_id") % 4 === i), prefix, s"$base/idx"))
+      buildDriftedIndex(s, e, prefix, base)
       pinVectorIndexGeneration(s, prefix, 0L, s"$base/idx")
       retrainVectorIndex(s, e, prefix, s"$base/retrain")
-      val probes = table(s, dir, "embeddings")
-        .filter(col("vec_id") < 20)
-        .select(col("vec_id"), col("embedding"))
+      val probes = probeSet(s, dir)
       val pinned = searchVectorIndex(probes,
         readVectorIndexAt(s, prefix, 0L), IvfPqNprobe)
         .withColumn("generation", lit(0L))
@@ -876,22 +851,15 @@ object VectorIndexOps {
   val q297GenerationGc = OpSpec(
     "q297_generation_gc",
     (s, dir) => {
-      val e = table(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"))
+      val e = vectors(s, dir)
       val base = s"${graft.Tables.scratchDir}/vgc_q297"
       val prefix = "vgc_q297"
-      IndexLifecycle.resetPrefix(s, prefix, base)
-      val g0 = e.filter(col("vec_id") % 4 === 0)
-      buildVectorIndex(s, g0, g0, prefix, s"$base/idx")
-      (1 to 3).foreach(i => appendToVectorIndex(s,
-        e.filter(col("vec_id") % 4 === i), prefix, s"$base/idx"))
+      buildDriftedIndex(s, e, prefix, base)
       pinVectorIndexGeneration(s, prefix, 0L, s"$base/idx")
       retrainVectorIndex(s, e, prefix, s"$base/retrain")
       unpinVectorIndexGeneration(s, prefix, 0L, s"$base/idx")
       gcVectorIndexGenerations(s, prefix)
-      searchVectorIndex(
-        table(s, dir, "embeddings").filter(col("vec_id") < 20)
-          .select(col("vec_id"), col("embedding")),
+      searchVectorIndex(probeSet(s, dir),
         readVectorIndex(s, prefix), IvfPqNprobe)
     },
     EmbeddingOps.q150IvfPqSearch.oracle)

@@ -5110,8 +5110,8 @@ class OperatorSpec extends AnyFunSuite {
     val vecs = e.select(col("vec_id"), col("embedding"))
     val root = java.nio.file.Files.createTempDirectory("lcd").toString
     val tag = root.replaceAll("[^A-Za-z0-9]", "").takeRight(8)
-    // by column name: a masked read puts the id column first (the
-    // anti-join's USING key), a plain read keeps the catalog order
+    // by column name, so the compare does not depend on the order a
+    // read returns its columns in
     def rows(dfs: Seq[DataFrame]) = dfs.map(d =>
       d.select(d.columns.sorted.map(col): _*).collect().toSet)
     /** One family's lifecycle through its public API: `build(px, path)`,

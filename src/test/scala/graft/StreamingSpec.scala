@@ -812,6 +812,27 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
+  test("Sinks.concurrently rethrows a failing arm's own exception only " +
+    "after every arm has settled; a single arm runs on the caller") {
+    import graft.io.Sinks
+    final class ArmFailed extends RuntimeException("arm failed")
+    val slowDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val okRan = new java.util.concurrent.atomic.AtomicBoolean(false)
+    // intercept[ArmFailed] fails on any other type, the pool's
+    // ExecutionException wrapper included
+    val e = intercept[ArmFailed](Sinks.concurrently(Seq(
+      () => throw new ArmFailed,
+      () => { Thread.sleep(200); slowDone.set(true) },
+      () => okRan.set(true))))
+    assert(e.getMessage == "arm failed")
+    assert(slowDone.get, "rethrown while the slow arm was still running")
+    assert(okRan.get)
+    val caller = Thread.currentThread
+    val ranOn = new java.util.concurrent.atomic.AtomicReference[Thread]
+    Sinks.concurrently(Seq(() => ranOn.set(Thread.currentThread)))
+    assert(ranOn.get eq caller)
+  }
+
   test("single-table idempotent append: a first attempt launches exactly " +
     "one job more than a plain append of the same frame") {
     import org.apache.spark.sql.functions._
