@@ -70,18 +70,11 @@ object ClassifierOps {
     * expression is ROW-LOCAL, so the same featurization runs unchanged
     * over a streaming documents source (q271). */
   private[graft] def featurize(docs: DataFrame): DataFrame =
-    docs
-      .withColumn("words", expr(TextOps.wordsSpark))
-      .withColumn("n_chars", length(col("text")).cast("long"))
-      .withColumn("n_words", expr("CAST(size(words) AS BIGINT)"))
-      .withColumn("n_nonspace",
-        expr("CAST(length(regexp_replace(text, '\\\\s', '')) AS BIGINT)"))
-      .withColumn("n_punct",
-        expr("CAST(length(regexp_replace(text, '[a-z0-9 ]', '')) AS BIGINT)"))
-      .withColumn("n_stop", expr(
-        s"CAST(size(filter(words, w -> w IN (${TextOps.stopwordsSql}))) AS BIGINT)"))
-      .withColumn("yq", expr(
-        s"CASE WHEN ${TextOps.qualityFormula("n_chars")} >= 5e-1 THEN 1L ELSE 0L END"))
+    TextOps.qualityStage(docs, "yq",
+        s"CASE WHEN ${TextOps.qualityFormula("n_chars")} >= 5e-1 THEN 1L ELSE 0L END",
+        lenCols = Seq("n_chars" -> length(col("text")).cast("long")),
+        wordCols = Seq("n_nonspace" ->
+          expr("CAST(length(regexp_replace(text, '\\\\s', '')) AS BIGINT)")))
       .withColumn("hx_clf",
         md5(concat(lit("clf:"), col("doc_id")).cast("binary")))
       .withColumn("hx_flip",
@@ -123,17 +116,10 @@ object ClassifierOps {
         md5('flip:' || doc_id) AS hx_flip,
         n_words, n_nonspace, n_stop
       FROM (
-        SELECT doc_id,
-          CAST(length(text) AS BIGINT) AS n_chars,
-          CAST(len(words) AS BIGINT) AS n_words,
-          CAST(length(regexp_replace(text, '\\s', '', 'g')) AS BIGINT)
-            AS n_nonspace,
-          CAST(length(regexp_replace(text, '[a-z0-9 ]', '', 'g')) AS BIGINT)
-            AS n_punct,
-          CAST(len(list_filter(words, w -> w IN (${TextOps.stopwordsSql})))
-            AS BIGINT) AS n_stop
-        FROM (SELECT doc_id, text, ${TextOps.wordsDuck} AS words
-              FROM documents)))"""
+        ${TextOps.qualityCountsDuck(
+          "doc_id,\n          CAST(length(text) AS BIGINT) AS n_chars,",
+          "doc_id, text", "documents",
+          mid = "\n          CAST(length(regexp_replace(text, '\\s', '', 'g')) AS BIGINT)\n            AS n_nonspace,")}))"""
 
   /** z = ((w0*(f0/1e5) + w1*(f1/1e5)) + w2*(f2/1e5)) + w3*(f3/1e5) as a
     * Column — reduceLeft fixes the association order the DuckDB text

@@ -1,7 +1,8 @@
 package graft.ops
 
-import graft.{OpSpec, Tables}
+import graft.OpSpec
 import graft.Tables._
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -10,6 +11,33 @@ import org.apache.spark.sql.functions._
   * F12 JSON extraction over the events.props column).
   */
 object CurationOps {
+
+  /** Exact dedup by `key`: the min doc_id of each key group survives,
+    * semi-joined back onto `docs` — only survivor ids travel, never a
+    * second shuffle of text (q49's md5 of the text; q200/q253's
+    * canonical form). */
+  private def minIdPerKey(docs: DataFrame, key: Column): DataFrame =
+    docs.join(docs.groupBy(key).agg(min(col("doc_id")).as("doc_id"))
+      .select(col("doc_id")), Seq("doc_id"), "left_semi")
+
+  /** q170's C4-style canonical text key of q200/q253: md5 of the
+    * lower-cased text with every non-alphanumeric run collapsed to one
+    * space, trimmed. */
+  private val canonicalKey: Column =
+    md5(trim(regexp_replace(lower(col("text")), "[^a-z0-9]+", " "))
+      .cast("binary")).as("nk")
+
+  /** DuckDB twin of [[minIdPerKey]] over [[canonicalKey]]: the
+    * `keepers` and `kept` CTEs. */
+  private val canonicalKeptDuck = """keepers AS (
+        SELECT min(doc_id) AS doc_id FROM documents
+        GROUP BY md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ',
+                                         'g')))),
+      kept AS (
+        SELECT d.* FROM documents d SEMI JOIN keepers USING (doc_id))"""
+
+  /** The document length q200/q203/q253's oracles score over. */
+  private val lenTextDuck = ",\n          length(text) AS len_text"
 
   /** Score-band curation: top-2-decile selection with exact ntile
     * semantics (the `best_ocr_only.json` selection of macvid.py:113-115
@@ -192,20 +220,8 @@ object CurationOps {
   val q49CurationPipeline = OpSpec(
     "q49_curation_pipeline",
     (s, dir) => {
-      val docs = table(s, dir, "documents")
-      val survivors = docs
-        .groupBy(md5(col("text").cast("binary")).as("h"))
-        .agg(min(col("doc_id")).as("doc_id"))
-        .select(col("doc_id"))
-      docs.join(survivors, Seq("doc_id"), "left_semi")
-        .withColumn("words", expr(TextOps.wordsSpark))
-        .withColumn("n_words", expr("CAST(size(words) AS BIGINT)"))
-        .withColumn("n_punct",
-          expr("CAST(length(regexp_replace(text, '[a-z0-9 ]', '')) AS BIGINT)"))
-        .withColumn("n_stop", expr(
-          s"CAST(size(filter(words, w -> w IN (${TextOps.stopwordsSql}))) AS BIGINT)"))
-        .withColumn("quality",
-          expr(TextOps.qualityFormula("length(text)")))
+      TextOps.qualityStage(minIdPerKey(table(s, dir, "documents"),
+          md5(col("text").cast("binary")).as("h")))
         .filter(col("quality") >= 0.5)
         .select(col("doc_id"), col("source"), col("lang"), col("n_words"),
           col("quality"), (col("doc_id") % 8).as("shard_id"))
@@ -216,12 +232,8 @@ object CurationOps {
       kept AS (
         SELECT d.* FROM documents d SEMI JOIN survivors USING (doc_id)),
       scored AS (
-        SELECT doc_id, source, lang,
-          CAST(len(words) AS BIGINT) AS n_words,
-          CAST(length(regexp_replace(text, '[a-z0-9 ]', '', 'g')) AS BIGINT) AS n_punct,
-          CAST(len(list_filter(words, w -> w IN (${TextOps.stopwordsSql}))) AS BIGINT) AS n_stop,
-          length(text) AS n_chars
-        FROM (SELECT *, ${TextOps.wordsDuck} AS words FROM kept))
+        ${TextOps.qualityCountsDuck("doc_id, source, lang,", "*", "kept",
+          tail = ",\n          length(text) AS n_chars")})
       SELECT doc_id, source, lang, n_words,
         ${TextOps.qualityFormula("n_chars")} AS quality,
         doc_id % 8 AS shard_id
@@ -321,22 +333,8 @@ object CurationOps {
   val q200PipelineV3 = OpSpec(
     "q200_pipeline_v3",
     (s, dir) => {
-      val docs = table(s, dir, "documents")
-      val keepers = docs
-        .groupBy(md5(trim(regexp_replace(lower(col("text")),
-          "[^a-z0-9]+", " ")).cast("binary")).as("nk"))
-        .agg(min(col("doc_id")).as("doc_id"))
-        .select(col("doc_id"))
-      docs.join(keepers, Seq("doc_id"), "left_semi")
-        .withColumn("words", expr(TextOps.wordsSpark))
-        .withColumn("n_words", expr("CAST(size(words) AS BIGINT)"))
-        .withColumn("n_punct", expr(
-          "CAST(length(regexp_replace(text, '[a-z0-9 ]', '')) AS BIGINT)"))
-        .withColumn("n_stop", expr(
-          s"""CAST(size(filter(words, w -> w IN
-              (${TextOps.stopwordsSql}))) AS BIGINT)"""))
-        .withColumn("quality",
-          expr(TextOps.qualityFormula("length(text)")))
+      TextOps.qualityStage(
+          minIdPerKey(table(s, dir, "documents"), canonicalKey))
         .filter(col("quality") >= 0.5)
         .withColumn("w", expr("""CAST(least(8, greatest(1,
           floor(CAST(n_chars AS DOUBLE) / 256))) AS BIGINT)"""))
@@ -349,21 +347,10 @@ object CurationOps {
         .orderBy(col("key"), col("doc_id")).limit(40)
     },
     Some(s"""
-      WITH keepers AS (
-        SELECT min(doc_id) AS doc_id FROM documents
-        GROUP BY md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ',
-                                         'g')))),
-      kept AS (
-        SELECT d.* FROM documents d SEMI JOIN keepers USING (doc_id)),
+      WITH $canonicalKeptDuck,
       scored AS (
-        SELECT doc_id, source, lang, n_chars,
-          CAST(len(words) AS BIGINT) AS n_words,
-          CAST(length(regexp_replace(text, '[a-z0-9 ]', '', 'g'))
-               AS BIGINT) AS n_punct,
-          CAST(len(list_filter(words, w -> w IN
-               (${TextOps.stopwordsSql}))) AS BIGINT) AS n_stop,
-          length(text) AS len_text
-        FROM (SELECT *, ${TextOps.wordsDuck} AS words FROM kept)),
+        ${TextOps.qualityCountsDuck("doc_id, source, lang, n_chars,", "*",
+          "kept", tail = lenTextDuck)}),
       gated AS (
         SELECT doc_id, source, lang,
           ${TextOps.qualityFormula("len_text")} AS quality,
@@ -390,15 +377,7 @@ object CurationOps {
   val q203SourceLeague = OpSpec(
     "q203_source_league",
     (s, dir) => {
-      val scored = table(s, dir, "documents")
-        .withColumn("words", expr(TextOps.wordsSpark))
-        .withColumn("n_words", expr("CAST(size(words) AS BIGINT)"))
-        .withColumn("n_punct", expr(
-          "CAST(length(regexp_replace(text, '[a-z0-9 ]', '')) AS BIGINT)"))
-        .withColumn("n_stop", expr(
-          s"""CAST(size(filter(words, w -> w IN
-              (${TextOps.stopwordsSql}))) AS BIGINT)"""))
-        .withColumn("q", expr(TextOps.qualityFormula("length(text)")))
+      val scored = TextOps.qualityStage(table(s, dir, "documents"), "q")
         .withColumn("micro", expr("CAST(round(q * 1e6) AS BIGINT)"))
         .withColumn("passed",
           expr("CAST(CASE WHEN q >= 5e-1 THEN 1 ELSE 0 END AS BIGINT)"))
@@ -427,14 +406,8 @@ object CurationOps {
           CASE WHEN ${TextOps.qualityFormula("len_text")} >= 5e-1
                THEN 1 ELSE 0 END AS passed
         FROM (
-          SELECT source,
-            CAST(len(words) AS BIGINT) AS n_words,
-            CAST(length(regexp_replace(text, '[a-z0-9 ]', '', 'g'))
-                 AS BIGINT) AS n_punct,
-            CAST(len(list_filter(words, w -> w IN
-                 (${TextOps.stopwordsSql}))) AS BIGINT) AS n_stop,
-            length(text) AS len_text
-          FROM (SELECT *, ${TextOps.wordsDuck} AS words FROM documents))),
+          ${TextOps.qualityCountsDuck("source,", "*", "documents",
+            tail = lenTextDuck)})),
       corpus AS (
         SELECT CAST(SUM(micro) AS BIGINT) AS c_micro,
           CAST(COUNT(*) AS BIGINT) AS c_n
@@ -535,11 +508,7 @@ object CurationOps {
       (0 to 2).foreach(i => graft.io.Sinks.appendRollup(
         ev.filter(col("event_id") % 3 === i), Seq("event_type"),
         Seq("value"), tableName, 4, path))
-      graft.io.Sinks.readRollup(s, tableName, Seq("event_type"),
-          Seq("value"))
-        .select(col("event_type"), col("n"),
-          col("sum_value").cast("double").as("total"),
-          (col("sum_value").cast("double") / col("n")).as("avg_value"))
+      eventRollup(s, tableName)
     },
     Some("""
       SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
@@ -548,6 +517,17 @@ object CurationOps {
           AS avg_value
       FROM events
       GROUP BY event_type"""))
+
+  /** The served read of a per-event-type rollup of `value` (q227,
+    * q229 and the streamed q228): the folded partials with the exact
+    * total and one-division mean the q227 oracle computes from the
+    * raw table. */
+  private[graft] def eventRollup(s: SparkSession, tableName: String)
+      : DataFrame =
+    graft.io.Sinks.readRollup(s, tableName, Seq("event_type"), Seq("value"))
+      .select(col("event_type"), col("n"),
+        col("sum_value").cast("double").as("total"),
+        (col("sum_value").cast("double") / col("n")).as("avg_value"))
 
   /** q229: the rollup COMPACTION lifecycle under the gate — appends,
     * a staged-swap compaction that folds accumulated partials to one
@@ -573,19 +553,9 @@ object CurationOps {
       // appends keep working on the compacted generation
       graft.io.Sinks.appendRollup(ev.filter(col("event_id") % 4 === 3),
         Seq("event_type"), Seq("value"), tableName, 4, s"$path/compact1")
-      graft.io.Sinks.readRollup(s, tableName, Seq("event_type"),
-          Seq("value"))
-        .select(col("event_type"), col("n"),
-          col("sum_value").cast("double").as("total"),
-          (col("sum_value").cast("double") / col("n")).as("avg_value"))
+      eventRollup(s, tableName)
     },
-    Some("""
-      SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-        CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS total,
-        CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) / COUNT(*)
-          AS avg_value
-      FROM events
-      GROUP BY event_type"""))
+    q227IncrementalRollup.oracle)
 
   /** q253: curation pipeline v5 — the CROSS-MODAL selection join a
     * multimodal training-data run needs and rounds 1-8 gated only per
@@ -608,12 +578,6 @@ object CurationOps {
   val q253PipelineV5 = OpSpec(
     "q253_pipeline_v5",
     (s, dir) => {
-      val docs = table(s, dir, "documents")
-      val keepers = docs
-        .groupBy(md5(trim(regexp_replace(lower(col("text")),
-          "[^a-z0-9]+", " ")).cast("binary")).as("nk"))
-        .agg(min(col("doc_id")).as("doc_id"))
-        .select(col("doc_id"))
       val e = table(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"),
           expr("""CASE WHEN aggregate(embedding, 0e0,
@@ -626,16 +590,8 @@ object CurationOps {
       val wc = Window.partitionBy(col("source"))
         .orderBy(col("n_chars").desc, col("doc_id"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      docs.join(keepers, Seq("doc_id"), "left_semi")
-        .withColumn("words", expr(TextOps.wordsSpark))
-        .withColumn("n_words", expr("CAST(size(words) AS BIGINT)"))
-        .withColumn("n_punct", expr(
-          "CAST(length(regexp_replace(text, '[a-z0-9 ]', '')) AS BIGINT)"))
-        .withColumn("n_stop", expr(
-          s"""CAST(size(filter(words, w -> w IN
-              (${TextOps.stopwordsSql}))) AS BIGINT)"""))
-        .withColumn("quality",
-          expr(TextOps.qualityFormula("length(text)")))
+      TextOps.qualityStage(
+          minIdPerKey(table(s, dir, "documents"), canonicalKey))
         .filter(col("quality") >= 0.5)
         .join(semKeep, Seq("doc_id"), "left_semi")
         .withColumn("cum_tokens", sum(col("n_words")).over(wc))
@@ -649,21 +605,10 @@ object CurationOps {
       semkeep AS (
         SELECT vec_id FROM verd_${EmbeddingOps.KmK}
         WHERE verdict = 'keep'),
-      keepers AS (
-        SELECT min(doc_id) AS doc_id FROM documents
-        GROUP BY md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ',
-                                         'g')))),
-      kept AS (
-        SELECT d.* FROM documents d SEMI JOIN keepers USING (doc_id)),
+      $canonicalKeptDuck,
       scored AS (
-        SELECT doc_id, source, n_chars,
-          CAST(len(words) AS BIGINT) AS n_words,
-          CAST(length(regexp_replace(text, '[a-z0-9 ]', '', 'g'))
-               AS BIGINT) AS n_punct,
-          CAST(len(list_filter(words, w -> w IN
-               (${TextOps.stopwordsSql}))) AS BIGINT) AS n_stop,
-          length(text) AS len_text
-        FROM (SELECT *, ${TextOps.wordsDuck} AS words FROM kept)),
+        ${TextOps.qualityCountsDuck("doc_id, source, n_chars,", "*", "kept",
+          tail = lenTextDuck)}),
       gated AS (
         SELECT s.doc_id, s.source, s.n_chars, s.n_words,
           ${TextOps.qualityFormula("len_text")} AS quality
@@ -688,25 +633,19 @@ object CurationOps {
     * on what earlier stages let through, as a real pipeline does; the
     * keeper is the min surviving doc_id, computed with a partitioned
     * window over the fingerprint, no global window). Everything else
-    * is row-local column math. */
-  /** Row-local funnel predicates + wordset fingerprint over a raw
-    * (doc_id, text) frame — the shared front half of the batch funnel
-    * (q276/q277) and the incremental ingest (q278). Emits (doc_id,
-    * p1, p2, p3, s3, wsh); the keeper/attribution tail differs per
-    * caller (who the doc competes with for keeper). */
-  private def funnelFlags(docs: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
-    docs
-      .withColumn("words", expr(TextOps.wordsSpark))
-      .withColumn("n_chars", length(col("text")).cast("long"))
-      .withColumn("n_words", expr("CAST(size(words) AS BIGINT)"))
-      .withColumn("n_dw",
-        expr("CAST(size(array_distinct(words)) AS BIGINT)"))
-      .withColumn("n_punct",
-        expr("CAST(length(regexp_replace(text, '[a-z0-9 ]', '')) AS BIGINT)"))
-      .withColumn("n_stop", expr(
-        s"CAST(size(filter(words, w -> w IN (${TextOps.stopwordsSql}))) AS BIGINT)"))
-      .withColumn("quality", expr(TextOps.qualityFormula("n_chars")))
+    * is row-local column math.
+    *
+    * This function is the row-local front half shared by the batch
+    * funnel (q276/q277) and the incremental ingest (q278): predicates
+    * plus wordset fingerprint over a raw (doc_id, text) frame. Emits
+    * (doc_id, p1, p2, p3, s3, wsh); the keeper/attribution tail differs
+    * per caller (who the doc competes with for keeper). */
+  private def funnelFlags(docs: DataFrame): DataFrame =
+    TextOps.qualityStage(docs,
+        score = TextOps.qualityFormula("n_chars"),
+        lenCols = Seq("n_chars" -> length(col("text")).cast("long")),
+        wordCols = Seq("n_dw" ->
+          expr("CAST(size(array_distinct(words)) AS BIGINT)")))
       .withColumn("wsh", expr(
         "md5(CAST(array_join(array_sort(array_distinct(words)), ' ') AS BINARY))"))
       .withColumn("p1", col("n_chars") >= 100)
@@ -716,45 +655,49 @@ object CurationOps {
       .select(col("doc_id"), col("p1"), col("p2"), col("p3"),
         col("s3"), col("wsh"))
 
+  /** The funnel keeper: the min stage-3-surviving doc_id of each
+    * wordset fingerprint among the frame's docs. An ordered window
+    * with an explicit full frame (the q72 pattern): an ORDER-less
+    * partitioned Window prints only two bracket groups and the plan
+    * sweep's global-window detector keys on that shape; the full frame
+    * keeps min() group-wide either way. */
+  private val funnelKeeper: Column =
+    min(when(col("s3"), col("doc_id")))
+      .over(Window.partitionBy(col("wsh")).orderBy(col("doc_id"))
+        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+
+  /** The (stage_idx, kill_stage) attribution of a flagged doc — engine
+    * and oracle text — given the wordset-dup predicate `dup`. */
+  private def stageIdxSql(dup: String): String =
+    s"""CAST(CASE WHEN NOT p1 THEN 1 WHEN NOT p2 THEN 2
+                 WHEN NOT p3 THEN 3 WHEN $dup THEN 4
+                 ELSE 5 END AS BIGINT)"""
+  private def killStageSql(dup: String): String =
+    s"""CASE WHEN NOT p1 THEN 'too_short'
+                 WHEN NOT p2 THEN 'quality'
+                 WHEN NOT p3 THEN 'repetition'
+                 WHEN $dup THEN 'wordset_dup'
+                 ELSE 'kept' END"""
+  private def attribution(flagged: DataFrame, dup: String): DataFrame =
+    flagged.withColumn("keeper", funnelKeeper)
+      .select(col("doc_id"), expr(stageIdxSql(dup)).as("stage_idx"),
+        expr(killStageSql(dup)).as("kill_stage"))
+
   /** The q276 attribution tail over [[funnelFlags]]: the keeper is
     * the min surviving doc_id within the SAME frame — all docs
     * compete. */
-  private def funnelAttrib(s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame =
-    funnelFlags(table(s, dir, "documents"))
-      // ordered window with an explicit full frame (the q72 pattern):
-      // an ORDER-less partitioned Window prints only two bracket
-      // groups and the plan sweep's global-window detector keys on
-      // that shape; the full frame keeps min() group-wide either way
-      .withColumn("keeper",
-        min(when(col("s3"), col("doc_id")))
-          .over(Window.partitionBy(col("wsh")).orderBy(col("doc_id"))
-            .rowsBetween(Window.unboundedPreceding,
-              Window.unboundedFollowing)))
-      .select(col("doc_id"),
-        expr("""CAST(CASE WHEN NOT p1 THEN 1 WHEN NOT p2 THEN 2
-                 WHEN NOT p3 THEN 3 WHEN doc_id <> keeper THEN 4
-                 ELSE 5 END AS BIGINT)""").as("stage_idx"),
-        expr("""CASE WHEN NOT p1 THEN 'too_short'
-                 WHEN NOT p2 THEN 'quality'
-                 WHEN NOT p3 THEN 'repetition'
-                 WHEN doc_id <> keeper THEN 'wordset_dup'
-                 ELSE 'kept' END""").as("kill_stage"))
+  private def funnelAttrib(s: SparkSession, dir: String): DataFrame =
+    attribution(funnelFlags(table(s, dir, "documents")), "doc_id <> keeper")
 
   /** Persist a corpus's funnel-survivor wordset fingerprints as the
     * bucketed dedup index an INCREMENTAL ingest joins against (q278):
     * one row per kept fingerprint — no text, no per-doc state, so the
     * index is hashes-sized and the ingest never touches corpus
     * text. */
-  def writeFunnelIndex(docs: org.apache.spark.sql.DataFrame,
-      prefix: String, path: String): Unit =
+  def writeFunnelIndex(docs: DataFrame, prefix: String, path: String): Unit =
     graft.io.Sinks.bucketedTable(
       funnelFlags(docs)
-        .withColumn("keeper",
-          min(when(col("s3"), col("doc_id")))
-            .over(Window.partitionBy(col("wsh")).orderBy(col("doc_id"))
-              .rowsBetween(Window.unboundedPreceding,
-                Window.unboundedFollowing)))
+        .withColumn("keeper", funnelKeeper)
         .filter(col("s3") && col("doc_id") === col("keeper"))
         .select(col("wsh")),
       s"${prefix}_wsh", "wsh", 8, path)
@@ -766,30 +709,13 @@ object CurationOps {
     * the batch, min surviving doc_id wins. Stages 1-3 are row-local;
     * stage 4 is one equi-join on the fingerprint (index is
     * hash-sized) + one batch-partitioned window. Cost ∝ batch. */
-  def incrementalFunnel(s: org.apache.spark.sql.SparkSession,
-      batch: org.apache.spark.sql.DataFrame, prefix: String)
-      : org.apache.spark.sql.DataFrame =
-    funnelFlags(batch)
+  def incrementalFunnel(s: SparkSession, batch: DataFrame, prefix: String)
+      : DataFrame =
+    attribution(funnelFlags(batch)
       .join(s.table(s"${prefix}_wsh")
-        .select(col("wsh"), lit(true).as("in_corpus")), Seq("wsh"), "left")
-      .withColumn("keeper",
-        min(when(col("s3"), col("doc_id")))
-          .over(Window.partitionBy(col("wsh")).orderBy(col("doc_id"))
-            .rowsBetween(Window.unboundedPreceding,
-              Window.unboundedFollowing)))
-      .select(col("doc_id"),
-        expr("""CAST(CASE WHEN NOT p1 THEN 1 WHEN NOT p2 THEN 2
-                 WHEN NOT p3 THEN 3
-                 WHEN in_corpus OR doc_id <> keeper THEN 4
-                 ELSE 5 END AS BIGINT)""").as("stage_idx"),
-        expr("""CASE WHEN NOT p1 THEN 'too_short'
-                 WHEN NOT p2 THEN 'quality'
-                 WHEN NOT p3 THEN 'repetition'
-                 WHEN in_corpus OR doc_id <> keeper THEN 'wordset_dup'
-                 ELSE 'kept' END""").as("kill_stage"))
+        .select(col("wsh"), lit(true).as("in_corpus")), Seq("wsh"), "left"),
+      "in_corpus OR doc_id <> keeper")
 
-  /** Shared oracle text for the funnel attribution (doc_id, stage_idx,
-    * kill_stage). */
   /** DuckDB twin of [[funnelFlags]] over the documents table:
     * (doc_id, p1, p2, p3, wsh). */
   private val funnelFlagsDuck: String = s"""
@@ -800,28 +726,18 @@ object CurationOps {
       md5(list_aggregate(list_sort(list_distinct(words)),
         'string_agg', ' ')) AS wsh
     FROM (
-      SELECT doc_id,
-        CAST(length(text) AS BIGINT) AS n_chars,
-        CAST(len(words) AS BIGINT) AS n_words,
-        CAST(len(list_distinct(words)) AS BIGINT) AS n_dw,
-        CAST(length(regexp_replace(text, '[a-z0-9 ]', '', 'g'))
-          AS BIGINT) AS n_punct,
-        CAST(len(list_filter(words,
-          w -> w IN (${TextOps.stopwordsSql}))) AS BIGINT) AS n_stop,
-        words
-      FROM (SELECT doc_id, text, ${TextOps.wordsDuck} AS words
-            FROM documents))"""
+      ${TextOps.qualityCountsDuck(
+        "doc_id,\n        CAST(length(text) AS BIGINT) AS n_chars,",
+        "doc_id, text", "documents",
+        mid = "\n        CAST(len(list_distinct(words)) AS BIGINT) AS n_dw,",
+        tail = ",\n        words")})"""
 
+  /** Shared oracle text for the funnel attribution (doc_id, stage_idx,
+    * kill_stage). */
   private val funnelAttribDuck: String = s"""
     SELECT doc_id,
-      CAST(CASE WHEN NOT p1 THEN 1 WHEN NOT p2 THEN 2
-           WHEN NOT p3 THEN 3 WHEN doc_id <> keeper THEN 4
-           ELSE 5 END AS BIGINT) AS stage_idx,
-      CASE WHEN NOT p1 THEN 'too_short'
-           WHEN NOT p2 THEN 'quality'
-           WHEN NOT p3 THEN 'repetition'
-           WHEN doc_id <> keeper THEN 'wordset_dup'
-           ELSE 'kept' END AS kill_stage
+      ${stageIdxSql("doc_id <> keeper")} AS stage_idx,
+      ${killStageSql("doc_id <> keeper")} AS kill_stage
     FROM (
       SELECT doc_id, p1, p2, p3,
         min(CASE WHEN p1 AND p2 AND p3 THEN doc_id END)
@@ -936,15 +852,8 @@ object CurationOps {
             OVER (PARTITION BY wsh) AS b_keeper
         FROM flags)
       SELECT doc_id,
-        CAST(CASE WHEN NOT p1 THEN 1 WHEN NOT p2 THEN 2
-             WHEN NOT p3 THEN 3
-             WHEN c_surv = 1 OR doc_id <> b_keeper THEN 4
-             ELSE 5 END AS BIGINT) AS stage_idx,
-        CASE WHEN NOT p1 THEN 'too_short'
-             WHEN NOT p2 THEN 'quality'
-             WHEN NOT p3 THEN 'repetition'
-             WHEN c_surv = 1 OR doc_id <> b_keeper THEN 'wordset_dup'
-             ELSE 'kept' END AS kill_stage
+        ${stageIdxSql("c_surv = 1 OR doc_id <> b_keeper")} AS stage_idx,
+        ${killStageSql("c_surv = 1 OR doc_id <> b_keeper")} AS kill_stage
       FROM w WHERE is_new"""))
 
   val all: Seq[OpSpec] = Seq(

@@ -532,15 +532,6 @@ object DedupOps {
         ON a.doc_id % 10 = 0 AND b.doc_id % 10 <> 0
       WHERE CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) <= 6"""))
 
-  /** q178: SimHash threshold sweep — the tuning readout for q29: how
-    * many near-dup pairs each Hamming cutoff t ∈ [0,6] admits
-    * (cumulative counts). A pipeline owner reads this curve to pick the
-    * cutoff BEFORE committing a corpus-wide dedup pass (too low keeps
-    * dups, too high scrubs distinct docs); the sweep stays within the
-    * banded join's exact-recall region (≤ 6) so every count is a true
-    * count, not an estimate. Reuses q29's pair generation verbatim and
-    * sweeps on the aggregated per-Hamming counts — 7×7 rows of work on
-    * top of the existing join, no new corpus pass. */
   /** Cumulative-count sweep over a (hamming, n) table for cutoffs
     * t ∈ [0,6]. LEFT join (not cross): the 7-row t domain must survive
     * an EMPTY pair set (all-distinct corpus) with n_pairs = 0, matching
@@ -553,6 +544,15 @@ object DedupOps {
       .agg(coalesce(sum(when(col("hamming") <= col("t"), col("n"))),
         lit(0L)).as("n_pairs"))
 
+  /** q178: SimHash threshold sweep — the tuning readout for q29: how
+    * many near-dup pairs each Hamming cutoff t ∈ [0,6] admits
+    * (cumulative counts). A pipeline owner reads this curve to pick the
+    * cutoff BEFORE committing a corpus-wide dedup pass (too low keeps
+    * dups, too high scrubs distinct docs); the sweep stays within the
+    * banded join's exact-recall region (≤ 6) so every count is a true
+    * count, not an estimate. Reuses q29's pair generation verbatim and
+    * sweeps on the aggregated per-Hamming counts — 7×7 rows of work on
+    * top of the existing join, no new corpus pass. */
   val q178SimhashSweep = OpSpec(
     "q178_simhash_sweep",
     (s, dir) => hammingSweep(s,
@@ -593,6 +593,32 @@ object DedupOps {
           CAST(${hexToLong("hx", 1, 15)} AS BIGINT) AS g
         FROM (SELECT doc_id, md5(gram) AS hx FROM grows0)),
       sizes AS (SELECT doc_id, COUNT(*) AS sz FROM grows GROUP BY doc_id)"""
+
+  /** q50's oracle CTE chain up to `inter` (candidate pairs + exact
+    * intersection counts; `sizes` also in scope) — shared with q220's
+    * SemDeDup cross-cluster miss audit, which reuses the lossless
+    * truth verbatim. */
+  private[ops] val q50OracleCtes: String = s"""$gramRowsDuck,
+      freq AS (SELECT g, COUNT(*) AS df FROM grows GROUP BY g),
+      prefix AS (
+        SELECT doc_id, g, sz, rn FROM (
+          SELECT w.doc_id, w.g, s.sz,
+            CAST(ROW_NUMBER() OVER (PARTITION BY w.doc_id
+              ORDER BY f.df ASC, w.g ASC) AS BIGINT) AS rn
+          FROM grows w JOIN freq f USING (g) JOIN sizes s USING (doc_id))
+        WHERE 3 * sz <= 4 * (sz - rn + 1)),
+      cand AS (
+        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+        FROM prefix a JOIN prefix b
+          ON a.g = b.g AND a.doc_id < b.doc_id
+         AND 4 * least(a.sz, b.sz) >= 3 * greatest(a.sz, b.sz)
+         AND 7 * (1 + least(a.sz - a.rn, b.sz - b.rn)) >= 3 * (a.sz + b.sz)),
+      inter AS (
+        SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter
+        FROM cand c
+        JOIN grows x ON x.doc_id = c.doc_a
+        JOIN grows y ON y.doc_id = c.doc_b AND y.g = x.g
+        GROUP BY c.doc_a, c.doc_b)"""
 
   /** EXACT n-gram Jaccard near-dup join at threshold t = 3/4 — the
     * no-false-negative complement to the probabilistic LSH family
@@ -637,32 +663,6 @@ object DedupOps {
     * same semantics (a cross-gram collision would need a 60-bit
     * md5-prefix match INSIDE one document or candidate pair; the
     * distinct() guard keeps even that exact per-doc). */
-  /** q50's oracle CTE chain up to `inter` (candidate pairs + exact
-    * intersection counts; `sizes` also in scope) — shared with q220's
-    * SemDeDup cross-cluster miss audit, which reuses the lossless
-    * truth verbatim. */
-  private[ops] val q50OracleCtes: String = s"""$gramRowsDuck,
-      freq AS (SELECT g, COUNT(*) AS df FROM grows GROUP BY g),
-      prefix AS (
-        SELECT doc_id, g, sz, rn FROM (
-          SELECT w.doc_id, w.g, s.sz,
-            CAST(ROW_NUMBER() OVER (PARTITION BY w.doc_id
-              ORDER BY f.df ASC, w.g ASC) AS BIGINT) AS rn
-          FROM grows w JOIN freq f USING (g) JOIN sizes s USING (doc_id))
-        WHERE 3 * sz <= 4 * (sz - rn + 1)),
-      cand AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM prefix a JOIN prefix b
-          ON a.g = b.g AND a.doc_id < b.doc_id
-         AND 4 * least(a.sz, b.sz) >= 3 * greatest(a.sz, b.sz)
-         AND 7 * (1 + least(a.sz - a.rn, b.sz - b.rn)) >= 3 * (a.sz + b.sz)),
-      inter AS (
-        SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter
-        FROM cand c
-        JOIN grows x ON x.doc_id = c.doc_a
-        JOIN grows y ON y.doc_id = c.doc_b AND y.g = x.g
-        GROUP BY c.doc_a, c.doc_b)"""
-
   val q50NgramJaccard = OpSpec(
     "q50_ngram_jaccard",
     (s, dir) => {
@@ -1128,10 +1128,6 @@ object DedupOps {
           .otherwise("keep").as("verdict"))
   }
 
-  /** Incremental ingest dedup, oracle instance: a NEW batch
-    * (doc_id % 10 = 0 stands in for today's shard) deduped against the
-    * EXISTING corpus (the rest) through [[incrementalDedup]] with an
-    * inline-built index. */
   /** The q55 incremental-dedup oracle, parameterized by the new-batch
     * and corpus membership predicates (each a function of a qualified
     * doc_id column reference). q55 splits documents 1-in-10 vs rest;
@@ -1189,6 +1185,10 @@ object DedupOps {
         .agg(count(lit(1)).as("ccnt")))
   }
 
+  /** Incremental ingest dedup, oracle instance: a NEW batch
+    * (doc_id % 10 = 0 stands in for today's shard) deduped against the
+    * EXISTING corpus (the rest) through [[incrementalDedup]] with an
+    * inline-built index. */
   val q55IncrementalDedup = OpSpec(
     "q55_incremental_dedup",
     (s, dir) => {
@@ -1441,19 +1441,6 @@ object DedupOps {
           ' ' ORDER BY block_idx), '')) AS kept_md5
       FROM ranked GROUP BY doc_id"""))
 
-  /** Per-doc triangle participation over the q27 near-dup pair graph —
-    * the cluster-density audit that separates tight duplicate cliques
-    * (every member pairs with every other: many triangles) from fragile
-    * chains (A~B~C with no A~C: zero) before a conservative "keep one
-    * per cluster" drop. Standard oriented-edge enumeration: pairs are
-    * already doc_a < doc_b, and the join pattern (x<y)(y<z)(x<z) admits
-    * each triangle exactly once, so no post-hoc dedup factor of 6.
-    *
-    * Scale shape: two hash self-joins on node ids; intermediate wedge
-    * count is Σ deg², which the LSH BucketCap already bounds per band —
-    * the classic triangle-count shuffle profile. Pairs are
-    * localCheckpoint()ed so the q27 plan is computed ONCE, not analyzed
-    * and executed three times (the q51 lesson). */
   /** Per-node triangle participation counts over an ordered pair list
     * (both columns node ids, first < second in every row — the q27/q50
     * pair convention). Library form of q94; see its doc for shape. */
@@ -1474,6 +1461,19 @@ object DedupOps {
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_tri"))
   }
 
+  /** Per-doc triangle participation over the q27 near-dup pair graph —
+    * the cluster-density audit that separates tight duplicate cliques
+    * (every member pairs with every other: many triangles) from fragile
+    * chains (A~B~C with no A~C: zero) before a conservative "keep one
+    * per cluster" drop. Standard oriented-edge enumeration: pairs are
+    * already doc_a < doc_b, and the join pattern (x<y)(y<z)(x<z) admits
+    * each triangle exactly once, so no post-hoc dedup factor of 6.
+    *
+    * Scale shape: two hash self-joins on node ids; intermediate wedge
+    * count is Σ deg², which the LSH BucketCap already bounds per band —
+    * the classic triangle-count shuffle profile. Pairs are
+    * localCheckpoint()ed so the q27 plan is computed ONCE, not analyzed
+    * and executed three times (the q51 lesson). */
   val q94TriangleCount = OpSpec(
     "q94_triangle_count",
     (s, dir) => triangleCounts(

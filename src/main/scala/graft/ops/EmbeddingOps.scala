@@ -489,14 +489,6 @@ object EmbeddingOps {
     * types `0.3` as DECIMAL (the q23 lesson). */
   private val RpThresholdSql = "3e-1"
 
-  /** Deterministic "random" hyperplanes: component (p, i) derives from
-    * md5("p:i"), quantized to m/1024 with m in [-1024, 1024] so the
-    * value is EXACT in float, double, and a decimal SQL literal alike —
-    * Spark's float literal array and the oracle's DOUBLE[] literal hold
-    * bit-identical weights, which keeps every dot product (and so every
-    * signature bit) engine-exact. A production deployment would draw
-    * Gaussian planes once and broadcast them; the md5 recipe is the
-    * deterministic stand-in that needs no stored state. */
   /** The integer numerators m in [-1024, 1024]; weight = m/1024. */
   private[ops] def rpWeightInts(p: Int): Array[Long] = {
     val md = java.security.MessageDigest.getInstance("MD5")
@@ -508,6 +500,14 @@ object EmbeddingOps {
     }
   }
 
+  /** Deterministic "random" hyperplanes: component (p, i) derives from
+    * md5("p:i"), quantized to m/1024 with m in [-1024, 1024] so the
+    * value is EXACT in float, double, and a decimal SQL literal alike —
+    * Spark's float literal array and the oracle's DOUBLE[] literal hold
+    * bit-identical weights, which keeps every dot product (and so every
+    * signature bit) engine-exact. A production deployment would draw
+    * Gaussian planes once and broadcast them; the md5 recipe is the
+    * deterministic stand-in that needs no stored state. */
   private[ops] def rpWeights(p: Int): Array[Float] =
     rpWeightInts(p).map(m => (m.toDouble / 1024.0).toFloat)
 
@@ -1127,6 +1127,31 @@ object EmbeddingOps {
       ${meansDuck("c1", "s1", "cid, n")},
       s2 AS (${kmIterDuck("c1")})"""
 
+  /** [[coarseKm]] over any (vec_id, embedding, nrm) frame — the
+    * df-parameterized trainer the persisted [[VectorIndex]] shares
+    * with the gated q98/q150 trajectory. */
+  private[ops] def coarseKmOf(e: DataFrame): DataFrame = coarseKmOfK(e, KmK)
+
+  /** [[coarseKmOf]] at an arbitrary k — q220 sweeps the SemDeDup
+    * cluster count; the seed ORDER is k-independent (same md5 rank),
+    * so k=4's seeds are a prefix of k=16's. */
+  private[ops] def coarseKmOfK(e: DataFrame, k: Int): DataFrame = {
+    val c1 = kmIter(e, seedCentroids(e, "ivf", k))
+      .select(col("cid"), col("cv"), col("cnrm"))
+    kmIter(e, c1)
+  }
+
+  /** The q98 training trajectory as a reusable stage: (e, km) where
+    * `e` is the full normed corpus and `km` the second-Lloyd-round
+    * output (cid, n, cv, cnrm) — q98's gated result, and q150's coarse
+    * quantizer. */
+  private def coarseKm(s: SparkSession, dir: String)
+      : (DataFrame, DataFrame) = {
+    val e = normedDf(s, dir).select(col("vec_id"), col("embedding"),
+      col("nrm"))
+    (e, coarseKmOf(e))
+  }
+
   /** TRAINED k-means centroids under the bit-exact gate — the judge-
     * visible answer to "IVF centroids must come from the data": seeded
     * hash-rank init (k smallest md5('ivf:'||vec_id), the library
@@ -1143,31 +1168,6 @@ object EmbeddingOps {
     * one k-group fold. The library path ([[kmeansCentroids]], decimal
     * partial sums, no per-cluster collect) is the production trainer;
     * THIS query is its gated twin at oracle-able size. */
-  /** The q98 training trajectory as a reusable stage: (e, km) where
-    * `e` is the full normed corpus and `km` the second-Lloyd-round
-    * output (cid, n, cv, cnrm) — q98's gated result, and q150's coarse
-    * quantizer. */
-  /** [[coarseKm]] over any (vec_id, embedding, nrm) frame — the
-    * df-parameterized trainer the persisted [[VectorIndex]] shares
-    * with the gated q98/q150 trajectory. */
-  private[ops] def coarseKmOf(e: DataFrame): DataFrame = coarseKmOfK(e, KmK)
-
-  /** [[coarseKmOf]] at an arbitrary k — q220 sweeps the SemDeDup
-    * cluster count; the seed ORDER is k-independent (same md5 rank),
-    * so k=4's seeds are a prefix of k=16's. */
-  private[ops] def coarseKmOfK(e: DataFrame, k: Int): DataFrame = {
-    val c1 = kmIter(e, seedCentroids(e, "ivf", k))
-      .select(col("cid"), col("cv"), col("cnrm"))
-    kmIter(e, c1)
-  }
-
-  private def coarseKm(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = {
-    val e = normedDf(s, dir).select(col("vec_id"), col("embedding"),
-      col("nrm"))
-    (e, coarseKmOf(e))
-  }
-
   val q98KmeansTrain = OpSpec(
     "q98_kmeans_train",
     (s, dir) =>
@@ -1190,17 +1190,6 @@ object EmbeddingOps {
   private[ops] val PqM = 4
   private[ops] val PqK = 4
 
-  /** Product-quantization codebook training + corpus quantization
-    * under the bit-exact gate — the memory-side half of large-scale
-    * ANN (a 64-dim float vector collapses to [[PqM]] small codes; ADC
-    * search then scans codes, not floats). Each subspace slice gets
-    * its own q98-recipe spherical codebook: seeded hash-rank init
-    * (md5('pq<j>:'||vec_id)), ONE Lloyd iteration of cosine-argmax +
-    * exact ordered-fold means, then every vector is assigned its
-    * nearest trained sub-centroid. All [[PqM]] trainings are
-    * independent slices of one scan — they parallelize as separate
-    * stage groups, and per-subspace state is k centroid rows. Output:
-    * (vec_id, sub, code) — the full quantized corpus. */
   /** Sliced sub-embedding frame (vec_id, embedding, nrm) for
     * subspace j. */
   private def pqSlice(s: SparkSession, dir: String, j: Int): DataFrame =
@@ -1297,6 +1286,17 @@ object EmbeddingOps {
         FROM e$j e, c1$j c WHERE e.vec_id < 20""")
         .mkString("\n        UNION ALL\n        ")})"""
 
+  /** Product-quantization codebook training + corpus quantization
+    * under the bit-exact gate — the memory-side half of large-scale
+    * ANN (a 64-dim float vector collapses to [[PqM]] small codes; ADC
+    * search then scans codes, not floats). Each subspace slice gets
+    * its own q98-recipe spherical codebook: seeded hash-rank init
+    * (md5('pq<j>:'||vec_id)), ONE Lloyd iteration of cosine-argmax +
+    * exact ordered-fold means, then every vector is assigned its
+    * nearest trained sub-centroid. All [[PqM]] trainings are
+    * independent slices of one scan — they parallelize as separate
+    * stage groups, and per-subspace state is k centroid rows. Output:
+    * (vec_id, sub, code) — the full quantized corpus. */
   val q137PqCodes = OpSpec(
     "q137_pq_codes",
     (s, dir) =>
@@ -1394,21 +1394,6 @@ object EmbeddingOps {
     * the streaming-ingest gate, which serves the same trajectory). */
   private[graft] val IvfPqNprobe = 2
 
-  /** IVF-PQ search — the production ANN serving shape, composing the
-    * two gated halves: q98's TRAINED coarse quantizer partitions
-    * q137's PQ code table into inverted lists, and q138's ADC scoring
-    * runs ONLY over the [[IvfPqNprobe]] cells each query probes. This
-    * removes flat PQ's scale-killer (a full code-table scan per query
-    * batch): the scan cost per query is |probed cells| · |list|, not
-    * |corpus|, while memory stays [[PqM]] codes per vector. The cell
-    * restriction is an EQUI-JOIN on the assigned cell id — at 1000
-    * executors the code table is partitioned by cell and a probe
-    * touches only matching partitions; nothing rescans corpus floats.
-    * Every stage (coarse train, assignment, probe ranking, sub-
-    * codebooks, LUT, ordered ADC fold) is the bit-exact recipe of its
-    * parent query, so the oracle re-derives the ENTIRE trajectory.
-    * Reference tie: serving the aesthetic-embedding index at 20M-clip
-    * scale (aesthetic_score.py:100-105). */
   /** Library form of the q150 IVF-PQ search with a tunable probe
     * width. `nprobe` = [[KmK]] probes every cell and must reproduce
     * the flat-ADC ranking (q138) row-for-row — the spec's exactness
@@ -1506,25 +1491,26 @@ object EmbeddingOps {
       FROM scored
       QUALIFY rank <= 10"""
 
+  /** IVF-PQ search — the production ANN serving shape, composing the
+    * two gated halves: q98's TRAINED coarse quantizer partitions
+    * q137's PQ code table into inverted lists, and q138's ADC scoring
+    * runs ONLY over the [[IvfPqNprobe]] cells each query probes. This
+    * removes flat PQ's scale-killer (a full code-table scan per query
+    * batch): the scan cost per query is |probed cells| · |list|, not
+    * |corpus|, while memory stays [[PqM]] codes per vector. The cell
+    * restriction is an EQUI-JOIN on the assigned cell id — at 1000
+    * executors the code table is partitioned by cell and a probe
+    * touches only matching partitions; nothing rescans corpus floats.
+    * Every stage (coarse train, assignment, probe ranking, sub-
+    * codebooks, LUT, ordered ADC fold) is the bit-exact recipe of its
+    * parent query, so the oracle re-derives the ENTIRE trajectory.
+    * Reference tie: serving the aesthetic-embedding index at 20M-clip
+    * scale (aesthetic_score.py:100-105). */
   val q150IvfPqSearch = OpSpec(
     "q150_ivfpq_search",
     (s, dir) => ivfPqSearch(s, dir, IvfPqNprobe),
     Some(ivfPqOracleSql("TRUE")))
 
-  /** BINARY sign quantization + Hamming top-k — the most compact code
-    * family (64 dims → 64 BITS, a 256× cut vs float32; the memory
-    * regime below even int8 q73 and PQ q137): each embedding collapses
-    * to its per-dimension sign mask, packed as TWO 32-bit halves in
-    * BIGINTs (a single 64-bit pack would need bit 63 — engines
-    * disagree on signed-overflow shifts, two halves keep every value
-    * exact), and search ranks by Hamming distance = popcount of the
-    * XOR — integer arithmetic end-to-end, so the gate is trivially
-    * bit-exact. Plan: corpus packs row-locally in one scan; the 20
-    * packed queries broadcast (q30's bounded scoring shape); ranking
-    * reuses the per-query window. Sign quantization preserves cosine
-    * neighborhoods in expectation (the SimHash bound) — the standard
-    * first-stage filter before an exact or PQ rerank (q73/q89's
-    * fusion pattern applies unchanged). */
   /** Sign-mask packing shared by q160/q162: two 32-bit halves as
     * BIGINTs. */
   private def signPacked(s: SparkSession, dir: String, idOut: String)
@@ -1548,6 +1534,20 @@ object EmbeddingOps {
                  ELSE 0::BIGINT END), (a, b) -> a + b) AS h2
         FROM embeddings"""
 
+  /** BINARY sign quantization + Hamming top-k — the most compact code
+    * family (64 dims → 64 BITS, a 256× cut vs float32; the memory
+    * regime below even int8 q73 and PQ q137): each embedding collapses
+    * to its per-dimension sign mask, packed as TWO 32-bit halves in
+    * BIGINTs (a single 64-bit pack would need bit 63 — engines
+    * disagree on signed-overflow shifts, two halves keep every value
+    * exact), and search ranks by Hamming distance = popcount of the
+    * XOR — integer arithmetic end-to-end, so the gate is trivially
+    * bit-exact. Plan: corpus packs row-locally in one scan; the 20
+    * packed queries broadcast (q30's bounded scoring shape); ranking
+    * reuses the per-query window. Sign quantization preserves cosine
+    * neighborhoods in expectation (the SimHash bound) — the standard
+    * first-stage filter before an exact or PQ rerank (q73/q89's
+    * fusion pattern applies unchanged). */
   val q160HammingSearch = OpSpec(
     "q160_hamming_search",
     (s, dir) => {
@@ -2233,27 +2233,6 @@ object EmbeddingOps {
   /** k-center coreset size (greedy farthest-point rounds). */
   private val KcK = 8
 
-  /** q290: GREEDY K-CENTER CORESET — diversity-maximizing subset
-    * selection over the embedding space (the farthest-point-first /
-    * Gonzalez construction coreset-selection uses for training-data
-    * diversity, the 2-approximation of the k-center objective): seed
-    * with the min vec_id, then 7 rounds each pick the vector farthest
-    * (cosine distance 1 − cos) from its nearest already-selected
-    * center, ties to the smaller id. One row per corpus vector:
-    * its nearest center, the distance, and whether it IS a center —
-    * the coverage assignment a curation loop samples against (each
-    * center's cell is a diversity stratum; the max dist is the
-    * coverage radius).
-    *
-    * Exactness: distances are the engine-shared left-fold dot over
-    * stored floats, 1e0 − cos is one IEEE subtract, argmax/argmin are
-    * ORDER BY (d, id) — deterministic in both engines; the oracle
-    * unrolls the same 8 rounds as cumulative CTEs (the kmIterDuck
-    * discipline). Scale: k bounded corpus scans, each against a
-    * ≤ k-row broadcast center set; the per-round argmax is a
-    * TakeOrdered (per-partition top-1 + k-row merge), and the only
-    * driver state is the k centers themselves — linear at any corpus
-    * size, the q98/BPE driver-bounded-collect discipline. */
   /** Greedy farthest-point center derivation shared by q290/q292:
     * returns (persisted corpus, k-row broadcastable center frame
     * (r, center_id, cv, cnrm)); the caller owns unpersisting the
@@ -2294,6 +2273,27 @@ object EmbeddingOps {
         graft.functions.VectorFunctions.dot(col("embedding"),
           col("cv")) / (col("nrm") * col("cnrm")))
 
+  /** q290: GREEDY K-CENTER CORESET — diversity-maximizing subset
+    * selection over the embedding space (the farthest-point-first /
+    * Gonzalez construction coreset-selection uses for training-data
+    * diversity, the 2-approximation of the k-center objective): seed
+    * with the min vec_id, then 7 rounds each pick the vector farthest
+    * (cosine distance 1 − cos) from its nearest already-selected
+    * center, ties to the smaller id. One row per corpus vector:
+    * its nearest center, the distance, and whether it IS a center —
+    * the coverage assignment a curation loop samples against (each
+    * center's cell is a diversity stratum; the max dist is the
+    * coverage radius).
+    *
+    * Exactness: distances are the engine-shared left-fold dot over
+    * stored floats, 1e0 − cos is one IEEE subtract, argmax/argmin are
+    * ORDER BY (d, id) — deterministic in both engines; the oracle
+    * unrolls the same 8 rounds as cumulative CTEs (the kmIterDuck
+    * discipline). Scale: k bounded corpus scans, each against a
+    * ≤ k-row broadcast center set; the per-round argmax is a
+    * TakeOrdered (per-partition top-1 + k-row merge), and the only
+    * driver state is the k centers themselves — linear at any corpus
+    * size, the q98/BPE driver-bounded-collect discipline. */
   val q290KcenterCoreset = OpSpec(
     "q290_kcenter_coreset",
     (s, dir) => {

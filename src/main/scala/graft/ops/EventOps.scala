@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.{OpSpec, Tables}
 import graft.Tables._
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -19,6 +20,84 @@ import org.apache.spark.sql.functions._
   * cross product.
   */
 object EventOps {
+
+  /** The per-user time order every sessionizing window rides. */
+  private val wUserTs = Window.partitionBy(col("user_id")).orderBy(col("ts"))
+
+  /** The 30-minute sessionization of q97, q103 and q112 (q18's
+    * gaps-and-islands rule in integer µs): `new_sess` is 1 on a user's
+    * first event and on every event at least 30 minutes after the
+    * previous one, `sid` its running sum — both on the one (user_id,
+    * ts) sort that the callers' leads share. */
+  private[graft] def sessionize(ev: DataFrame): DataFrame =
+    ev.withColumn("new_sess",
+        when(lag(col("ts"), 1).over(wUserTs).isNull ||
+          unix_micros(col("ts")) - unix_micros(lag(col("ts"), 1).over(wUserTs))
+            >= 1800000000L, 1).otherwise(0))
+      .withColumn("sid", sum(col("new_sess")).over(
+        wUserTs.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+
+  /** The running session id of every sessionizing oracle. */
+  private val sidDuck = """SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts
+            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid"""
+
+  /** DuckDB twin of [[sessionize]] over (user_id, ts, event_type): the
+    * `flagged` CTE and the CTE `name` carrying `cols` plus `sid`. */
+  private def sessDuck(name: String, cols: String): String =
+    s"""flagged AS (
+        SELECT user_id, ts, event_type,
+          CASE WHEN lag(ts) OVER w IS NULL
+                 OR epoch_us(ts) - epoch_us(lag(ts) OVER w) >= 1800000000
+               THEN 1 ELSE 0 END AS new_sess
+        FROM events
+        WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
+      $name AS (
+        SELECT $cols,
+          $sidDuck
+        FROM flagged)"""
+
+  /** The `flagged` CTE of the q18/q156 oracles: the 30-minute rule as a
+    * timestamp INTERVAL over `cols` of the events. */
+  private def intervalFlaggedDuck(cols: String): String =
+    s"""flagged AS (
+        SELECT $cols,
+          CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
+                 OR ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
+                    >= INTERVAL 30 MINUTE
+               THEN 1 ELSE 0 END AS new_sess
+        FROM events)"""
+
+  /** The error side of the q20-family interval joins, batch or stream:
+    * (user_id, error_id, a_ts). */
+  private[graft] def errorSide(errors: DataFrame): DataFrame =
+    errors.select(col("user_id"), col("event_id").as("error_id"),
+      col("ts").as("a_ts"))
+
+  /** The purchase side: (`user`, purchase_id, b_ts). */
+  private[graft] def purchaseSide(purchases: DataFrame, user: Column)
+      : DataFrame =
+    purchases.select(user, col("event_id").as("purchase_id"),
+      col("ts").as("b_ts"))
+
+  /** A purchase within `minutes` after the error. */
+  private[graft] def purchaseWithin(minutes: Int): Column =
+    col("b_ts") >= col("a_ts") &&
+      col("b_ts") < col("a_ts") + expr(s"INTERVAL $minutes MINUTES")
+
+  /** The error → purchase lag in µs. */
+  private[graft] val lagUs: Column =
+    (unix_micros(col("b_ts")) - unix_micros(col("a_ts"))).as("lag_us")
+
+  /** The (event_type, weekday) `cells` CTE of q135/q196 with the
+    * per-cell aggregates `aggs` — weekday as integer days since a known
+    * Monday, mod 7. */
+  private def dowCellsDuck(aggs: String): String =
+    s"""cells AS (
+        SELECT event_type,
+          CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) % 7
+               AS BIGINT) AS dow,
+          $aggs
+        FROM events GROUP BY 1, 2)"""
 
   /** Tumbling 10-minute window aggregate — Spark's `window()` (epoch-
     * aligned) with the bucket start emitted as a canonical string. */
@@ -58,18 +137,11 @@ object EventOps {
           (unix_micros(col("last_ts")) - unix_micros(col("first_ts")))
             .as("span_us"))
     },
-    Some("""
-      WITH flagged AS (
-        SELECT user_id, ts, value,
-          CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-                 OR ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                    >= INTERVAL 30 MINUTE
-               THEN 1 ELSE 0 END AS new_sess
-        FROM events),
+    Some(s"""
+      WITH ${intervalFlaggedDuck("user_id, ts, value")},
       sess AS (
         SELECT user_id, ts, value,
-          SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
+          $sidDuck
         FROM flagged)
       SELECT user_id,
         strftime(min(ts), '%Y-%m-%d %H:%M:%S.%f') AS session_start,
@@ -118,17 +190,11 @@ object EventOps {
     "q20_range_join",
     (s, dir) => {
       val ev = table(s, dir, "events")
-      val a = ev.filter(col("event_type") === "error")
-        .select(col("user_id"), col("event_id").as("error_id"),
-          col("ts").as("a_ts"))
-      val b = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id").as("purchase_id"),
-          col("ts").as("b_ts"))
-      a.join(b, Seq("user_id"))
-        .filter(col("b_ts") >= col("a_ts") &&
-          col("b_ts") < col("a_ts") + expr("INTERVAL 5 MINUTES"))
-        .select(col("user_id"), col("error_id"), col("purchase_id"),
-          (unix_micros(col("b_ts")) - unix_micros(col("a_ts"))).as("lag_us"))
+      errorSide(ev.filter(col("event_type") === "error"))
+        .join(purchaseSide(ev.filter(col("event_type") === "purchase"),
+          col("user_id")), Seq("user_id"))
+        .filter(purchaseWithin(5))
+        .select(col("user_id"), col("error_id"), col("purchase_id"), lagUs)
     },
     Some("""
       SELECT a.user_id, a.event_id AS error_id, b.event_id AS purchase_id,
@@ -465,20 +531,12 @@ object EventOps {
   val q97PathMining = OpSpec(
     "q97_path_mining",
     (s, dir) => {
-      val wOrd = Window.partitionBy(col("user_id")).orderBy(col("ts"))
-      val wRun = wOrd.rowsBetween(Window.unboundedPreceding,
-        Window.currentRow)
-      table(s, dir, "events")
-        .select(col("user_id"), col("ts"), col("event_type"))
-        .withColumn("new_sess",
-          when(lag(col("ts"), 1).over(wOrd).isNull ||
-            unix_micros(col("ts")) - unix_micros(lag(col("ts"), 1).over(wOrd))
-              >= 1800000000L, 1).otherwise(0))
-        .withColumn("sid", sum(col("new_sess")).over(wRun))
-        .withColumn("t2", lead(col("event_type"), 1).over(wOrd))
-        .withColumn("s2", lead(col("sid"), 1).over(wOrd))
-        .withColumn("t3", lead(col("event_type"), 2).over(wOrd))
-        .withColumn("s3", lead(col("sid"), 2).over(wOrd))
+      sessionize(table(s, dir, "events")
+          .select(col("user_id"), col("ts"), col("event_type")))
+        .withColumn("t2", lead(col("event_type"), 1).over(wUserTs))
+        .withColumn("s2", lead(col("sid"), 1).over(wUserTs))
+        .withColumn("t3", lead(col("event_type"), 2).over(wUserTs))
+        .withColumn("s3", lead(col("sid"), 2).over(wUserTs))
         .filter(col("s2") === col("sid") && col("s3") === col("sid"))
         .select(concat_ws(">", col("event_type"), col("t2"), col("t3"))
           .as("path"))
@@ -486,19 +544,8 @@ object EventOps {
         .orderBy(col("n").desc, col("path").asc)
         .limit(20)
     },
-    Some("""
-      WITH flagged AS (
-        SELECT user_id, ts, event_type,
-          CASE WHEN lag(ts) OVER w IS NULL
-                 OR epoch_us(ts) - epoch_us(lag(ts) OVER w) >= 1800000000
-               THEN 1 ELSE 0 END AS new_sess
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-      sess AS (
-        SELECT user_id, ts, event_type,
-          SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-        FROM flagged),
+    Some(s"""
+      WITH ${sessDuck("sess", "user_id, ts, event_type")},
       tri AS (
         SELECT event_type || '>' || lead(event_type, 1) OVER w
             || '>' || lead(event_type, 2) OVER w AS path,
@@ -521,18 +568,10 @@ object EventOps {
   val q103MarkovTransitions = OpSpec(
     "q103_markov_transitions",
     (s, dir) => {
-      val wOrd = Window.partitionBy(col("user_id")).orderBy(col("ts"))
-      val wRun = wOrd.rowsBetween(Window.unboundedPreceding,
-        Window.currentRow)
-      val trans = table(s, dir, "events")
-        .select(col("user_id"), col("ts"), col("event_type"))
-        .withColumn("new_sess",
-          when(lag(col("ts"), 1).over(wOrd).isNull ||
-            unix_micros(col("ts")) - unix_micros(lag(col("ts"), 1).over(wOrd))
-              >= 1800000000L, 1).otherwise(0))
-        .withColumn("sid", sum(col("new_sess")).over(wRun))
-        .withColumn("nxt", lead(col("event_type"), 1).over(wOrd))
-        .withColumn("s2", lead(col("sid"), 1).over(wOrd))
+      val trans = sessionize(table(s, dir, "events")
+          .select(col("user_id"), col("ts"), col("event_type")))
+        .withColumn("nxt", lead(col("event_type"), 1).over(wUserTs))
+        .withColumn("s2", lead(col("sid"), 1).over(wUserTs))
         .filter(col("s2") === col("sid"))
         .groupBy(col("event_type").as("cur"), col("nxt"))
         .agg(count(lit(1)).as("n"))
@@ -544,19 +583,8 @@ object EventOps {
         .select(col("cur"), col("nxt"), col("n"), col("row_n"),
           (col("n").cast("double") / col("row_n").cast("double")).as("p"))
     },
-    Some("""
-      WITH flagged AS (
-        SELECT user_id, ts, event_type,
-          CASE WHEN lag(ts) OVER w IS NULL
-                 OR epoch_us(ts) - epoch_us(lag(ts) OVER w) >= 1800000000
-               THEN 1 ELSE 0 END AS new_sess
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-      sess AS (
-        SELECT user_id, ts, event_type,
-          SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-        FROM flagged),
+    Some(s"""
+      WITH ${sessDuck("sess", "user_id, ts, event_type")},
       trans AS (
         SELECT cur, nxt, COUNT(*) AS n FROM (
           SELECT event_type AS cur, lead(event_type, 1) OVER w AS nxt,
@@ -746,20 +774,12 @@ object EventOps {
   val q112BounceRate = OpSpec(
     "q112_bounce_rate",
     (s, dir) => {
-      val wOrd = Window.partitionBy(col("user_id")).orderBy(col("ts"))
-      val wRun = wOrd.rowsBetween(Window.unboundedPreceding,
-        Window.currentRow)
-      table(s, dir, "events")
-        .select(col("user_id"), col("ts"), col("event_type"))
-        .withColumn("new_sess",
-          when(lag(col("ts"), 1).over(wOrd).isNull ||
-            unix_micros(col("ts")) - unix_micros(lag(col("ts"), 1).over(wOrd))
-              >= 1800000000L, 1).otherwise(0))
-        .withColumn("sid", sum(col("new_sess")).over(wRun))
+      sessionize(table(s, dir, "events")
+          .select(col("user_id"), col("ts"), col("event_type")))
         // first event of a session whose NEXT row starts a new session
         // (or doesn't exist) == a single-event session; row-local on
         // the same sort
-        .withColumn("nxt_sid", lead(col("sid"), 1).over(wOrd))
+        .withColumn("nxt_sid", lead(col("sid"), 1).over(wUserTs))
         .filter(col("new_sess") === 1)
         .groupBy(col("event_type").as("entry_type"))
         .agg(count(lit(1)).as("sessions"),
@@ -770,19 +790,8 @@ object EventOps {
           (col("bounces").cast("double") / col("sessions").cast("double"))
             .as("bounce_rate"))
     },
-    Some("""
-      WITH flagged AS (
-        SELECT user_id, ts, event_type,
-          CASE WHEN lag(ts) OVER w IS NULL
-                 OR epoch_us(ts) - epoch_us(lag(ts) OVER w) >= 1800000000
-               THEN 1 ELSE 0 END AS new_sess
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-      sess0 AS (
-        SELECT user_id, ts, event_type, new_sess,
-          SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-        FROM flagged),
+    Some(s"""
+      WITH ${sessDuck("sess0", "user_id, ts, event_type, new_sess")},
       sess AS (
         SELECT *, lead(sid, 1) OVER (PARTITION BY user_id ORDER BY ts)
           AS nxt_sid
@@ -1051,13 +1060,8 @@ object EventOps {
           ((col("n_types") - 1) * (col("n_dows") - 1)).as("dof"),
           col("chi2"))
     },
-    Some("""
-      WITH cells AS (
-        SELECT event_type,
-          CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) % 7
-            AS BIGINT) AS dow,
-          CAST(COUNT(*) AS BIGINT) AS obs
-        FROM events GROUP BY 1, 2),
+    Some(s"""
+      WITH ${dowCellsDuck("CAST(COUNT(*) AS BIGINT) AS obs")},
       rt AS (SELECT event_type, CAST(SUM(obs) AS BIGINT) AS rt
              FROM cells GROUP BY 1),
       ct AS (SELECT dow, CAST(SUM(obs) AS BIGINT) AS ct
@@ -1333,21 +1337,14 @@ object EventOps {
         .agg(count(lit(1)).as("n_overlaps"),
           sum(col("oe") - col("os")).as("overlap_us"))
     },
-    Some("""
-      WITH flagged AS (
-        SELECT user_id, ts,
-          CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-                 OR ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                    >= INTERVAL 30 MINUTE
-               THEN 1 ELSE 0 END AS new_sess
-        FROM events),
+    Some(s"""
+      WITH ${intervalFlaggedDuck("user_id, ts")},
       sess AS (
         SELECT user_id, sid,
           epoch_us(min(ts)) AS s_us, epoch_us(max(ts)) AS e_us
         FROM (
           SELECT user_id, ts,
-            SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
+            $sidDuck
           FROM flagged)
         GROUP BY user_id, sid),
       pairs AS (
@@ -1488,15 +1485,12 @@ object EventOps {
     "q199_conversion_sweep",
     (s, dir) => {
       val ev = table(s, dir, "events")
-      val a = ev.filter(col("event_type") === "error")
-        .select(col("user_id"), col("event_id").as("error_id"),
-          col("ts").as("a_ts"))
+      val a = errorSide(ev.filter(col("event_type") === "error"))
       val b = ev.filter(col("event_type") === "purchase")
         .select(col("user_id"), col("ts").as("b_ts"))
       val nErr = a.agg(count(lit(1)).as("n_errors"))
       val minLag = a.join(b, Seq("user_id"))
-        .filter(col("b_ts") >= col("a_ts") &&
-          col("b_ts") < col("a_ts") + expr("INTERVAL 120 MINUTES"))
+        .filter(purchaseWithin(120))
         .groupBy(col("error_id"))
         .agg(min(unix_micros(col("b_ts")) - unix_micros(col("a_ts")))
           .as("min_lag_us"))
@@ -1674,14 +1668,9 @@ object EventOps {
             .as("share"),
           col("peak_dow"))
     },
-    Some("""
-      WITH cells AS (
-        SELECT event_type,
-          CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) % 7
-               AS BIGINT) AS dow,
-          CAST(COUNT(*) AS BIGINT) AS n,
-          CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS total
-        FROM events GROUP BY 1, 2),
+    Some(s"""
+      WITH ${dowCellsDuck("CAST(COUNT(*) AS BIGINT) AS n,\n" +
+        "CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS total")},
       tot AS (SELECT event_type, CAST(SUM(n) AS BIGINT) AS n_type
               FROM cells GROUP BY 1),
       peak AS (

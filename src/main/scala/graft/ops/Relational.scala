@@ -429,12 +429,6 @@ object Relational {
               FROM lineitem GROUP BY 1, 2))
       WHERE cum - c < (n + 1) // 2 AND (n + 1) // 2 <= cum"""))
 
-  /** Referential-integrity / key-quality audit suite — the relational
-    * data-quality checks every warehouse runs before publishing a
-    * table set: orphaned FKs (anti-joins), duplicate PKs, null keys.
-    * One row per check so the suite extends by union; each check is a
-    * single partial-aggregated anti-join or aggregate — no check ever
-    * rescans another's work. */
   /** Library form of q102 over arbitrary fact/dim/dim2 frames —
     * OperatorSpec exercises it on deliberately broken data (the corpus
     * tables are clean, so the gated run's zeros alone would prove
@@ -456,6 +450,12 @@ object Relational {
         li.filter(col("l_orderkey").isNull).agg(count(lit(1)).as("n"))))
   }
 
+  /** Referential-integrity / key-quality audit suite — the relational
+    * data-quality checks every warehouse runs before publishing a
+    * table set: orphaned FKs (anti-joins), duplicate PKs, null keys.
+    * One row per check so the suite extends by union; each check is a
+    * single partial-aggregated anti-join or aggregate — no check ever
+    * rescans another's work. */
   val q102IntegrityAudit = OpSpec(
     "q102_integrity_audit",
     (s, dir) => integrityAudit(table(s, dir, "lineitem"),

@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.{OpSpec, Tables}
 import graft.Tables._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -510,6 +511,23 @@ object SampleOps {
              THEN 'take' ELSE 'skip' END AS verdict
       FROM sc, tot t"""))
 
+  /** The q291 weight readout over per-lang counts (lang, n_docs) — the
+    * batch counts of q291 or the stream-folded rollup of q295. */
+  private[graft] def mixingWeights(c: DataFrame): DataFrame = {
+    val t = c.agg(sum(col("n_docs")).cast("long").as("n"))
+    val w = c.crossJoin(broadcast(t))
+      .withColumn("p",
+        col("n_docs").cast("double") / col("n").cast("double"))
+      .withColumn("w_raw", sqrt(col("p")))
+    val z = w.agg(expr(
+      """aggregate(sort_array(collect_list(struct(lang, w_raw))),
+         0e0, (acc, g) -> acc + g.w_raw)""").as("z"))
+    w.crossJoin(broadcast(z))
+      .select(col("lang"), col("n_docs"), col("p"),
+        (col("w_raw") / col("z")).as("weight"),
+        (col("w_raw") / col("z") / col("p")).as("boost"))
+  }
+
   /** q291: TEMPERATURE-SCALED MIXING WEIGHTS — the multilingual /
     * multi-domain sampling rule of the XLM-R / Gopher line: raw
     * domain shares p_g = n_g/N are flattened by a temperature
@@ -527,22 +545,8 @@ object SampleOps {
     * domain-bounded frame — no window, no second corpus scan. */
   val q291MixingWeights = OpSpec(
     "q291_mixing_weights",
-    (s, dir) => {
-      val c = table(s, dir, "documents")
-        .groupBy(col("lang")).agg(count(lit(1)).as("n_docs"))
-      val t = c.agg(sum(col("n_docs")).cast("long").as("n"))
-      val w = c.crossJoin(broadcast(t))
-        .withColumn("p",
-          col("n_docs").cast("double") / col("n").cast("double"))
-        .withColumn("w_raw", sqrt(col("p")))
-      val z = w.agg(expr(
-        """aggregate(sort_array(collect_list(struct(lang, w_raw))),
-           0e0, (acc, g) -> acc + g.w_raw)""").as("z"))
-      w.crossJoin(broadcast(z))
-        .select(col("lang"), col("n_docs"), col("p"),
-          (col("w_raw") / col("z")).as("weight"),
-          (col("w_raw") / col("z") / col("p")).as("boost"))
-    },
+    (s, dir) => mixingWeights(table(s, dir, "documents")
+      .groupBy(col("lang")).agg(count(lit(1)).as("n_docs"))),
     Some("""
       WITH c AS (
         SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs

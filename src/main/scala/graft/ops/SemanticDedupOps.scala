@@ -76,23 +76,6 @@ object SemanticDedupOps {
               (x, y) -> x + y) / (e.nrm * c.cnrm) DESC, c.cid ASC) AS rn
         FROM e, c2 c)"""
 
-  /** Semantic dedup (SemDeDup): k-means-cluster the corpus with the
-    * gated q98 trainer, assign every vector to its trained centroid,
-    * then prune any vector that has a same-cluster neighbor with
-    * SMALLER vec_id and cosine > [[SemDedupTau]] (first-writer-wins —
-    * the q31 keep rule, no connected components needed: the kept set
-    * is exactly the ids with no earlier near-twin, which is
-    * arrival-order-free and retry-stable). Cross-cluster near-twins
-    * are by-design NOT pruned — that recall loss is the knob the
-    * paper trades for tractability, and q31/q48 cover the unblocked
-    * pair search.
-    *
-    * Scale shape: training is q98's (broadcast-k assignment passes);
-    * the pair scan is an equi-join on cid, so cost is Σ|cluster|² —
-    * bounded by choosing k ∝ n/target-cluster-size (k is the ONLY
-    * knob; the join itself shuffles each cluster to one stream and
-    * never materializes cross-cluster pairs). Output: every vector
-    * with its cluster and keep/prune verdict. */
   /** SemDeDup train→assign→within-cluster-prune at cluster count k
     * over a normed (vec_id, embedding, nrm) frame — q212's gated
     * trajectory factored out so the q220 miss audit can sweep k.
@@ -123,6 +106,23 @@ object SemanticDedupOps {
       out
   }
 
+  /** Semantic dedup (SemDeDup): k-means-cluster the corpus with the
+    * gated q98 trainer, assign every vector to its trained centroid,
+    * then prune any vector that has a same-cluster neighbor with
+    * SMALLER vec_id and cosine > [[SemDedupTau]] (first-writer-wins —
+    * the q31 keep rule, no connected components needed: the kept set
+    * is exactly the ids with no earlier near-twin, which is
+    * arrival-order-free and retry-stable). Cross-cluster near-twins
+    * are by-design NOT pruned — that recall loss is the knob the
+    * paper trades for tractability, and q31/q48 cover the unblocked
+    * pair search.
+    *
+    * Scale shape: training is q98's (broadcast-k assignment passes);
+    * the pair scan is an equi-join on cid, so cost is Σ|cluster|² —
+    * bounded by choosing k ∝ n/target-cluster-size (k is the ONLY
+    * knob; the join itself shuffles each cluster to one stream and
+    * never materializes cross-cluster pairs). Output: every vector
+    * with its cluster and keep/prune verdict. */
   val q212SemDedup = OpSpec(
     "q212_semdedup",
     (s, dir) => semDedupVerdicts(
@@ -868,17 +868,6 @@ object SemanticDedupOps {
     },
     q212SemDedup.oracle)
 
-  /** q261: SEMANTIC-INDEX PURGE under the bit-exact gate — the
-    * right-to-be-forgotten proof for the semantic-dedup index
-    * (tombstones + masked serve; retrain folds them — spec'd). The
-    * q242 lifecycle runs (base build, one ingest), then a fifth of the
-    * corpus is tombstoned and the serve re-asked. The oracle is the
-    * frozen-centroid SemDeDup computed over the SURVIVORS ONLY —
-    * training still on the full base half (the centroids were learned
-    * before the takedown; purge must not secretly retrain) — so the
-    * gate proves the subtle half: a doc that was pruned only because
-    * of a now-purged near-twin comes back KEEP. Forgotten means
-    * forgotten, including as evidence against others. */
   /** The q261/q264/q289 index state under `prefix`: a tables-only
     * build on the base half and an append-only ingest of the rest
     * (verdicts re-derived at serve time; the per-step ones were
@@ -901,6 +890,17 @@ object SemanticDedupOps {
     path
   }
 
+  /** q261: SEMANTIC-INDEX PURGE under the bit-exact gate — the
+    * right-to-be-forgotten proof for the semantic-dedup index
+    * (tombstones + masked serve; retrain folds them — spec'd). The
+    * q242 lifecycle runs (base build, one ingest), then a fifth of the
+    * corpus is tombstoned and the serve re-asked. The oracle is the
+    * frozen-centroid SemDeDup computed over the SURVIVORS ONLY —
+    * training still on the full base half (the centroids were learned
+    * before the takedown; purge must not secretly retrain) — so the
+    * gate proves the subtle half: a doc that was pruned only because
+    * of a now-purged near-twin comes back KEEP. Forgotten means
+    * forgotten, including as evidence against others. */
   val q261SemanticPurge = OpSpec(
     "q261_semantic_purge",
     (s, dir) => {
@@ -1190,17 +1190,17 @@ object SemanticDedupOps {
       // ends in a localCheckpoint) and are independent — overlap them
       // (guide §2.6) after pinning the shared inputs, so racing arms
       // read warm caches instead of duplicating the corpus/truth
-      // lineage; list order is preserved, so the union is unchanged
+      // lineage; each arm fills its own slot, so the union keeps
+      // SemDedupKs order, and a failing arm is rethrown only after the
+      // others settle (no live writer outlives the query)
       val verdicts = {
         e.count(); truth.count()
-        val pool = java.util.concurrent.Executors
-          .newFixedThreadPool(SemDedupKs.size)
-        try SemDedupKs.map(k => pool.submit(
-            new java.util.concurrent.Callable[DataFrame] {
-              def call(): DataFrame = semDedupVerdicts(e, k,
-                Some(endpoints)).withColumn("k", lit(k.toLong))
-            })).map(_.get()).reduce(_ unionByName _)
-        finally pool.shutdown()
+        val arms = new Array[DataFrame](SemDedupKs.size)
+        graft.io.Sinks.concurrently(SemDedupKs.zipWithIndex.map {
+          case (k, i) => () => arms(i) = semDedupVerdicts(e, k,
+            Some(endpoints)).withColumn("k", lit(k.toLong))
+        })
+        arms.reduce(_ unionByName _)
       }
       val joined = truth
         .join(verdicts.select(col("k"), col("vec_id").as("doc_a"),

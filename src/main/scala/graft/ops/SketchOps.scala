@@ -33,15 +33,6 @@ object SketchOps {
          ELSE ${K - 1}e0 * 1152921504606846976
               / CAST(GREATEST(kth_v, 1) AS DOUBLE) END"""
 
-  /** Distinct parts per returnflag, estimated from a K=128 KMV sketch,
-    * with the exact COUNT(DISTINCT) alongside (gate anchor + visible
-    * estimation error; a production rollup drops it — the sketch column
-    * is the point). Scale shape: the Aggregator partial-aggregates per
-    * task, so each group contributes one 128-string array per task to
-    * the shuffle regardless of input rows; sketches of disjoint shards
-    * merge associatively (unit-tested), which is what makes the sketch
-    * storable per-partition and rolled up later — the pattern exact
-    * distinct counting cannot follow. */
   /** KMV estimation tail over DISTINCT (grp, h) md5-hex rows: sketch,
     * exact anchor, k-th hash, estimate. Exposed for the below-capacity
     * spec — groups with fewer than [[K]] distinct hashes must flow
@@ -63,6 +54,15 @@ object SketchOps {
         col("kth_v"), expr(estSql).as("est"))
   }
 
+  /** Distinct parts per returnflag, estimated from a K=128 KMV sketch,
+    * with the exact COUNT(DISTINCT) alongside (gate anchor + visible
+    * estimation error; a production rollup drops it — the sketch column
+    * is the point). Scale shape: the Aggregator partial-aggregates per
+    * task, so each group contributes one 128-string array per task to
+    * the shuffle regardless of input rows; sketches of disjoint shards
+    * merge associatively (unit-tested), which is what makes the sketch
+    * storable per-partition and rolled up later — the pattern exact
+    * distinct counting cannot follow. */
   val q88KmvDistinct = OpSpec(
     "q88_kmv_distinct",
     (s, dir) => {
@@ -376,6 +376,58 @@ object SketchOps {
       FROM ranked, $qpDuck
       WHERE rn = $rankExpr"""))
 
+  /** Spark side of the same bit fields over an md5-hex column `h`: one
+    * codegen'd conv() each (DuckDB has no conv, so the oracle keeps the
+    * digit arithmetic — equivalent on lowercase md5 hex, and the gate
+    * proves it). */
+  private[graft] val hllBitCols: Seq[Column] = Seq(
+    (expr("CAST(conv(substring(h, 1, 2), 16, 10) AS BIGINT)") % 64).as("b"),
+    expr("CAST(conv(substring(h, 3, 15), 16, 10) AS BIGINT)").as("w"))
+
+  /** The HLL registers of (…, b, w) rows: rho = 61 − bit length of w
+    * (61 for w = 0), register = MAX(rho) per (`key`, b) — q167 per
+    * group, q216's stream per window. */
+  private[graft] def hllRegisters(bits: DataFrame, key: Column): DataFrame =
+    bits
+      .withColumn("rho", when(col("w") === 0, lit(61L))
+        .otherwise(expr("CAST(61 - length(bin(w)) AS BIGINT)")))
+      .groupBy(key, col("b"))
+      .agg(max(col("rho")).as("register"))
+
+  /** DuckDB twin of [[hllRegisters]]: the `r` CTE over `bits`. */
+  private[graft] def hllRegDuck(key: String): String =
+    s"""r AS (
+        SELECT $key, b,
+          CAST(MAX(CASE WHEN w = 0 THEN 61
+                        ELSE 61 - length(format('{:b}', w)) END)
+               AS BIGINT) AS register
+        FROM bits GROUP BY 1, 2)"""
+
+  /** The raw-estimate CTEs over `r`: `dense` gives every key of
+    * `keys` (aliased `alias`) all 64 registers, absent ones 0, and `z`
+    * folds 2^−register in bucket order per key. */
+  private[graft] def hllDenseZDuck(key: String, keys: String,
+      alias: String): String =
+    s"""dense AS (
+        SELECT $alias.$key, g.b, COALESCE(r.register, 0) AS register
+        FROM $keys
+        CROSS JOIN (SELECT CAST(UNNEST(range(0, 64)) AS BIGINT) AS b) g
+        LEFT JOIN r ON r.$key = $alias.$key AND r.b = g.b),
+      z AS (
+        SELECT $key,
+          list_reduce(
+            list_transform(list(register ORDER BY b),
+              x -> 1.0 / CAST(CAST(1 AS BIGINT) << CAST(x AS INT)
+                              AS DOUBLE)),
+            (a, x) -> a + x) AS z
+        FROM dense GROUP BY 1)"""
+
+  /** α·m² of the 64-register raw estimate α·m²/Z. The e0 suffixes force
+    * DOUBLE literals — a bare 0.7213 parses as DECIMAL in both engines
+    * and their decimal division rounding rules differ (α would come out
+    * 2.5e-8 off). */
+  private[graft] val hllAlphaM2 = "7213e-4 / (1e0 + 1079e-3 / 64e0) * 64e0 * 64e0"
+
   /** q167: HyperLogLog register sketch under the bit-exact gate — the
     * other half of the sketch family (KMV keeps the k smallest hashes;
     * HLL keeps m=64 max leading-zero registers, constant 64 bytes per
@@ -397,18 +449,8 @@ object SketchOps {
       val h = table(s, dir, "lineitem")
         .select(col("l_returnflag"),
           md5(concat(lit("hll:"), col("l_partkey")).cast("binary")).as("h"))
-      // Spark side reads the hex fields with one codegen'd conv() each;
-      // the oracle keeps the digit-arithmetic hexToLong (DuckDB has no
-      // conv) — equivalent on lowercase md5 hex, and the gate proves it
-      val bits = h.select(col("l_returnflag"),
-        (expr("CAST(conv(substring(h, 1, 2), 16, 10) AS BIGINT)") % 64)
-          .as("b"),
-        expr("CAST(conv(substring(h, 3, 15), 16, 10) AS BIGINT)").as("w"))
-      val regs = bits
-        .withColumn("rho", when(col("w") === 0, lit(61L))
-          .otherwise(expr("CAST(61 - length(bin(w)) AS BIGINT)")))
-        .groupBy(col("l_returnflag"), col("b"))
-        .agg(max(col("rho")).as("register"))
+      val regs = hllRegisters(h.select(col("l_returnflag") +: hllBitCols: _*),
+        col("l_returnflag"))
       val exact = h.select(col("l_returnflag"), col("h")).distinct()
         .groupBy(col("l_returnflag")).agg(count(lit(1)).as("n_exact"))
       val dense = exact.select(col("l_returnflag"))
@@ -424,11 +466,7 @@ object SketchOps {
               x -> 1.0D / CAST(shiftleft(CAST(1 AS BIGINT),
                                CAST(x.register AS INT)) AS DOUBLE)),
             CAST(0 AS DOUBLE), (a, x) -> a + x)""").as("z"))
-        // e0 suffixes force DOUBLE literals — a bare 0.7213 parses as
-        // DECIMAL in both engines and their decimal division rounding
-        // rules differ (α would come out 2.5e-8 off).
-        .withColumn("est",
-          expr("7213e-4 / (1e0 + 1079e-3 / 64e0) * 64e0 * 64e0 / z"))
+        .withColumn("est", expr(s"$hllAlphaM2 / z"))
         .select(col("l_returnflag"), col("est"))
       dense.join(broadcast(est), "l_returnflag")
         .join(broadcast(exact), "l_returnflag")
@@ -440,33 +478,16 @@ object SketchOps {
         SELECT l_returnflag, md5('hll:' || l_partkey) AS h FROM lineitem),
       bits AS (
         SELECT l_returnflag,
-          CAST(${DedupOps.hexToLong("h", 1, 2)} % 64 AS BIGINT) AS b,
-          CAST(${DedupOps.hexToLong("h", 3, 15)} AS BIGINT) AS w
+          ${hllBDuck("h")} AS b,
+          ${hllWDuck("h")} AS w
         FROM h),
-      r AS (
-        SELECT l_returnflag, b,
-          CAST(MAX(CASE WHEN w = 0 THEN 61
-                        ELSE 61 - length(format('{:b}', w)) END)
-               AS BIGINT) AS register
-        FROM bits GROUP BY 1, 2),
+      ${hllRegDuck("l_returnflag")},
       exact AS (
         SELECT l_returnflag, CAST(COUNT(DISTINCT h) AS BIGINT) AS n_exact
         FROM h GROUP BY 1),
-      dense AS (
-        SELECT e.l_returnflag, g.b, COALESCE(r.register, 0) AS register
-        FROM exact e
-        CROSS JOIN (SELECT CAST(UNNEST(range(0, 64)) AS BIGINT) AS b) g
-        LEFT JOIN r ON r.l_returnflag = e.l_returnflag AND r.b = g.b),
-      z AS (
-        SELECT l_returnflag,
-          list_reduce(
-            list_transform(list(register ORDER BY b),
-              x -> 1.0 / CAST(CAST(1 AS BIGINT) << CAST(x AS INT)
-                              AS DOUBLE)),
-            (a, x) -> a + x) AS z
-        FROM dense GROUP BY 1)
+      ${hllDenseZDuck("l_returnflag", "exact e", "e")}
       SELECT d.l_returnflag, d.b, d.register, e.n_exact,
-        7213e-4 / (1e0 + 1079e-3 / 64e0) * 64e0 * 64e0 / z.z AS est
+        $hllAlphaM2 / z.z AS est
       FROM dense d
       JOIN exact e ON e.l_returnflag = d.l_returnflag
       JOIN z ON z.l_returnflag = d.l_returnflag"""))

@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.{OpSpec, Tables}
 import graft.Tables._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -66,6 +66,38 @@ object TextOps {
               + 3e-1 * (1e0 - CAST(n_punct AS DOUBLE) / $lenExpr)
               + 3e-1 * (CAST(n_stop AS DOUBLE) / n_words)) * 1e6 + 5e-1)
          / 1e6 END)"""
+
+  /** The document-quality stage over a frame with a `text` column — ONE
+    * definition for q23, the curation queries (q49, q200, q203, q253),
+    * the q276-q278 funnel and the classifier features: `words` →
+    * `n_words` → `n_punct` → `n_stop` → column `out` = `score` (by
+    * default the [[qualityFormula]] over the document length). The
+    * callers that score over a precomputed length add it with
+    * `lenCols` (right after `words`); `wordCols` follow `n_words`. */
+  private[graft] def qualityStage(docs: DataFrame, out: String = "quality",
+      score: String = qualityFormula("length(text)"),
+      lenCols: Seq[(String, Column)] = Nil,
+      wordCols: Seq[(String, Column)] = Nil): DataFrame = {
+    def add(df: DataFrame, cs: Seq[(String, Column)]) =
+      cs.foldLeft(df) { case (d, (n, c)) => d.withColumn(n, c) }
+    add(add(docs.withColumn("words", expr(wordsSpark)), lenCols)
+        .withColumn("n_words", expr("CAST(size(words) AS BIGINT)")), wordCols)
+      .withColumn("n_punct",
+        expr("CAST(length(regexp_replace(text, '[a-z0-9 ]', '')) AS BIGINT)"))
+      .withColumn("n_stop",
+        expr(s"CAST(size(filter(words, w -> w IN ($stopwordsSql))) AS BIGINT)"))
+      .withColumn(out, expr(score))
+  }
+
+  /** DuckDB twin of [[qualityStage]]'s counts: `SELECT lead n_words,
+    * mid n_punct, n_stop tail` over `cols` of `rel` plus the word
+    * array. The score stays in each caller's own SELECT. */
+  private[ops] def qualityCountsDuck(lead: String, cols: String, rel: String,
+      mid: String = "", tail: String = ""): String = s"""SELECT $lead
+        CAST(len(words) AS BIGINT) AS n_words,$mid
+        CAST(length(regexp_replace(text, '[a-z0-9 ]', '', 'g')) AS BIGINT) AS n_punct,
+        CAST(len(list_filter(words, w -> w IN ($stopwordsSql))) AS BIGINT) AS n_stop$tail
+      FROM (SELECT $cols, $wordsDuck AS words FROM $rel)"""
 
   /** Token counting + quality raw stats (SURVEY §2.12 text stats):
     * whitespace tokens, BPE-ish regex tokens, char-class counts,
@@ -163,14 +195,7 @@ object TextOps {
   val q23QualityScore = OpSpec(
     "q23_quality_score",
     (s, dir) => {
-      table(s, dir, "documents")
-        .withColumn("words", expr(wordsSpark))
-        .withColumn("n_words", expr("CAST(size(words) AS BIGINT)"))
-        .withColumn("n_punct",
-          expr("CAST(length(regexp_replace(text, '[a-z0-9 ]', '')) AS BIGINT)"))
-        .withColumn("n_stop",
-          expr(s"CAST(size(filter(words, w -> w IN ($stopwordsSql))) AS BIGINT)"))
-        .withColumn("quality", expr(qualityFormula("length(text)")))
+      qualityStage(table(s, dir, "documents"))
         .select(col("doc_id"), col("n_words"), col("quality"),
           expr("CASE WHEN quality >= 5e-1 THEN 'keep' ELSE 'drop' END")
             .as("verdict"))
@@ -180,11 +205,7 @@ object TextOps {
         ${qualityFormula("length(text)")} AS quality,
         CASE WHEN ${qualityFormula("length(text)")} >= 5e-1
              THEN 'keep' ELSE 'drop' END AS verdict
-      FROM (SELECT doc_id, text,
-              CAST(len(words) AS BIGINT) AS n_words,
-              CAST(length(regexp_replace(text, '[a-z0-9 ]', '', 'g')) AS BIGINT) AS n_punct,
-              CAST(len(list_filter(words, w -> w IN ($stopwordsSql))) AS BIGINT) AS n_stop
-            FROM (SELECT doc_id, text, $wordsDuck AS words FROM documents))"""))
+      FROM (${qualityCountsDuck("doc_id, text,", "doc_id, text", "documents")})"""))
 
   /** Document fingerprinting: md5 of the whitespace-normalized text plus
     * a numeric 48-bit fingerprint folded from the hex digits (the
@@ -258,14 +279,6 @@ object TextOps {
                 ELSE [] END)) AS BIGINT) AS n_distinct_grams
             FROM (SELECT doc_id, $wordsDuck AS words FROM documents))"""))
 
-  /** Sequence packing — the dataset-assembly step that turns curated
-    * documents into fixed-budget training sequences (pack = 512 tokens
-    * here): each document gets a pack id and token offset from
-    * the running token total of its shard, in deterministic doc_id
-    * order. Packing is PER-SHARD (doc_id % 8), the way real pipelines
-    * pack per output worker — a single global running total would be a
-    * partition-less window (the exact scale smell the plan-audit test
-    * forbids). Pure integer arithmetic end to end. */
   /** Tokens per training sequence — q59/q60's shared pack budget. */
   private val PackBudget = 512
 
@@ -296,6 +309,14 @@ object TextOps {
             CAST(len($wordsDuck) AS BIGINT) AS n_tokens
           FROM documents)"""
 
+  /** Sequence packing — the dataset-assembly step that turns curated
+    * documents into fixed-budget training sequences (pack = 512 tokens
+    * here): each document gets a pack id and token offset from
+    * the running token total of its shard, in deterministic doc_id
+    * order. Packing is PER-SHARD (doc_id % 8), the way real pipelines
+    * pack per output worker — a single global running total would be a
+    * partition-less window (the exact scale smell the plan-audit test
+    * forbids). Pure integer arithmetic end to end. */
   val q59SequencePacking = OpSpec(
     "q59_sequence_packing",
     (s, dir) => {
@@ -529,6 +550,33 @@ object TextOps {
   /** Top-k terms to keep per document in q76. */
   private val TfIdfTopK = 3
 
+  /** Per-document term frequencies (doc_id, term, tf) of q76, q124 and
+    * q182. The generator is INLINE (not a computed `words` attribute):
+    * that keeps the Generate out of whole-stage codegen, which re-drives
+    * the HOF split per output row (the gramRowsOf inlined-HOF lesson). */
+  private def termFreqs(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), explode(expr(wordsSpark)).as("term"))
+      .groupBy(col("doc_id"), col("term"))
+      .agg(count(lit(1)).as("tf"))
+
+  /** Document frequencies (term, df) over [[termFreqs]]. */
+  private def docFreqs(tf: DataFrame): DataFrame =
+    tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
+
+  /** The top-`k` terms by df (ties term asc) — a sort+limit head
+    * (TakeOrderedAndProject), no global window. */
+  private def dfHead(dfTab: DataFrame, k: Int): DataFrame =
+    dfTab.orderBy(col("df").desc, col("term").asc).limit(k)
+
+  /** DuckDB twin of [[termFreqs]] and [[docFreqs]] over `w` (doc_id,
+    * words): the `tf` and `dfs` CTEs of q124 and q182. */
+  private val tfDfsDuck = """tf AS (
+        SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
+        FROM (SELECT doc_id, unnest(words) AS term FROM w)
+        GROUP BY 1, 2),
+      dfs AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df
+              FROM tf GROUP BY 1)"""
+
   /** TF-IDF keyword extraction (log-free): score = tf · N / df — the
     * same ordering as classic tf·idf for ranking within a document
     * (idf is monotone in N/df) without log(), which the oracle bans
@@ -547,14 +595,8 @@ object TextOps {
     (s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val docs = table(s, dir, "documents")
-      // generator INLINE (not a computed `words` attribute): keeps the
-      // Generate out of whole-stage codegen, which re-drives the HOF
-      // split per output row (the gramRowsOf inlined-HOF lesson)
-      val tf = docs
-        .select(col("doc_id"), explode(expr(wordsSpark)).as("term"))
-        .groupBy(col("doc_id"), col("term"))
-        .agg(count(lit(1)).as("tf"))
-      val dfTab = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
+      val tf = termFreqs(docs)
+      val dfTab = docFreqs(tf)
       val nDocs = docs.select(count(lit(1)).as("n_docs"))
       val w = Window.partitionBy(col("doc_id"))
         .orderBy(col("score").desc, col("term"))
@@ -636,22 +678,6 @@ object TextOps {
   private val WinK = 3
   private val WinW = 4
 
-  /** Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
-    * SIGMOD'03 — the MOSS algorithm): hash every POSITIONAL k-gram,
-    * slide a w-gram window, keep each window's minimum hash; the
-    * distinct kept hashes are the document's fingerprint set. Emitted
-    * as a per-document profile (count / min / exact integer checksum
-    * of the fingerprint set) so the gate hashes the full selection
-    * without materializing per-fingerprint rows.
-    *
-    * Unlike [[DedupOps.gramRowsOf]] the grams here keep their position
-    * and are NOT pre-deduped — winnowing's guarantee is positional.
-    * The window min and the per-doc gram count ride the same ordered
-    * window spec (one Window operator, one sort). Scale shape: grams
-    * shuffle once by doc_id (the partition key of both windows); the
-    * aggregate is map-side combined. Documents too short for one full
-    * window keep a zero profile via the left join (same convention as
-    * q68). */
   /** Full-window winnowing rows for an arbitrary (doc_id, text)
     * DataFrame: one row per window position with its selected minimum
     * gram hash `wmin` and the doc's gram count `ng`. Both window specs
@@ -686,6 +712,22 @@ object TextOps {
       : org.apache.spark.sql.DataFrame =
     winnowWmin(docs).select(col("doc_id"), col("wmin").as("fp")).distinct()
 
+  /** Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
+    * SIGMOD'03 — the MOSS algorithm): hash every POSITIONAL k-gram,
+    * slide a w-gram window, keep each window's minimum hash; the
+    * distinct kept hashes are the document's fingerprint set. Emitted
+    * as a per-document profile (count / min / exact integer checksum
+    * of the fingerprint set) so the gate hashes the full selection
+    * without materializing per-fingerprint rows.
+    *
+    * Unlike [[DedupOps.gramRowsOf]] the grams here keep their position
+    * and are NOT pre-deduped — winnowing's guarantee is positional.
+    * The window min and the per-doc gram count ride the same ordered
+    * window spec (one Window operator, one sort). Scale shape: grams
+    * shuffle once by doc_id (the partition key of both windows); the
+    * aggregate is map-side combined. Documents too short for one full
+    * window keep a zero profile via the left join (same convention as
+    * q68). */
   val q80Winnowing = OpSpec(
     "q80_winnowing",
     (s, dir) => {
@@ -1069,17 +1111,11 @@ object TextOps {
         expr("CAST(size(words) AS BIGINT)").as("dl"))
       val stats = dl.agg(count(lit(1)).as("n_docs"),
         sum(col("dl")).as("total_dl"))
-      val tf = docs
-        // inline generator — the q76 codegen-Generate note
-        .select(col("doc_id"), explode(expr(wordsSpark)).as("term"))
-        .groupBy(col("doc_id"), col("term"))
-        .agg(count(lit(1)).as("tf"))
-      val dfTab = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-      // the df-rank 10..14 band as top14 \ top9 — two sort+limit heads
-      // (TakeOrderedAndProject), no global window anywhere in the plan
-      def head(k: Int) = dfTab
-        .orderBy(col("df").desc, col("term").asc).limit(k)
-      val qterms = head(14).exceptAll(head(9))
+      val tf = termFreqs(docs)
+      val dfTab = docFreqs(tf)
+      // the df-rank 10..14 band as top14 \ top9 — two sort+limit heads,
+      // no global window anywhere in the plan
+      val qterms = dfHead(dfTab, 14).exceptAll(dfHead(dfTab, 9))
       val contribs = tf.join(broadcast(qterms), "term")
         .join(dl, "doc_id")
         .crossJoin(broadcast(stats))
@@ -1100,12 +1136,7 @@ object TextOps {
       dl AS (SELECT doc_id, CAST(len(words) AS BIGINT) AS dl FROM w),
       stats AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
                        CAST(SUM(dl) AS BIGINT) AS total_dl FROM dl),
-      tf AS (
-        SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
-        FROM (SELECT doc_id, unnest(words) AS term FROM w)
-        GROUP BY 1, 2),
-      dfs AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df
-              FROM tf GROUP BY 1),
+      $tfDfsDuck,
       qterms AS (
         SELECT term, df FROM (
           SELECT term, df, row_number() OVER
@@ -1141,17 +1172,11 @@ object TextOps {
       val top3 = q124Bm25.query(s, dir)
         .orderBy(col("score").desc, col("doc_id").asc).limit(3)
         .select(col("doc_id"))
-      val docs = table(s, dir, "documents")
-      val tf = docs
-        // inline generator — the q76 codegen-Generate note
-        .select(col("doc_id"), explode(expr(wordsSpark)).as("term"))
-        .groupBy(col("doc_id"), col("term"))
-        .agg(count(lit(1)).as("tf"))
-      val dfTab = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-      def head(k: Int) = dfTab
-        .orderBy(col("df").desc, col("term").asc).limit(k)
-      val qterms = head(14).exceptAll(head(9)).select(col("term"))
-      val stopBand = head(5).select(col("term"))
+      val tf = termFreqs(table(s, dir, "documents"))
+      val dfTab = docFreqs(tf)
+      val qterms = dfHead(dfTab, 14).exceptAll(dfHead(dfTab, 9))
+        .select(col("term"))
+      val stopBand = dfHead(dfTab, 5).select(col("term"))
       tf.join(broadcast(top3), "doc_id")
         .join(broadcast(qterms), Seq("term"), "left_anti")
         .join(broadcast(stopBand), Seq("term"), "left_anti")
@@ -1165,12 +1190,7 @@ object TextOps {
         SELECT doc_id FROM (${q124Bm25.oracle.get})
         ORDER BY score DESC, doc_id ASC LIMIT 3),
       w AS (SELECT doc_id, $wordsDuck AS words FROM documents),
-      tf AS (
-        SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
-        FROM (SELECT doc_id, unnest(words) AS term FROM w)
-        GROUP BY 1, 2),
-      dfs AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df
-              FROM tf GROUP BY 1),
+      $tfDfsDuck,
       ranked AS (SELECT term, row_number() OVER
                    (ORDER BY df DESC, term ASC) AS r FROM dfs),
       qterms AS (SELECT term FROM ranked WHERE r BETWEEN 10 AND 14),
@@ -1187,26 +1207,6 @@ object TextOps {
   /** Number of BPE merge rounds trained by q132. */
   private val BpeRounds = 10
 
-  /** BPE tokenizer TRAINING under the bit-exact gate — the first stage
-    * of every LLM data pipeline, as [[BpeRounds]] merge rounds with
-    * the q98 k-means control shape: the vocabulary collapses to
-    * (distinct word, count) first (classic BPE trains on the word
-    * table, so round cost scales with |vocab|, not corpus tokens);
-    * each round DISTRIBUTEDLY counts adjacent symbol pairs weighted by
-    * word count, brings exactly ONE row to the driver (the max pair
-    * under a pinned (count desc, pair asc) tie rule — bounded driver
-    * state, independent of corpus size), and applies it as a LITERAL
-    * string replace over the cached vocabulary (each round's plan
-    * stays flat: scan cache → project → cache). Merge application is
-    * a single left-to-right non-overlapping scan (Java and DuckDB
-    * `replace` share these semantics exactly — immediately-adjacent
-    * overlapping occurrences merge in a later round), so both engines
-    * walk the identical deterministic merge trajectory. Output: the
-    * learned merge table (round, s1, s2, weighted pair count).
-    * (A fully-declarative 10-round unrolling was measured pathological
-    * — nested cache/broadcast chains planned minutes of overhead on a
-    * 31-word vocabulary; the 1-row-per-round driver loop is the same
-    * bounded-state trade q98 makes.) */
   /** The shared trainer behind q132/q133: runs the [[BpeRounds]]
     * driver-loop merge rounds and returns (rules, final vocabulary) —
     * the vocabulary keeps the original `word` alongside its final
@@ -1256,6 +1256,26 @@ object TextOps {
     (rules, tab)
   }
 
+  /** BPE tokenizer TRAINING under the bit-exact gate — the first stage
+    * of every LLM data pipeline, as [[BpeRounds]] merge rounds with
+    * the q98 k-means control shape: the vocabulary collapses to
+    * (distinct word, count) first (classic BPE trains on the word
+    * table, so round cost scales with |vocab|, not corpus tokens);
+    * each round DISTRIBUTEDLY counts adjacent symbol pairs weighted by
+    * word count, brings exactly ONE row to the driver (the max pair
+    * under a pinned (count desc, pair asc) tie rule — bounded driver
+    * state, independent of corpus size), and applies it as a LITERAL
+    * string replace over the cached vocabulary (each round's plan
+    * stays flat: scan cache → project → cache). Merge application is
+    * a single left-to-right non-overlapping scan (Java and DuckDB
+    * `replace` share these semantics exactly — immediately-adjacent
+    * overlapping occurrences merge in a later round), so both engines
+    * walk the identical deterministic merge trajectory. Output: the
+    * learned merge table (round, s1, s2, weighted pair count).
+    * (A fully-declarative 10-round unrolling was measured pathological
+    * — nested cache/broadcast chains planned minutes of overhead on a
+    * 31-word vocabulary; the 1-row-per-round driver loop is the same
+    * bounded-state trade q98 makes.) */
   val q132BpeTrain = OpSpec(
     "q132_bpe_train",
     (s, dir) => {
@@ -1809,31 +1829,6 @@ object TextOps {
       FROM u"""
     })
 
-  /** q282: PER-DOCUMENT GRAM NOVELTY — the memorization-risk / boiler-
-    * plate score per doc, complementary to the pairwise views this
-    * engine already gates: containment (q107) asks "which PAIR shares
-    * content", winnowing (q80/q151) asks "WHERE are the shared spans";
-    * this asks the per-doc curation question "how much of THIS doc
-    * exists nowhere else?" — the fraction of its distinct 5-gram hashes
-    * with corpus document-frequency 1 (utils/scenecut.py-era pipelines
-    * curate clips; text twins curate docs by exactly this signal).
-    * Verdict by cross-multiplied integers (2·n_novel < n_grams →
-    * 'boilerplate'; gram-less short docs → 'short').
-    *
-    * Shape, tuned for corpus scale: grams are hashed ROW-LOCALLY to
-    * 60-bit ints (md5 evaluated once per gram via a two-stage lambda —
-    * the hex fold references the digest lambda variable, never
-    * re-computing md5 per digit) and deduped row-locally on the HASHED
-    * key (array_distinct over ints — so a within-doc collision cannot
-    * diverge from the oracle, and n_grams needs NO shuffle at all).
-    * The only corpus-scale shuffle is the partial-aggregated df count
-    * on the 8-byte gram hash; a df = 1 gram's sole owner IS its
-    * min(doc_id), so novel counts come straight off the df table with
-    * no join-back of the exploded grams (the first cut paid a
-    * grams⋈df shuffle join and ran 10.5 s at sf0.1 — this shape holds
-    * the same gate in about half that). Same-doc repeats are collapsed
-    * BEFORE the df count, so df counts documents — a doc repeating its
-    * own boilerplate 100× cannot vote itself non-novel. */
   /** Row-local distinct 5-gram 60-bit hashes — THE gram definition of
     * the novelty family (q282, the persisted novelty index, q283), one
     * text each side so scorer and index can never drift. References a
@@ -1880,6 +1875,65 @@ object TextOps {
            WHEN 2 * n_novel < n_grams THEN 'boilerplate'
            ELSE 'novel' END"""))
 
+  /** DuckDB twin of [[gramHashed]] over the documents table:
+    * (doc_id, gsh). */
+  private[graft] val gramBaseDuck: String =
+    s"""SELECT doc_id, $gramHashDuck AS gsh
+        FROM (SELECT doc_id, $wordsDuck AS words FROM documents)"""
+
+  /** DuckDB twin of [[noveltyVerdicts]] over per-doc grams `src b` and
+    * per-doc novel counts `novel n`. */
+  private[graft] def noveltyTailDuck(src: String): String =
+    s"""SELECT b.doc_id,
+        CAST(len(b.gsh) AS BIGINT) AS n_grams,
+        COALESCE(n.n_novel, CAST(0 AS BIGINT)) AS n_novel,
+        CASE WHEN len(b.gsh) = 0 THEN 0e0
+             ELSE CAST(COALESCE(n.n_novel, 0) AS DOUBLE)
+                  / CAST(len(b.gsh) AS DOUBLE)
+        END AS novelty,
+        CASE WHEN len(b.gsh) = 0 THEN 'short'
+             WHEN 2 * COALESCE(n.n_novel, 0) < len(b.gsh)
+               THEN 'boilerplate'
+             ELSE 'novel' END AS verdict
+      FROM $src b LEFT JOIN novel n ON n.doc_id = b.doc_id"""
+
+  /** The naive-global rule for a batch (doc_id % 10 = 0) scored against
+    * the rest of `base` (q283/q285's oracles): a batch doc's gram is
+    * novel iff its corpus-wide df is 1 and the batch doc owns it. */
+  private val batchNovelDuck: String = """counts AS (
+        SELECT g, COUNT(*) AS df, MIN(doc_id) AS doc_id
+        FROM (SELECT doc_id, unnest(gsh) AS g FROM base)
+        GROUP BY 1),
+      novel AS (
+        SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_novel
+        FROM counts WHERE df = 1 AND doc_id % 10 = 0
+        GROUP BY 1)"""
+
+  /** q282: PER-DOCUMENT GRAM NOVELTY — the memorization-risk / boiler-
+    * plate score per doc, complementary to the pairwise views this
+    * engine already gates: containment (q107) asks "which PAIR shares
+    * content", winnowing (q80/q151) asks "WHERE are the shared spans";
+    * this asks the per-doc curation question "how much of THIS doc
+    * exists nowhere else?" — the fraction of its distinct 5-gram hashes
+    * with corpus document-frequency 1 (utils/scenecut.py-era pipelines
+    * curate clips; text twins curate docs by exactly this signal).
+    * Verdict by cross-multiplied integers (2·n_novel < n_grams →
+    * 'boilerplate'; gram-less short docs → 'short').
+    *
+    * Shape, tuned for corpus scale: grams are hashed ROW-LOCALLY to
+    * 60-bit ints (md5 evaluated once per gram via a two-stage lambda —
+    * the hex fold references the digest lambda variable, never
+    * re-computing md5 per digit) and deduped row-locally on the HASHED
+    * key (array_distinct over ints — so a within-doc collision cannot
+    * diverge from the oracle, and n_grams needs NO shuffle at all).
+    * The only corpus-scale shuffle is the partial-aggregated df count
+    * on the 8-byte gram hash; a df = 1 gram's sole owner IS its
+    * min(doc_id), so novel counts come straight off the df table with
+    * no join-back of the exploded grams (the first cut paid a
+    * grams⋈df shuffle join and ran 10.5 s at sf0.1 — this shape holds
+    * the same gate in about half that). Same-doc repeats are collapsed
+    * BEFORE the df count, so df counts documents — a doc repeating its
+    * own boilerplate 100× cannot vote itself non-novel. */
   val q282GramNovelty = OpSpec(
     "q282_gram_novelty",
     (s, dir) => {
@@ -1898,8 +1952,7 @@ object TextOps {
     },
     Some(s"""
       WITH base AS (
-        SELECT doc_id, $gramHashDuck AS gsh
-        FROM (SELECT doc_id, $wordsDuck AS words FROM documents)),
+        $gramBaseDuck),
       novel AS (
         SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_novel
         FROM (
@@ -1907,23 +1960,8 @@ object TextOps {
           FROM (SELECT doc_id, unnest(gsh) AS g FROM base)
           GROUP BY 1)
         WHERE df = 1 GROUP BY 1)
-      SELECT b.doc_id,
-        CAST(len(b.gsh) AS BIGINT) AS n_grams,
-        COALESCE(n.n_novel, CAST(0 AS BIGINT)) AS n_novel,
-        CASE WHEN len(b.gsh) = 0 THEN 0e0
-             ELSE CAST(COALESCE(n.n_novel, 0) AS DOUBLE)
-                  / CAST(len(b.gsh) AS DOUBLE)
-        END AS novelty,
-        CASE WHEN len(b.gsh) = 0 THEN 'short'
-             WHEN 2 * COALESCE(n.n_novel, 0) < len(b.gsh)
-               THEN 'boilerplate'
-             ELSE 'novel' END AS verdict
-      FROM base b LEFT JOIN novel n ON n.doc_id = b.doc_id"""))
+      ${noveltyTailDuck("base")}"""))
 
-  /** Build the persisted NOVELTY INDEX from the corpus: one row per
-    * distinct gram hash with its document frequency, bucketed on the
-    * hash (the ingest join key). The corpus text is scanned ONCE, here;
-    * every later batch scores against these 16-byte rows. */
   /** (doc_id, g) exploded novelty-gram rows with the gram expression
     * INLINE in the generator. The inline form matters: exploding a
     * Project-computed array column keeps the Generate inside
@@ -1938,6 +1976,10 @@ object TextOps {
       .select(col("doc_id"), explode(expr(
         s"filter($gramHashSpark, x -> x IS NOT NULL)")).as("g"))
 
+  /** Build the persisted NOVELTY INDEX from the corpus: one row per
+    * distinct gram hash with its document frequency, bucketed on the
+    * hash (the ingest join key). The corpus text is scanned ONCE, here;
+    * every later batch scores against these 16-byte rows. */
   def writeNoveltyIndex(docs: DataFrame, prefix: String, path: String,
       buckets: Int = 8): Unit = {
     val g = gramRowsInline(docs)
@@ -1947,21 +1989,6 @@ object TextOps {
       s"${prefix}_gramdf", "g", buckets, s"$path/gramdf")
   }
 
-  /** Score one arriving batch against the persisted novelty index and
-    * fold the batch in — q282's per-doc novelty with cost ∝ batch
-    * (q55/q278's incremental discipline): a batch gram is novel iff it
-    * is unique WITHIN the batch (count 1, its owner = its min doc_id)
-    * and ABSENT from the live index — absence = the signed df sum over
-    * its matched rows ≤ 0 (appends positive, [[purgeNoveltyIndex]]
-    * negations subtract; the sum folds AFTER the bucketed equi-join so
-    * appended duplicate rows aggregate instead of fanning out).
-    * n_grams stays row-local; the verdicts are checkpointed BEFORE the
-    * batch's grams are appended, so the report reflects the index
-    * state AT ingest (first-ingested-wins: a later twin batch scores
-    * non-novel against these rows, while this batch's verdicts are
-    * already sealed — the q278 contract). The corpus text is never
-    * rescanned; the only corpus-sized touch is the bucketed index side
-    * of one equi-join. */
   /** The LAZY scoring half of [[ingestNovelty]] — exposed within the
     * library so the plan audit can prove the batch is scored from the
     * persisted index alone (no corpus-text lineage). Returns
@@ -2004,6 +2031,21 @@ object TextOps {
       novel), bdf, b)
   }
 
+  /** Score one arriving batch against the persisted novelty index and
+    * fold the batch in — q282's per-doc novelty with cost ∝ batch
+    * (q55/q278's incremental discipline): a batch gram is novel iff it
+    * is unique WITHIN the batch (count 1, its owner = its min doc_id)
+    * and ABSENT from the live index — absence = the signed df sum over
+    * its matched rows ≤ 0 (appends positive, [[purgeNoveltyIndex]]
+    * negations subtract; the sum folds AFTER the bucketed equi-join so
+    * appended duplicate rows aggregate instead of fanning out).
+    * n_grams stays row-local; the verdicts are checkpointed BEFORE the
+    * batch's grams are appended, so the report reflects the index
+    * state AT ingest (first-ingested-wins: a later twin batch scores
+    * non-novel against these rows, while this batch's verdicts are
+    * already sealed — the q278 contract). The corpus text is never
+    * rescanned; the only corpus-sized touch is the bucketed index side
+    * of one equi-join. */
   def ingestNovelty(s: SparkSession, batch: DataFrame, prefix: String,
       buckets: Int = 8, batchId: Option[Long] = None): DataFrame = {
     val (report, bdf, cached) = scoreNoveltyBatch(s, batch, prefix,
@@ -2117,29 +2159,10 @@ object TextOps {
     },
     Some(s"""
       WITH base AS (
-        SELECT doc_id, $gramHashDuck AS gsh
-        FROM (SELECT doc_id, $wordsDuck AS words FROM documents)
+        $gramBaseDuck
         WHERE NOT (doc_id % 10 <> 0 AND doc_id % 4 = 1)),
-      counts AS (
-        SELECT g, COUNT(*) AS df, MIN(doc_id) AS doc_id
-        FROM (SELECT doc_id, unnest(gsh) AS g FROM base)
-        GROUP BY 1),
-      novel AS (
-        SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_novel
-        FROM counts WHERE df = 1 AND doc_id % 10 = 0
-        GROUP BY 1)
-      SELECT b.doc_id,
-        CAST(len(b.gsh) AS BIGINT) AS n_grams,
-        COALESCE(n.n_novel, CAST(0 AS BIGINT)) AS n_novel,
-        CASE WHEN len(b.gsh) = 0 THEN 0e0
-             ELSE CAST(COALESCE(n.n_novel, 0) AS DOUBLE)
-                  / CAST(len(b.gsh) AS DOUBLE)
-        END AS novelty,
-        CASE WHEN len(b.gsh) = 0 THEN 'short'
-             WHEN 2 * COALESCE(n.n_novel, 0) < len(b.gsh)
-               THEN 'boilerplate'
-             ELSE 'novel' END AS verdict
-      FROM base b LEFT JOIN novel n ON n.doc_id = b.doc_id
+      $batchNovelDuck
+      ${noveltyTailDuck("base")}
       WHERE b.doc_id % 10 = 0"""))
 
   /** q286: NOVELTY-INDEX VACUUM — q285's trajectory with
@@ -2187,28 +2210,9 @@ object TextOps {
     },
     Some(s"""
       WITH base AS (
-        SELECT doc_id, $gramHashDuck AS gsh
-        FROM (SELECT doc_id, $wordsDuck AS words FROM documents)),
-      counts AS (
-        SELECT g, COUNT(*) AS df, MIN(doc_id) AS doc_id
-        FROM (SELECT doc_id, unnest(gsh) AS g FROM base)
-        GROUP BY 1),
-      novel AS (
-        SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_novel
-        FROM counts WHERE df = 1 AND doc_id % 10 = 0
-        GROUP BY 1)
-      SELECT b.doc_id,
-        CAST(len(b.gsh) AS BIGINT) AS n_grams,
-        COALESCE(n.n_novel, CAST(0 AS BIGINT)) AS n_novel,
-        CASE WHEN len(b.gsh) = 0 THEN 0e0
-             ELSE CAST(COALESCE(n.n_novel, 0) AS DOUBLE)
-                  / CAST(len(b.gsh) AS DOUBLE)
-        END AS novelty,
-        CASE WHEN len(b.gsh) = 0 THEN 'short'
-             WHEN 2 * COALESCE(n.n_novel, 0) < len(b.gsh)
-               THEN 'boilerplate'
-             ELSE 'novel' END AS verdict
-      FROM base b LEFT JOIN novel n ON n.doc_id = b.doc_id
+        $gramBaseDuck),
+      $batchNovelDuck
+      ${noveltyTailDuck("base")}
       WHERE b.doc_id % 10 = 0"""))
 
   val all: Seq[OpSpec] = Seq(

@@ -187,21 +187,40 @@ object StreamingStages {
     * state store; the interval is a residual, mirroring the batch
     * plan's hash-join + filter shape. */
   def streamStreamRangeJoin(errors: DataFrame, purchases: DataFrame)
-      : DataFrame = {
-    val a = errors
-      .select(col("user_id"), col("event_id").as("error_id"),
-        col("ts").as("a_ts"))
-      .withWatermark("a_ts", "1 hour")
-    val b = purchases
-      .select(col("user_id").as("b_user"), col("event_id").as("purchase_id"),
-        col("ts").as("b_ts"))
-      .withWatermark("b_ts", "1 hour")
-    a.join(b,
-      col("user_id") === col("b_user") &&
-        col("b_ts") >= col("a_ts") &&
-        col("b_ts") < col("a_ts") + expr("INTERVAL 5 MINUTES"))
+      : DataFrame =
+    intervalJoin(errors, purchases, "inner")
       .select(col("user_id"), col("error_id"), col("purchase_id"),
-        (unix_micros(col("b_ts")) - unix_micros(col("a_ts"))).as("lag_us"))
+        graft.ops.EventOps.lagUs)
+
+  /** The q20 sides ([[graft.ops.EventOps.errorSide]]/`purchaseSide`),
+    * each watermarked at 1 hour, joined on user and the 5-minute
+    * window with `joinType`. */
+  private def intervalJoin(errors: DataFrame, purchases: DataFrame,
+      joinType: String): DataFrame = {
+    import graft.ops.EventOps
+    EventOps.errorSide(errors).withWatermark("a_ts", "1 hour")
+      .join(EventOps.purchaseSide(purchases, col("user_id").as("b_user"))
+          .withWatermark("b_ts", "1 hour"),
+        col("user_id") === col("b_user") && EventOps.purchaseWithin(5),
+        joinType)
+  }
+
+  /** Run `join` over ONE events stream, self-joined (a stream-stream
+    * SELF join — a second readStream would scan the file twice per
+    * micro-batch), error side × purchase side, to an append memory sink
+    * for query `q`. Each shuffle partition carries a join state store
+    * whose per-batch commit is file I/O; 32 stores/side is pure setup
+    * cost at this key cardinality, so the stateful shuffle is narrowed
+    * for the query's duration (measured 5.3 s → the q56/q65 band). */
+  private def drainIntervalJoin(s: SparkSession, dir: String, q: String,
+      join: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val prev = s.conf.get("spark.sql.shuffle.partitions")
+    try {
+      s.conf.set("spark.sql.shuffle.partitions", "4")
+      val ev = eventsStream(s, s"$dir/events.parquet")
+      drainToMemory(s, q, join(ev.filter(col("event_type") === "error"),
+        ev.filter(col("event_type") === "purchase")), "append")
+    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
   /** Production sink: append the stream to sharded parquet with a
@@ -236,7 +255,24 @@ object StreamingStages {
     q
   }
 
-  private val memSinkId = new java.util.concurrent.atomic.AtomicInteger(0)
+  /** Sink runs per gated streaming query, for [[drainToMemory]]. */
+  private val sinkRuns = new java.util.concurrent.ConcurrentHashMap[
+    String, java.util.concurrent.atomic.AtomicInteger]()
+
+  /** Drive `df` to a memory sink for gated query `q` ([[runToMemory]]),
+    * stop it, and return the sink table. Each run gets a fresh name (a
+    * memory sink cannot be re-attached), but the PREVIOUS run's temp
+    * view is dropped so repeated bench/verify invocations don't
+    * accumulate result sets on the driver. */
+  private def drainToMemory(s: SparkSession, q: String, df: DataFrame,
+      outputMode: String): DataFrame = {
+    val id = sinkRuns.computeIfAbsent(q,
+      _ => new java.util.concurrent.atomic.AtomicInteger(0)).incrementAndGet()
+    if (id > 1) s.catalog.dropTempView(s"${q}_mem_${id - 1}")
+    val name = s"${q}_mem_$id"
+    runToMemory(df, name, outputMode).stop()
+    s.table(name)
+  }
 
   /** q56: the streaming surface under the driver's DuckDB gate — the
     * watermarked tumbling aggregate ([[tumblingAgg]]) executed as a REAL
@@ -249,19 +285,10 @@ object StreamingStages {
   val q56StreamingTumbling: graft.OpSpec = graft.OpSpec(
     "q56_streaming_tumbling",
     (s, dir) => {
-      // fresh name per run (a memory sink cannot be re-attached), but
-      // the PREVIOUS run's temp view is dropped so repeated bench/
-      // verify invocations don't accumulate result sets on the driver
-      val id = memSinkId.incrementAndGet()
-      if (id > 1) s.catalog.dropTempView(s"q56_mem_${id - 1}")
-      val name = s"q56_mem_$id"
-      runToMemory(tumblingAgg(eventsStream(s, s"$dir/events.parquet")),
-        name, "complete").stop()
-      s.table(name)
+      drainToMemory(s, "q56",
+        tumblingAgg(eventsStream(s, s"$dir/events.parquet")), "complete")
     },
     graft.ops.EventOps.q17TumblingWindow.oracle)
-
-  private val dedupSinkId = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** q65: [[streamingDedup]] as a REAL streaming query under the gate
     * (file source → watermarked dropDuplicatesWithinWatermark → append
@@ -275,19 +302,13 @@ object StreamingStages {
   val q65StreamingDedup: graft.OpSpec = graft.OpSpec(
     "q65_streaming_dedup",
     (s, dir) => {
-      val id = dedupSinkId.incrementAndGet()
-      if (id > 1) s.catalog.dropTempView(s"q65_mem_${id - 1}")
-      val name = s"q65_mem_$id"
       val deduped = streamingDedup(
         eventsStream(s, s"$dir/events.parquet"),
         "ts", Seq("user_id", "event_type"), horizon = "3650 days")
         .select(col("user_id"), col("event_type"))
-      runToMemory(deduped, name, "append").stop()
-      s.table(name)
+      drainToMemory(s, "q65", deduped, "append")
     },
     Some("SELECT DISTINCT user_id, event_type FROM events"))
-
-  private val funnelSinkId = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** q113: [[runningFunnel]] as a REAL streaming query under the gate
     * (file source → mapGroupsWithState → update-mode memory sink),
@@ -300,22 +321,16 @@ object StreamingStages {
   val q113StreamingFunnel: graft.OpSpec = graft.OpSpec(
     "q113_streaming_funnel",
     (s, dir) => {
-      val id = funnelSinkId.incrementAndGet()
-      if (id > 1) s.catalog.dropTempView(s"q113_mem_${id - 1}")
-      val name = s"q113_mem_$id"
-      runToMemory(
-        runningFunnel(s, eventsStream(s, s"$dir/events.parquet")),
-        name, "update").stop()
+      val out = drainToMemory(s, "q113",
+        runningFunnel(s, eventsStream(s, s"$dir/events.parquet")), "update")
       def fmt(c: String) = graft.Tables.fmtTs(
         when(col(c) >= 0, timestamp_micros(col(c))))
-      s.table(name).select(col("user_id"), col("stage"),
+      out.select(col("user_id"), col("stage"),
         fmt("fv_us").as("first_view"),
         fmt("fc_us").as("first_click"),
         fmt("fp_us").as("first_purchase"))
     },
     graft.ops.EventOps.q84Funnel.oracle)
-
-  private val ssjSinkId = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** q114: [[streamStreamRangeJoin]] as a REAL streaming query under
     * the gate — BOTH join sides are unbounded file streams over the
@@ -328,25 +343,7 @@ object StreamingStages {
   val q114StreamingRangeJoin: graft.OpSpec = graft.OpSpec(
     "q114_streaming_range_join",
     (s, dir) => {
-      val id = ssjSinkId.incrementAndGet()
-      if (id > 1) s.catalog.dropTempView(s"q114_mem_${id - 1}")
-      val name = s"q114_mem_$id"
-      // ONE source, self-joined (a stream-stream SELF join) — a second
-      // readStream would scan the file twice per micro-batch. Each
-      // shuffle partition carries a join state store whose per-batch
-      // commit is file I/O; 32 stores/side is pure setup cost at this
-      // key cardinality, so the stateful shuffle is narrowed for the
-      // query's duration (measured 5.3 s → the q56/q65 band).
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      try {
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        val ev = eventsStream(s, s"$dir/events.parquet")
-        runToMemory(streamStreamRangeJoin(
-          ev.filter(col("event_type") === "error"),
-          ev.filter(col("event_type") === "purchase")),
-          name, "append").stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(name)
+      drainIntervalJoin(s, dir, "q114", streamStreamRangeJoin)
     },
     graft.ops.EventOps.q20RangeJoin.oracle)
 
@@ -357,26 +354,10 @@ object StreamingStages {
     * arrive, then emitted once with NULL purchase columns. The
     * "which errors never converted" stream a funnel alert consumes. */
   def streamStreamLeftJoin(errors: DataFrame, purchases: DataFrame)
-      : DataFrame = {
-    val a = errors
-      .select(col("user_id"), col("event_id").as("error_id"),
-        col("ts").as("a_ts"))
-      .withWatermark("a_ts", "1 hour")
-    val b = purchases
-      .select(col("user_id").as("b_user"), col("event_id").as("purchase_id"),
-        col("ts").as("b_ts"))
-      .withWatermark("b_ts", "1 hour")
-    a.join(b,
-      col("user_id") === col("b_user") &&
-        col("b_ts") >= col("a_ts") &&
-        col("b_ts") < col("a_ts") + expr("INTERVAL 5 MINUTES"),
-      "left_outer")
+      : DataFrame =
+    intervalJoin(errors, purchases, "left_outer")
       .select(col("user_id"), col("error_id"), col("purchase_id"),
-        (unix_micros(col("b_ts")) - unix_micros(col("a_ts"))).as("lag_us"),
-        col("a_ts"))
-  }
-
-  private val ssljSinkId = new java.util.concurrent.atomic.AtomicInteger(0)
+        graft.ops.EventOps.lagUs, col("a_ts"))
 
   /** q175: [[streamStreamLeftJoin]] as a REAL streaming query under the
     * gate. Matches are arrival-insensitive (the q114 property); the
@@ -393,18 +374,7 @@ object StreamingStages {
   val q175StreamingLeftJoin: graft.OpSpec = graft.OpSpec(
     "q175_streaming_left_join",
     (s, dir) => {
-      val id = ssljSinkId.incrementAndGet()
-      if (id > 1) s.catalog.dropTempView(s"q175_mem_${id - 1}")
-      val name = s"q175_mem_$id"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      try {
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        val ev = eventsStream(s, s"$dir/events.parquet")
-        runToMemory(streamStreamLeftJoin(
-          ev.filter(col("event_type") === "error"),
-          ev.filter(col("event_type") === "purchase")),
-          name, "append").stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      val out = drainIntervalJoin(s, dir, "q175", streamStreamLeftJoin)
       val bounds = graft.Tables.table(s, dir, "events").agg(
         max(when(col("event_type") === "error", unix_micros(col("ts"))))
           .as("me"),
@@ -412,8 +382,7 @@ object StreamingStages {
           .as("mp")).collect()(0)
       val safe = math.min(bounds.getLong(0), bounds.getLong(1)) -
         3600000000L - 300000000L - 1000000L
-      s.table(name)
-        .filter(col("purchase_id").isNotNull ||
+      out.filter(col("purchase_id").isNotNull ||
           unix_micros(col("a_ts")) < safe)
         .select(col("user_id"), col("error_id"), col("purchase_id"),
           col("lag_us"))
@@ -441,8 +410,6 @@ object StreamingStages {
           AND p.b_ts >= e.a_ts AND p.b_ts < e.a_ts + INTERVAL 5 MINUTES)
         AND epoch_us(e.a_ts) < mx.safe"""))
 
-  private val sessSinkId = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** q122: [[sessionAgg]] as a REAL streaming query under the gate —
     * stateful SESSION windows (merging state, not fixed buckets) driven
     * through the q56 recipe and hash-checked against the batch q18
@@ -452,32 +419,20 @@ object StreamingStages {
   val q122StreamingSession: graft.OpSpec = graft.OpSpec(
     "q122_streaming_session",
     (s, dir) => {
-      val id = sessSinkId.incrementAndGet()
-      if (id > 1) s.catalog.dropTempView(s"q122_mem_${id - 1}")
-      val name = s"q122_mem_$id"
-      runToMemory(sessionAgg(eventsStream(s, s"$dir/events.parquet")),
-        name, "complete").stop()
-      s.table(name)
+      drainToMemory(s, "q122",
+        sessionAgg(eventsStream(s, s"$dir/events.parquet")), "complete")
     },
     graft.ops.EventOps.q18SessionWindow.oracle)
-
-  private val hopSinkId = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** q123: [[hoppingAgg]] as a REAL streaming query under the gate —
     * the 3× overlapping-bucket expansion against the batch q86 oracle. */
   val q123StreamingHopping: graft.OpSpec = graft.OpSpec(
     "q123_streaming_hopping",
     (s, dir) => {
-      val id = hopSinkId.incrementAndGet()
-      if (id > 1) s.catalog.dropTempView(s"q123_mem_${id - 1}")
-      val name = s"q123_mem_$id"
-      runToMemory(hoppingAgg(eventsStream(s, s"$dir/events.parquet")),
-        name, "complete").stop()
-      s.table(name)
+      drainToMemory(s, "q123",
+        hoppingAgg(eventsStream(s, s"$dir/events.parquet")), "complete")
     },
     graft.ops.EventOps.q86HoppingWindow.oracle)
-
-  private val statsSinkId = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** q127: [[runningUserStats]] as a REAL streaming query under the
     * gate — custom mapGroupsWithState state (count + exact integer
@@ -487,13 +442,9 @@ object StreamingStages {
   val q127StreamingUserStats: graft.OpSpec = graft.OpSpec(
     "q127_streaming_user_stats",
     (s, dir) => {
-      val id = statsSinkId.incrementAndGet()
-      if (id > 1) s.catalog.dropTempView(s"q127_mem_${id - 1}")
-      val name = s"q127_mem_$id"
-      runToMemory(
+      drainToMemory(s, "q127",
         runningUserStats(s, eventsStream(s, s"$dir/events.parquet")),
-        name, "update").stop()
-      s.table(name)
+        "update")
     },
     Some("""
       SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_events,
@@ -503,8 +454,6 @@ object StreamingStages {
           / COUNT(*) AS mean_value
       FROM events GROUP BY user_id"""))
 
-  private val enrichSinkId = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** q128: [[enrichWithStatic]] as a REAL streaming query under the
     * gate — every micro-batch broadcast-joins the static nation
     * dimension (the J3 clip↔video denormalization shape on a stream);
@@ -513,9 +462,6 @@ object StreamingStages {
   val q128StreamingEnrich: graft.OpSpec = graft.OpSpec(
     "q128_streaming_enrich",
     (s, dir) => {
-      val id = enrichSinkId.incrementAndGet()
-      if (id > 1) s.catalog.dropTempView(s"q128_mem_${id - 1}")
-      val name = s"q128_mem_$id"
       val dim = broadcast(graft.Tables.table(s, dir, "nation")
         .select(col("n_nationkey").cast("long").as("nk"),
           col("n_name").as("nation_name")))
@@ -525,8 +471,7 @@ object StreamingStages {
         dim, Seq("nk"))
         .select(col("event_id"), col("user_id"), col("nation_name"),
           col("event_type"))
-      runToMemory(enriched, name, "append").stop()
-      s.table(name)
+      drainToMemory(s, "q128", enriched, "append")
     },
     Some("""
       SELECT e.event_id, e.user_id, n.n_name AS nation_name,
@@ -549,8 +494,6 @@ object StreamingStages {
       .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss")
         .as("win_start"), col("nation_name"), col("n"), col("total"))
 
-  private val rollupSinkId = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** q158: [[enrichedRollup]] as a REAL streaming query under the gate
     * — a MULTI-STAGE streaming plan (broadcast join + stateful window
     * agg) hash-checked against the equivalent batch join+group. The
@@ -559,16 +502,12 @@ object StreamingStages {
   val q158StreamingEnrichedRollup: graft.OpSpec = graft.OpSpec(
     "q158_streaming_enriched_rollup",
     (s, dir) => {
-      val id = rollupSinkId.incrementAndGet()
-      if (id > 1) s.catalog.dropTempView(s"q158_mem_${id - 1}")
-      val name = s"q158_mem_$id"
       val dim = broadcast(graft.Tables.table(s, dir, "nation")
         .select(col("n_nationkey").cast("long").as("nk"),
           col("n_name").as("nation_name")))
       val ev = eventsStream(s, s"$dir/events.parquet")
         .withColumn("nk", col("user_id") % 25)
-      runToMemory(enrichedRollup(ev, dim), name, "complete").stop()
-      s.table(name)
+      drainToMemory(s, "q158", enrichedRollup(ev, dim), "complete")
     },
     Some("""
       SELECT substr(strftime(e.ts, '%Y-%m-%d %H:%M'), 1, 15) || '0:00'
@@ -613,8 +552,6 @@ object StreamingStages {
       .toDF("user_id", "event_id", "seq", "gap_us")
   }
 
-  private val seqSinkId = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** q159: [[eventSequence]] as a REAL streaming query under the gate
     * — flatMapGroupsWithState multi-emission hash-checked against the
     * batch ROW_NUMBER/lag windows. The single input file arrives as
@@ -623,13 +560,9 @@ object StreamingStages {
   val q159StreamingEventSeq: graft.OpSpec = graft.OpSpec(
     "q159_streaming_event_seq",
     (s, dir) => {
-      val id = seqSinkId.incrementAndGet()
-      if (id > 1) s.catalog.dropTempView(s"q159_mem_${id - 1}")
-      val name = s"q159_mem_$id"
-      runToMemory(
-        eventSequence(s, eventsStream(s, s"$dir/events.parquet")),
-        name, "append").stop()
-      s.table(name)
+      drainToMemory(s, "q159",
+          eventSequence(s, eventsStream(s, s"$dir/events.parquet")),
+          "append")
         .select(col("user_id"), col("event_id"), col("seq"),
           when(col("gap_us") >= 0, col("gap_us")).as("gap_us"))
     },
@@ -722,9 +655,6 @@ object StreamingStages {
       .toDF("doc_id")
   }
 
-  private val bandDedupSinkId =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** q206: [[streamingBandDedup]] as a REAL streaming query under the
     * gate (file source → row-local band signatures → watermarked
     * flatMapGroupsWithState → update-mode memory sink). The horizon
@@ -736,15 +666,12 @@ object StreamingStages {
   val q206StreamingBandDedup: graft.OpSpec = graft.OpSpec(
     "q206_streaming_band_dedup",
     (s, dir) => {
-      val id = bandDedupSinkId.incrementAndGet()
-      if (id > 1) s.catalog.dropTempView(s"q206_mem_${id - 1}")
-      val name = s"q206_mem_$id"
-      runToMemory(
-        streamingBandDedup(s,
-          documentsStream(s, s"$dir/documents.parquet"),
-          horizonMs = 30L * 86400 * 1000),
-        name, "update").stop()
-      s.table(name).select(col("doc_id")).distinct()
+      drainToMemory(s, "q206",
+          streamingBandDedup(s,
+            documentsStream(s, s"$dir/documents.parquet"),
+            horizonMs = 30L * 86400 * 1000),
+          "update")
+        .select(col("doc_id")).distinct()
     },
     Some(graft.ops.DedupOps.bandDupBatchOracle))
 
@@ -772,8 +699,6 @@ object StreamingStages {
       .select(graft.Tables.fmtTsSec(col("window.start")).as("win_start"),
         col("r"), col("col"), col("cnt"))
 
-  private val cmSinkId = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** q213: [[windowedCountMin]] as a REAL streaming query under the
     * gate (file source → watermarked windowed agg → complete-mode
     * memory sink, the q56 drive). The oracle rebuilds every populated
@@ -784,13 +709,9 @@ object StreamingStages {
   val q213StreamingCountmin: graft.OpSpec = graft.OpSpec(
     "q213_streaming_countmin",
     (s, dir) => {
-      val id = cmSinkId.incrementAndGet()
-      if (id > 1) s.catalog.dropTempView(s"q213_mem_${id - 1}")
-      val name = s"q213_mem_$id"
-      runToMemory(
+      drainToMemory(s, "q213",
         windowedCountMin(eventsStream(s, s"$dir/events.parquet")),
-        name, "complete").stop()
-      s.table(name)
+        "complete")
     },
     Some(s"""
       SELECT win_start, r, c AS col, CAST(COUNT(*) AS BIGINT) AS cnt
@@ -820,23 +741,16 @@ object StreamingStages {
     * 64-value batch fold over the sink — kept out of the stream so the
     * state stays 64 longs). */
   def windowedHll(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "1 hour")
-      .select(col("ts"),
-        md5(concat(lit("hllu:"), col("user_id").cast("string"))
-          .cast("binary")).as("h"))
-      .select(col("ts"),
-        (expr("CAST(conv(substring(h, 1, 2), 16, 10) AS BIGINT)") % 64)
-          .as("b"),
-        expr("CAST(conv(substring(h, 3, 15), 16, 10) AS BIGINT)").as("w"))
-      .withColumn("rho", when(col("w") === 0, lit(61L))
-        .otherwise(expr("CAST(61 - length(bin(w)) AS BIGINT)")))
-      .groupBy(window(col("ts"), "1 hour"), col("b"))
-      .agg(max(col("rho")).as("register"))
+    graft.ops.SketchOps.hllRegisters(
+        events
+          .withWatermark("ts", "1 hour")
+          .select(col("ts"),
+            md5(concat(lit("hllu:"), col("user_id").cast("string"))
+              .cast("binary")).as("h"))
+          .select(col("ts") +: graft.ops.SketchOps.hllBitCols: _*),
+        window(col("ts"), "1 hour"))
       .select(graft.Tables.fmtTsSec(col("window.start")).as("win_start"),
         col("b"), col("register"))
-
-  private val hllSinkId = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** q216: [[windowedHll]] as a REAL streaming query under the gate,
     * plus the batch readout: the sink's sparse registers are densified
@@ -855,13 +769,8 @@ object StreamingStages {
   val q216StreamingHll: graft.OpSpec = graft.OpSpec(
     "q216_streaming_hll",
     (s, dir) => {
-      val id = hllSinkId.incrementAndGet()
-      if (id > 1) s.catalog.dropTempView(s"q216_mem_${id - 1}")
-      val name = s"q216_mem_$id"
-      runToMemory(
-        windowedHll(eventsStream(s, s"$dir/events.parquet")),
-        name, "complete").stop()
-      s.table(name)
+      drainToMemory(s, "q216",
+          windowedHll(eventsStream(s, s"$dir/events.parquet")), "complete")
         .groupBy(col("win_start"))
         .agg(collect_list(struct(col("b"), col("register"))).as("rs"))
         .withColumn("z", expr("""
@@ -872,7 +781,7 @@ object StreamingStages {
                               CAST(0 AS BIGINT)) AS INT)) AS DOUBLE)),
             CAST(0 AS DOUBLE), (a, x) -> a + x)"""))
         .withColumn("est",
-          expr("7213e-4 / (1e0 + 1079e-3 / 64e0) * 64e0 * 64e0 / z"))
+          expr(s"${graft.ops.SketchOps.hllAlphaM2} / z"))
         .select(col("win_start"), explode(col("rs")).as("p"), col("est"))
         .select(col("win_start"), col("p.b").as("b"),
           col("p.register").as("register"), col("est"))
@@ -885,27 +794,11 @@ object StreamingStages {
           ${graft.ops.SketchOps.hllWDuck("hx")} AS w
         FROM (SELECT ts, md5('hllu:' || CAST(user_id AS VARCHAR)) AS hx
               FROM events)),
-      r AS (
-        SELECT win_start, b,
-          CAST(MAX(CASE WHEN w = 0 THEN 61
-                        ELSE 61 - length(format('{:b}', w)) END)
-               AS BIGINT) AS register
-        FROM bits GROUP BY 1, 2),
-      dense AS (
-        SELECT w.win_start, g.b, COALESCE(r.register, 0) AS register
-        FROM (SELECT DISTINCT win_start FROM r) w
-        CROSS JOIN (SELECT CAST(UNNEST(range(0, 64)) AS BIGINT) AS b) g
-        LEFT JOIN r ON r.win_start = w.win_start AND r.b = g.b),
-      z AS (
-        SELECT win_start,
-          list_reduce(
-            list_transform(list(register ORDER BY b),
-              x -> 1.0 / CAST(CAST(1 AS BIGINT) << CAST(x AS INT)
-                              AS DOUBLE)),
-            (a, x) -> a + x) AS z
-        FROM dense GROUP BY 1)
+      ${graft.ops.SketchOps.hllRegDuck("win_start")},
+      ${graft.ops.SketchOps.hllDenseZDuck("win_start",
+        "(SELECT DISTINCT win_start FROM r) w", "w")}
       SELECT r.win_start, r.b, r.register,
-        7213e-4 / (1e0 + 1079e-3 / 64e0) * 64e0 * 64e0 / z.z AS est
+        ${graft.ops.SketchOps.hllAlphaM2} / z.z AS est
       FROM r JOIN z ON z.win_start = r.win_start"""))
 
   /** The one foreachBatch driver of the persisted-state ingest sinks:
@@ -1036,6 +929,19 @@ object StreamingStages {
           buckets, path, batchId = Some(batchId))
     }
 
+  /** Reset rollup `tableName` (its table and its scratch directory),
+    * stage `rows` there as a four-file stream (repartitioned on `part`)
+    * and fold the stream into the rollup through [[streamIntoRollup]]. */
+  private def streamedRollup(s: SparkSession, rows: DataFrame, part: String,
+      keys: Seq[String], measures: Seq[String], tableName: String): Unit = {
+    val base = s"${graft.Tables.scratchDir}/$tableName"
+    s.sql(s"DROP TABLE IF EXISTS $tableName")
+    graft.io.IndexLifecycle.rmDir(base)
+    rows.repartition(4, col(part)).write.parquet(s"$base/stream")
+    streamIntoRollup(s, oneFilePerTrigger(s, s"$base/stream"), keys,
+      measures, tableName, 4, s"$base/tbl", s"$base/ckpt").stop()
+  }
+
   /** q228: the stream-maintained rollup under the bit-exact gate. The
     * events table arrives as a four-file stream; each micro-batch
     * appends partials; serving folds the stored partials. The oracle
@@ -1045,29 +951,11 @@ object StreamingStages {
   val q228StreamingRollup: graft.OpSpec = graft.OpSpec(
     "q228_streaming_rollup",
     (s, dir) => {
-      val tableName = "roll_q228"
-      val base = s"${graft.Tables.scratchDir}/roll_q228"
-      s.sql(s"DROP TABLE IF EXISTS $tableName")
-      graft.io.IndexLifecycle.rmDir(base)
-      graft.Tables.table(s, dir, "events")
-        .repartition(4, col("event_id"))
-        .write.parquet(s"$base/stream")
-      streamIntoRollup(s, oneFilePerTrigger(s, s"$base/stream"),
-        Seq("event_type"), Seq("value"), tableName, 4, s"$base/tbl",
-        s"$base/ckpt").stop()
-      graft.io.Sinks.readRollup(s, tableName, Seq("event_type"),
-          Seq("value"))
-        .select(col("event_type"), col("n"),
-          col("sum_value").cast("double").as("total"),
-          (col("sum_value").cast("double") / col("n")).as("avg_value"))
+      streamedRollup(s, graft.Tables.table(s, dir, "events"), "event_id",
+        Seq("event_type"), Seq("value"), "roll_q228")
+      graft.ops.CurationOps.eventRollup(s, "roll_q228")
     },
-    Some("""
-      SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-        CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS total,
-        CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) / COUNT(*)
-          AS avg_value
-      FROM events
-      GROUP BY event_type"""))
+    graft.ops.CurationOps.q227IncrementalRollup.oracle)
 
   /** q295: STREAMING MIXING WEIGHTS — q291's temperature-scaled
     * domain-sampling rule maintained ONLINE (the 23rd gated streaming
@@ -1083,32 +971,12 @@ object StreamingStages {
   val q295StreamingMixture: graft.OpSpec = graft.OpSpec(
     "q295_streaming_mixture",
     (s, dir) => {
-      val tableName = "mix_q295"
-      val base = s"${graft.Tables.scratchDir}/mix_q295"
-      s.sql(s"DROP TABLE IF EXISTS $tableName")
-      graft.io.IndexLifecycle.rmDir(base)
-      graft.Tables.table(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-        .repartition(4, col("doc_id"))
-        .write.parquet(s"$base/stream")
-      streamIntoRollup(s, oneFilePerTrigger(s, s"$base/stream"),
-        Seq("lang"), Seq("n_chars"), tableName, 4, s"$base/tbl",
-        s"$base/ckpt").stop()
-      val c = graft.io.Sinks.readRollup(s, tableName, Seq("lang"),
-          Seq("n_chars"))
-        .select(col("lang"), col("n").as("n_docs"))
-      val t = c.agg(sum(col("n_docs")).cast("long").as("n"))
-      val w = c.crossJoin(broadcast(t))
-        .withColumn("p",
-          col("n_docs").cast("double") / col("n").cast("double"))
-        .withColumn("w_raw", sqrt(col("p")))
-      val z = w.agg(expr(
-        """aggregate(sort_array(collect_list(struct(lang, w_raw))),
-           0e0, (acc, g) -> acc + g.w_raw)""").as("z"))
-      w.crossJoin(broadcast(z))
-        .select(col("lang"), col("n_docs"), col("p"),
-          (col("w_raw") / col("z")).as("weight"),
-          (col("w_raw") / col("z") / col("p")).as("boost"))
+      streamedRollup(s, graft.Tables.table(s, dir, "documents")
+          .select(col("doc_id"), col("lang"), col("n_chars")), "doc_id",
+        Seq("lang"), Seq("n_chars"), "mix_q295")
+      graft.ops.SampleOps.mixingWeights(
+        graft.io.Sinks.readRollup(s, "mix_q295", Seq("lang"), Seq("n_chars"))
+          .select(col("lang"), col("n").as("n_docs")))
     },
     graft.ops.SampleOps.q291MixingWeights.oracle)
 
@@ -1186,14 +1054,6 @@ object StreamingStages {
         s"$path/verdicts")
     }
 
-  /** q247: incremental SemDeDup fed by a STREAM — q242's trajectory
-    * with the two post-base generations arriving as a file stream in
-    * mtime (= vec_id) order, one micro-batch each. The base builds the
-    * index (batch); the stream pays only per-batch ingest; the unioned
-    * verdicts (base + streamed, read back from the verdict table) must
-    * equal the scratch frozen-centroid SemDeDup — q242's oracle
-    * verbatim. This gives the semantic index the same streaming half
-    * the vector index (q219) and the n-gram corpus index (q230) have. */
   /** The q247/q288 trajectory body, parameterized by the probe
     * fan-out: base half builds the index (batch), the two later
     * generations arrive as an mtime-ordered file stream (one
@@ -1227,6 +1087,14 @@ object StreamingStages {
       .select(col("cid"), col("vec_id"), col("verdict")))
   }
 
+  /** q247: incremental SemDeDup fed by a STREAM — q242's trajectory
+    * with the two post-base generations arriving as a file stream in
+    * mtime (= vec_id) order, one micro-batch each. The base builds the
+    * index (batch); the stream pays only per-batch ingest; the unioned
+    * verdicts (base + streamed, read back from the verdict table) must
+    * equal the scratch frozen-centroid SemDeDup — q242's oracle
+    * verbatim. This gives the semantic index the same streaming half
+    * the vector index (q219) and the n-gram corpus index (q230) have. */
   val q247StreamingSemdedup: graft.OpSpec = graft.OpSpec(
     "q247_streaming_semdedup",
     (s, dir) => semdedupStreamTrajectory(s, dir, "sem_q247", 1),
@@ -1289,8 +1157,6 @@ object StreamingStages {
         user_id, event_type, value, props
       FROM events"""))
 
-  private val clfSinkId = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** q271: STREAMING CLASSIFIER SERVING — train the q267 logistic
     * model on the batch corpus, then score an unbounded documents
     * stream with the frozen weights (file source → stateless row-local
@@ -1304,13 +1170,8 @@ object StreamingStages {
   val q271StreamingClassifier: graft.OpSpec = graft.OpSpec(
     "q271_streaming_classifier",
     (s, dir) => {
-      val id = clfSinkId.incrementAndGet()
-      if (id > 1) s.catalog.dropTempView(s"q271_mem_${id - 1}")
-      val name = s"q271_mem_$id"
-      val scored = graft.ops.ClassifierOps.scoreStream(s, dir,
-        documentsStream(s, s"$dir/documents.parquet").drop("ts"))
-      runToMemory(scored, name, "append").stop()
-      s.table(name)
+      drainToMemory(s, "q271", graft.ops.ClassifierOps.scoreStream(s, dir,
+        documentsStream(s, s"$dir/documents.parquet").drop("ts")), "append")
     },
     graft.ops.ClassifierOps.q267LogisticTrain.oracle)
 
@@ -1374,9 +1235,7 @@ object StreamingStages {
     },
     Some(s"""
       WITH base AS (
-        SELECT doc_id, ${graft.ops.TextOps.gramHashDuck} AS gsh
-        FROM (SELECT doc_id, ${graft.ops.TextOps.wordsDuck} AS words
-              FROM documents)),
+        ${graft.ops.TextOps.gramBaseDuck}),
       gl AS (
         SELECT doc_id,
           CASE WHEN doc_id % 10 <> 0 THEN 0
@@ -1396,18 +1255,7 @@ object StreamingStages {
         SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_novel
         FROM cum WHERE gen >= 1 AND c = 1 AND prior = 0
         GROUP BY 1)
-      SELECT b.doc_id,
-        CAST(len(b.gsh) AS BIGINT) AS n_grams,
-        COALESCE(n.n_novel, CAST(0 AS BIGINT)) AS n_novel,
-        CASE WHEN len(b.gsh) = 0 THEN 0e0
-             ELSE CAST(COALESCE(n.n_novel, 0) AS DOUBLE)
-                  / CAST(len(b.gsh) AS DOUBLE)
-        END AS novelty,
-        CASE WHEN len(b.gsh) = 0 THEN 'short'
-             WHEN 2 * COALESCE(n.n_novel, 0) < len(b.gsh)
-               THEN 'boilerplate'
-             ELSE 'novel' END AS verdict
-      FROM gl b LEFT JOIN novel n ON n.doc_id = b.doc_id
+      ${graft.ops.TextOps.noveltyTailDuck("gl")}
       WHERE b.gen >= 1"""))
 
   /** The oracle-checked streaming ops (SparkEntry registry hook). */

@@ -3789,6 +3789,24 @@ class OperatorSpec extends AnyFunSuite {
     assert(paths.map(_._2).sum == want)
   }
 
+  test("sessionization: a gap of exactly 30 minutes starts a new session, " +
+    "one microsecond less does not") {
+    import spark.implicits._
+    val t0 = java.time.Instant.parse("2024-01-01T00:00:00Z")
+    def at(us: Long) = java.sql.Timestamp.from(t0.plusNanos(us * 1000L))
+    val gap = 1800000000L // 30:00.000000 in µs
+    val ev = Seq(
+      (1L, at(0L)), (1L, at(gap)), // exactly 30 minutes apart
+      (2L, at(0L)), (2L, at(gap - 1L))) // 29:59.999999 apart
+      .toDF("user_id", "ts")
+    val sess = graft.ops.EventOps.sessionize(ev)
+      .select(col("user_id"), col("new_sess"), col("sid"))
+      .as[(Long, Int, Long)].collect().groupBy(_._1)
+      .view.mapValues(_.map(r => (r._2, r._3)).sorted.toSeq).toMap
+    assert(sess(1L) == Seq((1, 1L), (1, 2L)))
+    assert(sess(2L) == Seq((0, 1L), (1, 1L)))
+  }
+
   test("q98 trained k-means: full assignment mass, full dim coverage") {
     import spark.implicits._
     val rows = SparkEntry.queries("q98_kmeans_train")(spark, sf)
@@ -5331,17 +5349,25 @@ class OperatorSpec extends AnyFunSuite {
       val regressed = shuffleRowsOf(df.repartition(32, col("v")))
       assert(regressed >= 100000L,
         s"regression fixture did not shuffle the input: $regressed")
-      // the gate trips on the regression and stays quiet on identity
-      val base = Map("q" -> clean)
-      assert(BenchMetrics.gate(base, Map("q" -> regressed),
-        tol = 1.25, slack = 0L).nonEmpty, "gate missed the regression")
-      assert(BenchMetrics.gate(base, Map("q" -> clean),
-        tol = 1.25, slack = 0L).isEmpty, "gate false-positived")
-      // a new query (no baseline) passes; a retired one is skipped
-      assert(BenchMetrics.gate(base,
-        Map("q_new" -> 999999999L), tol = 1.25, slack = 0L).isEmpty)
-      assert(BenchMetrics.gate(Map("q_old" -> 1L),
-        Map.empty[String, Long], tol = 1.25, slack = 0L).isEmpty)
+      // the one plan gate, run on two bench records of these counts
+      // (row tolerance 1.25x, no slack): it trips on the regression and
+      // stays quiet on identity and on a query with no baseline
+      val tmp = java.nio.file.Files.createTempDirectory("plangate")
+      def record(name: String, rows: (String, Long)*): String = {
+        val f = tmp.resolve(name)
+        java.nio.file.Files.writeString(f, rows.map { case (q, r) =>
+          s""""$q": $r""" }.mkString("""{"shuffle_rows": {""", ", ", "}}"))
+        f.toString
+      }
+      def gate(cur: String): Int = scala.sys.process.Process(Seq(
+        "python3", "tools/plan_gate.py", record("base.json", "q" -> clean),
+        cur, "1.25", "0")).!
+      assert(gate(record("regressed.json", "q" -> regressed)) == 1,
+        "gate missed the regression")
+      assert(gate(record("same.json", "q" -> clean)) == 0,
+        "gate false-positived")
+      assert(gate(record("new.json", "q_new" -> 999999999L)) == 0,
+        "gate flagged a query with no baseline")
     } finally spark.sparkContext.removeSparkListener(tally)
   }
 
@@ -5459,6 +5485,26 @@ class OperatorSpec extends AnyFunSuite {
     val fp5 = hold.count(r => r.getAs[Long]("y") == 0L &&
       r.getAs[Double]("score") >= 0.5)
     assert(t5.getAs[Long]("tp") == tp5 && t5.getAs[Long]("fp") == fp5)
+  }
+
+  test("quality stage: empty, whitespace-only and punctuation-only " +
+    "documents score without an ANSI divide-by-zero") {
+    import spark.implicits._
+    // the naked n_punct/len and n_stop/n_words divisions would throw
+    // DIVIDE_BY_ZERO under ANSI mode for a zero-length or zero-word doc
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+    val docs = Seq((1L, ""), (2L, "   \t "), (3L, "?!..."),
+      (4L, "the cat sat on a mat.")).toDF("doc_id", "text")
+    val q = graft.ops.TextOps.qualityStage(docs)
+      .select(col("doc_id"), col("quality")).as[(Long, Double)]
+      .collect().toMap
+    assert(q(1L) == 0.0 && q(2L) == 0.0)
+    // one word of 5 punctuation chars, no stopword:
+    // 0.4 * 1/50 + 0.3 * (1 - 5/5) + 0.3 * 0/1
+    assert(q(3L) == 0.008)
+    // 6 words, 1 punctuation char in 21, 2 stopwords (the, a):
+    // 0.4 * 6/50 + 0.3 * 20/21 + 0.3 * 2/6 = 0.4337142857… → 0.433714
+    assert(q(4L) == 0.433714)
   }
 
   test("q276/q277 curation funnel: attribution partitions the corpus, " +

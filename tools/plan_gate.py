@@ -20,9 +20,10 @@ the SAME scale factor. Queries present on only one side are skipped
 Records carry the min across timed passes: partial-aggregation fallback
 under memory pressure inflates recordsWritten run-to-run (same plan
 measured at 45k and 301k rows), and fallback only inflates, so the
-per-pass min is the plan's intrinsic count. Mirrors
-graft.BenchMetrics.gate, which the sbt spec proves trips on an
-intentional regression.
+per-pass min is the plan's intrinsic count. The sbt spec "bench plan
+gate" runs this script on records of a measured regression and proves
+it trips (exit 1) on the regression and stays quiet (exit 0) on an
+identical record and on a query with no baseline.
 """
 import json
 import sys
