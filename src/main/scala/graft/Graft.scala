@@ -11,10 +11,11 @@ import org.apache.spark.sql.SparkSession
   */
 object Graft {
 
-  /** A pre-configured builder the caller can still override. */
+  /** A pre-configured builder the caller can still override; the
+    * native functions come from `spark.sql.extensions`, which
+    * [[Tables.configure]] sets. */
   def builder(): SparkSession.Builder =
     Tables.configure(SparkSession.builder())
-      .withExtensions(new GraftExtensions)
 
   /** Build (or get) the session and ensure the function registry has the
     * engine's natives even when an existing session is returned
@@ -29,8 +30,8 @@ object Graft {
     s
   }
 
-  /** The session of the engine's mains (Bench, Verify, PlanDump,
-    * Prof): `local[N]` with N shuffle partitions, N from
+  /** The session of the engine's mains (Bench, Verify, PlanDump):
+    * `local[N]` with N shuffle partitions, N from
     * `SPARK_GRAFT_CPUS` (else `defaultCpus`), the UI off and WARN
     * logging. */
   private[graft] def mainSession(defaultCpus: String): SparkSession = {

@@ -4,14 +4,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Persisted-index maintenance, written once for every family. Each
-  * family (corpus, gram, name, vector, semantic) is DECLARED here as
-  * an [[IndexTables]] value: its tombstone id column and its tables as
-  * (suffix, bucket key), with which tables are masked per id and which
-  * carry the `ingest_batch` tag. The steps every family shares run over
-  * that declaration; a family keeps only its kernels (building,
-  * ranking and coding rows, its aggregate folds, training) and lists
-  * its frames by suffix. The novelty index keeps one signed table and
-  * no tombstones, so it uses [[stagedSwap]] and [[resetPrefix]] alone.
+  * family (corpus, gram, name, vector, semantic, novelty) is DECLARED
+  * here as an [[IndexTables]] value: its tombstone id column and its
+  * tables as (suffix, bucket key), with which tables are masked per id
+  * and which carry the `ingest_batch` tag. The steps every family
+  * shares run over that declaration; a family keeps only its kernels
+  * (building, ranking and coding rows, its aggregate folds, training)
+  * and lists its frames by suffix.
+  *
+  * A table's bucket count is named once, by the write that creates
+  * it ([[writeTables]], or an [[appendTables]] that seeds a missing
+  * table); its catalog entry owns the layout from then on, and every
+  * later append and rewrite ([[stagedSwap]], so [[vacuum]] and the
+  * compactions) reads it back ([[Sinks.tableLayout]]).
   *
   *  - [[writeTables]]/[[appendTables]]: bucketed writes and appends
   *    (idempotent per micro-batch when a batch id is given), overlapped
@@ -101,6 +106,12 @@ object IndexLifecycle {
     IndexTable("semcents", "cid", single = true),
     IndexTable("members", "cid", masked = true, tagged = true))
 
+  /** Novelty index ([[graft.ops.TextOps.ingestNovelty]]): one signed
+    * gram-df table. It has no tombstones — a purge appends negated
+    * counts under its own tag — so no table is masked. */
+  val NoveltyIndexTables = IndexTables("g",
+    IndexTable("gramdf", "g", tagged = true))
+
   /** The tombstone table of a logical index prefix. */
   def tombstoneTable(prefix: String): String = s"${prefix}_tombstones"
 
@@ -125,11 +136,12 @@ object IndexLifecycle {
     })
 
   /** Append (suffix, rows) pairs to declared tables of `phys`; `path`
-    * only seeds a table that does not exist yet (appends follow the
-    * registered location). With a `batchId` each append is idempotent
-    * per micro-batch ([[Sinks.appendBucketedTablesIdempotent]], one
-    * fused probe for all of them); without one, the appends overlap
-    * and tagged tables get the -1 tag. */
+    * and `buckets` only seed a table that does not exist yet (appends
+    * follow the registered location and layout). With a `batchId`
+    * each append is idempotent per micro-batch
+    * ([[Sinks.appendBucketedTablesIdempotent]], one fused probe for all
+    * of them); without one, the appends overlap and tagged tables get
+    * the -1 tag. */
   def appendTables(s: SparkSession, f: IndexTables, phys: String,
       path: String, buckets: Int, batchId: Option[Long] = None)(
       rows: (String, DataFrame)*): Unit = {
@@ -189,14 +201,14 @@ object IndexLifecycle {
     * idempotent no-op; a crash before the final drop leaves tombstones
     * masking ids that no longer exist until the next maintenance run. */
   def vacuum(s: SparkSession, f: IndexTables, prefix: String,
-      phys: String, buckets: Int, newPath: String => String,
+      phys: String, newPath: String => String,
       folded: Map[String, DataFrame] = Map.empty): Unit = {
     val rewrites = f.tables.filter(t => t.masked || folded.contains(t.suffix))
       .map(t => t -> folded.getOrElse(t.suffix,
         readTable(s, f, t.suffix, prefix, phys, live = true)))
     Sinks.concurrently(rewrites.map { case (t, df) =>
-      () => stagedSwap(s, s"${phys}_${t.suffix}", tagged(t, df), t.key,
-        bucketsOf(t, buckets), newPath(t.suffix))
+      () => stagedSwap(s, s"${phys}_${t.suffix}", tagged(t, df),
+        newPath(t.suffix))
     })
     s.sql(s"DROP TABLE IF EXISTS ${tombstoneTable(prefix)}")
   }
@@ -268,19 +280,21 @@ object IndexLifecycle {
       // the catalog entry appears only after its single row is durable
       Sinks.bucketedTable(row, ptr, "gen", 1, s"$newPath/ptr_g$gen")
     else
-      stagedSwap(s, ptr, row, "gen", 1, s"$newPath/ptr_g$gen",
+      stagedSwap(s, ptr, row, s"$newPath/ptr_g$gen",
         stagingSuffix = "__retrain")
   }
 
-  /** Staged-swap rewrite of one bucketed table: `rows` land bucketed
-    * on `key` under `<tableName><stagingSuffix>` at `newPath`, then
-    * the public name is re-pointed there in one metadata statement
-    * and the staging registration dropped ([[Sinks.repointTable]]).
+  /** Staged-swap rewrite of one bucketed table: `rows` land in the
+    * table's REGISTERED bucket layout ([[Sinks.tableLayout]]; a table
+    * with none fails closed before any write) under
+    * `<tableName><stagingSuffix>` at `newPath`, then the public name
+    * is re-pointed there in one metadata statement and the staging
+    * registration dropped ([[Sinks.repointTable]]).
     *
     * File layout: every bucket file holds only its bucket's rows, but
-    * a bucket may span several files. `rows` is repartitioned on
-    * `key`, yet when it already hash-partitions on `key` into
-    * `buckets` partitions — a vacuum's masked read of the bucketed
+    * a bucket may span several files. `rows` is repartitioned on the
+    * key, yet when it already hash-partitions on the key into as many
+    * partitions as buckets — a vacuum's masked read of the bucketed
     * table itself — EnsureRequirements drops that repartition as
     * redundant, and DisableUnnecessaryBucketedScan then reads the
     * input as a plain file scan. Each write task then holds rows of
@@ -295,8 +309,8 @@ object IndexLifecycle {
     * once the swap is durable (the K7 archive discipline: never
     * destroy the input in the step that writes the output). */
   def stagedSwap(s: SparkSession, tableName: String, rows: DataFrame,
-      key: String, buckets: Int, newPath: String,
-      stagingSuffix: String = "__vacuum"): Unit = {
+      newPath: String, stagingSuffix: String = "__vacuum"): Unit = {
+    val (_, key, buckets) = Sinks.tableLayout(s, tableName)
     val staging = s"$tableName$stagingSuffix"
     s.sql(s"DROP TABLE IF EXISTS $staging")
     Sinks.bucketedTable(rows.repartition(buckets, col(key)),

@@ -155,15 +155,30 @@ object Sinks {
       .format("parquet")
       .saveAsTable(tableName)
 
-  /** Registered filesystem location of a catalog table. Appends must
-    * target THIS, not a caller-remembered path: after a compaction /
-    * vacuum / retrain re-pointed the table elsewhere, Spark rejects an
-    * append whose `path` option disagrees with the catalog
-    * (mismatched-table-location AnalysisException). */
-  private[graft] def tableLocation(
-      spark: org.apache.spark.sql.SparkSession, name: String): String =
-    spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(name)).location.getPath
+  /** Registered layout of a bucketed catalog table: (filesystem
+    * location, bucket column, bucket count), from ONE metadata lookup.
+    * The write that creates a table names its layout; every later
+    * append, rewrite and retrain reads it from here. Appends must
+    * target this location, not a caller-remembered path: after a
+    * compaction / vacuum / retrain re-pointed the table elsewhere,
+    * Spark rejects an append whose `path` option disagrees with the
+    * catalog (mismatched-table-location AnalysisException). A rewrite
+    * with a count other than the registered one would be accepted yet
+    * place rows in the wrong bucket files (a bucketed join on the key
+    * then silently misses matches), so a table with no single-column
+    * bucket spec fails closed here, before anything is written. */
+  private[graft] def tableLayout(spark: org.apache.spark.sql.SparkSession,
+      name: String): (String, String, Int) = {
+    val t = spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(name))
+    val spec = t.bucketSpec.filter(_.bucketColumnNames.size == 1)
+    require(spec.isDefined, s"table $name has no single-column bucket spec")
+    (t.location.getPath, spec.get.bucketColumnNames.head, spec.get.numBuckets)
+  }
+
+  /** Registered filesystem location of a bucketed catalog table. */
+  private[graft] def tableLocation(spark: org.apache.spark.sql.SparkSession,
+      name: String): String = tableLayout(spark, name)._1
 
   /** Append a batch to an existing [[bucketedTable]]: each append
     * writes its own bucketed+sorted file set (Spark requires the spec
@@ -176,20 +191,20 @@ object Sinks {
     * rewrite) is an optional throughput optimization, not a
     * correctness requirement.
     *
-    * The write targets the table's REGISTERED location when it exists
-    * ([[tableLocation]]) — so a stream resumed after a compaction /
+    * The write follows the table's REGISTERED layout when it exists
+    * ([[tableLayout]]) — so a stream resumed after a compaction /
     * vacuum moved the table keeps appending without the caller
-    * tracking the move; `path` only seeds a first append against a
-    * not-yet-existing table. */
+    * tracking the move; `key`, `buckets` and `path` only seed a first
+    * append against a not-yet-existing table. */
   def appendBucketedTable(df: DataFrame, tableName: String, key: String,
       buckets: Int, path: String): Unit = {
     val s = df.sparkSession
-    val loc = if (s.catalog.tableExists(tableName))
-      tableLocation(s, tableName) else path
+    val (loc, k, n) = if (s.catalog.tableExists(tableName))
+      tableLayout(s, tableName) else (path, key, buckets)
     df.write.mode(SaveMode.Append)
       .option("path", loc)
-      .bucketBy(buckets, key)
-      .sortBy(key)
+      .bucketBy(n, k)
+      .sortBy(k)
       .format("parquet")
       .saveAsTable(tableName)
   }
@@ -349,14 +364,13 @@ object Sinks {
     * [[repointTable]] for why the re-point itself has no unregistered
     * instant. */
   def compactBucketedTable(spark: org.apache.spark.sql.SparkSession,
-      tableName: String, key: String, buckets: Int,
-      oldPath: String, newPath: String): Unit =
+      tableName: String, oldPath: String, newPath: String): Unit =
     // the path read is a plain (unbucketed) scan, so stagedSwap's
-    // repartition(buckets, key) stays in the plan; it shares bucketBy's
-    // murmur3-pmod placement, so each write task holds exactly ONE
-    // bucket and emits exactly one file
+    // repartition on the registered key stays in the plan; it shares
+    // bucketBy's murmur3-pmod placement, so each write task holds
+    // exactly ONE bucket and emits exactly one file
     IndexLifecycle.stagedSwap(spark, tableName, spark.read.parquet(oldPath),
-      key, buckets, newPath, stagingSuffix = "__compacting")
+      newPath, stagingSuffix = "__compacting")
 
   /** Atomically re-point the PUBLIC `tableName` at the compacted file
     * set staged at `newPath` under `stagingTable`. The visibility-
@@ -449,7 +463,7 @@ object Sinks {
     * partials == summing the partials — associativity again). */
   def compactRollup(spark: org.apache.spark.sql.SparkSession,
       tableName: String, keys: Seq[String], measures: Seq[String],
-      buckets: Int, newPath: String): Unit =
+      newPath: String): Unit =
     IndexLifecycle.stagedSwap(spark, tableName,
       readRollup(spark, tableName, keys, measures)
         // folding erases per-batch ingest tags (-1 = "maintenance
@@ -457,7 +471,7 @@ object Sinks {
         // compact while the feeding stream is stopped at a committed
         // offset, or a replayed batch would no longer see its tag
         .withColumn("ingest_batch", lit(-1L)),
-      keys.head, buckets, newPath, stagingSuffix = "__compacting")
+      newPath, stagingSuffix = "__compacting")
 
   /** [[archiveShards]] outcome. `Refused` means nothing was touched;
     * `Archived` means the zip is durably written — a non-empty

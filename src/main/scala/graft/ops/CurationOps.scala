@@ -549,7 +549,7 @@ object CurationOps {
         ev.filter(col("event_id") % 4 === i), Seq("event_type"),
         Seq("value"), tableName, 4, s"$path/tbl"))
       graft.io.Sinks.compactRollup(s, tableName, Seq("event_type"),
-        Seq("value"), 4, s"$path/compact1")
+        Seq("value"), s"$path/compact1")
       // appends keep working on the compacted generation
       graft.io.Sinks.appendRollup(ev.filter(col("event_id") % 4 === 3),
         Seq("event_type"), Seq("value"), tableName, 4, s"$path/compact1")

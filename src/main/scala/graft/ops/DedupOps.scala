@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.{OpSpec, Tables}
 import graft.Tables._
-import graft.io.IndexLifecycle
+import graft.io.{IndexLifecycle, Sinks}
 import graft.io.IndexLifecycle.{CorpusIndexTables, GramIndexTables,
   NameIndexTables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -1012,7 +1012,7 @@ object DedupOps {
     * silently DROPPING bands that still hold live docs — missed
     * candidates, the non-conservative direction. */
   def purgeFromCorpusIndex(s: SparkSession, dead: DataFrame,
-      prefix: String, path: String, buckets: Int = 32): Unit = {
+      prefix: String, path: String): Unit = {
     val tomb = IndexLifecycle.tombstoneTable(prefix)
     val dAll = dead.select(col("doc_id")).distinct()
     val d = (if (s.catalog.tableExists(tomb))
@@ -1029,8 +1029,9 @@ object DedupOps {
         .join(broadcast(d), Seq("doc_id"), "left_semi")
         .groupBy(col("band_idx"), col("band_val"))
         .agg((-count(lit(1))).as("ccnt"))
-      IndexLifecycle.appendTables(s, CorpusIndexTables, prefix, path,
-        buckets)("bandcounts" -> neg)
+      val (_, _, n) = Sinks.tableLayout(s, s"${prefix}_bandcounts")
+      IndexLifecycle.appendTables(s, CorpusIndexTables, prefix, path, n)(
+        "bandcounts" -> neg)
     } finally d.unpersist()
   }
 
@@ -1052,8 +1053,8 @@ object DedupOps {
     * reclaimed too. The spec proves vacuum == build-from-survivors
     * table-for-table. */
   def vacuumCorpusIndex(s: SparkSession, prefix: String,
-      newPath: String, buckets: Int = 32): Unit =
-    IndexLifecycle.vacuum(s, CorpusIndexTables, prefix, prefix, buckets,
+      newPath: String): Unit =
+    IndexLifecycle.vacuum(s, CorpusIndexTables, prefix, prefix,
       sfx => s"$newPath/$sfx", Map("bandcounts" ->
         foldBandCounts(s.table(s"${prefix}_bandcounts"))
           .filter(col("ccnt") > 0)))
@@ -1928,16 +1929,17 @@ object DedupOps {
     * affecting results. Appends read only batch text + the frozen df
     * table (plan-audited). */
   def appendToGramIndex(s: SparkSession, newDocs: DataFrame,
-      prefix: String, path: String, buckets: Int = 32): Unit = {
+      prefix: String, path: String): Unit = {
+    val (_, _, n) = Sinks.tableLayout(s, s"${prefix}_ranked")
     val grams = hashedGramRows(newDocs).persist()
     val ranked = rankGrams(grams, s.table(s"${prefix}_gramdf")).persist()
     try {
       // first append materializes both caches; the remaining two
       // independent appends overlap (guide §2.6)
-      IndexLifecycle.appendTables(s, GramIndexTables, prefix, path,
-        buckets)("ranked" -> ranked)
-      IndexLifecycle.appendTables(s, GramIndexTables, prefix, path,
-        buckets)("prefixes" -> containPrefix(ranked),
+      IndexLifecycle.appendTables(s, GramIndexTables, prefix, path, n)(
+        "ranked" -> ranked)
+      IndexLifecycle.appendTables(s, GramIndexTables, prefix, path, n)(
+        "prefixes" -> containPrefix(ranked),
         "docgrams" -> docGramsOf(grams))
     } finally { ranked.unpersist(); grams.unpersist() }
   }
@@ -2079,8 +2081,8 @@ object DedupOps {
     * `gramdf` is untouched (the frozen order holds no per-doc rows),
     * and the tombstones are dropped last. */
   def vacuumGramIndex(s: SparkSession, prefix: String,
-      newPath: String, buckets: Int = 32): Unit =
-    IndexLifecycle.vacuum(s, GramIndexTables, prefix, prefix, buckets,
+      newPath: String): Unit =
+    IndexLifecycle.vacuum(s, GramIndexTables, prefix, prefix,
       sfx => s"$newPath/$sfx")
 
   /** Tombstone a takedown batch of names out of a persisted
@@ -2112,15 +2114,16 @@ object DedupOps {
     * insert into grams / prefixes / chars / tiny; `bigramDf` stays
     * frozen. Appends read only the batch + the frozen df table. */
   def appendToNameIndex(s: SparkSession, newNames: DataFrame,
-      prefix: String, path: String, buckets: Int = 32): Unit = {
+      prefix: String, path: String): Unit = {
+    val (_, _, n) = Sinks.tableLayout(s, s"${prefix}_grams")
     val grams = nameGramRows(newNames).persist()
     try {
       // first append materializes the gram cache; the remaining three
       // independent appends overlap (guide §2.6)
-      IndexLifecycle.appendTables(s, NameIndexTables, prefix, path,
-        buckets)("grams" -> grams)
-      IndexLifecycle.appendTables(s, NameIndexTables, prefix, path,
-        buckets)("prefixes" ->
+      IndexLifecycle.appendTables(s, NameIndexTables, prefix, path, n)(
+        "grams" -> grams)
+      IndexLifecycle.appendTables(s, NameIndexTables, prefix, path, n)(
+        "prefixes" ->
           namePrefixes(grams, s.table(s"${prefix}_bigramdf")),
         "chars" -> nameCharRows(newNames), "tiny" -> nameTinyRows(newNames))
     } finally grams.unpersist()
@@ -2177,8 +2180,8 @@ object DedupOps {
     * four per-name tables from their masked live views (staged swaps),
     * keep `bigramdf` frozen, drop the tombstones. */
   def vacuumNameIndex(s: SparkSession, prefix: String,
-      newPath: String, buckets: Int = 32): Unit =
-    IndexLifecycle.vacuum(s, NameIndexTables, prefix, prefix, buckets,
+      newPath: String): Unit =
+    IndexLifecycle.vacuum(s, NameIndexTables, prefix, prefix,
       sfx => s"$newPath/$sfx")
 
   /** q257: CONTAINMENT-INDEX PURGE under the bit-exact gate — the
@@ -2330,7 +2333,7 @@ object DedupOps {
         s"$path/idx", buckets = 8)
       purgeGramIndex(s, docs.filter(isDead).select(col("doc_id")),
         prefix, s"$path/idx")
-      vacuumGramIndex(s, prefix, s"$path/vac", buckets = 8)
+      vacuumGramIndex(s, prefix, s"$path/vac")
       incrementalContainment(docs.filter(isNew),
         readGramIndex(s, prefix))
     },
@@ -2354,7 +2357,7 @@ object DedupOps {
       purgeNameIndex(s,
         names.filter(col("b") === 1 || col("b") === 2).drop("b"),
         prefix, s"$path/idx")
-      vacuumNameIndex(s, prefix, s"$path/vac", buckets = 8)
+      vacuumNameIndex(s, prefix, s"$path/vac")
       incrementalFuzzyMatch(names.filter(col("b") === 0).drop("b"),
         readNameIndex(s, prefix))
     },

@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.{OpSpec, Tables}
 import graft.Tables._
-import graft.io.IndexLifecycle
+import graft.io.{IndexLifecycle, Sinks}
 import graft.io.IndexLifecycle.SemanticIndexTables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -385,7 +385,7 @@ object SemanticDedupOps {
     * first-arrival-wins: a later batch carrying a smaller id does not
     * retroactively flip an already-emitted verdict. */
   def ingestSemanticIndex(s: SparkSession, batch: DataFrame,
-      prefix: String, path: String, buckets: Int = 8,
+      prefix: String, path: String,
       batchId: Option[Long] = None, nprobe: Int = 1): DataFrame = {
     // pointer-resolved: after retrainSemanticIndex flipped the live
     // generation, ingests code against ITS frozen centroids and append
@@ -403,7 +403,7 @@ object SemanticDedupOps {
     // then commits the id atomically with the rows and an at-least-
     // once replay is skipped (a replay's verdicts recompute fine from
     // the already-stored members — assignment is deterministic)
-    appendMembers(s, asgB, phys, path, buckets, batchId)
+    appendMembers(s, asgB, phys, path, batchId)
     // members now include the batch itself, so within-batch smaller-id
     // pairs are covered by the same single equi-join; the tombstone
     // mask keeps purged vectors out of the witness set
@@ -427,20 +427,22 @@ object SemanticDedupOps {
     * of the same total-ordered argmax), same per-table append, same
     * replay contract (`batchId`). */
   def ingestSemanticIndexAppend(s: SparkSession, batch: DataFrame,
-      prefix: String, path: String, buckets: Int = 8,
+      prefix: String, path: String,
       batchId: Option[Long] = None): Unit = {
     val phys = IndexLifecycle.livePrefix(s, prefix)
     appendMembers(s, semAssign(batch, s.table(s"${phys}_semcents")), phys,
-      path, buckets, batchId)
+      path, batchId)
   }
 
-  /** Append cell-assigned rows to generation `phys`'s members table
-    * (`path` only seeds a first-build table; appends follow the
-    * registered location) and refresh its file listing. */
+  /** Append cell-assigned rows to generation `phys`'s members table,
+    * one partition per registered bucket (`path` only seeds a
+    * first-build table; appends follow the registered location) and
+    * refresh its file listing. */
   private def appendMembers(s: SparkSession, asg: DataFrame, phys: String,
-      path: String, buckets: Int, batchId: Option[Long]): Unit = {
-    IndexLifecycle.appendTables(s, SemanticIndexTables, phys, path,
-      buckets, batchId)("members" -> asg.repartition(buckets, col("cid")))
+      path: String, batchId: Option[Long]): Unit = {
+    val (_, _, n) = Sinks.tableLayout(s, s"${phys}_members")
+    IndexLifecycle.appendTables(s, SemanticIndexTables, phys, path, n,
+      batchId)("members" -> asg.repartition(n, col("cid")))
     s.catalog.refreshTable(s"${phys}_members")
   }
 
@@ -516,10 +518,9 @@ object SemanticDedupOps {
     * (the mask was already applied at read time); what vacuum buys is
     * the masked rows' scan + anti-join cost back. */
   def vacuumSemanticIndex(s: SparkSession, prefix: String,
-      newPath: String, buckets: Int = 8): Unit =
+      newPath: String): Unit =
     IndexLifecycle.vacuum(s, SemanticIndexTables, prefix,
-      IndexLifecycle.livePrefix(s, prefix), buckets,
-      sfx => s"$newPath/$sfx")
+      IndexLifecycle.livePrefix(s, prefix), sfx => s"$newPath/$sfx")
 
   /** Re-train the semantic index on its CURRENT stored corpus and flip
     * the generation pointer — the [[retrainVectorIndex]] maintenance
@@ -537,19 +538,21 @@ object SemanticDedupOps {
     * corpus re-assign — a scheduled maintenance job priced by the
     * q231/q248 dashboards, never an ingest-path cost. */
   def retrainSemanticIndex(s: SparkSession, prefix: String,
-      newPath: String, k: Int = KmK, buckets: Int = 8): Unit = {
-    val gen = stageRetrainSemanticIndex(s, prefix, newPath, k, buckets)
+      newPath: String, k: Int = KmK): Unit = {
+    val gen = stageRetrainSemanticIndex(s, prefix, newPath, k)
     publishRetrainSemanticIndex(s, prefix, gen, newPath)
   }
 
-  /** The staging half of [[retrainSemanticIndex]] — exposed within the
+  /** The staging half of [[retrainSemanticIndex]], in the live
+    * generation's registered bucket layout — exposed within the
     * library so the crash spec can kill the writer between staging and
     * publication. */
   private[graft] def stageRetrainSemanticIndex(s: SparkSession,
-      prefix: String, newPath: String, k: Int = KmK,
-      buckets: Int = 8): Long = {
+      prefix: String, newPath: String, k: Int = KmK): Long = {
     val (gen, phys) = IndexLifecycle.stageGeneration(s,
       SemanticIndexTables, prefix)
+    val (_, _, n) = Sinks.tableLayout(s,
+      s"${IndexLifecycle.generationPrefix(prefix, gen - 1L)}_members")
     // the stored member floats ARE the corpus snapshot — no source
     // rescan; parquet round-trips them bit-exactly, so training here
     // equals training on the original vectors. SURVIVORS only: the
@@ -557,8 +560,7 @@ object SemanticDedupOps {
     // tombstones dropped at publish (the vector-retrain contract).
     val corpus = liveSemanticMembers(s, prefix)
       .select(col("vec_id"), col("embedding"), col("nrm"))
-    buildSemanticIndexTables(s, corpus, phys, s"$newPath/g$gen", k,
-      buckets)
+    buildSemanticIndexTables(s, corpus, phys, s"$newPath/g$gen", k, n)
     gen
   }
 

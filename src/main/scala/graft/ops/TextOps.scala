@@ -2,6 +2,8 @@ package graft.ops
 
 import graft.{OpSpec, Tables}
 import graft.Tables._
+import graft.io.{IndexLifecycle, Sinks}
+import graft.io.IndexLifecycle.NoveltyIndexTables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1981,13 +1983,12 @@ object TextOps {
     * hash (the ingest join key). The corpus text is scanned ONCE, here;
     * every later batch scores against these 16-byte rows. */
   def writeNoveltyIndex(docs: DataFrame, prefix: String, path: String,
-      buckets: Int = 8): Unit = {
-    val g = gramRowsInline(docs)
-      .groupBy(col("g")).agg(count(lit(1)).as("df"))
-      .withColumn("ingest_batch", lit(-1L))
-    graft.io.Sinks.bucketedTable(g.repartition(buckets, col("g")),
-      s"${prefix}_gramdf", "g", buckets, s"$path/gramdf")
-  }
+      buckets: Int = 8): Unit =
+    IndexLifecycle.writeTables(NoveltyIndexTables, prefix, path, buckets)(
+      "gramdf" -> gramRowsInline(docs)
+        .groupBy(col("g")).agg(count(lit(1)).as("df"))
+        .withColumn("ingest_batch", lit(-1L))
+        .repartition(buckets, col("g")))
 
   /** The LAZY scoring half of [[ingestNovelty]] — exposed within the
     * library so the plan audit can prove the batch is scored from the
@@ -2047,25 +2048,18 @@ object TextOps {
     * rescanned; the only corpus-sized touch is the bucketed index side
     * of one equi-join. */
   def ingestNovelty(s: SparkSession, batch: DataFrame, prefix: String,
-      buckets: Int = 8, batchId: Option[Long] = None): DataFrame = {
+      batchId: Option[Long] = None): DataFrame = {
     val (report, bdf, cached) = scoreNoveltyBatch(s, batch, prefix,
       batchId)
     // seal the verdicts, THEN append — a lazily-evaluated report would
     // otherwise see the batch's own grams in the index and zero itself
     val out = report.localCheckpoint()
-    val rows = bdf.select(col("g"), col("df"))
-    // location resolved from the catalog (the table must exist);
-    // streaming callers get the replay-skip/heal append keyed on their
-    // micro-batch id
-    batchId match {
-      case Some(id) =>
-        graft.io.Sinks.appendBucketedTableIdempotent(s, rows, id,
-          s"${prefix}_gramdf", "g", buckets, ""); ()
-      case None =>
-        graft.io.Sinks.appendBucketedTable(
-          rows.withColumn("ingest_batch", lit(-2L)),
-          s"${prefix}_gramdf", "g", buckets, "")
-    }
+    // the build created the table, so its layout is read (and `path`
+    // never seeds); streaming callers get the replay-skip/heal append
+    // keyed on their micro-batch id
+    val (_, _, n) = Sinks.tableLayout(s, s"${prefix}_gramdf")
+    IndexLifecycle.appendTables(s, NoveltyIndexTables, prefix, "", n,
+      batchId)("gramdf" -> bdf.select(col("g"), col("df")))
     // both consumers of the cached batch grams have run (verdicts
     // checkpointed, gram rows appended) — release the executor blocks
     // NOW instead of leaning on GC-driven ContextCleaner, which in
@@ -2077,9 +2071,9 @@ object TextOps {
 
   /** Tag-space encoding for novelty takedowns: takedown `t ≥ 0` lands
     * in the `ingest_batch` column as `-4 - t` — disjoint by
-    * construction from the build/vacuum tag (-1), the non-stream
-    * ingest tag (-2), the legacy purge tag (-3) and streaming batch
-    * ids (≥ 0), so the skip/heal replay probe can key on it. */
+    * construction from the build/vacuum/batch-ingest tag (-1) and
+    * streaming batch ids (≥ 0), so the skip/heal replay probe can key
+    * on it. */
   private[graft] def noveltyTakedownTag(takedownId: Long): Long =
     -4L - takedownId
 
@@ -2106,16 +2100,16 @@ object TextOps {
     * re-tags -1 — runs only once in-flight takedowns are durably
     * committed (the shared maintenance-quiesce contract). */
   def purgeNoveltyIndex(s: SparkSession, docs: DataFrame,
-      prefix: String, takedownId: Long, buckets: Int = 8): Unit = {
+      prefix: String, takedownId: Long): Unit = {
     require(takedownId >= 0L, s"takedownId must be >= 0: $takedownId")
-    // inline-generator gram rows (the writeNoveltyIndex note)
+    // inline-generator gram rows (the writeNoveltyIndex note); the
+    // layout is read from the table, as in ingestNovelty
     val neg = gramRowsInline(docs)
       .groupBy(col("g"))
       .agg((count(lit(1)) * lit(-1L)).as("df"))
-    graft.io.Sinks.appendBucketedTableIdempotent(s, neg,
-      noveltyTakedownTag(takedownId), s"${prefix}_gramdf", "g",
-      buckets, "") // location resolved from the catalog
-    ()
+    val (_, _, n) = Sinks.tableLayout(s, s"${prefix}_gramdf")
+    IndexLifecycle.appendTables(s, NoveltyIndexTables, prefix, "", n,
+      Some(noveltyTakedownTag(takedownId)))("gramdf" -> neg)
   }
 
   /** Fold the novelty index's appended generations and purge negations
@@ -2128,13 +2122,11 @@ object TextOps {
     * a committed offset (the maintenance contract every compaction in
     * this engine shares). */
   def vacuumNoveltyIndex(s: SparkSession, prefix: String,
-      newPath: String, buckets: Int = 8): Unit =
-    graft.io.IndexLifecycle.stagedSwap(s, s"${prefix}_gramdf",
-      s.table(s"${prefix}_gramdf")
+      newPath: String): Unit =
+    IndexLifecycle.vacuum(s, NoveltyIndexTables, prefix, prefix,
+      _ => newPath, Map("gramdf" -> s.table(s"${prefix}_gramdf")
         .groupBy(col("g")).agg(sum(col("df")).as("df"))
-        .filter(col("df") > 0L)
-        .withColumn("ingest_batch", lit(-1L)),
-      "g", buckets, newPath)
+        .filter(col("df") > 0L)))
 
   /** q285: NOVELTY-INDEX PURGE under the bit-exact gate — the
     * takedown quarter of the corpus (% 4 = 1 among non-batch docs) is
@@ -2152,7 +2144,7 @@ object TextOps {
       val isDead = col("doc_id") % 10 =!= 0 && col("doc_id") % 4 === 1
       val prefix = "nvx_q285"
       val path = s"${graft.Tables.scratchDir}/nvx_q285"
-      graft.io.IndexLifecycle.resetPrefix(s, prefix, path)
+      IndexLifecycle.resetPrefix(s, prefix, path)
       writeNoveltyIndex(docs.filter(!isNew), prefix, path)
       purgeNoveltyIndex(s, docs.filter(isDead), prefix, takedownId = 0L)
       ingestNovelty(s, docs.filter(isNew), prefix)
@@ -2180,7 +2172,7 @@ object TextOps {
       val isDead = col("doc_id") % 10 =!= 0 && col("doc_id") % 4 === 1
       val prefix = "nvx_q286"
       val path = s"${graft.Tables.scratchDir}/nvx_q286"
-      graft.io.IndexLifecycle.resetPrefix(s, prefix, path)
+      IndexLifecycle.resetPrefix(s, prefix, path)
       writeNoveltyIndex(docs.filter(!isNew), prefix, s"$path/idx")
       purgeNoveltyIndex(s, docs.filter(isDead), prefix, takedownId = 0L)
       vacuumNoveltyIndex(s, prefix, s"$path/vac")
@@ -2204,7 +2196,7 @@ object TextOps {
       val isNew = col("doc_id") % 10 === 0
       val prefix = "nvx_q283"
       val path = s"${graft.Tables.scratchDir}/nvx_q283"
-      graft.io.IndexLifecycle.resetPrefix(s, prefix, path)
+      IndexLifecycle.resetPrefix(s, prefix, path)
       writeNoveltyIndex(docs.filter(!isNew), prefix, path)
       ingestNovelty(s, docs.filter(isNew), prefix)
     },

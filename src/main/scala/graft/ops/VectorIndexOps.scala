@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.{OpSpec, Tables}
 import graft.Tables._
-import graft.io.IndexLifecycle
+import graft.io.{IndexLifecycle, Sinks}
 import graft.io.IndexLifecycle.VectorIndexTables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -181,16 +181,17 @@ object VectorIndexOps {
     * the same batch is skipped
     * ([[graft.io.Sinks.appendBucketedTableIdempotent]]). */
   def appendToVectorIndex(s: SparkSession, newVecs: DataFrame,
-      prefix: String, path: String, buckets: Int = 8,
+      prefix: String, path: String,
       batchId: Option[Long] = None): Unit = {
     // ONE pointer resolve per append (guide §1, coalesce the
     // generation-pointer reads); the append follows the live codes
-    // table's registered location, so a vacuum/retrain move needs no
-    // caller-tracked path — `path` only seeds a first append
+    // table's registered location and layout, so a vacuum/retrain move
+    // needs no caller-tracked path or count
     val phys = IndexLifecycle.livePrefix(s, prefix)
+    val (_, _, n) = Sinks.tableLayout(s, s"${phys}_codes")
     val coded = codeVectors(newVecs, s.table(s"${phys}_coarse"),
       s.table(s"${phys}_codebooks"))
-    IndexLifecycle.appendTables(s, VectorIndexTables, phys, path, buckets,
+    IndexLifecycle.appendTables(s, VectorIndexTables, phys, path, n,
       batchId)("codes" -> coded)
   }
 
@@ -235,9 +236,9 @@ object VectorIndexOps {
     * spec proves the rewrite equals a from-scratch rebuild on the
     * surviving corpus. */
   def vacuumVectorIndex(s: SparkSession, prefix: String,
-      newCodesPath: String, buckets: Int = 8): Unit =
+      newCodesPath: String): Unit =
     IndexLifecycle.vacuum(s, VectorIndexTables, prefix,
-      IndexLifecycle.livePrefix(s, prefix), buckets, _ => newCodesPath)
+      IndexLifecycle.livePrefix(s, prefix), _ => newCodesPath)
 
   /** Compact the codes table's append-accreted file sets back to one
     * file per bucket — the periodic maintenance pass after N daily
@@ -249,11 +250,10 @@ object VectorIndexOps {
     * bucket spec, and serving are unchanged (spec-proven); only the
     * file count drops. */
   def compactVectorIndex(s: SparkSession, prefix: String,
-      oldCodesPath: String, newCodesPath: String,
-      buckets: Int = 8): Unit =
-    graft.io.Sinks.compactBucketedTable(s,
-      s"${IndexLifecycle.livePrefix(s, prefix)}_codes", "cell",
-      buckets, oldCodesPath, newCodesPath)
+      oldCodesPath: String, newCodesPath: String): Unit =
+    Sinks.compactBucketedTable(s,
+      s"${IndexLifecycle.livePrefix(s, prefix)}_codes", oldCodesPath,
+      newCodesPath)
 
   /** RE-TRAIN a persisted [[VectorIndex]] from the CURRENT corpus —
     * the actuator for q231's cell-balance dashboard. Appends code
@@ -289,25 +289,25 @@ object VectorIndexOps {
     * maintenance window must drain appends first — the
     * appendBucketedTableIdempotent contract extended to generations. */
   def retrainVectorIndex(s: SparkSession, corpus: DataFrame,
-      prefix: String, newPath: String, buckets: Int = 8): Unit = {
-    val gen = stageRetrainVectorIndex(s, corpus, prefix, newPath,
-      buckets)
+      prefix: String, newPath: String): Unit = {
+    val gen = stageRetrainVectorIndex(s, corpus, prefix, newPath)
     publishRetrainVectorIndex(s, prefix, gen, newPath)
   }
 
   /** The staging half of [[retrainVectorIndex]]: train + re-code into
-    * `<prefix>_r<gen>_*` tables that nothing references yet. Exposed
-    * within the library so the crash spec can kill the writer between
-    * staging and publication. */
+    * `<prefix>_r<gen>_*` tables that nothing references yet, in the
+    * live generation's registered bucket layout. Exposed within the
+    * library so the crash spec can kill the writer between staging and
+    * publication. */
   private[graft] def stageRetrainVectorIndex(s: SparkSession,
-      corpus: DataFrame, prefix: String, newPath: String,
-      buckets: Int = 8): Long = {
+      corpus: DataFrame, prefix: String, newPath: String): Long = {
     val (gen, phys) = IndexLifecycle.stageGeneration(s,
       VectorIndexTables, prefix)
+    val (_, _, n) = Sinks.tableLayout(s,
+      s"${IndexLifecycle.generationPrefix(prefix, gen - 1L)}_codes")
     val survivors = IndexLifecycle.maskTombstones(s, VectorIndexTables,
       prefix, corpus)
-    buildVectorIndex(s, survivors, survivors, phys, s"$newPath/g$gen",
-      buckets)
+    buildVectorIndex(s, survivors, survivors, phys, s"$newPath/g$gen", n)
     gen
   }
 

@@ -1047,8 +1047,7 @@ object StreamingStages {
     ingestEachBatch(s, docs, checkpointDir,
       Seq(s"${prefix}_members", s"${prefix}_verdicts")) { (batch, batchId) =>
       val verdicts = graft.ops.SemanticDedupOps.ingestSemanticIndex(
-        s, batch, prefix, path, buckets, batchId = Some(batchId),
-        nprobe = nprobe)
+        s, batch, prefix, path, batchId = Some(batchId), nprobe = nprobe)
       graft.io.Sinks.appendBucketedTableIdempotent(s, verdicts,
         batchId, s"${prefix}_verdicts", "vec_id", buckets,
         s"$path/verdicts")
@@ -1191,7 +1190,7 @@ object StreamingStages {
     ingestEachBatch(s, docs, checkpointDir,
       Seq(s"${prefix}_gramdf", s"${prefix}_verdicts")) { (batch, batchId) =>
       val report = graft.ops.TextOps.ingestNovelty(
-        s, batch, prefix, buckets, batchId = Some(batchId))
+        s, batch, prefix, batchId = Some(batchId))
       graft.io.Sinks.appendBucketedTableIdempotent(s, report,
         batchId, s"${prefix}_verdicts", "doc_id", buckets,
         s"${graft.Tables.scratchDir}/${prefix}_verdicts")

@@ -737,8 +737,7 @@ class OperatorSpec extends AnyFunSuite {
           s"${viewSets.keySet.filter(k => viewSets(k) != scratchSets(k))}")
       // persisted purge: must read only index tables, never corpus text
       val purgePlans = capturePlans(atLeast = 2) {
-        DedupOps.purgeFromCorpusIndex(spark, dead, "ut_cpg", idxDir,
-          buckets = 4)
+        DedupOps.purgeFromCorpusIndex(spark, dead, "ut_cpg", idxDir)
       }
       purgePlans.foreach(p => assert(!p.contains(corpusDir),
         s"purge re-scanned corpus text:\n$p"))
@@ -750,14 +749,13 @@ class OperatorSpec extends AnyFunSuite {
       assert(after == Map(10L -> "keep", 20L -> "keep", 30L -> "keep"),
         after.toString)
       // re-purging the same ids must not double-subtract band counts
-      DedupOps.purgeFromCorpusIndex(spark, dead, "ut_cpg", idxDir,
-        buckets = 4)
+      DedupOps.purgeFromCorpusIndex(spark, dead, "ut_cpg", idxDir)
       assert(tableSets(DedupOps.readCorpusIndexLive(spark, "ut_cpg"))
         == scratchSets, "re-purge was not idempotent")
       // vacuum: physical tables now EQUAL the survivor build, the
       // tombstones are gone, and verdicts are unchanged
       val vacDir = tmp("cpg4")
-      DedupOps.vacuumCorpusIndex(spark, "ut_cpg", vacDir, buckets = 4)
+      DedupOps.vacuumCorpusIndex(spark, "ut_cpg", vacDir)
       assert(!spark.catalog.tableExists("ut_cpg_tombstones"))
       val vac = DedupOps.readCorpusIndex(spark, "ut_cpg")
       assert(tableSets(vac) == scratchSets,
@@ -775,7 +773,7 @@ class OperatorSpec extends AnyFunSuite {
       graft.io.Sinks.appendBucketedTable(Seq(3L).toDF("doc_id"),
         "ut_cpg_tombstones", "doc_id", 1, s"$vacDir/tombstones")
       DedupOps.purgeFromCorpusIndex(spark, Seq(3L).toDF("doc_id"),
-        "ut_cpg", vacDir, buckets = 4)
+        "ut_cpg", vacDir)
       val liveRetry = DedupOps.readCorpusIndexLive(spark, "ut_cpg")
       val scratch46 = DedupOps.buildCorpusIndex(
         corpus.filter(col("doc_id").isin(4L, 6L)))
@@ -829,8 +827,7 @@ class OperatorSpec extends AnyFunSuite {
         "ut_gxi", idxI, buckets = 4)
       val appendPlans = capturePlans(atLeast = 3) {
         DedupOps.appendToGramIndex(spark,
-          spark.read.parquet(s"$gen2/documents.parquet"), "ut_gxi", idxI,
-          buckets = 4)
+          spark.read.parquet(s"$gen2/documents.parquet"), "ut_gxi", idxI)
       }
       appendPlans.foreach(p => assert(!p.contains(gen1),
         s"gram append re-scanned prior corpus text:\n$p"))
@@ -878,8 +875,7 @@ class OperatorSpec extends AnyFunSuite {
         "ut_nxi", idxI, buckets = 4)
       val appendPlans = capturePlans(atLeast = 4) {
         DedupOps.appendToNameIndex(spark,
-          spark.read.parquet(s"$gen2/names.parquet"), "ut_nxi", idxI,
-          buckets = 4)
+          spark.read.parquet(s"$gen2/names.parquet"), "ut_nxi", idxI)
       }
       appendPlans.foreach(p => assert(!p.contains(gen1),
         s"name append re-scanned prior corpus names:\n$p"))
@@ -919,8 +915,7 @@ class OperatorSpec extends AnyFunSuite {
       val before = spark.table("ut_cbt").as[(Long, String)].collect().toSet
       assert(before.size == 80 && files(pathA) > 4,
         s"${before.size} rows, ${files(pathA)} files")
-      graft.io.Sinks.compactBucketedTable(spark, "ut_cbt", "k", 4,
-        pathA, pathB)
+      graft.io.Sinks.compactBucketedTable(spark, "ut_cbt", pathA, pathB)
       val after = spark.table("ut_cbt").as[(Long, String)].collect().toSet
       assert(after == before, "compaction changed content")
       assert(files(pathB) <= 4, s"${files(pathB)} files after compaction")
@@ -978,8 +973,7 @@ class OperatorSpec extends AnyFunSuite {
         "kill-point-2 replay should leak the staging name")
       // RECOVERY: the next maintenance run's leading DROP IF EXISTS
       // clears the leaked staging registration and converges.
-      graft.io.Sinks.compactBucketedTable(spark, "ut_cbx", "k", 4,
-        pathB, pathC)
+      graft.io.Sinks.compactBucketedTable(spark, "ut_cbx", pathB, pathC)
       assert(readPublic() == before, "recovery run changed content")
       assert(!spark.catalog.tableExists("ut_cbx__compacting"),
         "recovery left the staging name registered")
@@ -1068,7 +1062,7 @@ class OperatorSpec extends AnyFunSuite {
         px, s"$base/idx", buckets = 2)
       DedupOps.purgeGramIndex(spark, Seq(1L).toDF("doc_id"), px,
         s"$base/idx")
-      DedupOps.vacuumGramIndex(spark, px, s"$base/vac", buckets = 2)
+      DedupOps.vacuumGramIndex(spark, px, s"$base/vac")
       assert(!spark.catalog.tableExists(s"${px}_tombstones"),
         "vacuum left the folded tombstones behind")
       assert(spark.table(s"${px}_ranked")
@@ -1079,7 +1073,7 @@ class OperatorSpec extends AnyFunSuite {
       // catalog-resolved, so the vacuum's move is invisible to callers
       DedupOps.appendToGramIndex(spark,
         Seq(3L -> ("beta gamma delta " + other)).toDF("doc_id", "text"),
-        px, s"$base/idx", buckets = 2)
+        px, s"$base/idx")
       val pairs = DedupOps.incrementalContainment(
         Seq(10L -> other).toDF("doc_id", "text"),
         DedupOps.readGramIndex(spark, px))
@@ -2985,7 +2979,7 @@ class OperatorSpec extends AnyFunSuite {
       // unchanged, and a post-compaction append still folds correctly
       val pC = tmp()
       graft.io.Sinks.compactRollup(spark, tA, Seq("event_type"),
-        Seq("value"), 2, pC)
+        Seq("value"), pC)
       assert(spark.table(tA).count() == keyDomain.toLong,
         "compaction did not collapse to one partial per key")
       assert(fold(tA) == scratch, "compaction changed the fold")
@@ -5065,7 +5059,7 @@ class OperatorSpec extends AnyFunSuite {
       Sinks.bucketedTable(Seq((1L, "a"), (2L, "b"), (3L, "c"))
         .toDF("id", "v"), t, "id", 2, s"$base/d0")
       IndexLifecycle.stagedSwap(spark, t,
-        spark.table(t).filter(col("id") =!= 2L), "id", 2, s"$base/d1")
+        spark.table(t).filter(col("id") =!= 2L), s"$base/d1")
       assert(spark.catalog.tableExists(t))
       assert(spark.table(t).collect().map(_.getLong(0)).toSet
         == Set(1L, 3L), "staged swap changed contents")
@@ -5146,8 +5140,8 @@ class OperatorSpec extends AnyFunSuite {
         (px, p) => DedupOps.writeCorpusIndex(
           DedupOps.buildCorpusIndex(texts), px, p, buckets = 2),
         (px, p) => DedupOps.purgeFromCorpusIndex(spark,
-          Seq(1L).toDF("doc_id"), px, p, buckets = 2),
-        (px, p) => DedupOps.vacuumCorpusIndex(spark, px, p, buckets = 2),
+          Seq(1L).toDF("doc_id"), px, p),
+        (px, p) => DedupOps.vacuumCorpusIndex(spark, px, p),
         (px, live) => frames(
           if (live) DedupOps.readCorpusIndexLive(spark, px)
           else DedupOps.readCorpusIndex(spark, px))),
@@ -5156,7 +5150,7 @@ class OperatorSpec extends AnyFunSuite {
           px, p, buckets = 2),
         (px, p) => DedupOps.purgeGramIndex(spark, Seq(1L).toDF("doc_id"),
           px, p),
-        (px, p) => DedupOps.vacuumGramIndex(spark, px, p, buckets = 2),
+        (px, p) => DedupOps.vacuumGramIndex(spark, px, p),
         (px, live) => frames(
           if (live) DedupOps.readGramIndexLive(spark, px)
           else DedupOps.readGramIndex(spark, px))),
@@ -5165,7 +5159,7 @@ class OperatorSpec extends AnyFunSuite {
           px, p, buckets = 2),
         (px, p) => DedupOps.purgeNameIndex(spark,
           Seq("alphabet").toDF("p_name"), px, p),
-        (px, p) => DedupOps.vacuumNameIndex(spark, px, p, buckets = 2),
+        (px, p) => DedupOps.vacuumNameIndex(spark, px, p),
         (px, live) => frames(
           if (live) DedupOps.readNameIndexLive(spark, px)
           else DedupOps.readNameIndex(spark, px))),
@@ -5261,20 +5255,20 @@ class OperatorSpec extends AnyFunSuite {
         (px, p) => DedupOps.writeCorpusIndex(
           DedupOps.buildCorpusIndex(texts), px, p, buckets = 2),
         (px, p) => DedupOps.purgeFromCorpusIndex(spark,
-          Seq(1L).toDF("doc_id"), px, p, buckets = 2),
-        (px, p) => DedupOps.vacuumCorpusIndex(spark, px, p, buckets = 2)),
+          Seq(1L).toDF("doc_id"), px, p),
+        (px, p) => DedupOps.vacuumCorpusIndex(spark, px, p)),
       ("gram", GramIndexTables,
         (px, p) => DedupOps.writeGramIndex(DedupOps.buildGramIndex(texts),
           px, p, buckets = 2),
         (px, p) => DedupOps.purgeGramIndex(spark, Seq(1L).toDF("doc_id"),
           px, p),
-        (px, p) => DedupOps.vacuumGramIndex(spark, px, p, buckets = 2)),
+        (px, p) => DedupOps.vacuumGramIndex(spark, px, p)),
       ("name", NameIndexTables,
         (px, p) => DedupOps.writeNameIndex(DedupOps.buildNameIndex(names),
           px, p, buckets = 2),
         (px, p) => DedupOps.purgeNameIndex(spark,
           Seq("alphabet").toDF("p_name"), px, p),
-        (px, p) => DedupOps.vacuumNameIndex(spark, px, p, buckets = 2)),
+        (px, p) => DedupOps.vacuumNameIndex(spark, px, p)),
       ("vector", VectorIndexTables,
         (px, p) => VectorIndexOps.buildVectorIndex(spark, vecs, vecs, px, p),
         (px, p) => VectorIndexOps.deleteFromVectorIndex(spark,
@@ -5322,6 +5316,94 @@ class OperatorSpec extends AnyFunSuite {
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t")))
       spark.catalog.clearCache()
     }
+  }
+
+  test("IndexLifecycle layout: a gram index built with 4 buckets keeps " +
+    "(g, 4) through a purge and a vacuum given no count, and its " +
+    "bucketed self-join matches a survivor build") {
+    import spark.implicits._
+    import graft.io.IndexLifecycle
+    import graft.ops.DedupOps
+    import org.apache.spark.sql.catalyst.TableIdentifier
+    import org.apache.spark.sql.execution.datasources.BucketingUtils
+    val base = java.nio.file.Files.createTempDirectory("lay").toString
+    val tag = base.replaceAll("[^A-Za-z0-9]", "").takeRight(8)
+    val (px, pxS) = (s"ut_lay$tag", s"ut_lays$tag")
+    val docs = (1L to 40L).map(i => i -> (0 until 12)
+      .map(j => s"w${(i * 7 + j * 3) % 29}").mkString(" "))
+      .toDF("doc_id", "text")
+    val dead = col("doc_id") % 3 === 0
+    val bcast = "spark.sql.autoBroadcastJoinThreshold"
+    val prevBcast = spark.conf.get(bcast)
+    try {
+      DedupOps.writeGramIndex(DedupOps.buildGramIndex(docs), px,
+        s"$base/idx", buckets = 4)
+      DedupOps.purgeGramIndex(spark, docs.filter(dead).select(col("doc_id")),
+        px, s"$base/idx")
+      DedupOps.vacuumGramIndex(spark, px, s"$base/vac")
+      Seq("ranked", "prefixes").foreach { sfx =>
+        val spec = spark.sessionState.catalog
+          .getTableMetadata(TableIdentifier(s"${px}_$sfx")).bucketSpec
+        assert(spec.map(b => (b.bucketColumnNames, b.numBuckets))
+          == Some((Seq("g"), 4)), s"$sfx: bucket spec is now $spec")
+      }
+      val ids = Seq("ranked", "prefixes", "docgrams").flatMap(sfx =>
+        new java.io.File(s"$base/vac/$sfx").listFiles().map(_.getName)
+          .filter(_.endsWith(".parquet"))
+          .map(f => BucketingUtils.getBucketId(f).getOrElse(-1)))
+      assert(ids.nonEmpty && ids.forall(b => b >= 0 && b < 4),
+        s"swapped files carry bucket ids ${ids.distinct.sorted}")
+      DedupOps.writeGramIndex(DedupOps.buildGramIndex(docs.filter(!dead)),
+        pxS, s"$base/scr", buckets = 4)
+      // no broadcast: the join must read both sides by bucket
+      spark.conf.set(bcast, "-1")
+      def selfJoin(p: String): Long = {
+        val r = spark.table(s"${p}_ranked")
+        val j = r.as("a").join(r.as("b"), col("a.g") === col("b.g"))
+        val n = j.collect().length.toLong
+        assert(!j.queryExecution.executedPlan.toString.contains("Exchange"),
+          s"$p: the self-join shuffled instead of reading by bucket")
+        n
+      }
+      val n = selfJoin(px)
+      assert(n > 0 && n == selfJoin(pxS),
+        s"vacuumed self-join matched $n rows, survivor build ${selfJoin(pxS)}")
+    } finally {
+      spark.conf.set(bcast, prevBcast)
+      Seq(px, pxS).foreach(p => IndexLifecycle.resetPrefix(spark, p, base))
+      spark.catalog.clearCache()
+    }
+  }
+
+  test("IndexLifecycle layout: stagedSwap and compactBucketedTable " +
+    "refuse a table with no bucket spec before writing, leaving it " +
+    "readable and unchanged") {
+    import spark.implicits._
+    import graft.io.{IndexLifecycle, Sinks}
+    import org.apache.spark.sql.catalyst.TableIdentifier
+    val base = java.nio.file.Files.createTempDirectory("unb").toString
+    val t = "ut_unb" + base.replaceAll("[^A-Za-z0-9]", "").takeRight(8)
+    try {
+      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v").write
+        .option("path", s"$base/d0").format("parquet").saveAsTable(t)
+      val before = spark.table(t).collect().toSet
+      val errs = Seq(
+        intercept[IllegalArgumentException](IndexLifecycle.stagedSwap(
+          spark, t, spark.table(t).filter(col("id") =!= 2L), s"$base/d1")),
+        intercept[IllegalArgumentException](Sinks.compactBucketedTable(
+          spark, t, s"$base/d0", s"$base/d2")))
+      errs.foreach(e => assert(e.getMessage.contains(
+        s"table $t has no single-column bucket spec"), e.getMessage))
+      assert(spark.table(t).collect().toSet == before,
+        "a refused rewrite changed the table")
+      assert(spark.sessionState.catalog.getTableMetadata(TableIdentifier(t))
+        .location.getPath.endsWith("/d0"), "a refused rewrite moved the table")
+      assert(Seq("d1", "d2").forall(d => !new java.io.File(s"$base/$d").exists),
+        "a refused rewrite wrote files")
+      assert(Seq("__vacuum", "__compacting")
+        .forall(x => !spark.catalog.tableExists(s"$t$x")),
+        "a refused rewrite registered a staging table")
+    } finally spark.sql(s"DROP TABLE IF EXISTS $t")
   }
 
   test("bench plan gate: the shuffle tally records exchange rows and " +

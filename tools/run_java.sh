@@ -1,5 +1,5 @@
 #!/bin/bash
-# Direct-JVM runner for graft entry points (Bench/Prof/Verify):
+# Direct-JVM runner for graft entry points (Bench/Verify/PlanDump):
 # same classpath recipe as drift_ab.sh, no sbt lock/startup per run.
 # Usage: tools/run_java.sh <mainClass> [args...]
 set -euo pipefail
